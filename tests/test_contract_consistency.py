@@ -30,6 +30,15 @@ def test_rows_only_set_is_exactly_the_known_one():
     )
 
 
+def test_oracle_checked_queries_precede_rows_only():
+    """A contract gate that records only the first N registry entries must
+    see every oracle-checked query, so none may follow a rows-only one."""
+    names, oracles = list(E.queries()), set(E.oracle_sql())
+    last_oracle = max(i for i, n in enumerate(names) if n in oracles)
+    first_rows_only = min(i for i, n in enumerate(names) if n not in oracles)
+    assert last_oracle < first_rows_only, names[first_rows_only : last_oracle + 1]
+
+
 def _empty_views(con) -> None:
     """Empty views with the production schemas — enough for parse and
     output-type checks; shared by the two oracle-audit tests so a schema

@@ -52,6 +52,13 @@ def test_bloom_payload_covers_all_deletions(index_df, bloom_payload):
     assert bloom.contains_hashes(st, h).all(), "zero false negatives over deletion universe"
 
 
+def test_bloom_over_empty_index_is_empty_filter(index_df):
+    """No partial filters (every word thresholded away) must merge to an
+    empty filter of the sized geometry, not fail on a missing payload."""
+    st = bloom.deserialize(spell.build_deletion_bloom(index_df.limit(0), fpr=0.01))
+    assert st.m == bloom.optimal_m_k(64, 0.01)[0] and not st.bits.any()
+
+
 def test_correct_queries_end_to_end(spark, index_df, bloom_payload):
     queries = spark.createDataFrame(
         [

@@ -41,12 +41,18 @@ def test_hll_per_source_within_bound(spark, sequences_small, exact_distinct_per_
         assert abs(est - true) <= 5 * hll.rse(st) * true + 2, f"{src}: {est} vs {true}"
 
 
+def _tree_build(df, spec):
+    """Build over >64 input partitions: the merge adds a salted tree level."""
+    out = build_sketches(df.repartition(130), spec, ["source"], "tokens")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 2 and "__salt" in plan, plan
+    return collect_sketches(out, spec, ["source"])
+
+
 def test_hll_salted_two_level_same_registers(spark, sequences_small):
     spec = SketchSpec("hll", {"p": 12})
     flat = collect_sketches(build_sketches(sequences_small, spec, ["source"], "tokens"), spec, ["source"])
-    salted = collect_sketches(
-        build_sketches(sequences_small, spec, ["source"], "tokens", salt_buckets=4), spec, ["source"]
-    )
+    salted = _tree_build(sequences_small, spec)
     for src in flat:
         assert (flat[src].registers == salted[src].registers).all(), "salted tree must be bit-identical (HLL merge idempotent)"
 
@@ -106,9 +112,7 @@ def test_theta_per_source_within_bound_and_set_ops(spark, sequences_small, exact
 def test_theta_salted_two_level_same_hashes(spark, sequences_small):
     spec = SketchSpec("theta", {"k": 512})
     flat = collect_sketches(build_sketches(sequences_small, spec, ["source"], "tokens"), spec, ["source"])
-    salted = collect_sketches(
-        build_sketches(sequences_small, spec, ["source"], "tokens", salt_buckets=4), spec, ["source"]
-    )
+    salted = _tree_build(sequences_small, spec)
     for src in flat:
         assert (flat[src].hashes == salted[src].hashes).all(), "salted tree must be bit-identical (theta merge order-free)"
 

@@ -69,14 +69,33 @@ def test_correction_plan_is_shuffle_free(spark, docs):
 
 
 def test_sketch_partials_single_shuffle(spark, docs):
-    from wordspell_spark.harness import build_sketches
+    from wordspell_spark.harness import build_sketches, build_sketches_multi
     from wordspell_spark.sketches import SketchSpec
 
-    words = docs.select("source", F.explode(F.split(F.lower("text"), " ")).alias("w"))
-    out = build_sketches(words, SketchSpec("hll", {"p": 12}), ["source"], "w")
-    plan = _plan(out)
-    # exactly one exchange: the partial→final merge groupBy; raw rows never shuffle
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    words = docs.select(
+        "source", F.col("n_chars").alias("n"), F.explode(F.split(F.lower("text"), " ")).alias("w")
+    )
+    word_kinds = {
+        "bloom": {"n_estimate": 10_000},
+        "hll": {"p": 12},
+        "cms": {"eps": 0.01, "delta": 0.05},
+        "theta": {"k": 256},
+        "freq": {"k": 64},
+        "sample": {"k": 64},
+    }
+    specs = {k: (SketchSpec(k, p), "w") for k, p in word_kinds.items()}
+    specs["kll"] = (SketchSpec("kll", {"k": 64}), "n")
+    specs["tdigest"] = (SketchSpec("tdigest", {"delta": 50.0}), "n")
+    for out in (
+        build_sketches(words, SketchSpec("hll", {"p": 12}), ["source"], "w"),
+        build_sketches_multi(words, specs, ["source"]),
+        build_sketches_multi(words, specs),
+    ):
+        plan = _plan(out)
+        # exactly one exchange: the partial→final merge groupBy, above the
+        # partial builder; raw rows never shuffle
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert plan.index("Exchange hashpartitioning") < plan.index("MapInPandas"), plan
 
 
 def test_minhash_pairs_shuffle_is_on_bands_only(spark, docs):

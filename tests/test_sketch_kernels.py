@@ -26,6 +26,9 @@ from wordspell_spark.sketches import (
     theta,
 )
 
+# numpy RuntimeWarnings (overflowing casts, invalid values) are bugs here
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
+
 RNG = np.random.default_rng(42)
 
 
@@ -777,6 +780,24 @@ class TestSerdeRobustness:
                 with _pytest.raises((serde.SketchFormatError, ValueError)):
                     spec.deserialize(bad)
 
+    def test_tdigest_corrupt_delta_rejected(self):
+        """A corrupt compression parameter must raise, not reach
+        ``_compress_arrays`` (a negative or non-finite delta overflows its
+        int64 cast)."""
+        import struct
+
+        import numpy as np
+        import pytest as _pytest
+
+        from wordspell_spark.sketches import serde, tdigest
+
+        good = tdigest.serialize(tdigest.update(tdigest.create(50.0), np.arange(50.0)))
+        off = good.index(struct.pack("<d", 50.0))
+        for delta in (-1.29e122, 0.0, -0.0, float("inf"), float("nan")):
+            bad = good[:off] + struct.pack("<d", delta) + good[off + 8 :]
+            with _pytest.raises(serde.SketchFormatError):
+                tdigest.deserialize(bad)
+
     def test_cross_kind_payloads_rejected(self):
         import numpy as np
 
@@ -792,11 +813,12 @@ class TestSerdeRobustness:
 
 
 class TestSharedHashFastPath:
-    """The multi-kind harness hashes each batch once and feeds every
-    hash-keyed kind (bloom / hll / cms) the same (distinct hashes, counts)
-    aggregate via ``update_unique_hashes``.  That is only sound if the fast
-    path is BIT-IDENTICAL to the per-value ``update`` — pin it per kind,
-    over Zipfian (mostly-repeat), near-unique, and empty batches."""
+    """The multi-kind harness dedupes each batch once, hashes the distinct
+    values (``unique_hashes``) and feeds every hash-keyed kind (bloom / hll /
+    cms / theta) the same (hashes, counts) aggregate via
+    ``update_unique_hashes``.  That is only sound if it is BIT-IDENTICAL to
+    hashing every value first — pin it per kind, over Zipfian
+    (mostly-repeat), near-unique, and empty batches."""
 
     @staticmethod
     def _batches():
@@ -830,6 +852,27 @@ class TestSharedHashFastPath:
             codes, uh = pd.factorize(hash64(batch))
             fast_update(fast, np.asarray(uh, dtype=np.uint64), np.bincount(codes))
         assert spec.serialize(slow) == spec.serialize(fast)
+
+    def test_unique_hashes_same_multiset_as_hash_then_count(self):
+        """Dedupe-then-hash must yield exactly the (key, count) multiset of
+        hash-then-count: ±0.0 and NaN payloads stay apart (hash64 hashes
+        float bits), and nulls keep the keys hash64 gives them."""
+        from wordspell_spark.sketches.hashing import hash64, unique_hashes
+
+        nan2 = (np.array([np.nan]).view(np.uint64) | np.uint64(1)).view(np.float64)[0]
+        batches = [
+            np.clip(np.random.default_rng(5).zipf(1.2, 50000), 0, 10**6).astype(np.int32),
+            np.array([0.0, -0.0, np.nan, nan2, 1.5, 1.5, -0.0]),
+            np.array(["a", None, "b", np.nan, "a", None], dtype=object),
+            np.array(["x", "y", "x"]),
+            np.array([], dtype=object),
+        ]
+        for batch in batches:
+            keys, counts = unique_hashes(batch)
+            want_keys, want_counts = np.unique(hash64(batch), return_counts=True)
+            order = np.argsort(keys)
+            assert np.array_equal(keys[order], want_keys), batch.dtype
+            assert np.array_equal(counts[order], want_counts), batch.dtype
 
     def test_harness_multi_build_uses_fast_path(self, spark):
         """End-to-end: the Spark multi-kind build over a token column yields

@@ -6,18 +6,24 @@ generalization of the reference's partial→final additive accumulator merge
 Bloom build loop (/root/reference/builder.go:97-119).
 
     Stage A  mapInPandas over input partitions: one partial sketch per
-             (group key) per partition — the map-side combine.  Output is
-             tiny: ≤ |groups| rows per partition, each a byte payload.
-    Stage B  (optional, for very wide clusters) groupBy(keys, salt) partial
-             merge — the middle level of a treeAggregate.
+             (group key, kind) per partition — the map-side combine.
+             Output is tiny: ≤ |groups| x |kinds| rows per partition, each
+             a byte payload.
+    Stage B  automatic, only when the partial frame has more than 64
+             partitions: salted groupBy(keys, salt) merges of fan-in 64 —
+             the middle level of a treeAggregate, and the skew-bounding
+             intermediate reduce of FP-Hadoop (VLDB 2015).
     Stage C  groupBy(keys) final merge → one payload per group.
 
 Why this shape at 100 TB: the shuffle after stage A moves only
 |partitions| × |groups| payloads (KBs each), never raw rows, so a skewed
 ``source`` (70% web in the fixture) cannot create a hot shuffle partition of
-raw data — skew is absorbed map-side, and the optional salt level bounds the
-final merge fan-in.  No per-row Python anywhere: kernels consume whole Arrow
-batches as numpy arrays (BASELINE.json input_hint).
+raw data — skew is absorbed map-side, and stage B bounds the final merge
+fan-in however many partitions the input has.  No per-row Python anywhere:
+kernels consume whole Arrow batches as numpy arrays (BASELINE.json
+input_hint).  ``merge_partials`` (stages B and C) is the one grouped-map
+merge in the package: the checkpoint finalize, the streaming state merge
+and the deletion-Bloom build fold their partials through it too.
 """
 
 from __future__ import annotations
@@ -36,10 +42,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .sketches import SketchSpec
-from .sketches.hashing import hash64
+from .sketches import SketchSpec, serde
+from .sketches.hashing import unique_hashes
 
-_GLOBAL_KEY = "__all__"
+_FANIN = 64  # partials one merge task folds per group; more add a tree level
+_SALT = "__salt"
 
 
 def _flatten_values(series: pd.Series) -> np.ndarray:
@@ -65,16 +72,66 @@ def _flatten_values(series: pd.Series) -> np.ndarray:
     return vals[~pd.isna(vals)]
 
 
-def _partial_schema(df: DataFrame, group_cols: list[str]) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
-    return StructType(
-        fields
-        + [
-            StructField("sketch", BinaryType(), False),
-            StructField("rows", LongType(), False),
-            StructField("items", LongType(), False),
-        ]
-    )
+def _num_partitions(df: DataFrame) -> int:
+    """``df.rdd.getNumPartitions()`` without running ``df``'s shuffles.
+
+    Under adaptive execution ``df.rdd`` runs every shuffle stage below
+    ``df`` to plan the final one — for a streaming state merge that is the
+    whole micro-batch build, run a second time.  Planned without it, a
+    shuffle stays a lazy RDD whose partition count is known up front.  The
+    switch is session-wide for the few milliseconds of planning: a query
+    planned on the same session by another thread meanwhile runs without
+    adaptive execution (still correct, maybe slower)."""
+    conf = df.sparkSession.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.rdd.getNumPartitions()
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _fold(partials: DataFrame, keys: list[str]) -> DataFrame:
+    """One groupBy(keys) merge level; the output schema is the input's."""
+    cols = partials.columns
+
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        payloads = list(pdf["sketch"])
+        kind = serde.KIND_NAMES[serde.peek_kind(payloads[0])]
+        head = pdf.iloc[[0]][keys].reset_index(drop=True)
+        head["sketch"] = [SketchSpec(kind).merge_payloads(payloads)]
+        for c in cols:
+            if c not in head:
+                head[c] = [pdf[c].sum() if c in ("rows", "items") else pdf[c].max()]
+        return head[cols]
+
+    # an explicit exchange even over one partition, where groupBy needs none:
+    # chained into the partial builder's task, the merge would hold a second
+    # Python worker; in its own stage it reuses the builder's
+    shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
+    return shuffled.groupBy(*keys).applyInPandas(merge_group, schema=partials.schema)
+
+
+def merge_partials(partials: DataFrame, keys: list[str]) -> DataFrame:
+    """Merge partial-sketch rows to one row per ``keys`` group.
+
+    ``partials`` holds a ``sketch`` payload column; each group's kernel is
+    read from its payloads' header, so one call folds mixed kinds (keyed
+    by ``kind``) and needs no spec.  ``rows``/``items`` are summed and any
+    other column is max-aggregated (e.g. the windowed state's
+    ``max_event_ts`` watermark).  The output schema is the input's.
+
+    When ``partials`` has more than 64 partitions, salted tree levels of
+    fan-in 64 run before the final merge (stage B), so no merge task folds
+    more than ~64 payloads per group however wide the input.
+    """
+    keys = list(keys)
+    n = _num_partitions(partials)
+    while n > _FANIN:
+        n = -(-n // _FANIN)  # salt values, ~64 partials per (group, salt)
+        salted = partials.withColumn(_SALT, F.floor(F.rand(seed=0) * n))
+        partials = _fold(salted, [*keys, _SALT]).drop(_SALT)
+    return _fold(partials, keys)
 
 
 def build_sketches(
@@ -82,85 +139,34 @@ def build_sketches(
     spec: SketchSpec,
     group_cols: list[str] | None,
     value_col: str,
-    *,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Build one merged sketch per group over ``value_col``.
 
     Returns DataFrame[*group_cols, sketch BINARY, rows LONG, items LONG]
     where ``rows`` counts input rows and ``items`` counts values fed to the
-    sketch (array columns contribute their element count).
+    sketch (array columns contribute their element count).  The one-kind
+    case of ``build_sketches_multi``.
     """
-    group_cols = list(group_cols or [])
-    if not group_cols:
-        df = df.withColumn(_GLOBAL_KEY, F.lit(_GLOBAL_KEY))
-        out = build_sketches(df, spec, [_GLOBAL_KEY], value_col, salt_buckets=salt_buckets)
-        return out.drop(_GLOBAL_KEY)
-
-    narrow = df.select(*group_cols, value_col)
-    partial_schema = _partial_schema(narrow, group_cols)
-
-    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One partial sketch per group key per *partition* (not per batch):
-        # states persist across the batch iterator = map-side combine.
-        states: dict[tuple, list] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                ent = states.get(key)
-                if ent is None:
-                    ent = states[key] = [spec.create(), 0, 0]
-                vals = _flatten_values(sub[value_col])
-                spec.update(ent[0], vals)
-                ent[1] += len(sub)
-                ent[2] += len(vals)
-        if not states:
-            return
-        rows = [(*k, spec.serialize(st), nrows, nitems) for k, (st, nrows, nitems) in states.items()]
-        yield pd.DataFrame(rows, columns=[*group_cols, "sketch", "rows", "items"])
-
-    partials = narrow.mapInPandas(partial_build, schema=partial_schema)
-
-    merge_schema = partial_schema
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = spec.merge_payloads(list(pdf["sketch"]))
-        head = pdf.iloc[[0]][group_cols].reset_index(drop=True)
-        head["sketch"] = [merged]
-        head["rows"] = [int(pdf["rows"].sum())]
-        head["items"] = [int(pdf["items"].sum())]
-        return head
-
-    if salt_buckets and salt_buckets > 1:
-        # middle tree level: merge within (key, salt) before the final merge
-        salted = partials.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)))
-        mid = salted.groupBy(*group_cols, "__salt").applyInPandas(
-            lambda pdf: merge_group(pdf.drop(columns="__salt")).assign(__salt=pdf["__salt"].iloc[0]),
-            schema=StructType(merge_schema.fields + [StructField("__salt", LongType())]),
-        ).drop("__salt")
-        partials = mid
-
-    return partials.groupBy(*group_cols).applyInPandas(merge_group, schema=merge_schema)
+    return build_sketches_multi(df, {spec.kind: (spec, value_col)}, group_cols).drop("kind")
 
 
 def build_sketches_multi(
     df: DataFrame,
     specs: dict[str, tuple[SketchSpec, str]],
-    group_cols: list[str],
+    group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Build SEVERAL sketch kinds per group in ONE pass over the data.
 
     ``specs``: {kind_name: (SketchSpec, value_col)}.  Returns a long-format
-    DataFrame[*group_cols, kind STRING, sketch BINARY, rows LONG, items LONG].
+    DataFrame[*group_cols, kind STRING, sketch BINARY, rows LONG, items LONG];
+    no ``group_cols`` means one global sketch per kind.
 
     Why: at 100 TB the scan IS the cost — five separate builds read the
     input five times and pay five job/shuffle latencies.  One mapInPandas
     maintains all states per group and the single merge shuffle carries
     |partitions| x |groups| x |kinds| KB payloads.
     """
-    group_cols = list(group_cols)
+    group_cols = list(group_cols or [])
     value_cols = sorted({vc for _, vc in specs.values()})
     narrow = df.select(*group_cols, *value_cols)
     out_schema = StructType(
@@ -175,11 +181,14 @@ def build_sketches_multi(
     spec_items = sorted(specs.items())  # deterministic kind order
 
     def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # One partial sketch per group key per *partition* (not per batch):
+        # states persist across the batch iterator = map-side combine.
         states: dict[tuple, dict] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
-            for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
+            groups = pdf.groupby(group_cols, sort=False, dropna=False) if group_cols else [((), pdf)]
+            for key, sub in groups:
                 key = key if isinstance(key, tuple) else (key,)
                 ent = states.get(key)
                 if ent is None:
@@ -188,26 +197,21 @@ def build_sketches_multi(
                     }
                 flats = {vc: _flatten_values(sub[vc]) for vc in value_cols}
                 # shared-hash fast path: every hash-keyed kind (bloom / hll /
-                # cms) derives all its indices from the same h1 = hash64(v),
-                # so hash each value column ONCE per batch and aggregate to
-                # (distinct hashes, counts) — the kernels then scatter over
-                # the distinct set only.  Bit-identical payloads (idempotent
-                # kinds ignore counts; cms adds them as weights); on Zipfian
-                # token batches this cuts the dominant hash + sort cost from
-                # once-per-kind to once-per-column.  pd.factorize (hash
-                # table) beats np.unique (sort) ~3x here, and no kernel
-                # depends on the distinct order.
+                # cms / theta) derives all its state from the same
+                # h1 = hash64(v), so dedupe each value column ONCE per batch
+                # and hash only its distinct values (``unique_hashes``) — the
+                # kernels then scatter over the distinct set only.
+                # Bit-identical payloads (idempotent kinds ignore counts; cms
+                # adds them as weights); on Zipfian token batches this cuts
+                # the dominant hash + dedupe cost from once-per-kind to
+                # once-per-column.
                 hashed: dict[str, tuple[np.ndarray, np.ndarray]] = {}
                 for name, (spec, vc) in spec_items:
                     st = ent[name]
                     fast = getattr(spec.module, "update_unique_hashes", None)
                     if fast is not None:
                         if vc not in hashed:
-                            codes, uniq = pd.factorize(hash64(flats[vc]))
-                            hashed[vc] = (
-                                np.asarray(uniq, dtype=np.uint64),
-                                np.bincount(codes),
-                            )
+                            hashed[vc] = unique_hashes(flats[vc])
                         fast(st[0], *hashed[vc])
                     else:
                         spec.update(st[0], flats[vc])
@@ -223,17 +227,7 @@ def build_sketches_multi(
         yield pd.DataFrame(rows, columns=[*group_cols, "kind", "sketch", "rows", "items"])
 
     partials = narrow.mapInPandas(partial_build, schema=out_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        kind = pdf["kind"].iloc[0]
-        merged = specs[kind][0].merge_payloads(list(pdf["sketch"]))
-        head = pdf.iloc[[0]][group_cols + ["kind"]].reset_index(drop=True)
-        head["sketch"] = [merged]
-        head["rows"] = [int(pdf["rows"].sum())]
-        head["items"] = [int(pdf["items"].sum())]
-        return head
-
-    return partials.groupBy(*group_cols, "kind").applyInPandas(merge_group, schema=out_schema)
+    return merge_partials(partials, [*group_cols, "kind"])
 
 
 def collect_sketches(result: DataFrame, spec: SketchSpec, group_cols: list[str] | None):

@@ -41,7 +41,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..harness import build_sketches
+from ..harness import build_sketches, merge_partials
 from ..sketches import SketchSpec
 
 BUCKET_COL = "bucket"
@@ -151,31 +151,16 @@ def finalize(
     Raises if any bucket is missing from the manifest (the job isn't
     finished) — finalize is the atomic-swap moment; partial results must
     never look complete.  Completeness is judged on the manifest, so empty
-    buckets finalize like any other.
+    buckets finalize like any other.  ``merge_partials`` reads each
+    group's kernel from its payloads, so ``spec`` only names the kind built.
     """
     have = completed_buckets(spark, checkpoint_dir, job_id)
     missing = set(range(n_buckets)) - have
     if missing:
         raise RuntimeError(f"job {job_id}: {len(missing)} buckets missing, e.g. {sorted(missing)[:5]}")
 
-    import pandas as pd
-
-    partials = _referenced_partials(spark, checkpoint_dir, job_id)
-    merge_schema = partials.drop(BUCKET_COL).schema
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = spec.merge_payloads(list(pdf["sketch"]))
-        head = pdf.iloc[[0]][group_cols].reset_index(drop=True) if group_cols else pd.DataFrame(index=[0])
-        head["sketch"] = [merged]
-        head["rows"] = [int(pdf["rows"].sum())]
-        head["items"] = [int(pdf["items"].sum())]
-        return head
-
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(merge_group, schema=merge_schema)
-    return partials.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: merge_group(pdf.drop(columns="__g", errors="ignore")), schema=merge_schema
-    )
+    partials = _referenced_partials(spark, checkpoint_dir, job_id).drop(BUCKET_COL)
+    return merge_partials(partials, group_cols)
 
 
 def lineage_metrics(spark: SparkSession, checkpoint_dir: str, job_id: str) -> DataFrame:

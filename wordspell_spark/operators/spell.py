@@ -39,6 +39,7 @@ from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..functions import mutate as M
 from ..functions import processors as PROC
+from ..harness import merge_partials
 from ..sketches import bloom
 from ..sketches.hashing import hash64, row_hash_u32_matrix
 
@@ -59,34 +60,6 @@ def deletes_estimated(index_df: DataFrame, word_col: str = "word") -> int:
     return int(index_df.select(est).first()[0] or 0)
 
 
-def tree_merge_payloads(partials: DataFrame, merge_fn, fanin: int = 64) -> bytes:
-    """Bounded-fan-in merge of a one-column [sketch BINARY] DataFrame.
-
-    Each level groups ≤fanin payloads per task (treeAggregate shape, X9) so
-    no single task ever materializes more than fanin payloads — the final
-    merge is never a driver bottleneck at 1000-executor scale.
-    """
-    schema = StructType([StructField("sketch", BinaryType(), False)])
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"sketch": [merge_fn(list(pdf["sketch"]))]})
-
-    df = partials
-    # ≤1 payload per input partition, so the partition count bounds the row
-    # count without triggering a count() job per tree level
-    n = df.rdd.getNumPartitions()
-    while n > fanin:
-        n_groups = max(1, n // fanin)
-        df = (
-            df.withColumn("__g", F.pmod(F.xxhash64(F.rand(seed=0)), F.lit(n_groups)))
-            .groupBy("__g")
-            .applyInPandas(lambda pdf: merge_group(pdf.drop(columns="__g")), schema=schema)
-        )
-        n = n_groups
-    payloads = [r["sketch"] for r in df.collect()]
-    return merge_fn(payloads)
-
-
 def build_deletion_bloom(
     index_df: DataFrame,
     word_col: str = "word",
@@ -97,7 +70,8 @@ def build_deletion_bloom(
 
     Stage A (mapInPandas): per-partition partial filter filled from
     vectorized deletion hashes — no strings, no per-row Python.
-    Stage B: tree merge (bitwise OR) to a single payload.
+    Stage B: ``merge_partials`` ORs the partial filters into one payload,
+    through bounded-fan-in tree levels when there are many partitions.
     """
     if n_estimate is None:
         n_estimate = max(64, deletes_estimated(index_df, word_col))
@@ -129,16 +103,8 @@ def build_deletion_bloom(
     n_parts = int(min(cur, max(1, n_estimate // 1_000_000)))
     if n_parts < cur:
         words = words.coalesce(n_parts)
-    partials = words.mapInPandas(partial, schema=schema)
-    spec_merge = lambda payloads: _or_merge(payloads)
-    return tree_merge_payloads(partials, spec_merge)
-
-
-def _or_merge(payloads: list[bytes]) -> bytes:
-    state = bloom.deserialize(payloads[0])
-    for p in payloads[1:]:
-        state = bloom.merge(state, bloom.deserialize(p))
-    return bloom.serialize(state)
+    rows = merge_partials(words.mapInPandas(partial, schema=schema), []).collect()
+    return bytes(rows[0]["sketch"]) if rows else bloom.serialize(bloom.create(m=m, k=k))
 
 
 # --------------------------------------------------------------- index probe

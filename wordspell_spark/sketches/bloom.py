@@ -30,7 +30,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import dedupe_values, double_hash, row_hash_u32_matrix, splitmix64
+from .hashing import double_hash, row_hash_u32_matrix, splitmix64, unique_hashes
 
 DEFAULT_FPR = 0.005  # reference default, component.go:16
 
@@ -90,19 +90,10 @@ def _test_bits(state: BloomState, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
 def update(state: BloomState, values) -> BloomState:
     """Insert a batch of values (str / bytes / int / float array).
 
-    Duplicate values are dropped before hashing (numeric batches) or before
-    the k-probe scatter (string batches) — bit-setting is idempotent and
+    Values are deduped before hashing — bit-setting is idempotent and
     Zipfian batches are mostly repeats, so this cuts the dominant hash +
     random-write cost by the batch's duplication factor."""
-    vals = np.asarray(values)
-    if vals.dtype.kind in "iuf":
-        h1, h2 = double_hash(dedupe_values(vals))
-        _set_bits(state, h1, h2)
-        return state
-    h1, h2 = double_hash(values)
-    u1, first = np.unique(h1, return_index=True)
-    _set_bits(state, u1, h2[first])
-    return state
+    return update_unique_hashes(state, *unique_hashes(values))
 
 
 def update_hashes(state: BloomState, h1: np.ndarray, *, dedupe: bool = True) -> BloomState:
@@ -123,10 +114,10 @@ def update_hashes(state: BloomState, h1: np.ndarray, *, dedupe: bool = True) -> 
 
 
 def update_unique_hashes(state: BloomState, uh: np.ndarray, counts: np.ndarray | None = None) -> BloomState:
-    """Shared-hash fast path (multi-kind harness): ``uh`` are DISTINCT
-    ``hash64`` keys of the batch.  ``counts`` is accepted for signature
-    uniformity across kinds and ignored — bit-setting is idempotent.
-    Bit-identical to ``update(values)``: every probe index derives from h1."""
+    """Update from ``unique_hashes`` output: ``hash64`` keys of the distinct
+    values (a 64-bit collision can repeat a key; bit-setting is idempotent,
+    so a repeat is harmless).  ``counts`` is ignored for the same reason.
+    Every probe index derives from h1, as in ``double_hash``."""
     return update_hashes(state, uh, dedupe=False)
 
 

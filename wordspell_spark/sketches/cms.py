@@ -82,8 +82,10 @@ def update(state: CmsState, values, weights=None) -> CmsState:
 
 
 def update_unique_hashes(state: CmsState, uh: np.ndarray, counts: np.ndarray) -> CmsState:
-    """Shared-hash fast path (multi-kind harness): ``uh`` are the batch's
-    DISTINCT ``hash64`` keys, ``counts`` their multiplicities.
+    """Update from ``unique_hashes`` output: ``uh`` are the ``hash64`` keys
+    of the batch's distinct values, ``counts`` their multiplicities.  A
+    64-bit collision between two distinct values repeats a key; both
+    counts then add, as they do when every value is hashed.
 
     Table-identical to ``update(values)``: every bucket index derives from
     (h1, h2 = splitmix64(h1)|1), and the weighted bincount adds exactly the

@@ -56,18 +56,34 @@ def hash64(values) -> np.ndarray:
     return pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
 
 
-def dedupe_values(vals: np.ndarray) -> np.ndarray:
-    """Value-level dedupe that distinguishes exactly what hash64 distinguishes.
+def unique_hashes(values) -> tuple[np.ndarray, np.ndarray]:
+    """Dedupe the raw values, then hash only the distinct ones.
 
-    Floats are deduped on the raw float64 bit pattern so +0.0 / -0.0 (and
-    distinct NaN payloads) stay separate — ``hash64`` hashes bits, not
-    numeric equality, and an idempotent-update dedupe must not collapse
-    values the hash would have kept apart.
+    Returns ``(keys, counts)``: the ``hash64`` key of each distinct value
+    and its multiplicity — the same (key, count) multiset as hashing every
+    value and counting the hashes, at the cost of hashing the distinct set
+    only (Zipfian batches are mostly repeats).  Numbers dedupe with
+    ``np.unique`` on what ``hash64`` hashes: floats on the raw float64 bit
+    pattern, so +0.0 / -0.0 and distinct NaN payloads stay apart.  Other
+    types dedupe with one ``pd.factorize`` pass; its nulls are hashed as
+    ``hash64`` hashes them.  Keys can repeat: two distinct values whose
+    64-bit hashes collide give the same key twice.
     """
+    vals = np.asarray(values)
     if vals.dtype.kind == "f":
-        v = np.ascontiguousarray(vals, dtype=np.float64)
-        return np.unique(v.view(_U64)).view(np.float64)
-    return np.unique(vals)
+        bits = np.ascontiguousarray(vals, dtype=np.float64).view(_U64)
+        uniq, counts = np.unique(bits, return_counts=True)
+        return hash64(uniq.view(np.float64)), counts
+    if vals.dtype.kind in "iu":
+        uniq, counts = np.unique(vals, return_counts=True)
+        return hash64(uniq), counts
+    codes, uniq = pd.factorize(vals)
+    keys, counts = hash64(uniq), np.bincount(codes[codes >= 0], minlength=len(uniq))
+    null = codes < 0
+    if null.any():
+        null_keys, null_counts = np.unique(hash64(vals[null]), return_counts=True)
+        keys, counts = np.concatenate([keys, null_keys]), np.concatenate([counts, null_counts])
+    return keys, counts
 
 
 def normalize_items(uniq: np.ndarray) -> list:

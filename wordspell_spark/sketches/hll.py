@@ -21,7 +21,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import dedupe_values, hash64
+from .hashing import unique_hashes
 
 DEFAULT_P = 14  # m = 16384 registers → RSE ≈ 0.81%
 
@@ -66,20 +66,13 @@ def _clz64(x: np.ndarray) -> np.ndarray:
 
 
 def update(state: HllState, values) -> HllState:
-    # numeric batches dedupe before hashing (idempotent registers; Zipfian
-    # batches are mostly repeats; floats dedupe on bit patterns so ±0.0 /
-    # NaN variants stay exactly what hash64 distinguishes); distinct values
-    # give distinct hashes, so update_hashes skips its own dedupe then
-    vals = np.asarray(values)
-    if vals.dtype.kind in "iuf":
-        return update_hashes(state, hash64(dedupe_values(vals)), dedupe=False)
-    return update_hashes(state, hash64(vals))
+    return update_unique_hashes(state, *unique_hashes(values))
 
 
 def update_unique_hashes(state: HllState, uh: np.ndarray, counts: np.ndarray | None = None) -> HllState:
-    """Shared-hash fast path (multi-kind harness): ``uh`` are DISTINCT
-    ``hash64`` keys.  ``counts`` is ignored — register max is idempotent.
-    Register-identical to ``update(values)``: ranks derive only from h1."""
+    """Update from ``unique_hashes`` output: ``hash64`` keys of the distinct
+    values (a 64-bit collision can repeat a key; register max is idempotent,
+    so a repeat is harmless).  ``counts`` is ignored for the same reason."""
     return update_hashes(state, uh, dedupe=False)
 
 

@@ -159,6 +159,8 @@ def deserialize(payload: bytes) -> TDigestState:
     if kind != serde.KIND_TDIGEST:
         raise serde.SketchFormatError(f"not a tdigest payload (kind={kind})")
     (delta,) = _PARAMS.unpack(params)
+    if not (np.isfinite(delta) and delta > 0):
+        raise serde.SketchFormatError(f"tdigest delta out of range: {delta}")
     head = struct.calcsize("<dddI")
     n, min_v, max_v, ncent = struct.unpack_from("<dddI", body, 0)
     if len(body) != head + 16 * ncent:

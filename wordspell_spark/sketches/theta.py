@@ -32,7 +32,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import dedupe_values, hash64, kmv_estimate, kmv_rse
+from .hashing import kmv_estimate, kmv_rse, unique_hashes
 
 DEFAULT_K = 4096  # RSE = 1/sqrt(k-2) ~ 1.56%
 
@@ -75,18 +75,13 @@ def _retained(state: ThetaState) -> np.ndarray:
 
 
 def update(state: ThetaState, values) -> ThetaState:
-    vals = np.asarray(values)
-    if vals.size == 0:
-        return state
-    if vals.dtype.kind in "iuf":
-        return update_hashes(state, hash64(dedupe_values(vals)))
-    return update_hashes(state, hash64(vals))
+    return update_unique_hashes(state, *unique_hashes(values))
 
 
 def update_unique_hashes(state: ThetaState, uh: np.ndarray, counts: np.ndarray | None = None) -> ThetaState:
-    """Shared-hash fast path (harness multi-build): ``uh`` are DISTINCT
-    ``hash64`` keys; ``counts`` is ignored — retention is idempotent.
-    Bit-identical to ``update(values)``: the state holds raw h1 keys."""
+    """Update from ``unique_hashes`` output: ``hash64`` keys of the distinct
+    values (a 64-bit collision can repeat a key; retention is idempotent,
+    so a repeat is harmless).  ``counts`` is ignored for the same reason."""
     return update_hashes(state, uh)
 
 

@@ -34,10 +34,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..harness import build_sketches
+from ..harness import build_sketches, merge_partials
 from ..sketches import SketchSpec
 
 _EPOCH_RE = re.compile(r"epoch=(\d+)$")
@@ -156,7 +155,8 @@ def merge_into_state(
     Returns True if the epoch was applied, False if it was a replay of an
     already-committed epoch (skipped — re-merging would double-count the
     additive sketches).  Payloads are KBs per group, so the read-merge-write
-    is cheap and safe per micro-batch.
+    is cheap and safe per micro-batch.  ``merge_partials`` reads each
+    group's kernel from its payloads, so ``spec`` only names the kind built.
 
     ``run_id`` guards the replay skip (round-2 ADVICE): foreachBatch epoch
     ids restart at 0 when a streaming checkpoint is deleted/recreated or a
@@ -186,24 +186,9 @@ def merge_into_state(
         old = spark.read.parquet(_epoch_dir(state_path, latest))
         combined = old.unionByName(new_partials)
 
-    merge_schema = combined.schema
     # columns beyond the harness triple ride along max-aggregated — e.g. the
-    # windowed variant's max_event_ts watermark column.  Captured as plain
-    # lists: the closure ships to executors and must not drag the DataFrame.
-    out_cols = list(combined.columns)
-    extra_cols = [c for c in out_cols if c not in (*group_cols, "sketch", "rows", "items")]
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = spec.merge_payloads(list(pdf["sketch"]))
-        head = pdf.iloc[[0]][group_cols].reset_index(drop=True)
-        head["sketch"] = [merged]
-        head["rows"] = [int(pdf["rows"].sum())]
-        head["items"] = [int(pdf["items"].sum())]
-        for c in extra_cols:
-            head[c] = [pdf[c].max()]
-        return head[out_cols]
-
-    merged = combined.groupBy(*group_cols).applyInPandas(merge_group, schema=merge_schema)
+    # windowed variant's max_event_ts watermark column
+    merged = merge_partials(combined, group_cols)
     # overwrite is retry-safe: a half-written dir from a crashed attempt of
     # THIS epoch has no _SUCCESS and is simply replaced; it becomes current
     # only once the write (and its _SUCCESS) completes
