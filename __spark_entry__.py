@@ -1071,10 +1071,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         model trained on the corpus itself.  Integer permille arithmetic
         instead of log-space floats, so the DuckDB oracle reproduces the
         score bit-exactly: Σ over adjacent pairs of
-        (1000 * corpus_count(a,b)) div corpus_count(a).  Runs the r5 arrow
-        default (one mapInPandas emits the pair stream row-locally — no
-        window shuffle); the oracle mirrors the impl='expr' Catalyst twin,
-        bit-identical by the tokenizer-parity property tests."""
+        (1000 * corpus_count(a,b)) div corpus_count(a).  One mapInPandas
+        emits the pair stream row-locally (no window shuffle); the oracle
+        pairs tokens with a window lead over the shared token CTE, which
+        the Python tokenizer twin matches bit-for-bit (property-tested)."""
         from wordspell_spark.operators import quality as Q
 
         return Q.bigram_coherence(_t(spark, sf, "documents"))
@@ -1083,12 +1083,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Benchmark decontamination (dedup.contamination_hits): per
         training doc, how many of its distinct 5-grams appear anywhere in
         the 'eval set' (here: every 97th doc of the same corpus, so exact
-        leaks and near-dups of eval items must light up).  Runs the r5
-        arrow default: the eval shingle SET broadcasts into the Python
-        workers (benchmarks are small by nature) and one mapInPandas
-        emits a row per doc — no join, no shuffle at all; the oracle
-        mirrors the impl='expr' Catalyst twin, identical output by the
-        shingle-twin parity tests."""
+        leaks and near-dups of eval items must light up).  The eval
+        shingle SET broadcasts into the Python workers (benchmarks are
+        small by nature) and one mapInPandas emits a row per doc — no
+        join, no shuffle at all; the oracle computes the same report with
+        a shingle join, and the Python shingle twin matches ``shingles_of``
+        bit-for-bit (property-tested)."""
         from wordspell_spark.operators import dedup as D
 
         docs = _t(spark, sf, "documents")

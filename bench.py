@@ -114,7 +114,7 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
         "q_simhash_dedup": 5.0 * _g,
         "q_simhash_dedup_fast": 2.5 * _g,
         "q_exact_dedup": 1.4 * _g,
-        # the two r5 twins are fixed-overhead-bound below sf0.1 (measured:
+        # these two are fixed-overhead-bound below sf0.1 (measured:
         # sf0.01 local[8] costs MORE than sf0.1 local[32]) — never shrink
         # their envelopes below the calibration point
         "q_decontamination": 2.5 * max(_sf_ratio, 1.0),
@@ -240,13 +240,12 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
             _wdf = _builder(_wdocs, hash_mode=_mode)
             _wdf.count()
             D.release_caches(_wdf)
-    for _impl in ("arrow", "expr"):  # r5 fast-twin closures
-        _wch = D.contamination_hits(_wdocs, _wdocs.limit(10), n=5, impl=_impl)
-        _wch.count()
-        D.release_caches(_wch)
-        _wbc = Q.bigram_coherence(_wdocs, impl=_impl)
-        _wbc.count()
-        D.release_caches(_wbc)
+    _wch = D.contamination_hits(_wdocs, _wdocs.limit(10), n=5)
+    _wch.count()
+    D.release_caches(_wch)
+    _wbc = Q.bigram_coherence(_wdocs)
+    _wbc.count()
+    D.release_caches(_wbc)
     _widx = IB.build_frequency_index(_wdocs, "text", ["doc_id"], thresholds={"ru": 2, "en": 2})
     _wpay = build_deletion_bloom(_widx, fpr=0.01)
     correct_queries(
@@ -454,46 +453,26 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
     extra["minhash_md5_vs_fast_busy_cpu"] = f"{_busy('q_minhash_lsh_dedup')}s vs {_busy('q_minhash_lsh_dedup_fast')}s"
     run("q_exact_dedup", lambda: D.exact_dedup(docs).count())
 
-    # -- r5 fast-twin headliners: decontamination + corpus bigram coherence
-    # (arrow impls — the production path; the pure-Catalyst expr reference
-    # impls are measured once each, untimed, for the busy-CPU A/B record)
+    # -- decontamination + corpus bigram coherence
     # eval = every 97th doc, the contract's scale shape ("eval sets are
-    # small by nature") — the corpus-side shingle pass dominates either way
+    # small by nature") — the corpus-side shingle pass dominates
     eval_docs = docs.filter(F.col("doc_id") % 97 == 0)
 
-    def _decontam_count(impl: str) -> int:
-        df = D.contamination_hits(docs, eval_docs, n=5, impl=impl)
+    def _decontam_count() -> int:
+        df = D.contamination_hits(docs, eval_docs, n=5)
         n = df.count()
-        D.release_caches(df)  # the arrow eval broadcast, per try
+        D.release_caches(df)  # the eval broadcast, per try
         return n
 
-    run("q_decontamination", lambda: _decontam_count("arrow"))
+    run("q_decontamination", _decontam_count)
 
-    def _coherence_count(impl: str) -> int:
-        df = Q.bigram_coherence(docs, impl=impl)
+    def _coherence_count() -> int:
+        df = Q.bigram_coherence(docs)
         n = df.count()
         D.release_caches(df)
         return n
 
-    run("q_bigram_coherence", lambda: _coherence_count("arrow"))
-
-    def _expr_busy(fn) -> tuple[float, float]:
-        b0, _ = cpu_jiffies()
-        t0 = time.time()
-        fn()
-        b1, _ = cpu_jiffies()
-        return time.time() - t0, (b1 - b0) / 100.0
-
-    _dec_w, _dec_b = _expr_busy(lambda: _decontam_count("expr"))
-    _coh_w, _coh_b = _expr_busy(lambda: _coherence_count("expr"))
-    extra["decontamination_expr_vs_arrow"] = (
-        f"expr wall={_dec_w:.2f}s busy={_dec_b:.1f}s vs arrow "
-        f"wall={timings['q_decontamination']}s busy={_busy('q_decontamination')}s"
-    )
-    extra["bigram_coherence_expr_vs_arrow"] = (
-        f"expr wall={_coh_w:.2f}s busy={_coh_b:.1f}s vs arrow "
-        f"wall={timings['q_bigram_coherence']}s busy={_busy('q_bigram_coherence')}s"
-    )
+    run("q_bigram_coherence", _coherence_count)
 
     # release the text-path caches before the embedding phase: accumulated
     # storage + old shuffle blocks otherwise tax the late queries with GC

@@ -12,27 +12,31 @@ import pytest
 from wordspell_spark.operators import bpe as B
 
 
-def _py_train(word_counts: dict[str, int], n_merges: int, min_count: int = 2):
+def _py_train(word_counts: dict[str, int], n_merges: int, min_count: int = 2, batch_k: int = 1):
     """Reference BPE: adjacent-pair counts incl. overlaps, merge applied
-    left-to-right non-overlapping, ties by (a asc, b asc)."""
+    left-to-right non-overlapping, ties by (a asc, b asc).  ``batch_k > 1``
+    picks each round's merges from the top ``4*batch_k`` pairs with
+    ``B._select_disjoint``, as batched training does."""
     table = {tuple(w.encode("utf-8")): c for w, c in word_counts.items()}
     merges = []
-    for m in range(n_merges):
+    while len(merges) < n_merges:
         pairs = Counter()
         for seq, c in table.items():
             for i in range(len(seq) - 1):
                 pairs[(seq[i], seq[i + 1])] += c
-        if not pairs:
+        want = min(batch_k, n_merges - len(merges))
+        top = sorted(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[: 4 * want]
+        chosen = B._select_disjoint(
+            [{"a": a, "b": b, "total": c} for (a, b), c in top], want, min_count
+        )
+        if not chosen:
             break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < min_count:
-            break
-        (a, b), _ = best
-        new_id = 256 + m
-        merges.append((a, b, new_id))
-        table = {
-            tuple(B._merge_one(list(seq), a, b, new_id)): c for seq, c in table.items()
-        }
+        for a, b in chosen:
+            new_id = 256 + len(merges)
+            merges.append((a, b, new_id))
+            table = {
+                tuple(B._merge_one(list(seq), a, b, new_id)): c for seq, c in table.items()
+            }
     return merges
 
 
@@ -112,17 +116,13 @@ class TestRunCorpusArithmetic:
 
 class TestScaleShape:
     def test_pair_count_is_catalyst(self, spark):
-        # the per-iteration pair count must be pure Catalyst (map-side
-        # combined groupBy), not a Python aggregation
+        # the per-iteration pair count aggregates in Catalyst (map-side
+        # combined groupBy over the numpy per-partition partials), not in
+        # a Python aggregation
         df = spark.createDataFrame([(0, "aa ab aa")], "doc_id long, text string")
-        words = B._word_table(df, "text")
-        from pyspark.sql import functions as F
-
-        plan = (
-            words.select(F.explode(F.expr(B._PAIRS_EXPR)).alias("p"), "count")
-            .groupBy("p.a", "p.b").agg(F.sum("count"))
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "HashAggregate" in plan
+        plan = B._pair_counts(B._word_table(df, "text"))._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("HashAggregate") >= 2  # partial + final
+        assert plan.count("MapInPandas") == 1  # the numpy partial counter
         assert plan.count("ArrowEvalPython") <= 1  # only the word symbolizer
 
     def test_bad_n_merges(self, spark):
@@ -267,27 +267,15 @@ class TestBatchedMerges:
         n_bytes = sum(len(w.encode()) for t in CORPUS for w in t.split())
         assert sum(len(v) for v in enc.values()) <= n_bytes
 
-    def test_arrow_equals_expr_batched(self, spark):
+    def test_batched_matches_reference(self, spark):
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
         )
-        assert B.train_bpe(df, 12, batch_k=4, impl="arrow") == B.train_bpe(
-            df, 12, batch_k=4, impl="expr"
-        )
+        wc = Counter(w for t in CORPUS for w in t.split())
+        assert B.train_bpe(df, 12, batch_k=4) == _py_train(dict(wc), 12, batch_k=4)
 
     def test_bad_batch_k_rejected(self, spark):
         df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
         with pytest.raises(ValueError, match="batch_k"):
             B.train_bpe(df, 1, batch_k=0)
 
-
-class TestImplParity:
-    def test_arrow_equals_expr_training(self, spark):
-        df = spark.createDataFrame([(i, t) for i, t in enumerate(CORPUS)],
-                                   "doc_id long, text string")
-        assert B.train_bpe(df, 12, impl="arrow") == B.train_bpe(df, 12, impl="expr")
-
-    def test_bad_impl_rejected(self, spark):
-        df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="impl"):
-            B.train_bpe(df, 1, impl="nope")

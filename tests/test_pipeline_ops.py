@@ -10,6 +10,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+# numpy RuntimeWarnings (uint8 overflow in the codecs, invalid values) are bugs here
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
+
 DOCS = [
     # (doc_id, text, source) — crafted duplicates/near-duplicates
     (0, "the quick brown fox jumps over the lazy dog", "a"),
@@ -1284,12 +1287,8 @@ class TestDecontamination:
 
         tdf = spark.createDataFrame([(0, "a b c d e f")], "doc_id long, text string")
         edf = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-        # arrow default: the eval set broadcasts into the Python workers —
-        # one Arrow stage, no join, no shuffle of the corpus at all
+        # the eval set broadcasts into the Python workers — one Arrow
+        # stage, no join, no shuffle of the corpus at all
         plan = contamination_hits(tdf, edf, n=5)._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in plan
         assert "Join" not in plan and "Exchange" not in plan
-        # expr reference form: eval shingles broadcast-join, corpus rows
-        # never shuffle on the shingle key
-        plan = contamination_hits(tdf, edf, n=5, impl="expr")._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan

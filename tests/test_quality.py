@@ -67,9 +67,9 @@ class TestBigramCoherence:
         assert got[0] > got[2] and got[1] > got[2] and got[3] > got[2]
 
     def test_plan_no_python_past_tokenize(self, df):
-        # arrow default: exactly ONE Arrow stage (the tokenize+pair twin),
-        # everything downstream stays Catalyst — and the expr form's window
-        # sort-shuffle of the token stream is gone (pairs are row-local)
+        # exactly ONE Arrow stage (the tokenize+pair twin), everything
+        # downstream stays Catalyst — and no window sort-shuffle of the
+        # token stream (pairs are row-local)
         plan = Q.bigram_coherence(df)._jdf.queryExecution().executedPlan().toString()
         # the Arrow stage appears once per cached-branch rendering, but is
         # always read through the persisted relation → executes once
@@ -77,11 +77,6 @@ class TestBigramCoherence:
         assert "ArrowEvalPython" not in plan
         assert "HashAggregate" in plan  # map-side combined count tables
         assert "Window" not in plan
-
-    def test_expr_plan_stays_pure_catalyst(self, df):
-        plan = Q.bigram_coherence(df, impl="expr")._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
-        assert "HashAggregate" in plan
 
 
 class TestRepetitionStats:

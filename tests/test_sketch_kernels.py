@@ -85,10 +85,9 @@ class TestBloom:
         assert bloom.contains(st, tokens).all()
         # row path: 3-grams as uint32 matrix
         mat = RNG.integers(0, 50_000, size=(500, 3)).astype(np.uint32)
-        st2 = bloom.create(500, 0.01)
-        bloom.update_u32_rows(st2, mat)
         from wordspell_spark.sketches.hashing import row_hash_u32_matrix
 
+        st2 = bloom.update_hashes(bloom.create(500, 0.01), row_hash_u32_matrix(mat))
         assert bloom.contains_hashes(st2, row_hash_u32_matrix(mat)).all()
 
     def test_padding_does_not_alias(self):
@@ -99,14 +98,15 @@ class TestBloom:
         h = row_hash_u32_matrix(mat, valid_len=np.array([2, 3]))
         assert h[0] != h[1]
 
-    def test_dedupe_flag_is_bit_identical(self):
-        """update_hashes(dedupe=False) must build the exact same filter —
-        the deletion-bloom fast path relies on bit-set idempotence."""
+    def test_repeated_hashes_build_same_filter(self):
+        """update_hashes never dedupes: repeated keys must build the exact
+        filter their np.unique builds — the deletion-bloom path relies on
+        bit-set idempotence."""
         h = RNG.integers(0, 2**63, size=20_000, dtype=np.uint64)
         h = np.concatenate([h, h[:5000]])  # real duplicates too
-        a = bloom.update_hashes(bloom.create(20_000, 0.01), h, dedupe=True)
-        b = bloom.update_hashes(bloom.create(20_000, 0.01), h, dedupe=False)
-        assert (a.bits == b.bits).all()
+        a = bloom.update_hashes(bloom.create(20_000, 0.01), h)
+        b = bloom.update_hashes(bloom.create(20_000, 0.01), np.unique(h))
+        assert bloom.serialize(a) == bloom.serialize(b)
 
     def test_float_dedupe_keeps_bit_distinct_values(self):
         """±0.0 hash differently (bit-pattern hash); the idempotent-update

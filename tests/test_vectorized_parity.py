@@ -235,7 +235,7 @@ class TestCacheRelease:
 
 
 class TestNormalizeTwin:
-    """r5: the normalize_words twin behind bigram_coherence(impl='arrow')."""
+    """The normalize_words twin behind bigram_coherence's pair stream."""
 
     def test_fixture_docs(self, docs_df):
         from wordspell_spark.functions.text import normalize_words, py_normalize_words
@@ -288,37 +288,28 @@ class TestShingleTwin:
                 assert got[i] == _py_shingles(t, n), f"doc {i} n={n}"
 
 
-class TestOperatorImplParity:
-    """arrow and expr impls of the r5 fast twins are the same function."""
+class TestOracleRows:
+    """The data-prep operators' production paths against the DuckDB oracles
+    the contract gate uses — the same query, the same SQL, the same compare."""
 
-    def test_contamination_hits(self, spark, corpus_df):
-        from wordspell_spark.operators.dedup import contamination_hits
+    @pytest.mark.parametrize(
+        "name", ["decontamination_report", "doc_bigram_coherence", "bpe_run_tokens"]
+    )
+    def test_matches_duckdb_oracle(self, spark, testdata_dir, name):
+        import duckdb
 
-        eval_docs = corpus_df.filter(F.col("doc_id") % 7 == 0)
-        key = lambda rows: {r["doc_id"]: (r["n_shingles"], r["n_hits"]) for r in rows}
-        arrow = key(contamination_hits(corpus_df, eval_docs, n=5, impl="arrow").collect())
-        expr = key(contamination_hits(corpus_df, eval_docs, n=5, impl="expr").collect())
-        assert arrow == expr and len(arrow) == corpus_df.count()
+        import __spark_entry__ as E
+        from tools.check_contract import compare
 
-    def test_bigram_coherence(self, spark, corpus_df):
-        from wordspell_spark.operators import quality as Q
         from wordspell_spark.operators.dedup import release_caches
 
-        key = lambda rows: {r["doc_id"]: (r["n_pairs"], r["coherence_sum"]) for r in rows}
-        a_df = Q.bigram_coherence(corpus_df, impl="arrow")
-        e_df = Q.bigram_coherence(corpus_df, impl="expr")
-        arrow, expr = key(a_df.collect()), key(e_df.collect())
-        release_caches(a_df)
-        release_caches(e_df)
-        assert arrow == expr and len(arrow) == corpus_df.count()
-
-    def test_bad_impl_rejected(self, docs_df):
-        import pytest as _pytest
-
-        from wordspell_spark.operators import quality as Q
-        from wordspell_spark.operators.dedup import contamination_hits
-
-        with _pytest.raises(ValueError, match="impl"):
-            contamination_hits(docs_df, docs_df, impl="nope")
-        with _pytest.raises(ValueError, match="impl"):
-            Q.bigram_coherence(docs_df, impl="nope")
+        sdf = E.queries()[name](spark, testdata_dir)
+        got = sdf.toPandas()
+        release_caches(sdf)
+        con = duckdb.connect()
+        con.execute(
+            f"create view documents as select * from '{testdata_dir}/documents.parquet'"
+        )
+        want = con.sql(E.oracle_sql()[name]).df()
+        assert len(got) > 0
+        assert compare(name, got, want) == []

@@ -9,11 +9,12 @@ engine cleans/dedups/packs).  The scale design is the classic one:
    ~10^8 rows instead of 10^12 tokens, and it is the ONLY pass that reads
    the corpus).
 2. The iterative merge loop runs over that small cached table: per
-   iteration, a pure-Catalyst adjacent-pair count (``transform`` +
-   ``explode`` + groupBy, map-side combined, weighted by word frequency),
-   a driver-side argmax of ONE row, and one Arrow-batched merge
-   application.  Driver traffic per iteration is a single (pair, count)
-   row; the shuffle moves |distinct pairs| rows, never corpus rows.
+   iteration, an Arrow-batched numpy adjacent-pair count (one partial row
+   per distinct pair per partition, weighted by word frequency) into a
+   map-side-combined Catalyst groupBy, a driver-side argmax of the top
+   rows, and one Arrow-batched merge application.  Driver traffic per
+   iteration is a few (pair, count) rows; the shuffle moves |distinct
+   pairs| rows, never corpus rows.
 
 Determinism: symbols are UTF-8 bytes (0-255, no OOV) plus learned ids
 256, 257, ...; ties on pair count break by (a asc, b asc), so the merge
@@ -179,60 +180,42 @@ def _word_table(docs: DataFrame, text_col: str) -> DataFrame:
     return words.select(to_bytes("word").alias("sym"), "count")
 
 
-_PAIRS_EXPR = (
-    "CASE WHEN size(sym) < 2 THEN array() "
-    "ELSE transform(sequence(1, size(sym) - 1), i -> struct(sym[i-1] AS a, sym[i] AS b)) END"
-)
+def _pair_counts(cur: DataFrame) -> DataFrame:
+    """(a, b, total) adjacent-pair counts of the word table, weighted by
+    word frequency.  Per-partition numpy pair counting over the flat
+    stream (keys packed as a<<32|b, factorize + int64 scatter-add) emits
+    ONE partial row per distinct pair per partition, feeding a
+    map-side-combined groupBy — the shuffle moves |distinct pairs| rows."""
 
+    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            words = pdf["sym"].tolist()
+            lens = np.fromiter((len(w) for w in words), dtype=np.int64, count=len(words))
+            flat = _flatten_words(words)
+            # weight of any pair inside word i is that word's count
+            wts = np.repeat(pdf["count"].to_numpy(np.int64), lens + 1)
+            valid = (flat[:-1] >= 0) & (flat[1:] >= 0)
+            if not valid.any():
+                continue
+            keys = (flat[:-1][valid].astype(np.int64) << 32) | flat[1:][valid]
+            codes, uniq = pd.factorize(keys)
+            totals = np.zeros(len(uniq), dtype=np.int64)
+            np.add.at(totals, codes, wts[:-1][valid])
+            yield pd.DataFrame(
+                {
+                    "a": (uniq >> 32).astype(np.int32),
+                    "b": (uniq & 0xFFFFFFFF).astype(np.int32),
+                    "total": totals,
+                }
+            )
 
-def _pair_count_top(cur: DataFrame, impl: str, limit: int = 1):
-    """The per-round top-``limit`` pair rows [(a, b, total)], sorted by
-    (total desc, a asc, b asc) — driver traffic is ``limit`` rows.
-
-    ``impl="arrow"``: per-partition numpy pair counting over the flat
-    stream (keys packed as a<<32|b, factorize + int64 scatter-add), ONE
-    partial (a, b, total) row per distinct pair per partition feeding a
-    map-side-combined groupBy — the same shuffle volume as the expr form
-    without its interpreted transform/explode tax.
-    ``impl="expr"``: the pure-Catalyst reference form."""
-    if impl == "expr":
-        pairs = (
-            cur.select(F.explode(F.expr(_PAIRS_EXPR)).alias("p"), "count")
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("count").alias("total"))
-        )
-    else:
-
-        def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                words = pdf["sym"].tolist()
-                lens = np.fromiter((len(w) for w in words), dtype=np.int64, count=len(words))
-                flat = _flatten_words(words)
-                # weight of any pair inside word i is that word's count
-                wts = np.repeat(pdf["count"].to_numpy(np.int64), lens + 1)
-                valid = (flat[:-1] >= 0) & (flat[1:] >= 0)
-                if not valid.any():
-                    continue
-                keys = (flat[:-1][valid].astype(np.int64) << 32) | flat[1:][valid]
-                codes, uniq = pd.factorize(keys)
-                totals = np.zeros(len(uniq), dtype=np.int64)
-                np.add.at(totals, codes, wts[:-1][valid])
-                yield pd.DataFrame(
-                    {
-                        "a": (uniq >> 32).astype(np.int32),
-                        "b": (uniq & 0xFFFFFFFF).astype(np.int32),
-                        "total": totals,
-                    }
-                )
-
-        pairs = (
-            cur.mapInPandas(partial, schema="a int, b int, total long")
-            .groupBy("a", "b")
-            .agg(F.sum("total").alias("total"))
-        )
-    return pairs.orderBy(F.desc("total"), F.asc("a"), F.asc("b")).limit(limit).collect()
+    return (
+        cur.mapInPandas(partial, schema="a int, b int, total long")
+        .groupBy("a", "b")
+        .agg(F.sum("total").alias("total"))
+    )
 
 
 def train_bpe(
@@ -241,7 +224,6 @@ def train_bpe(
     text_col: str = "text",
     min_count: int = 2,
     checkpoint_every: int = 8,
-    impl: str = "arrow",
     batch_k: int = 1,
 ) -> list[tuple[int, int, int]]:
     """Learn ``n_merges`` BPE merges from the corpus.
@@ -251,13 +233,13 @@ def train_bpe(
     iteration persists the re-symbolized word table and truncates lineage
     every ``checkpoint_every`` rounds so the plan never grows unbounded.
 
-    ``impl="arrow"`` (default) runs both per-round stages as numpy passes
-    over a flat -1-separated symbol stream (see ``_merge_flat``); values
-    are bit-identical to ``impl="expr"``/the per-word reference walk
-    (parity- and property-tested).  Measured at sf0.1: the per-merge
-    marginal cost drops ~3x and is dominated by the two Spark job
-    latencies per round, not Python — see BENCH.md for the 1,000-merge
-    trend.
+    Both per-round stages run as numpy passes over a flat -1-separated
+    symbol stream (``_pair_counts``, ``_merge_flat_multi``); values are
+    bit-identical to the per-word Sennrich walk (``_merge_one``; parity-
+    and property-tested).  Measured at sf0.1, the per-merge marginal cost
+    is ~3x below the per-word Python/Catalyst form and is dominated by the
+    Spark job latency per round, not Python — see BENCH.md for the
+    1,000-merge trend.
 
     ``batch_k`` is the SCALE path for production 30-50k-merge
     vocabularies, where a sequential driver loop pays one Spark job per
@@ -282,8 +264,6 @@ def train_bpe(
     """
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     if batch_k < 1:
         raise ValueError(f"batch_k must be >= 1, got {batch_k}")
     cur = _word_table(docs, text_col).persist()
@@ -315,7 +295,12 @@ def train_bpe(
             # doubled the job latency that dominates small vocabularies.
             # 4x oversampling gives the disjointness filter room; a fully
             # conflicting top (rare) just yields a smaller batch this round.
-            top = _pair_count_top(cur, impl, limit=max(1, 4 * want))
+            top = (
+                _pair_counts(cur)
+                .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
+                .limit(max(1, 4 * want))
+                .collect()
+            )
             if prev is not None:
                 prev.unpersist()
                 prev = None
@@ -328,28 +313,15 @@ def train_bpe(
             merges.extend(batch)
             rounds += 1
 
-            if impl == "arrow":
-
-                def apply(batches: Iterator[pd.DataFrame], _batch=batch):
-                    for pdf in batches:
-                        if pdf.empty:
-                            yield pdf
-                            continue
-                        flat = _merge_flat_multi(_flatten_words(pdf["sym"].tolist()), _batch)
-                        yield pd.DataFrame(
-                            {"sym": _split_words(flat), "count": pdf["count"].to_numpy()}
-                        )
-
-            else:
-
-                def apply(batches: Iterator[pd.DataFrame], _batch=batch):
-                    for pdf in batches:
-                        pdf = pdf.copy()
-                        for _a, _b, _n in _batch:
-                            pdf["sym"] = pdf["sym"].map(
-                                lambda s, _a=_a, _b=_b, _n=_n: _merge_one(list(s), _a, _b, _n)
-                            )
+            def apply(batches: Iterator[pd.DataFrame], _batch=batch):
+                for pdf in batches:
+                    if pdf.empty:
                         yield pdf
+                        continue
+                    flat = _merge_flat_multi(_flatten_words(pdf["sym"].tolist()), _batch)
+                    yield pd.DataFrame(
+                        {"sym": _split_words(flat), "count": pdf["count"].to_numpy()}
+                    )
 
             nxt = cur.mapInPandas(apply, schema=schema)
             if rounds % checkpoint_every == 0:

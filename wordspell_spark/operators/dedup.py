@@ -627,7 +627,6 @@ def contamination_hits(
     text_col: str = "text",
     id_col: str = "doc_id",
     eval_text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents that share word
     n-grams with an evaluation set (the standard pre-training hygiene
@@ -643,88 +642,55 @@ def contamination_hits(
     distinct-shingle set rides to the corpus side as a broadcast; the
     training side is ONE pass and zero-shingle docs stay present.
 
-    ``impl="arrow"`` (default): the eval texts are collected driver-side
-    (eager — same size contract as ``F.broadcast``), their shingle set is
-    broadcast to the Python workers, and one mapInPandas computes
-    ``len(doc_shingles & eval_set)`` per doc — one OUTPUT ROW PER DOC, no
-    join, no shuffle, and no shingle strings on the Arrow wire.  (An
-    attempt that Arrow-shipped per-shingle rows into the Catalyst join
-    measured WORSE than the HOF form — serializing the exploded shingle
-    stream dwarfs the interpreted-HOF cost it saved.)  Measured warm at
-    sf0.1 local[32]: above the ~8.5 busy-s mapInPandas floor the kernel
-    costs ~1.3 busy-s vs the expr form's ~5 — and the Python twin's edge
-    widens with document length while the floor amortizes away.
+    The eval texts are collected driver-side (eager — same size contract
+    as ``F.broadcast``), their shingle set is broadcast to the Python
+    workers, and one mapInPandas computes ``len(doc_shingles & eval_set)``
+    per doc — one OUTPUT ROW PER DOC, no join, no shuffle, and no shingle
+    strings on the Arrow wire.  ``_py_shingles`` is bit-identical to
+    ``shingles_of``, the form the DuckDB oracle mirrors (property-tested).
+    An interpreted-HOF explode + broadcast-join form costs ~4x the
+    kernel's busy-CPU, and an attempt that Arrow-shipped per-shingle rows
+    into a Catalyst join measured worse still — serializing the exploded
+    shingle stream dwarfs the interpreted-HOF cost it saved.
 
-    ``impl="expr"`` keeps the pure-Catalyst reference form the DuckDB
-    oracle mirrors (interpreted-HOF shingles + explode_outer + broadcast
-    left join + map-side groupBy); both impls produce identical output
-    (parity-tested).
+    Precondition: ``id_col`` is unique per row (a document PK); each input
+    row gets its own report row, so duplicate ids are not merged.
 
-    Precondition: ``id_col`` is unique per row (a document PK).  With
-    duplicate ids the impls legitimately diverge — expr groupBys the id
-    (merging the duplicates' hit counts) while arrow reports each row —
-    and neither answer is meaningful for an un-deduped table.
+    The eval broadcast is registered on the returned DataFrame: callers
+    that materialize many reports in one session should
+    ``release_caches(df)`` afterwards (the contract gate's one-call-per-query
+    pattern doesn't need to)."""
+    from typing import Iterator
 
-    The arrow path's eval broadcast is registered on the returned
-    DataFrame: callers that materialize many reports in one session
-    should ``release_caches(df)`` afterwards (the driver gate's
-    one-call-per-query pattern doesn't need to)."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        from typing import Iterator
+    spark = docs.sparkSession
+    eval_texts = [r[0] for r in eval_docs.select(eval_text_col).collect()]
+    eval_set: set[str] = set()
+    for t in eval_texts:
+        eval_set |= _py_shingles(t, n)
+    bc = spark.sparkContext.broadcast(eval_set)
 
-        spark = docs.sparkSession
-        eval_texts = [r[0] for r in eval_docs.select(eval_text_col).collect()]
-        eval_set: set[str] = set()
-        for t in eval_texts:
-            eval_set |= _py_shingles(t, n)
-        bc = spark.sparkContext.broadcast(eval_set)
+    inp = docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
+    id_type = inp.schema["__id"].dataType.simpleString()
 
-        inp = docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-        id_type = inp.schema["__id"].dataType.simpleString()
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ev = bc.value
+        for pdf in batches:
+            sets = [_py_shingles(t, n) for t in pdf["__text"]]
+            yield pd.DataFrame(
+                {
+                    id_col: pdf["__id"].to_numpy(),
+                    "n_shingles": np.fromiter(
+                        (len(s) for s in sets), dtype=np.int64, count=len(sets)
+                    ),
+                    "n_hits": np.fromiter(
+                        (len(s & ev) for s in sets), dtype=np.int64, count=len(sets)
+                    ),
+                }
+            )
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ev = bc.value
-            for pdf in batches:
-                sets = [_py_shingles(t, n) for t in pdf["__text"]]
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf["__id"].to_numpy(),
-                        "n_shingles": np.fromiter(
-                            (len(s) for s in sets), dtype=np.int64, count=len(sets)
-                        ),
-                        "n_hits": np.fromiter(
-                            (len(s & ev) for s in sets), dtype=np.int64, count=len(sets)
-                        ),
-                    }
-                )
-
-        out = inp.mapInPandas(
-            run, schema=f"{id_col} {id_type}, n_shingles long, n_hits long"
-        )
-        # Broadcast objects expose the same unpersist protocol the cache
-        # registry releases — without this, every call leaks one copy of
-        # the eval set into the block manager for the session's lifetime.
-        _register_owned_cache(out, bc)
-        return out
-
-    eval_sh = (
-        eval_docs.select(F.explode(shingles_of(F.col(eval_text_col), n)).alias("sh"))
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
-    base = docs.select(F.col(id_col), shingles_of(F.col(text_col), n).alias("sh_arr"))
-    exploded = base.select(
-        id_col,
-        F.size("sh_arr").cast("long").alias("n_shingles"),
-        F.explode_outer("sh_arr").alias("sh"),
-    )
-    return (
-        exploded.join(F.broadcast(eval_sh), "sh", "left")
-        .groupBy(id_col)
-        .agg(
-            F.first("n_shingles").alias("n_shingles"),
-            F.sum(F.coalesce("__hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-    )
+    out = inp.mapInPandas(run, schema=f"{id_col} {id_type}, n_shingles long, n_hits long")
+    # Broadcast objects expose the same unpersist protocol the cache
+    # registry releases — without this, every call leaks one copy of
+    # the eval set into the block manager for the session's lifetime.
+    _register_owned_cache(out, bc)
+    return out

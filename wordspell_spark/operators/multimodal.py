@@ -229,7 +229,7 @@ def _png_unfilter(raw: bytes, offset: int, height: int, stride: int, bpp: int) -
         elif ftype == 1:  # Sub — sequential along the row, per byte lane
             cur = filt.copy()
             for x in range(bpp, stride):
-                cur[x] += cur[x - bpp]
+                cur[x] = (int(cur[x]) + int(cur[x - bpp])) & 0xFF
         elif ftype == 3:  # Average
             cur = filt.copy()
             for x in range(stride):

@@ -16,48 +16,33 @@ natural text built from the corpus's own collocations scores high.  Rank
 order matches the log-likelihood filter for the decisions that matter
 (low-tail cutoffs), while staying exact.
 
-Scale shape: ONE tokenize-and-pair pass (the r5 arrow default runs it as a
-single Arrow-batched mapInPandas — no per-row Python, no window shuffle;
-``impl="expr"`` keeps the pure-Catalyst reference the oracle mirrors), two
-map-side combined groupBys for the corpus unigram/bigram tables, then two
-joins that re-attach the counts to the per-doc pair stream.  The n-gram
-tables are the small side at web scale (vocab² bounded, heavy-tailed) —
-AQE broadcasts them when they fit.
+Scale shape: ONE tokenize-and-pair pass (a single Arrow-batched
+mapInPandas — no window shuffle), two map-side combined groupBys for the
+corpus unigram/bigram tables, then two joins that re-attach the counts to
+the per-doc pair stream.  The n-gram tables are the small side at web
+scale (vocab² bounded, heavy-tailed) — AQE broadcasts them when they fit.
 
-Precondition shared by both impls: the id column is unique per row (a
-document PK) — with duplicate ids the expr window's pair framing is
-nondeterministic and the per-doc aggregates are meaningless.
+Precondition: the id column is unique per row (a document PK) — with
+duplicate ids the per-doc aggregates are meaningless.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import index_build as IB
 
-
-def _paired_tokens(docs: DataFrame, text_col: str, id_col: str, impl: str) -> DataFrame:
+def _paired_tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id_col, a, b) — one row per token, ``b`` = next token or NULL.
 
-    ``impl="arrow"`` (default hot path): one mapInPandas runs the
-    normalize-tokenize twin (``text.py_normalize_words``, bit-identical to
-    the Catalyst pipeline — property-tested) and emits each doc's adjacent
-    pairs directly.  Adjacency is row-local, so this needs NO shuffle; the
-    ``impl="expr"`` reference form pays both the interpreted-HOF tokenize
-    and a full window sort-shuffle of the token stream on doc_id — at
-    corpus scale that shuffle is the operator's largest, and it carries
-    zero information the row didn't already have.
+    One mapInPandas runs the normalize-tokenize twin
+    (``text.py_normalize_words``, bit-identical to the Catalyst pipeline —
+    property-tested) and emits each doc's adjacent pairs directly.
+    Adjacency is row-local, so this needs NO shuffle: a window ``lead``
+    over the token stream would sort-shuffle it on doc_id, and at corpus
+    scale that shuffle would be the operator's largest while carrying zero
+    information the row didn't already have.
     """
-    if impl == "expr":
-        words = IB.tokenized_words(docs, text_col, [id_col])
-        w = Window.partitionBy(id_col).orderBy("pos")
-        return (
-            words.withColumn("next_word", F.lead("word").over(w))
-            .select(id_col, F.col("word").alias("a"), F.col("next_word").alias("b"))
-        )
-    if impl != "arrow":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     from typing import Iterator
 
     import pandas as pd
@@ -85,20 +70,17 @@ def _paired_tokens(docs: DataFrame, text_col: str, id_col: str, impl: str) -> Da
     return inp.mapInPandas(run, schema=f"{id_col} {id_type}, a string, b string")
 
 
-def bigram_coherence(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", impl: str = "arrow"
-) -> DataFrame:
+def bigram_coherence(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, n_pairs, coherence_sum) — corpus-trained bigram coherence.
 
     Tokenization is the engine's standard normalize pipeline
-    (``index_build.normalize_words`` semantics; see ``_paired_tokens`` for
-    the arrow/expr twin split — values are bit-identical); pairs are
-    adjacent tokens within a doc regardless of language (the LM sees the
-    document as the corpus wrote it).  ``coherence_sum`` is the integer
-    permille sum defined in the module docstring; callers threshold on
-    ``coherence_sum div n_pairs`` (mean conditional probability) or on the
-    sum directly.  Docs with fewer than 2 tokens get (0, 0) — present,
-    never dropped."""
+    (``index_build.normalize_words`` semantics, via the Python twin in
+    ``_paired_tokens``); pairs are adjacent tokens within a doc regardless
+    of language (the LM sees the document as the corpus wrote it).
+    ``coherence_sum`` is the integer permille sum defined in the module
+    docstring; callers threshold on ``coherence_sum div n_pairs`` (mean
+    conditional probability) or on the sum directly.  Docs with fewer than
+    2 tokens get (0, 0) — present, never dropped."""
     from .dedup import _register_owned_cache
 
     if id_col in ("a", "b"):
@@ -107,7 +89,7 @@ def bigram_coherence(
     # (unigram table, bigram table, scored pair stream) — persist it so it
     # runs ONCE.  One row per token: b is NULL after a doc's last token, so
     # the unigram table is a groupBy over the SAME relation.
-    paired = _paired_tokens(docs, text_col, id_col, impl).persist()
+    paired = _paired_tokens(docs, text_col, id_col).persist()
     uni = paired.groupBy("a").agg(F.count("*").alias("c_a"))
     pairs = paired.filter(F.col("b").isNotNull())
     bi = pairs.groupBy("a", "b").agg(F.count("*").alias("c_ab"))

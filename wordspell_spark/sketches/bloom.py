@@ -30,7 +30,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import double_hash, row_hash_u32_matrix, splitmix64, unique_hashes
+from .hashing import double_hash, splitmix64, unique_hashes
 
 DEFAULT_FPR = 0.005  # reference default, component.go:16
 
@@ -96,19 +96,14 @@ def update(state: BloomState, values) -> BloomState:
     return update_unique_hashes(state, *unique_hashes(values))
 
 
-def update_hashes(state: BloomState, h1: np.ndarray, *, dedupe: bool = True) -> BloomState:
+def update_hashes(state: BloomState, h1: np.ndarray) -> BloomState:
     """Insert pre-hashed 64-bit keys (e.g. row_hash_u32_matrix output).
 
-    ``dedupe=True`` (default) drops repeated hashes before the k-probe
-    scatter — a 10× win on Zipfian token batches where the batch is mostly
-    repeats.  Callers whose hashes are already near-distinct (the SymSpell
-    deletion-neighborhood path) pass ``dedupe=False``: there the O(n log n)
-    sort is pure overhead and bit-setting is idempotent anyway, so the
-    filter contents are identical either way.
-    """
+    Repeated keys are not deduped: bit-setting is idempotent, so the
+    filter is the same either way, and callers hand in near-distinct keys
+    (``unique_hashes`` output, SymSpell deletion neighborhoods) for which
+    an O(n log n) sort would be pure overhead."""
     h1 = h1.astype(_U64, copy=False)
-    if dedupe:
-        h1 = np.unique(h1)
     _set_bits(state, h1, splitmix64(h1) | _U64(1))
     return state
 
@@ -118,19 +113,7 @@ def update_unique_hashes(state: BloomState, uh: np.ndarray, counts: np.ndarray |
     values (a 64-bit collision can repeat a key; bit-setting is idempotent,
     so a repeat is harmless).  ``counts`` is ignored for the same reason.
     Every probe index derives from h1, as in ``double_hash``."""
-    return update_hashes(state, uh, dedupe=False)
-
-
-def update_u32_rows(state: BloomState, mat: np.ndarray, valid_len: np.ndarray | None = None) -> BloomState:
-    """Insert each row of a (n, L) uint32 matrix as one set element.
-
-    This is the fast path for SymSpell deletion neighborhoods: candidate
-    generation emits codepoint/token matrices and we never materialize
-    Python strings (input_hint: no per-row Python).  Deletion neighborhoods
-    of distinct words are near-distinct, so the idempotent-update dedupe is
-    skipped (measured: the sort costs ~10% on unique batches, saves nothing).
-    """
-    return update_hashes(state, row_hash_u32_matrix(mat, valid_len), dedupe=False)
+    return update_hashes(state, uh)
 
 
 def contains(state: BloomState, values) -> np.ndarray:

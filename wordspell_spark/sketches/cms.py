@@ -21,7 +21,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import double_hash, splitmix64
+from .hashing import double_hash, hash64, splitmix64, unique_hashes
 
 _U64 = np.uint64
 _PARAMS = struct.Struct("<II")  # width, depth
@@ -63,22 +63,9 @@ def _row_idx(h1: np.ndarray, h2: np.ndarray, d: int, width: int) -> np.ndarray:
 
 def update(state: CmsState, values, weights=None) -> CmsState:
     """Add a batch of values with optional integer weights (default 1)."""
-    h1, h2 = double_hash(values)
-    n = h1.size
-    if n == 0:
-        return state
-    # bincount is the C fast path (np.add.at is ~20x slower); counts stay
-    # exact — weighted bincount returns float64 but values are integral and
-    # far below 2^53
-    w = None if weights is None else np.asarray(weights, dtype=np.int64)
-    for d in range(state.depth):
-        idx = _row_idx(h1, h2, d, state.width)
-        if w is None:
-            state.counts[d] += np.bincount(idx, minlength=state.width).astype(np.int64)
-        else:
-            state.counts[d] += np.bincount(idx, weights=w, minlength=state.width).astype(np.int64)
-    state.total += n if w is None else int(w.sum())
-    return state
+    if weights is None:
+        return update_unique_hashes(state, *unique_hashes(values))
+    return update_unique_hashes(state, hash64(values), weights)
 
 
 def update_unique_hashes(state: CmsState, uh: np.ndarray, counts: np.ndarray) -> CmsState:
@@ -87,11 +74,13 @@ def update_unique_hashes(state: CmsState, uh: np.ndarray, counts: np.ndarray) ->
     64-bit collision between two distinct values repeats a key; both
     counts then add, as they do when every value is hashed.
 
-    Table-identical to ``update(values)``: every bucket index derives from
-    (h1, h2 = splitmix64(h1)|1), and the weighted bincount adds exactly the
-    per-key occurrence totals the unweighted path accumulates one by one.
-    The bincounts also run over the distinct set only — on Zipfian token
-    batches that is 4-15x fewer index rows per depth."""
+    Table-identical to hashing every value: every bucket index derives
+    from (h1, h2 = splitmix64(h1)|1), and the weighted bincount adds exactly
+    the per-key occurrence totals one-by-one counting would.  The bincounts
+    run over the distinct set only — on Zipfian token batches that is 4-15x
+    fewer index rows per depth.  ``update`` with weights passes every
+    value's key here with its weight as the count; bincount's float64 sums
+    stay exact because the counts are integral and far below 2^53."""
     n = uh.size
     if n == 0:
         return state

@@ -145,13 +145,6 @@ def double_hash(values) -> tuple[np.ndarray, np.ndarray]:
     return h1, h2
 
 
-def indices_for(values, k: int, m: int) -> np.ndarray:
-    """(n, k) matrix of bucket indices g_i(x) = (h1 + i*h2) mod m."""
-    h1, h2 = double_hash(values)
-    i = np.arange(k, dtype=_U64)[None, :]
-    return ((h1[:, None] + i * h2[:, None]) % _U64(m)).astype(np.int64)
-
-
 def row_hash_u32_matrix(mat: np.ndarray, valid_len: np.ndarray | None = None) -> np.ndarray:
     """FNV-1a-style 64-bit hash of each ROW of a (n, L) uint32 matrix.
 

@@ -73,19 +73,16 @@ def update_unique_hashes(state: HllState, uh: np.ndarray, counts: np.ndarray | N
     """Update from ``unique_hashes`` output: ``hash64`` keys of the distinct
     values (a 64-bit collision can repeat a key; register max is idempotent,
     so a repeat is harmless).  ``counts`` is ignored for the same reason."""
-    return update_hashes(state, uh, dedupe=False)
+    return update_hashes(state, uh)
 
 
-def update_hashes(state: HllState, h: np.ndarray, *, dedupe: bool = True) -> HllState:
+def update_hashes(state: HllState, h: np.ndarray) -> HllState:
     if h.size == 0:
         return state
     # register updates are idempotent per hash (same (idx, rank) → same max),
-    # so dedupe first: Zipfian token batches shrink 4-10x, and the clz /
-    # bincount passes run on the distinct set only.  Callers that already
-    # deduped (or hold near-distinct hashes) pass dedupe=False.
+    # so repeated keys are harmless; ``update`` dedupes the values before
+    # hashing, so the clz / bincount passes run on the distinct set only
     h = h.astype(_U64, copy=False)
-    if dedupe:
-        h = np.unique(h)
     p = _U64(state.p)
     idx = (h >> (_U64(64) - p)).astype(np.int64)
     w = h << p  # remaining 64-p bits, left-aligned
