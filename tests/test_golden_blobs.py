@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 from make_golden_sketches import SPECS, build  # noqa: E402
 
-from wordspell_spark.sketches import bloom, cms, freq, hll, kll, sample, tdigest, theta  # noqa: E402
+from wordspell_spark.sketches import bloom, cms, freq, hll, kll, sample, serde, tdigest, theta  # noqa: E402
 
 # numpy RuntimeWarnings (overflowing casts, invalid values) are bugs here
 pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
@@ -51,6 +51,13 @@ def test_stored_blob_roundtrips_through_merge(kind):
     spec, _ = SPECS[kind]
     merged = spec.merge_payloads([_stored(kind), _stored(kind)])
     assert isinstance(merged, bytes) and len(merged) > 12
+
+
+@pytest.mark.parametrize("kind", ["bloom_sparse", "hll_sparse", "cms_sparse"])
+def test_sparse_fixtures_carry_the_sparse_form(kind):
+    """The *_sparse blobs pin the sparse body, not a second dense one."""
+    _, flags, _, _ = serde.unpack_header_full(_stored(kind))
+    assert flags == serde.FLAG_SPARSE
 
 
 def test_bloom_golden_queries():
@@ -104,3 +111,13 @@ def test_sample_golden():
     th = theta.update(theta.create(k=128), SPECS["sample"][1][:2500])
     theta.update(th, SPECS["sample"][1][2500:])
     assert (state.hashes == th.hashes).all()
+
+
+def test_int_item_fixtures():
+    """freq_int / sample_int pin the int form of the item block."""
+    fr = SPECS["freq_int"][0].deserialize(_stored("freq_int"))
+    assert (fr.n, fr.dec) == (5000, 10)
+    assert freq.query(fr, [0, 1, 16]).tolist() == [0, 1, 1]
+    sm = SPECS["sample_int"][0].deserialize(_stored("sample_int"))
+    assert sample.sample(sm)[:3] == [0, 636, 933]
+    assert sample.estimate(sm) == pytest.approx(559.904, abs=1e-3)

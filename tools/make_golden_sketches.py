@@ -27,6 +27,7 @@ FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__
 
 # deterministic inputs — NOT rng-based, so the recipe is obvious and eternal
 TOKENS = [f"tok{i * i % 997}" for i in range(5000)]
+INTS = [i * i % 997 for i in range(5000)]
 NUMBERS = [float((i * 37 % 1000) - 500) / 3.0 for i in range(5000)]
 
 SPECS = {
@@ -40,6 +41,14 @@ SPECS = {
     "theta": (SketchSpec("theta", {"k": 256}), TOKENS),
     "freq": (SketchSpec("freq", {"k": 32}), TOKENS),
     "sample": (SketchSpec("sample", {"k": 128}), TOKENS),  # 128 < 499: estimating
+    # geometry sized far above 499 distinct keys, so serialize picks the
+    # sparse wire form (FLAG_SPARSE) for these three
+    "bloom_sparse": (SketchSpec("bloom", {"n_estimate": 200_000, "fpr": 0.01}), TOKENS),
+    "hll_sparse": (SketchSpec("hll", {"p": 14}), TOKENS),
+    "cms_sparse": (SketchSpec("cms", {"width": 4096, "depth": 4}), TOKENS),
+    # the int item block (the str form is pinned by "freq" / "sample")
+    "freq_int": (SketchSpec("freq", {"k": 32}), INTS),
+    "sample_int": (SketchSpec("sample", {"k": 128}), INTS),
 }
 
 
