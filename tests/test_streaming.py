@@ -236,13 +236,29 @@ def test_io_sources_roundtrip(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "corr")).count() == 6
 
 
+WIN_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string, ts timestamp"
+
+
+def _events(rows):
+    """(doc_id, tokens, source, ts) tuples -> a WIN_SCHEMA arrow table."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "doc_id": [r[0] for r in rows],
+            "tokens": pa.array([r[1] for r in rows], pa.list_(pa.int32())),
+            "n_tok": pa.array([len(r[1]) for r in rows], pa.int32()),
+            "source": [r[2] for r in rows],
+            "ts": pa.array([r[3] for r in rows], pa.timestamp("us")),
+        }
+    )
+
+
 def test_windowed_sketch_with_late_data(spark, tmp_path):
     """Event-time windows + watermark sealing: a late event (arriving in a
     later file) merges into its original window; per-window estimates equal
     the batch build; sealing follows max_event_ts - lateness."""
     import datetime as dt
-
-    import pyarrow as pa
 
     from wordspell_spark.harness import build_sketches
     from wordspell_spark.sketches import SketchSpec, hll
@@ -251,19 +267,9 @@ def test_windowed_sketch_with_late_data(spark, tmp_path):
         windowed_sketch_query,
     )
 
-    schema = "doc_id string, tokens array<int>, n_tok int, source string, ts timestamp"
+    schema = WIN_SCHEMA
     t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-
-    def mk(rows):
-        return pa.table(
-            {
-                "doc_id": [r[0] for r in rows],
-                "tokens": pa.array([r[1] for r in rows], pa.list_(pa.int32())),
-                "n_tok": pa.array([len(r[1]) for r in rows], pa.int32()),
-                "source": [r[2] for r in rows],
-                "ts": pa.array([r[3] for r in rows], pa.timestamp("us")),
-            }
-        )
+    mk = _events
 
     d = tmp_path / "win_in"
     d.mkdir()
@@ -332,3 +338,35 @@ def test_windowed_sketch_with_late_data(spark, tmp_path):
         got = hll.estimate(hll.deserialize(bytes(by_win[r["window_start"]]["sketch"])))
         want = hll.estimate(hll.deserialize(bytes(r["sketch"])))
         assert got == want
+
+
+def test_windowed_recreated_checkpoint_raises(spark, tmp_path):
+    """Deleting the windowed query's checkpoint restarts its epoch ids at 0.
+    Every new batch then looks like a replay of a committed epoch; the
+    run-id guard must fail the query instead of dropping the new data."""
+    import datetime as dt
+    import shutil
+
+    from wordspell_spark.sketches import SketchSpec
+    from wordspell_spark.streaming.incremental import current_epoch
+    from wordspell_spark.streaming.windowed import windowed_sketch_query
+
+    t0 = dt.datetime(2026, 1, 1)
+    d = tmp_path / "win_in"
+    d.mkdir()
+    pq.write_table(_events([("a", [1, 2], "web", t0)]), str(d / "f1.parquet"))
+    state, ckpt = str(tmp_path / "win_state"), tmp_path / "win_ckpt"
+
+    def run():
+        windowed_sketch_query(
+            spark, str(d), WIN_SCHEMA, SketchSpec("hll", {"p": 10}), ["source"],
+            "tokens", "ts", "1 hour", state, str(ckpt),
+        ).awaitTermination()
+
+    run()
+    assert current_epoch(spark, state) == 0
+    shutil.rmtree(ckpt)
+    pq.write_table(_events([("b", [3], "web", t0)]), str(d / "f2.parquet"))
+    with pytest.raises(Exception, match="streaming run"):
+        run()
+    assert current_epoch(spark, state) == 0

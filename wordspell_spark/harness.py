@@ -248,50 +248,29 @@ def collect_sketches(result: DataFrame, spec: SketchSpec, group_cols: list[str] 
 # ---------------------------------------------------------------- query-side
 
 
-def make_membership_udf(spark: SparkSession, payload: bytes):
-    """Broadcast a Bloom payload; return a vectorized membership pandas UDF.
+# kind -> (kernel query function, UDF return type)
+_POINT_QUERIES = {"bloom": ("contains", "boolean"), "cms": ("query", "long"), "freq": ("query", "long")}
 
-    Parity: query-time ``Test`` gate at /root/reference/service.go:224.
+
+def make_point_query_udf(spark: SparkSession, payload: bytes):
+    """Broadcast a bloom, cms or freq payload; return a vectorized pandas
+    UDF that answers point queries against it.
+
+    bloom gives boolean membership (``contains``; parity: the query-time
+    ``Test`` gate at /root/reference/service.go:224).  cms and freq give a
+    long estimated count (``query``): CMS never undercounts, Misra–Gries
+    never overcounts, so querying both brackets the true frequency.
     """
-    from .sketches import bloom
-
+    kind = serde.KIND_NAMES.get(serde.peek_kind(payload))
+    if kind not in _POINT_QUERIES:
+        raise ValueError(f"no point-query UDF for sketch kind {kind!r}; know {sorted(_POINT_QUERIES)}")
+    fn, return_type = _POINT_QUERIES[kind]
+    module = SketchSpec(kind).module
+    deserialize, query = module.deserialize, getattr(module, fn)
     bc = spark.sparkContext.broadcast(payload)
 
-    @F.pandas_udf("boolean")
-    def maybe_contains(values: pd.Series) -> pd.Series:
-        state = bloom.deserialize(bc.value)
-        return pd.Series(bloom.contains(state, values.to_numpy()))
+    @F.pandas_udf(return_type)
+    def point_query(values: pd.Series) -> pd.Series:
+        return pd.Series(query(deserialize(bc.value), values.to_numpy()))
 
-    return maybe_contains
-
-
-def make_cms_count_udf(spark: SparkSession, payload: bytes):
-    """Broadcast a CMS payload; vectorized point-estimate pandas UDF."""
-    from .sketches import cms
-
-    bc = spark.sparkContext.broadcast(payload)
-
-    @F.pandas_udf("long")
-    def est_count(values: pd.Series) -> pd.Series:
-        state = cms.deserialize(bc.value)
-        return pd.Series(cms.query(state, values.to_numpy()))
-
-    return est_count
-
-
-def make_freq_count_udf(spark: SparkSession, payload: bytes):
-    """Broadcast a Misra–Gries payload; vectorized point-estimate UDF.
-
-    The MG dual of ``make_cms_count_udf``: CMS never undercounts, MG never
-    overcounts — querying both brackets the true frequency from both sides.
-    """
-    from .sketches import freq
-
-    bc = spark.sparkContext.broadcast(payload)
-
-    @F.pandas_udf("long")
-    def est_count(values: pd.Series) -> pd.Series:
-        state = freq.deserialize(bc.value)
-        return pd.Series(freq.query(state, values.to_numpy()))
-
-    return est_count
+    return point_query

@@ -34,17 +34,6 @@ _MODULES = {
     "sample": sample,
 }
 
-_KIND_IDS = {
-    "bloom": serde.KIND_BLOOM,
-    "hll": serde.KIND_HLL,
-    "cms": serde.KIND_CMS,
-    "kll": serde.KIND_KLL,
-    "tdigest": serde.KIND_TDIGEST,
-    "theta": serde.KIND_THETA,
-    "freq": serde.KIND_FREQ,
-    "sample": serde.KIND_SAMPLE,
-}
-
 
 @dataclass(frozen=True)
 class SketchSpec:

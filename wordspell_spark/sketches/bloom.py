@@ -147,17 +147,13 @@ def approx_fpr(state: BloomState) -> float:
 
 
 def serialize(state: BloomState) -> bytes:
-    """Dense packed-bit or sparse wire form, whichever is smaller.
-
-    Sparse body: u32 count, then count ascending u32 set-bit indices —
-    chosen deterministically whenever ``4*set_bits + 4 < m/8`` (and m fits
-    u32 indexing).  Why: the filter is sized once for the FULL expected
-    element count (the reference's NewWithEstimates discipline), so a
-    partial built from one partition's slice of one group carries a huge,
-    almost-empty bit array — at n_estimate=200k that is ~430 KB dense per
-    (partition, group) payload; a partition that saw 100 items serializes
-    to ~5 KB sparse.  In-memory state stays a bool array; merge (OR) and
-    contains() are unchanged."""
+    """Dense packed bits, or the sparse set-bit indices whenever
+    ``4*set_bits + 4 < m/8`` (and m fits u32 indexing).  Why: the filter
+    is sized once for the FULL expected element count (the reference's
+    NewWithEstimates discipline), so a partial built from one partition's
+    slice of one group carries a huge, almost-empty bit array — at
+    n_estimate=200k that is ~430 KB dense per (partition, group) payload;
+    a partition that saw 100 items serializes to ~5 KB sparse."""
     params = _PARAMS.pack(state.m, state.k)
     # cheap gate first (no index materialization on the dense/saturated
     # path); the _MAX_SPARSE_M cap bounds what a corrupt sparse payload can
@@ -165,19 +161,14 @@ def serialize(state: BloomState) -> bytes:
     # every emitted payload stays round-trippable
     n_set = int(np.count_nonzero(state.bits))
     if state.m <= _MAX_SPARSE_M and 4 * n_set + 4 < state.m // 8:
-        nz = np.flatnonzero(state.bits)
-        body = struct.pack("<I", nz.size) + np.ascontiguousarray(nz, dtype="<u4").tobytes()
+        body = serde.pack_sparse(np.flatnonzero(state.bits))
         return serde.pack_header(serde.KIND_BLOOM, params, serde.FLAG_SPARSE) + body
     packed = np.packbits(state.bits, bitorder="little")  # LSB-first == old u64-word layout
     return serde.pack_header(serde.KIND_BLOOM, params) + packed.tobytes()
 
 
 def deserialize(payload: bytes) -> BloomState:
-    kind, flags, params, body = serde.unpack_header_full(payload)
-    if kind != serde.KIND_BLOOM:
-        raise serde.SketchFormatError(f"not a bloom payload (kind={kind})")
-    if flags & ~serde.FLAG_SPARSE:
-        raise serde.SketchFormatError(f"unknown bloom flags 0x{flags:04x}")
+    flags, params, body = serde.unpack(payload, serde.KIND_BLOOM, serde.FLAG_SPARSE)
     m, k = _PARAMS.unpack(params)
     if flags & serde.FLAG_SPARSE:
         if m > _MAX_SPARSE_M:
@@ -185,14 +176,8 @@ def deserialize(payload: bytes) -> BloomState:
             # legit filters above the cap always serialize dense, where the
             # body-size cross-check rejects a lying header for free
             raise serde.SketchFormatError(f"sparse bloom m={m} above cap {_MAX_SPARSE_M}")
-        if len(body) < 4 or (len(body) - 4) % 4:
-            raise serde.SketchFormatError("sparse bloom body size mismatch")
-        (n,) = struct.unpack_from("<I", body, 0)
-        idx = np.frombuffer(body[4:], dtype="<u4").astype(np.int64)
-        if idx.size != n:
-            raise serde.SketchFormatError("sparse bloom body size mismatch")
-        if idx.size and (idx[-1] >= m or (np.diff(idx) <= 0).any()):
-            raise serde.SketchFormatError("sparse bloom indices not ascending in range")
+        _, words, _ = serde.unpack_sparse(body, "bloom")
+        idx = serde.sparse_indices(words, m, "bloom")
         bits = np.zeros(m, dtype=np.bool_)
         bits[idx] = True
         return BloomState(m, k, bits)

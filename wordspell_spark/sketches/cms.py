@@ -25,6 +25,7 @@ from .hashing import double_hash, hash64, splitmix64, unique_hashes
 
 _U64 = np.uint64
 _PARAMS = struct.Struct("<II")  # width, depth
+_TOTAL = struct.Struct("<q")  # total added weight, first in either body
 _MAX_SPARSE_CELLS = 1 << 28  # sparse wire form only below this (see serialize)
 
 DEFAULT_EPS = 1e-4
@@ -117,13 +118,10 @@ def error_bound(state: CmsState) -> float:
 
 
 def serialize(state: CmsState) -> bytes:
-    """Dense (depth*width i64 cells) or sparse wire form, whichever is
-    smaller.  Sparse body: i64 total, u32 count, count ascending u32 flat
-    cell indices (row*width+col), then count i64 cell values — chosen
-    deterministically when ``12*nonzero + 12 < 8*cells``.  A (partition,
-    group) partial that saw d distinct keys touches at most depth*d of the
-    depth*width cells, so nearly-empty partials shrink ~width/d-fold on
-    the shuffle; merge (cellwise +) and query are unchanged."""
+    """Dense cells, or the sparse nonzero cells whenever ``12*nonzero + 12
+    < 8*cells``.  A (partition, group) partial that saw d distinct keys
+    touches at most depth*d of the depth*width cells, so nearly-empty
+    partials shrink ~width/d-fold on the shuffle."""
     params = _PARAMS.pack(state.width, state.depth)
     flat = state.counts.reshape(-1)
     cells = flat.size
@@ -133,40 +131,25 @@ def serialize(state: CmsState) -> bytes:
     n_set = int(np.count_nonzero(flat))
     if cells <= _MAX_SPARSE_CELLS and 12 * n_set + 12 < 8 * cells:
         nz = np.flatnonzero(flat)
-        body = (
-            struct.pack("<qI", state.total, nz.size)
-            + np.ascontiguousarray(nz, dtype="<u4").tobytes()
-            + np.ascontiguousarray(flat[nz], dtype="<i8").tobytes()
-        )
+        body = serde.pack_sparse(nz, flat[nz], prefix=_TOTAL.pack(state.total))
         return serde.pack_header(serde.KIND_CMS, params, serde.FLAG_SPARSE) + body
-    body = struct.pack("<q", state.total) + state.counts.astype("<i8").tobytes()
+    body = _TOTAL.pack(state.total) + state.counts.astype("<i8").tobytes()
     return serde.pack_header(serde.KIND_CMS, params) + body
 
 
 def deserialize(payload: bytes) -> CmsState:
-    kind, flags, params, body = serde.unpack_header_full(payload)
-    if kind != serde.KIND_CMS:
-        raise serde.SketchFormatError(f"not a cms payload (kind={kind})")
-    if flags & ~serde.FLAG_SPARSE:
-        raise serde.SketchFormatError(f"unknown cms flags 0x{flags:04x}")
+    flags, params, body = serde.unpack(payload, serde.KIND_CMS, serde.FLAG_SPARSE)
     width, depth = _PARAMS.unpack(params)
     if flags & serde.FLAG_SPARSE:
         if depth * width > _MAX_SPARSE_CELLS:
             raise serde.SketchFormatError(
                 f"sparse cms cells={depth * width} above cap {_MAX_SPARSE_CELLS}"
             )
-        if len(body) < 12 or (len(body) - 12) % 12:
-            raise serde.SketchFormatError("sparse cms body size mismatch")
-        total, n = struct.unpack_from("<qI", body, 0)
-        idx = np.frombuffer(body[12 : 12 + 4 * n], dtype="<u4").astype(np.int64)
-        vals = np.frombuffer(body[12 + 4 * n :], dtype="<i8")
-        if idx.size != n or vals.size != n:
-            raise serde.SketchFormatError("sparse cms body size mismatch")
-        if idx.size and (idx[-1] >= depth * width or (np.diff(idx) <= 0).any()):
-            raise serde.SketchFormatError("sparse cms indices not ascending in range")
+        head, words, vals = serde.unpack_sparse(body, "cms", prefix=_TOTAL.size, values=True)
+        idx = serde.sparse_indices(words, depth * width, "cms")
         flat = np.zeros(depth * width, dtype=np.int64)
         flat[idx] = vals
-        return CmsState(width, depth, flat.reshape(depth, width), int(total))
-    (total,) = struct.unpack_from("<q", body, 0)
+        return CmsState(width, depth, flat.reshape(depth, width), _TOTAL.unpack(head)[0])
+    (total,) = _TOTAL.unpack_from(body, 0)
     counts = np.frombuffer(body[8:], dtype="<i8").astype(np.int64).reshape(depth, width)
     return CmsState(width, depth, counts, total)

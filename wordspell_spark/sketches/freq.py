@@ -36,9 +36,7 @@ from .hashing import normalize_items as _normalize_keys
 DEFAULT_K = 256
 
 _PARAMS = struct.Struct("<I")
-_BODY_HEAD = struct.Struct("<qqIB")
-_VT_INT = 0
-_VT_STR = 1
+_BODY_HEAD = struct.Struct("<qqIB")  # n, dec, entries, item vtype
 
 
 @dataclass
@@ -137,8 +135,8 @@ def query(state: FreqState, items) -> np.ndarray:
     """Estimated count per item (0 for untracked; true count <= est + dec).
 
     Query-side is LENIENT: nulls and non-int/str values return 0 instead
-    of raising (the make_freq_count_udf column may be nullable), matching
-    make_cms_count_udf's tolerate-anything behavior."""
+    of raising (a ``make_point_query_udf`` column may be nullable),
+    matching the cms point query's tolerate-anything behavior."""
     arr = np.asarray(items)
     if arr.dtype.kind in "US":
         arr = arr.astype(object)
@@ -167,55 +165,23 @@ def top_items(state: FreqState, n: int | None = None) -> list:
 
 def serialize(state: FreqState) -> bytes:
     items = sorted(state.counters.items(), key=lambda kv: str(kv[0]))
-    vtype = _VT_INT
-    if items and isinstance(items[0][0], str):
-        vtype = _VT_STR
-    if any(isinstance(it, str) != (vtype == _VT_STR) for it, _ in items):
-        raise serde.SketchFormatError("freq sketch holds mixed int/str items")
-    head = _BODY_HEAD.pack(state.n, state.dec, len(items), vtype)
+    vtype, block = serde.pack_items([it for it, _ in items], "freq")
     counts = np.array([v for _, v in items], dtype="<i8").tobytes()
-    if vtype == _VT_INT:
-        vals = np.array([it for it, _ in items], dtype="<i8").tobytes()
-        body = head + vals + counts
-    else:
-        blobs = [it.encode("utf-8") for it, _ in items]
-        lens = np.array([len(b) for b in blobs], dtype="<u4").tobytes()
-        body = head + lens + b"".join(blobs) + counts
+    body = _BODY_HEAD.pack(state.n, state.dec, len(items), vtype) + block + counts
     return serde.pack_header(serde.KIND_FREQ, _PARAMS.pack(state.k)) + body
 
 
 def deserialize(payload: bytes) -> FreqState:
-    kind, params, body = serde.unpack_header(payload)
-    if kind != serde.KIND_FREQ:
-        raise serde.SketchFormatError(f"not a freq payload (kind={kind})")
+    _, params, body = serde.unpack(payload, serde.KIND_FREQ)
     (k,) = _PARAMS.unpack(params)
     if len(body) < _BODY_HEAD.size:
         raise serde.SketchFormatError("freq body too short")
     n, dec, n_entries, vtype = _BODY_HEAD.unpack_from(body, 0)
-    off = _BODY_HEAD.size
     if n_entries > k:
         raise serde.SketchFormatError("freq body holds more than k entries")
-    if vtype == _VT_INT:
-        end = off + 8 * n_entries
-        items = np.frombuffer(body[off:end], dtype="<i8")
-        counts = np.frombuffer(body[end : end + 8 * n_entries], dtype="<i8")
-        if items.size != n_entries or counts.size != n_entries:
-            raise serde.SketchFormatError("freq body size mismatch")
-        counters = {int(it): int(c) for it, c in zip(items, counts)}
-    elif vtype == _VT_STR:
-        end = off + 4 * n_entries
-        lens = np.frombuffer(body[off:end], dtype="<u4")
-        blob_len = int(lens.sum())
-        blob = bytes(body[end : end + blob_len])
-        counts = np.frombuffer(
-            body[end + blob_len : end + blob_len + 8 * n_entries], dtype="<i8"
-        )
-        if lens.size != n_entries or counts.size != n_entries:
-            raise serde.SketchFormatError("freq body size mismatch")
-        counters, pos = {}, 0
-        for ln, c in zip(lens, counts):
-            counters[blob[pos : pos + int(ln)].decode("utf-8")] = int(c)
-            pos += int(ln)
-    else:
-        raise serde.SketchFormatError(f"unknown freq value type {vtype}")
+    items, end = serde.unpack_items(body, _BODY_HEAD.size, n_entries, vtype, "freq")
+    counts = np.frombuffer(body[end : end + 8 * n_entries], dtype="<i8")
+    if counts.size != n_entries:
+        raise serde.SketchFormatError("freq body size mismatch")
+    counters = dict(zip(items, counts.tolist()))
     return FreqState(k, int(n), int(dec), counters)

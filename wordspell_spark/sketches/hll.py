@@ -72,17 +72,11 @@ def update(state: HllState, values) -> HllState:
 def update_unique_hashes(state: HllState, uh: np.ndarray, counts: np.ndarray | None = None) -> HllState:
     """Update from ``unique_hashes`` output: ``hash64`` keys of the distinct
     values (a 64-bit collision can repeat a key; register max is idempotent,
-    so a repeat is harmless).  ``counts`` is ignored for the same reason."""
-    return update_hashes(state, uh)
-
-
-def update_hashes(state: HllState, h: np.ndarray) -> HllState:
-    if h.size == 0:
+    so a repeat is harmless).  ``counts`` is ignored for the same reason;
+    the clz / bincount passes run on the distinct set only."""
+    if uh.size == 0:
         return state
-    # register updates are idempotent per hash (same (idx, rank) → same max),
-    # so repeated keys are harmless; ``update`` dedupes the values before
-    # hashing, so the clz / bincount passes run on the distinct set only
-    h = h.astype(_U64, copy=False)
+    h = uh.astype(_U64, copy=False)
     p = _U64(state.p)
     idx = (h >> (_U64(64) - p)).astype(np.int64)
     w = h << p  # remaining 64-p bits, left-aligned
@@ -122,48 +116,31 @@ def rse(state: HllState) -> float:
 
 
 def serialize(state: HllState) -> bytes:
-    """Dense (m register bytes) or sparse wire form, whichever is smaller.
-
-    Sparse body: u32 count, then count u32 entries ``idx << 6 | rank``
-    sorted by idx (rank <= 64-p+1 <= 61 fits 6 bits; p <= 18 keeps idx in
-    26 bits).  Chosen deterministically from the state alone whenever
-    ``4*nonzero + 4 < m``.  Why: at high-cardinality group keys (per-source
-    sketches over 10^12 rows) the partial-payload shuffle carries
-    |partitions| x |groups| payloads, and a group seen a handful of times
-    per partition pays the full 2^p dense bytes for a few set registers —
-    sparse cuts that ~30-200x.  In-memory state stays dense; merge and
-    every query are unchanged."""
+    """Dense registers, or the sparse nonzero registers as ``idx << 6 |
+    rank`` words (rank <= 64-p+1 <= 61 fits 6 bits; p <= 18 keeps idx in
+    26 bits) whenever ``4*nonzero + 4 < m``.  Why: at high-cardinality
+    group keys the partial-payload shuffle carries |partitions| x |groups|
+    payloads, and a group seen a handful of times per partition pays the
+    full 2^p dense bytes for a few set registers — sparse cuts that
+    ~30-200x."""
     regs = state.registers
     m = regs.size
     n_set = int(np.count_nonzero(regs))  # cheap gate: no index materialization
     if 4 * n_set + 4 < m:
         nz = np.flatnonzero(regs)
         packed = (nz.astype(np.uint32) << np.uint32(6)) | regs[nz].astype(np.uint32)
-        body = struct.pack("<I", nz.size) + np.ascontiguousarray(packed, dtype="<u4").tobytes()
+        body = serde.pack_sparse(packed)
         return serde.pack_header(serde.KIND_HLL, _PARAMS.pack(state.p), serde.FLAG_SPARSE) + body
     return serde.pack_header(serde.KIND_HLL, _PARAMS.pack(state.p)) + regs.tobytes()
 
 
 def deserialize(payload: bytes) -> HllState:
-    kind, flags, params, body = serde.unpack_header_full(payload)
-    if kind != serde.KIND_HLL:
-        raise serde.SketchFormatError(f"not an hll payload (kind={kind})")
-    if flags & ~serde.FLAG_SPARSE:
-        raise serde.SketchFormatError(f"unknown hll flags 0x{flags:04x}")
+    flags, params, body = serde.unpack(payload, serde.KIND_HLL, serde.FLAG_SPARSE)
     (p,) = _PARAMS.unpack(params)
     if flags & serde.FLAG_SPARSE:
-        if len(body) < 4:
-            raise serde.SketchFormatError("sparse hll body too short")
-        (n,) = struct.unpack_from("<I", body, 0)
-        if (len(body) - 4) % 4:
-            raise serde.SketchFormatError("sparse hll body size not a multiple of 4")
-        packed = np.frombuffer(body[4:], dtype="<u4")
-        if packed.size != n:
-            raise serde.SketchFormatError("sparse hll body size mismatch")
-        idx = (packed >> np.uint32(6)).astype(np.int64)
+        _, packed, _ = serde.unpack_sparse(body, "hll")
+        idx = serde.sparse_indices(packed >> np.uint32(6), 1 << p, "hll")
         ranks = (packed & np.uint32(0x3F)).astype(np.uint8)
-        if idx.size and (idx[-1] >= 1 << p or (np.diff(idx) <= 0).any()):
-            raise serde.SketchFormatError("sparse hll indices not ascending in range")
         if (ranks == 0).any() or (ranks > 64 - p + 1).any():
             raise serde.SketchFormatError("sparse hll rank out of range")
         regs = np.zeros(1 << p, dtype=np.uint8)

@@ -168,9 +168,7 @@ def serialize(state: KllState) -> bytes:
 
 
 def deserialize(payload: bytes) -> KllState:
-    kind, params, body = serde.unpack_header(payload)
-    if kind != serde.KIND_KLL:
-        raise serde.SketchFormatError(f"not a kll payload (kind={kind})")
+    _, params, body = serde.unpack(payload, serde.KIND_KLL)
     (k,) = _PARAMS.unpack(params)
     n, min_v, max_v, coin, nlevels = struct.unpack_from("<qddqI", body, 0)
     off = struct.calcsize("<qddqI")

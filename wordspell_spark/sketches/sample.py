@@ -37,9 +37,7 @@ DEFAULT_K = 1024
 
 _U64 = np.uint64
 _PARAMS = struct.Struct("<I")
-_BODY_HEAD = struct.Struct("<IB")
-_VT_INT = 0
-_VT_STR = 1
+_BODY_HEAD = struct.Struct("<IB")  # entries, item vtype
 
 
 class SampleState:
@@ -143,28 +141,14 @@ def rse(state: SampleState) -> float:
 
 
 def serialize(state: SampleState) -> bytes:
-    n = state.hashes.size
-    vtype = _VT_INT
-    if state.values and isinstance(state.values[0], str):
-        vtype = _VT_STR
-    if any(isinstance(v, str) != (vtype == _VT_STR) for v in state.values):
-        raise serde.SketchFormatError("sample sketch holds mixed int/str items")
-    head = _BODY_HEAD.pack(n, vtype)
+    vtype, block = serde.pack_items(state.values, "sample")
     hbytes = np.ascontiguousarray(state.hashes, dtype="<u8").tobytes()
-    if vtype == _VT_INT:
-        vbytes = np.array(state.values, dtype="<i8").tobytes() if n else b""
-        body = head + hbytes + vbytes
-    else:
-        blobs = [v.encode("utf-8") for v in state.values]
-        lens = np.array([len(b) for b in blobs], dtype="<u4").tobytes()
-        body = head + hbytes + lens + b"".join(blobs)
+    body = _BODY_HEAD.pack(state.hashes.size, vtype) + hbytes + block
     return serde.pack_header(serde.KIND_SAMPLE, _PARAMS.pack(state.k)) + body
 
 
 def deserialize(payload: bytes) -> SampleState:
-    kind, params, body = serde.unpack_header(payload)
-    if kind != serde.KIND_SAMPLE:
-        raise serde.SketchFormatError(f"not a sample payload (kind={kind})")
+    _, params, body = serde.unpack(payload, serde.KIND_SAMPLE)
     (k,) = _PARAMS.unpack(params)
     if not 16 <= k <= (1 << 20):  # same bounds as create(); corrupt k would
         raise serde.SketchFormatError(f"sample k out of range: {k}")  # crash later
@@ -179,25 +163,7 @@ def deserialize(payload: bytes) -> SampleState:
         raise serde.SketchFormatError("sample body size mismatch")
     if n > 1 and not (hashes[1:] > hashes[:-1]).all():
         raise serde.SketchFormatError("sample hashes not strictly ascending")
-    off += 8 * n
-    if vtype == _VT_INT:
-        vals_arr = np.frombuffer(body[off : off + 8 * n], dtype="<i8")
-        if vals_arr.size != n or len(body) != off + 8 * n:
-            raise serde.SketchFormatError("sample body size mismatch")
-        values: list = [int(v) for v in vals_arr]
-    elif vtype == _VT_STR:
-        lens = np.frombuffer(body[off : off + 4 * n], dtype="<u4")
-        if lens.size != n:
-            raise serde.SketchFormatError("sample body size mismatch")
-        off += 4 * n
-        blob_len = int(lens.sum())
-        if len(body) != off + blob_len:
-            raise serde.SketchFormatError("sample body size mismatch")
-        blob = bytes(body[off:])
-        values, pos = [], 0
-        for ln in lens:
-            values.append(blob[pos : pos + int(ln)].decode("utf-8"))
-            pos += int(ln)
-    else:
-        raise serde.SketchFormatError(f"unknown sample value type {vtype}")
+    values, end = serde.unpack_items(body, off + 8 * n, n, vtype, "sample")
+    if end != len(body):
+        raise serde.SketchFormatError("sample body size mismatch")
     return SampleState(k, hashes, values)

@@ -155,9 +155,7 @@ def serialize(state: TDigestState) -> bytes:
 
 
 def deserialize(payload: bytes) -> TDigestState:
-    kind, params, body = serde.unpack_header(payload)
-    if kind != serde.KIND_TDIGEST:
-        raise serde.SketchFormatError(f"not a tdigest payload (kind={kind})")
+    _, params, body = serde.unpack(payload, serde.KIND_TDIGEST)
     (delta,) = _PARAMS.unpack(params)
     if not (np.isfinite(delta) and delta > 0):
         raise serde.SketchFormatError(f"tdigest delta out of range: {delta}")

@@ -82,13 +82,9 @@ def update_unique_hashes(state: ThetaState, uh: np.ndarray, counts: np.ndarray |
     """Update from ``unique_hashes`` output: ``hash64`` keys of the distinct
     values (a 64-bit collision can repeat a key; retention is idempotent,
     so a repeat is harmless).  ``counts`` is ignored for the same reason."""
-    return update_hashes(state, uh)
-
-
-def update_hashes(state: ThetaState, h: np.ndarray) -> ThetaState:
-    if h.size == 0:
+    if uh.size == 0:
         return state
-    h = h.astype(_U64, copy=False)
+    h = uh.astype(_U64, copy=False)
     if not is_exact(state):
         # only candidates below the current k-th smallest can enter
         h = h[h < state.hashes[-1]]
@@ -168,9 +164,7 @@ def serialize(state: ThetaState) -> bytes:
 
 
 def deserialize(payload: bytes) -> ThetaState:
-    kind, params, body = serde.unpack_header(payload)
-    if kind != serde.KIND_THETA:
-        raise serde.SketchFormatError(f"not a theta payload (kind={kind})")
+    _, params, body = serde.unpack(payload, serde.KIND_THETA)
     (k,) = _PARAMS.unpack(params)
     if not 16 <= k <= (1 << 22):  # same bounds as create(); corrupt k would
         raise serde.SketchFormatError(f"theta k out of range: {k}")  # crash later

@@ -83,28 +83,29 @@ def current_epoch(spark: SparkSession, state_path: str) -> int | None:
     return done[-1] if done else None
 
 
-def _run_marker_path(spark: SparkSession, state_path: str):
-    return _hadoop_fs(spark, _epochs_dir(state_path).rstrip("/") + "/_run_id")
+def _run_marker(state_path: str) -> str:
+    return _epochs_dir(state_path) + "/_run_id"
 
 
-def _read_run_marker(spark: SparkSession, state_path: str) -> str | None:
-    fs, p = _run_marker_path(spark, state_path)
+def _read_small(spark: SparkSession, path: str, limit: int) -> str | None:
+    """The first ``limit`` bytes of a small file as text; None if absent."""
+    fs, p = _hadoop_fs(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
-        data = bytearray()
-        b = stream.read()
-        while b != -1 and len(data) < 4096:
-            data.append(b)
-            b = stream.read()
-        return bytes(data).decode("utf-8").strip()
+        return bytes(stream.readNBytes(limit)).decode("utf-8")
     finally:
         stream.close()
 
 
+def _read_run_marker(spark: SparkSession, state_path: str) -> str | None:
+    text = _read_small(spark, _run_marker(state_path), 4096)
+    return None if text is None else text.strip()
+
+
 def _write_run_marker(spark: SparkSession, state_path: str, run_id: str) -> None:
-    fs, p = _run_marker_path(spark, state_path)
+    fs, p = _hadoop_fs(spark, _run_marker(state_path))
     out = fs.create(p, True)
     try:
         out.write(bytearray(run_id.encode("utf-8")))
@@ -122,20 +123,11 @@ def streaming_run_id(spark: SparkSession, checkpoint_path: str) -> str | None:
     """
     import json
 
-    fs, p = _hadoop_fs(spark, checkpoint_path.rstrip("/") + "/metadata")
-    if not fs.exists(p):
+    text = _read_small(spark, checkpoint_path.rstrip("/") + "/metadata", 65536)
+    if text is None:
         return None
-    stream = fs.open(p)
     try:
-        data = bytearray()
-        b = stream.read()
-        while b != -1 and len(data) < 65536:
-            data.append(b)
-            b = stream.read()
-    finally:
-        stream.close()
-    try:
-        return str(json.loads(bytes(data).decode("utf-8"))["id"])
+        return str(json.loads(text)["id"])
     except (ValueError, KeyError):
         return None
 
@@ -221,6 +213,27 @@ def incremental_sketch_query(
     with the same checkpoint only processes files not yet absorbed — the
     streaming twin of operators/checkpoint.py's bucket resume.
     """
+    return absorbing_query(
+        spark, input_path, input_schema,
+        lambda batch_df: build_sketches(batch_df, spec, group_cols, value_col),
+        spec, group_cols, state_path, checkpoint_path,
+    )
+
+
+def absorbing_query(
+    spark: SparkSession,
+    input_path: str,
+    input_schema: str,
+    to_partials,
+    spec: SketchSpec,
+    merge_keys: list[str],
+    state_path: str,
+    checkpoint_path: str,
+):
+    """availableNow streaming query whose foreachBatch merges
+    ``to_partials(batch_df)`` into the state table on ``merge_keys``, under
+    the run-id guard of ``merge_into_state`` (the query's checkpoint id,
+    read once the query has written its metadata)."""
     stream = spark.readStream.schema(input_schema).parquet(input_path)
     run_cache: dict[str, str | None] = {}
 
@@ -228,11 +241,11 @@ def incremental_sketch_query(
         if not batch_df.head(1):
             return
         sess = batch_df.sparkSession
-        if "id" not in run_cache:  # checkpoint metadata exists once the query runs
+        if "id" not in run_cache:
             run_cache["id"] = streaming_run_id(sess, checkpoint_path)
-        partials = build_sketches(batch_df, spec, group_cols, value_col)
         merge_into_state(
-            sess, partials, spec, group_cols, state_path, epoch_id, run_id=run_cache["id"]
+            sess, to_partials(batch_df), spec, merge_keys, state_path, epoch_id,
+            run_id=run_cache["id"],
         )
 
     return (

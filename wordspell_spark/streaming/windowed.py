@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..harness import build_sketches
 from ..sketches import SketchSpec
-from .incremental import merge_into_state, read_state
+from .incremental import absorbing_query, read_state
 
 WINDOW_COL = "window_start"
 MAX_TS_COL = "max_event_ts"
@@ -48,32 +48,19 @@ def windowed_sketch_query(
 ):
     """availableNow streaming query maintaining per-(event-time window,
     group) sketches.  Returns the StreamingQuery."""
-    stream = spark.readStream.schema(input_schema).parquet(input_path)
+    keys = [WINDOW_COL, *group_cols]
 
-    def absorb(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.head(1):
-            return
+    def to_partials(batch_df: DataFrame) -> DataFrame:
         win = batch_df.withColumn(
             WINDOW_COL, F.window(F.col(ts_col), window_duration)["start"]
         )
         mx = batch_df.select(F.max(ts_col)).first()[0]
-        partials = build_sketches(
-            win, spec, [WINDOW_COL, *group_cols], value_col
-        ).withColumn(MAX_TS_COL, F.lit(mx).cast("timestamp"))
-        merge_into_state(
-            batch_df.sparkSession,
-            partials,
-            spec,
-            [WINDOW_COL, *group_cols],
-            state_path,
-            epoch_id,
+        return build_sketches(win, spec, keys, value_col).withColumn(
+            MAX_TS_COL, F.lit(mx).cast("timestamp")
         )
 
-    return (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return absorbing_query(
+        spark, input_path, input_schema, to_partials, spec, keys, state_path, checkpoint_path
     )
 
 
