@@ -267,9 +267,7 @@ def test_windowed_sketch_with_late_data(spark, tmp_path):
         windowed_sketch_query,
     )
 
-    schema = WIN_SCHEMA
     t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-    mk = _events
 
     d = tmp_path / "win_in"
     d.mkdir()
@@ -281,7 +279,7 @@ def test_windowed_sketch_with_late_data(spark, tmp_path):
     ]
     import pyarrow.parquet as pq
 
-    pq.write_table(mk(rows1), str(d / "f1.parquet"))
+    pq.write_table(_events(rows1), str(d / "f1.parquet"))
 
     spec = SketchSpec("hll", {"p": 12})
     state = str(tmp_path / "win_state")
@@ -289,7 +287,7 @@ def test_windowed_sketch_with_late_data(spark, tmp_path):
 
     def run():
         q = windowed_sketch_query(
-            spark, str(d), schema, spec, ["source"], "tokens", "ts", "1 hour", state, ckpt
+            spark, str(d), WIN_SCHEMA, spec, ["source"], "tokens", "ts", "1 hour", state, ckpt
         )
         q.awaitTermination()
 
@@ -302,7 +300,7 @@ def test_windowed_sketch_with_late_data(spark, tmp_path):
         ("late", [7, 8, 9], "web", t0 + dt.timedelta(minutes=45)),
         ("d", [1], "web", t0 + dt.timedelta(hours=5)),
     ]
-    pq.write_table(mk(rows2), str(d / "f2.parquet"))
+    pq.write_table(_events(rows2), str(d / "f2.parquet"))
     run()
 
     out = read_windowed_state(spark, state, "1 hour", "2 hours").collect()
@@ -325,7 +323,7 @@ def test_windowed_sketch_with_late_data(spark, tmp_path):
     assert not sealed[t0 + dt.timedelta(hours=5)]
 
     # per-window estimates equal a batch build over all the data
-    full = spark.createDataFrame(mk(rows1 + rows2).to_pandas(), schema)
+    full = spark.createDataFrame(_events(rows1 + rows2).to_pandas(), WIN_SCHEMA)
     from pyspark.sql import functions as F
 
     batch = build_sketches(
