@@ -257,7 +257,7 @@ def make_point_query_udf(spark: SparkSession, payload: bytes):
     UDF that answers point queries against it.
 
     bloom gives boolean membership (``contains``; parity: the query-time
-    ``Test`` gate at /root/reference/service.go:224).  cms and freq give a
+    ``Test`` gate in the reference's service.go:224).  cms and freq give a
     long estimated count (``query``): CMS never undercounts, Misra–Gries
     never overcounts, so querying both brackets the true frequency.
     """
