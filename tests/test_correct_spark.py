@@ -5,6 +5,7 @@ end-to-end layer; parity cases after /root/reference/service_test.go:167-237).""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,6 +60,47 @@ def test_bloom_over_empty_index_is_empty_filter(index_df):
     assert st.m == bloom.optimal_m_k(64, 0.01)[0] and not st.bits.any()
 
 
+@pytest.fixture(scope="module")
+def uncached_index(spark, testdata_dir):
+    from wordspell_spark.operators.index_build import build_frequency_index
+
+    docs = spark.read.parquet(f"{testdata_dir}/documents.parquet")
+    return build_frequency_index(docs, "text", ["doc_id"], thresholds={"ru": 2, "en": 2})
+
+
+def test_partition_count_runs_no_index_job(spark, uncached_index):
+    """build_deletion_bloom sizes its tasks from the index's partition
+    count; counting must not run the uncached index's shuffle stages, as
+    ``df.rdd`` does under adaptive execution."""
+    from wordspell_spark.harness import num_partitions
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("count-num-partitions", "num_partitions")
+        assert num_partitions(uncached_index.select("word")) >= 1
+        # a fresh frame: a DataFrame keeps the RDD its first ``.rdd`` built
+        sc.setJobGroup("count-rdd-partitions", "df.rdd")
+        uncached_index.select("word").rdd.getNumPartitions()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("count-num-partitions") == []
+    assert len(tracker.getJobIdsForGroup("count-rdd-partitions")) >= 1
+
+
+def test_bloom_over_uncached_index_is_one_filter_build(uncached_index):
+    """The merged partial filters are byte-identical to one filter filled
+    from every index word on the driver."""
+    from wordspell_spark.functions import mutate as M
+
+    words = uncached_index.select("word").toPandas()["word"].to_numpy()
+    m, k = bloom.optimal_m_k(max(64, spell.deletes_estimated(uncached_index)), spell.DEFAULT_FPR)
+    state = bloom.create(m=m, k=k)
+    bloom.update_hashes(state, M.deletion_hashes(*M.encode_words(words)))
+    assert spell.build_deletion_bloom(uncached_index) == bloom.serialize(state)
+
+
 def test_correct_queries_end_to_end(spark, index_df, bloom_payload):
     queries = spark.createDataFrame(
         [
@@ -81,6 +123,59 @@ def test_correct_queries_end_to_end(spark, index_df, bloom_payload):
     assert got[5] == "чехол"
     # schema: input columns preserved + corrected appended
     assert out.columns == ["query_id", "query", "corrected"]
+
+
+def _one_edit_queries() -> list[str]:
+    """Every delete, adjacent swap, replace and insert (three letters of the
+    word's alphabet) of each fixture index word, alone and followed by the
+    next index word — 768 queries in a fixed shuffled order."""
+    words = [w for _, w, _ in INDEX_ROWS if " " not in w]
+    edits = []
+    for w in words:
+        abc = "abc" if w.isascii() else "абв"
+        edits += [w[:i] + w[i + 1 :] for i in range(len(w))]
+        edits += [w[:i] + w[i + 1] + w[i] + w[i + 2 :] for i in range(len(w) - 1)]
+        edits += [w[:i] + c + w[i + 1 :] for i in range(len(w)) for c in abc]
+        edits += [w[:i] + c + w[i:] for i in range(len(w) + 1) for c in abc]
+    queries = edits + [f"{e} {words[i % len(words)]}" for i, e in enumerate(edits)]
+    order = np.random.default_rng(0).permutation(len(queries))
+    return [queries[i] for i in order]
+
+
+def test_correction_independent_of_partitioning_and_slicing(spark, index_df, bloom_payload):
+    """The spread over task slots and the fixed-size slices of each Arrow
+    batch must not change a single correction."""
+    from wordspell_spark.harness import num_partitions
+
+    queries = _one_edit_queries()
+    assert len(queries) >= 600
+    texts = pd.Series(queries, dtype=object)
+    probe = spell.IndexProbe.from_index_df(index_df)
+    state = bloom.deserialize(bloom_payload)
+    whole = spell.correct_query_batch(texts, probe, state, [])
+    step = spell._CORRECT_SLICE
+    sliced = np.concatenate(
+        [spell.correct_query_batch(texts[i : i + step], probe, state, []) for i in range(0, len(texts), step)]
+    )
+    expect = dict(enumerate(whole))
+    assert dict(enumerate(sliced)) == expect
+    # not vacuous: most one-edit queries get their word back
+    assert sum(c != q for c, q in zip(whole, queries)) > len(queries) // 2
+
+    df = spark.createDataFrame(list(enumerate(queries)), "query_id long, query string")
+    for n in (1, 3, 8):
+        parts = df.repartition(n)
+        assert num_partitions(parts) == n
+        out = spell.correct_queries(parts, index_df, bloom_payload)
+        assert {r["query_id"]: r["corrected"] for r in out.collect()} == expect, n
+
+
+def test_correct_queries_accepts_streaming_input(spark, index_df, bloom_payload):
+    """A streaming frame keeps the exchange-free plan: its partitions cannot
+    be counted before the query starts."""
+    stream = spark.readStream.format("rate").load().select(F.col("value").cast("string").alias("query"))
+    out = spell.correct_queries(stream, index_df, bloom_payload)
+    assert out.isStreaming and out.columns == ["query", "corrected"]
 
 
 def test_correct_queries_with_trademarks(spark, index_df, bloom_payload):

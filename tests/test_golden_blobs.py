@@ -21,7 +21,18 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 from make_golden_sketches import SPECS, build  # noqa: E402
 
-from wordspell_spark.sketches import bloom, cms, freq, hll, kll, sample, serde, tdigest, theta  # noqa: E402
+from wordspell_spark.sketches import (  # noqa: E402
+    bloom,
+    cms,
+    deserialize_any,
+    freq,
+    hll,
+    kll,
+    sample,
+    serde,
+    tdigest,
+    theta,
+)
 
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -49,6 +60,16 @@ def test_stored_blob_roundtrips_through_merge(kind):
     spec, _ = SPECS[kind]
     merged = spec.merge_payloads([_stored(kind), _stored(kind)])
     assert isinstance(merged, bytes) and len(merged) > 12
+
+
+@pytest.mark.parametrize("kind_id", [0, 9, 255])
+@pytest.mark.parametrize("kind", sorted(SPECS))
+def test_unknown_kind_byte_is_a_format_error(kind, kind_id):
+    """A kind id outside KIND_* is a corrupt payload, never a KeyError."""
+    blob = bytearray(_stored(kind))
+    blob[5] = kind_id  # magic 4, version 1, then the kind byte
+    with pytest.raises(serde.SketchFormatError, match=f"unknown sketch kind {kind_id}"):
+        deserialize_any(bytes(blob))
 
 
 @pytest.mark.parametrize("kind", ["bloom_sparse", "hll_sparse", "cms_sparse"])

@@ -55,17 +55,43 @@ def test_top_customers_broadcasts_dimension(spark, testdata_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_correction_plan_is_shuffle_free(spark, docs):
+@pytest.fixture(scope="module")
+def spell_index(docs):
     from wordspell_spark.operators.index_build import build_frequency_index
-    from wordspell_spark.operators.spell import build_deletion_bloom, correct_queries
+    from wordspell_spark.operators.spell import build_deletion_bloom
 
     idx = build_frequency_index(docs, "text", ["doc_id"], thresholds={"ru": 2, "en": 2})
-    payload = build_deletion_bloom(idx, fpr=0.01)
-    queries = docs.select(F.col("text").alias("query"))
-    plan = _plan(correct_queries(queries, idx, payload))
+    return idx, build_deletion_bloom(idx, fpr=0.01)
+
+
+def test_correction_plan_is_shuffle_free(spark, spell_index):
+    from wordspell_spark.operators.spell import correct_queries
+
+    # an input already as wide as the task slots, with no exchange of its own
+    slots = spark.sparkContext.defaultParallelism
+    ids = spark.range(0, 64, 1, slots)
+    queries = ids.select(F.concat(F.lit("q"), F.col("id").cast("string")).alias("query"))
+    plan = _plan(correct_queries(queries, *spell_index))
     # serving path: one MapInPandas over the scan, zero exchanges
     assert "MapInPandas" in plan, plan
     assert "Exchange" not in plan, plan
+
+
+def test_correction_spreads_narrow_input(spark, docs, spell_index):
+    from wordspell_spark.harness import num_partitions
+    from wordspell_spark.operators.spell import correct_queries
+
+    # one split of queries is spread round-robin over the task slots, below
+    # the correction UDF; the index and Bloom payload stay broadcasts
+    slots = spark.sparkContext.defaultParallelism
+    queries = docs.select(F.col("text").alias("query"))
+    assert num_partitions(queries) == 1
+    out = correct_queries(queries, *spell_index)
+    plan = _plan(out)
+    assert plan.count("Exchange") == 1, plan
+    assert f"Exchange RoundRobinPartitioning({slots})" in plan, plan
+    assert plan.index("Exchange") > plan.index("MapInPandas"), plan
+    assert num_partitions(out) == slots
 
 
 def test_sketch_partials_single_shuffle(spark, docs):

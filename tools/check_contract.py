@@ -1,6 +1,7 @@
 """Local mimic of the driver's correctness gate: run each __spark_entry__
 query and its DuckDB oracle side-by-side, compare row count / columns /
-order-insensitive values.  Usage: python tools/check_contract.py [sf_dir] [names...]"""
+order-insensitive values.  An empty result is a failure.
+Usage: python tools/check_contract.py [sf_dir] [names...]"""
 
 from __future__ import annotations
 
@@ -107,9 +108,13 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {ex}")
             continue
         dt = time.time() - t0
+        if len(sdf) == 0:
+            # an empty result checks nothing: it fails even when the oracle agrees
+            failed.append(name)
+            print(f"FAIL {name:26s} empty result  {dt:6.1f}s")
+            continue
         if name not in oracles:
-            status = "rows-only"
-            print(f"ok   {name:26s} {len(sdf):7d} rows  {dt:6.1f}s  [{status}]" + ("  ⚠ EMPTY" if len(sdf) == 0 else ""))
+            print(f"ok   {name:26s} {len(sdf):7d} rows  {dt:6.1f}s  [rows-only]")
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -124,7 +129,7 @@ def main() -> int:
             for e in errs[:4]:
                 print(f"     {e}")
         else:
-            print(f"ok   {name:26s} {len(sdf):7d} rows  {dt:6.1f}s  [oracle-match]" + ("  ⚠ EMPTY" if len(sdf) == 0 else ""))
+            print(f"ok   {name:26s} {len(sdf):7d} rows  {dt:6.1f}s  [oracle-match]")
 
     print(f"\n{len(failed)} failures: {failed}" if failed else "\nALL MATCH")
     spark.stop()

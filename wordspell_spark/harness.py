@@ -72,7 +72,7 @@ def _flatten_values(series: pd.Series) -> np.ndarray:
     return vals[~pd.isna(vals)]
 
 
-def _num_partitions(df: DataFrame) -> int:
+def num_partitions(df: DataFrame) -> int:
     """``df.rdd.getNumPartitions()`` without running ``df``'s shuffles.
 
     Under adaptive execution ``df.rdd`` runs every shuffle stage below
@@ -97,7 +97,7 @@ def _fold(partials: DataFrame, keys: list[str]) -> DataFrame:
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         payloads = list(pdf["sketch"])
-        kind = serde.KIND_NAMES[serde.peek_kind(payloads[0])]
+        kind = serde.peek_kind(payloads[0])
         head = pdf.iloc[[0]][keys].reset_index(drop=True)
         head["sketch"] = [SketchSpec(kind).merge_payloads(payloads)]
         for c in cols:
@@ -126,7 +126,7 @@ def merge_partials(partials: DataFrame, keys: list[str]) -> DataFrame:
     more than ~64 payloads per group however wide the input.
     """
     keys = list(keys)
-    n = _num_partitions(partials)
+    n = num_partitions(partials)
     while n > _FANIN:
         n = -(-n // _FANIN)  # salt values, ~64 partials per (group, salt)
         salted = partials.withColumn(_SALT, F.floor(F.rand(seed=0) * n))
@@ -261,7 +261,7 @@ def make_point_query_udf(spark: SparkSession, payload: bytes):
     long estimated count (``query``): CMS never undercounts, Misra–Gries
     never overcounts, so querying both brackets the true frequency.
     """
-    kind = serde.KIND_NAMES.get(serde.peek_kind(payload))
+    kind = serde.peek_kind(payload)
     if kind not in _POINT_QUERIES:
         raise ValueError(f"no point-query UDF for sketch kind {kind!r}; know {sorted(_POINT_QUERIES)}")
     fn, return_type = _POINT_QUERIES[kind]

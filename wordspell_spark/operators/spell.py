@@ -15,15 +15,23 @@ The wordspell-parity path (SURVEY.md §3.1/§3.2 steps 5-6):
   the reference's in-RAM index map (index/service.go:84-110) — a broadcast
   hash join executed vectorized inside the correction UDF.
 * ``correct_queries`` — the full online pipeline (service.go:102-129) as ONE
-  shuffle-free mapInPandas: clean → tokenize → pair merge → split tier →
-  exact tier → deletes tier → Bloom gate → insert tiers → reassemble.
-  All tiers are batch-vectorized; the Bloom gate prunes insert explosion
-  before it happens (X1) and anti-masking preserves the reference's
-  first-hit-wins tier order (X2/O3).
+  mapInPandas: clean → tokenize → pair merge → split tier → exact tier →
+  deletes tier → Bloom gate → insert tiers → reassemble.  All tiers are
+  batch-vectorized; the Bloom gate prunes insert explosion before it
+  happens (X1) and anti-masking preserves the reference's first-hit-wins
+  tier order (X2/O3).
 
-Scale: the serving path has NO shuffle — queries stream through executors
-with two small broadcasts (index arrays + Bloom payload), exactly how a
-1000-executor cluster should serve a 100 TB-derived index.
+Scale: the serving path never shuffles the index or the Bloom filter —
+queries stream through executors with two small broadcasts (index arrays
++ Bloom payload), exactly how a 1000-executor cluster should serve a
+100 TB-derived index.  Correction costs ~0.4 ms of CPU per query, so the
+work, not the input's byte size, sets the task count: a query frame with
+fewer partitions than the task slots (any file under one 128 MB split)
+gets ONE round-robin exchange of its raw query rows (tens of bytes each)
+up to ``defaultParallelism`` partitions; a frame already that wide, or a
+streaming one, keeps the exchange-free plan.  Each Arrow batch is then
+corrected in slices of 256 queries, which bounds a worker's transient
+candidate arrays whatever the session's ``maxRecordsPerBatch``.
 """
 
 from __future__ import annotations
@@ -39,9 +47,10 @@ from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..functions import mutate as M
 from ..functions import processors as PROC
-from ..harness import merge_partials
+from ..harness import merge_partials, num_partitions
 from ..sketches import bloom
 from ..sketches.hashing import hash64, row_hash_u32_matrix
+from .trademark import protect_spans_batch
 
 NUM_WEIGHT = 1000  # index/models.go:8
 DEFAULT_FPR = 0.005  # bloomfilter/component.go:16
@@ -99,7 +108,7 @@ def build_deletion_bloom(
     # ~4 at sf0.1), while a 10M-word index still fans out to thousands of
     # tasks.  coalesce keeps this shuffle-free.
     words = index_df.select(word_col)
-    cur = words.rdd.getNumPartitions()
+    cur = num_partitions(words)
     n_parts = int(min(cur, max(1, n_estimate // 1_000_000)))
     if n_parts < cur:
         words = words.coalesce(n_parts)
@@ -542,7 +551,37 @@ def preprocess_query_strings(q: pd.Series) -> pd.Series:
     return out.map(lambda s: " ".join(PROC.process_words(s.split())))
 
 
+def correct_query_batch(
+    queries: pd.Series, probe: IndexProbe, bloom_state, trademarks: list[str]
+) -> np.ndarray:
+    """Corrected strings for a batch of raw queries — the body of
+    ``correct_queries``' UDF: preprocess → tokenize → protect →
+    ``correct_token_batch`` → render → dupremove → reassemble."""
+    q = preprocess_query_strings(queries)
+    token_lists = q.str.split()
+    counts = token_lists.str.len().fillna(0).astype(int).to_numpy()
+    qid = np.repeat(np.arange(len(q)), counts)
+    toks = np.array([t for lst in token_lists for t in (lst or [])], dtype=object)
+    protected = canonical_protected(toks)
+    if trademarks:
+        protected |= protect_spans_batch(toks, qid, trademarks)
+    out, keep = correct_token_batch(toks, qid, probe, bloom_state, protected=protected)
+    # DigestReady render before dupremove, as the reference orders it
+    # (service.go:108 parses/renders combos, :124 post-processes)
+    out = render_digest_tokens(out)
+    keep &= dupremove_batch(np.where(keep, out, ""), qid)
+    res = (
+        pd.Series(out[keep])
+        .groupby(qid[keep])
+        .agg(" ".join)
+        .reindex(range(len(q)), fill_value="")
+    )
+    return res.to_numpy()
+
+
 # --------------------------------------------------------------- serving op
+
+_CORRECT_SLICE = 256  # queries per correction call (bounds a worker's transient memory)
 
 
 def correct_queries(
@@ -553,12 +592,22 @@ def correct_queries(
     out_col: str = "corrected",
     trademarks: list[str] | None = None,
 ) -> DataFrame:
-    """The online correction pipeline as ONE shuffle-free mapInPandas.
+    """The online correction pipeline as ONE mapInPandas.
 
     Spark-first restatement of Service.Correct (service.go:102-129): the
     thresholded index and Bloom payload are broadcast once per executor
     (cold-start parity, service.go:42-100); queries stream through in Arrow
     batches.  Protected spans (trademarks F1) pass through untouched.
+
+    Sized by work, not bytes: a batch ``queries_df`` with fewer partitions
+    than ``defaultParallelism`` (a split holds up to 128 MB of queries, at
+    ~0.4 ms of CPU each) is first spread round-robin over the task slots —
+    the plan's only exchange, of the raw query rows; a frame that wide
+    already, or a streaming one, has none.  Every Arrow batch is corrected
+    in slices of ``_CORRECT_SLICE`` queries.  The output does not depend on
+    the slice: every tier works per distinct word, and the level-2 early
+    exit keeps the smallest ``del_ord``.  256 bounds each worker's transient
+    candidate arrays; it measured faster and smaller than 512 or 1024.
     """
     spark = queries_df.sparkSession
     probe = IndexProbe.from_index_df(index_df)
@@ -571,35 +620,14 @@ def correct_queries(
     pass_cols = [f.name for f in queries_df.schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .trademark import protect_spans_batch
-
         probe = IndexProbe(*bc_probe.value)
         bloom_state = bloom.deserialize(bc_bloom.value)
         tm = bc_tm.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            q = preprocess_query_strings(pdf[query_col])
-            token_lists = q.str.split()
-            counts = token_lists.str.len().fillna(0).astype(int).to_numpy()
-            qid = np.repeat(np.arange(len(pdf)), counts)
-            toks = np.array(
-                [t for lst in token_lists for t in (lst or [])], dtype=object
-            )
-            protected = canonical_protected(toks)
-            if tm:
-                protected |= protect_spans_batch(toks, qid, tm)
-            out, keep = correct_token_batch(toks, qid, probe, bloom_state, protected=protected)
-            # DigestReady render before dupremove, as the reference orders it
-            # (service.go:108 parses/renders combos, :124 post-processes)
-            out = render_digest_tokens(out)
-            keep &= dupremove_batch(np.where(keep, out, ""), qid)
-            res = (
-                pd.Series(out[keep])
-                .groupby(qid[keep])
-                .agg(" ".join)
-                .reindex(range(len(pdf)), fill_value="")
-            )
-            yield pdf[pass_cols].assign(**{out_col: res.to_numpy()})
+        slices = (b.iloc[i : i + _CORRECT_SLICE] for b in batches for i in range(0, len(b), _CORRECT_SLICE))
+        for pdf in slices:
+            yield pdf[pass_cols].assign(**{out_col: correct_query_batch(pdf[query_col], probe, bloom_state, tm)})
 
+    slots = spark.sparkContext.defaultParallelism
+    if not queries_df.isStreaming and num_partitions(queries_df) < slots:
+        queries_df = queries_df.repartition(slots)
     return queries_df.mapInPandas(run, schema=out_schema)

@@ -80,8 +80,7 @@ def module_for(kind: str):
 
 def deserialize_any(payload: bytes):
     """Dispatch on the payload header → (kind_name, state)."""
-    kind_id = serde.peek_kind(payload)
-    name = serde.KIND_NAMES[kind_id]
+    name = serde.peek_kind(payload)
     return name, _MODULES[name].deserialize(payload)
 
 

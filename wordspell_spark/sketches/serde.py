@@ -11,7 +11,7 @@ Header (12 bytes), then the params block, then the kind-specific body:
 
     magic   : 4 bytes  b"WSPK"
     version : u8       format version (bump on any layout/hash change)
-    kind    : u8       sketch kind id (see KIND_*)
+    kind    : u8       sketch kind id (see KIND_*); any other id is rejected
     flags   : u16      FLAG_SPARSE or 0; a reader rejects bits it does not know
     plen    : u32      length of the params block
 
@@ -127,9 +127,12 @@ def unpack(
     return flags, params, body
 
 
-def peek_kind(payload: bytes) -> int:
+def peek_kind(payload: bytes) -> str:
+    """The kind name in the payload header; an unknown kind id raises."""
     kind, _, _, _ = unpack_header_full(payload)
-    return kind
+    if kind not in KIND_NAMES:
+        raise SketchFormatError(f"unknown sketch kind {kind}")
+    return KIND_NAMES[kind]
 
 
 def pack_sparse(words: np.ndarray, values: np.ndarray | None = None, prefix: bytes = b"") -> bytes:
