@@ -15,6 +15,7 @@ from wordspell_spark.operators.spell import (
     lang_majority,
 )
 from wordspell_spark.sketches import bloom
+from wordspell_spark.sketches.hashing import row_hash_u32_matrix
 
 INDEX = {
     # unigrams (ru)
@@ -42,12 +43,16 @@ def probe():
     return IndexProbe.from_arrays(words, freqs)
 
 
-@pytest.fixture(scope="module")
-def dbloom():
-    st = bloom.create(n_estimate=sum(len(w) ** 2 + 1 for w in INDEX), fpr=0.005)
-    mat, lens = M.encode_words(np.array(list(INDEX), dtype=object))
+def deletion_bloom(words) -> bloom.BloomState:
+    st = bloom.create(n_estimate=sum(len(w) ** 2 + 1 for w in words), fpr=0.005)
+    mat, lens = M.encode_words(np.array(list(words), dtype=object))
     bloom.update_hashes(st, M.deletion_hashes(mat, lens))
     return st
+
+
+@pytest.fixture(scope="module")
+def dbloom():
+    return deletion_bloom(INDEX)
 
 
 def run(probe, dbloom, queries: list[str]) -> list[str]:
@@ -156,3 +161,83 @@ class TestCorrect:
         prot = np.array([True, False])
         out, keep = correct_token_batch(toks, qids, probe, dbloom, protected=prot)
         assert out[0] == "Тилифон" and out[1] == "телефон"
+
+
+def _own_alphabet(word: str) -> str:
+    return M.RU_ALPHABET if lang_majority(np.array([word], dtype=object))[0] == "ru" else M.EN_ALPHABET
+
+
+def _edit_tokens(word: str, n_del2: int, n_ins: int) -> np.ndarray:
+    """Every distinct 1-deletion of ``word``, plus up to ``n_del2`` seeded
+    distinct 2-deletions and ``n_ins`` seeded own-alphabet 1-insertions."""
+    arr = np.array([word], dtype=object)
+    _, dord, dels = M.delete_candidates(arr)
+    rng = np.random.default_rng(len(word))
+    del1 = np.unique(dels[(dord > 0) & (dord <= M.MAX_WORD_LEN)].astype(str))
+    del2 = np.setdiff1d(dels[dord > M.MAX_WORD_LEN].astype(str), del1)
+    ins = np.unique(M.insert_candidates(arr, _own_alphabet(word))[2].astype(str))
+    picked = [rng.choice(del2, min(n_del2, del2.size), replace=False), rng.choice(ins, n_ins, replace=False)]
+    return np.unique(np.concatenate([del1, *picked])).astype(object)
+
+
+class TestInsertTierGates:
+    """The two Bloom gates of the insert tiers (on deletes, then on one-insert
+    intermediates) only skip work that cannot produce a hit."""
+
+    def test_gates_lose_nothing_against_a_saturated_bloom(self, probe, dbloom):
+        # an all-ones filter with dbloom's geometry passes every delete and
+        # every intermediate: the ungated run.  Ungated, a 2-deletion or
+        # 1-insertion token expands up to ~10^6 two-inserts (0.05-0.75 s
+        # apiece; all ~2,200 of them take minutes), so those are sampled,
+        # and tokens go one at a time to bound the ungated candidate arrays.
+        saturated = bloom.BloomState(dbloom.m, dbloom.k, np.ones(dbloom.m, dtype=bool))
+        toks = np.concatenate([_edit_tokens(w, 6, 2) for w in INDEX if " " not in w])
+        assert toks.size > 100
+        changed = 0
+        for t in toks:
+            one = np.array([t], dtype=object)
+            qid = np.zeros(1, dtype=np.int64)
+            gated = correct_token_batch(one, qid, probe, dbloom)
+            ungated = correct_token_batch(one, qid, probe, saturated)
+            assert list(gated[0]) == list(ungated[0]) and list(gated[1]) == list(ungated[1]), t
+            changed += gated[0][0] != t
+        assert changed > toks.size // 2  # the tokens do reach the insert tiers
+
+    def test_intermediate_of_24_runes_is_not_gated(self, probe):
+        # a 25-rune index word has no deletion neighborhood in the Bloom
+        # (deletion_hashes skips words over MAX_WORD_LEN), so the 24-rune
+        # one-insert leading to it must be expanded without a Bloom test
+        long_word = "abcdefghijklmnopqrstuvwxy"
+        query = long_word[:5] + long_word[7:]
+        assert (len(long_word), len(query)) == (M.MAX_WORD_LEN + 1, M.MAX_WORD_LEN - 1)
+        words = list(INDEX) + [long_word]
+        freqs = [INDEX.get(w, 50) for w in words]
+        long_probe = IndexProbe.from_arrays(np.array(words, dtype=object), np.array(freqs, dtype=np.int64))
+        st = deletion_bloom(words)
+        # the query's own hash stands in for a Bloom false positive on the delete
+        bloom.update_hashes(st, row_hash_u32_matrix(*M.encode_words(np.array([query], dtype=object))))
+        assert run(long_probe, st, [query]) == [long_word]
+
+
+def test_own_alphabet_inserts_never_make_num_or_unknown():
+    """Insert candidates are weighed with ``probe.lookup`` alone: an
+    own-alphabet rune inserted into an en or ru string never yields a string
+    lang_majority calls num or unknown (so NUM_WEIGHT and the unknown→0
+    override never apply to them)."""
+    rng = np.random.default_rng(7)
+    foreign = {"en": "0123456789.,йжЖ ", "ru": "0123456789.,qzQ "}
+    for lang, alphabet in (("en", M.EN_ALPHABET), ("ru", M.RU_ALPHABET)):
+        words = []
+        while len(words) < 50:
+            runes = list(rng.choice(list(alphabet + "-`'"), size=int(rng.integers(1, 12))))
+            for _ in range(int(rng.integers(0, 3))):
+                runes.insert(int(rng.integers(len(runes) + 1)), rng.choice(list(foreign[lang])))
+            w = "".join(runes)
+            if lang_majority(np.array([w], dtype=object))[0] == lang:
+                words.append(w)
+        assert any("-" in w for w in words) and any(set(w) & set("`'") for w in words)
+        _, _, ins1 = M.insert_candidates(np.array(words, dtype=object), alphabet)
+        assert not np.isin(lang_majority(ins1), ["num", "unknown"]).any()
+        sub = ins1[rng.choice(ins1.size, 20 * len(words), replace=False)]
+        _, _, ins2 = M.insert_candidates(sub, alphabet)
+        assert not np.isin(lang_majority(ins2), ["num", "unknown"]).any()

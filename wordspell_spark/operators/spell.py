@@ -17,9 +17,10 @@ The wordspell-parity path (SURVEY.md §3.1/§3.2 steps 5-6):
 * ``correct_queries`` — the full online pipeline (service.go:102-129) as ONE
   mapInPandas: clean → tokenize → pair merge → split tier → exact tier →
   deletes tier → Bloom gate → insert tiers → reassemble.  All tiers are
-  batch-vectorized; the Bloom gate prunes insert explosion before it
-  happens (X1) and anti-masking preserves the reference's first-hit-wins
-  tier order (X2/O3).
+  batch-vectorized; the Bloom gates the insert explosion at two points
+  before it happens (X1): a delete is expanded only if it passes, and a
+  one-insert is expanded into two-inserts only if it passes too.
+  Anti-masking preserves the reference's first-hit-wins tier order (X2/O3).
 
 Scale: the serving path never shuffles the index or the Bloom filter —
 queries stream through executors with two small broadcasts (index arrays
@@ -197,7 +198,7 @@ def lang_majority(words: np.ndarray) -> np.ndarray:
     m = len(words)
     if m == 0:
         return np.empty(0, dtype=object)
-    lens = np.fromiter((len(w) for w in words), count=m, dtype=np.int64)
+    lens = np.fromiter(map(len, words), count=m, dtype=np.int64)
     chars = np.frombuffer("".join(words).encode("utf-32-le"), dtype=np.uint32)
     # reduceat over the NON-EMPTY subset only, scattered back: every offset
     # is then strictly valid.  (A clamped-offset scheme miscounted when an
@@ -298,12 +299,10 @@ def correct_token_batch(
     nxt_lang = np.concatenate([langs[1:], np.array(["unknown"], dtype=object)])
     qbreak = np.concatenate([[True], qid[1:] != qid[:-1]])
     lang_ok = raw & nxt_raw & (langs != "num") & (langs != "unknown") & (langs == nxt_lang)
-    merged = np.array([a + b for a, b in zip(lower, nxt)], dtype=object)  # bounded concat
     mweight = np.zeros(n, dtype=np.int64)
-    if lang_ok.any():
-        mweight[lang_ok] = probe.lookup(merged[lang_ok])
+    mweight[lang_ok] = probe.lookup(lower[lang_ok] + nxt[lang_ok])
     merge_at = _greedy_pair_merge(lang_ok & (mweight > 0), qbreak)
-    out[merge_at] = merged[merge_at]
+    out[merge_at] = lower[merge_at] + nxt[merge_at]
     status[merge_at] = 1
     status[np.concatenate([[False], merge_at[:-1]])] = 2
 
@@ -313,10 +312,8 @@ def correct_token_batch(
     # examples/speller/main.go:61-75)
     act = np.flatnonzero(status == 0)
     if act.size:
-        uniq, inv = np.unique(lower[act].astype(str)), None
-        uniq = uniq.astype(object)
-        inv = np.searchsorted(uniq, lower[act].astype(str))
-        vals, resolved = _correct_words(uniq, probe, bloom_state)
+        uniq, inv = np.unique(lower[act].astype(str), return_inverse=True)
+        vals, resolved = _correct_words(uniq.astype(object), probe, bloom_state)
         hit = resolved[inv]
         rows = act[hit]
         out[rows] = vals[inv][hit]
@@ -367,9 +364,6 @@ def _correct_words(words: np.ndarray, probe: IndexProbe, bloom_state) -> tuple[n
     return out, resolved
 
 
-_INS2_CHUNK = 8  # deletes per level-2 expansion chunk (bounds transient memory)
-
-
 def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
     """Tiers b-d of correctWord for unresolved words.
 
@@ -377,6 +371,17 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
     (del_ord, stage, ins1_ord, -weight, gen_ord) — the set-oriented
     encoding of the reference's sequential first-hit-wins loop (X2/O3).
     Returns (word_row_indices, corrected_values).
+
+    Gate premise: the Bloom holds every ≤2-deletion of every index word of
+    2..``MAX_WORD_LEN`` runes.  A delete one or two inserts away from such a
+    word is one of its deletions, so only deletes that pass are expanded.
+    Likewise a one-insert that is one insert away from such a word is its
+    1-deletion: one-inserts of ≤ ``MAX_WORD_LEN - 1`` runes are expanded only
+    if they pass.  Longer ones lead to words the Bloom never saw and stay
+    ungated.  Insert candidates are weighed by ``probe.lookup`` alone:
+    inserting a rune of an en/ru delete's own alphabet never makes a string
+    ``lang_majority`` calls num or unknown, so ``_weight``'s overrides
+    cannot fire on them.
     """
     dwi, dord, dcand = M.delete_candidates(words)
     if len(dcand) == 0:
@@ -405,14 +410,16 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
         if g.size:
             g_words, g_ords, g_strs = dwi[g], dord[g], dcand[g]
             g_langs = lang_majority(g_strs)
-            # ---- level-1 inserts
+            # ---- level-1 inserts (kept per language: level 2 expands them)
             l1_hit_del = np.zeros(g.size, dtype=bool)
+            level1 = []
             for alphabet, lang in ((M.RU_ALPHABET, "ru"), (M.EN_ALPHABET, "en")):
                 sel = np.flatnonzero(g_langs == lang)
                 if not sel.size:
                     continue
                 iwi, iord, icand = M.insert_candidates(g_strs[sel], alphabet)
-                iw = _weight(probe, icand)
+                level1.append((alphabet, sel[iwi], iord, icand))
+                iw = probe.lookup(icand)
                 ih = iw > 0
                 if ih.any():
                     gi = sel[iwi[ih]]
@@ -426,34 +433,26 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
                 if len(h[0]):
                     b = _best_per_group(h[0], h[1])
                     np.minimum.at(best_so_far, h[0][b], h[1][b])
-            pend = np.flatnonzero(
-                ~l1_hit_del
-                & (g_langs != "num")
-                & (g_langs != "unknown")
-                & (g_ords < best_so_far[g_words])
-            )
-            # process in (word, del_ord) order with early exit per word
-            pend = pend[np.lexsort((g_ords[pend], g_words[pend]))]
-            done_words: set = set()
-            for start in range(0, pend.size, _INS2_CHUNK):
-                chunk = np.array([p for p in pend[start : start + _INS2_CHUNK] if g_words[p] not in done_words])
-                if chunk.size == 0:
+            pend = ~l1_hit_del & (g_ords < best_so_far[g_words])
+            g_lens = np.fromiter(map(len, g_strs), dtype=np.int64, count=g.size)
+            for alphabet, gi1, iord, icand in level1:
+                # second bloom gate: a one-insert of ≤ MAX_WORD_LEN-1 runes
+                # leads to an index word only if it is that word's 1-deletion
+                mid = np.flatnonzero(pend[gi1])
+                gated = g_lens[gi1[mid]] + 1 < M.MAX_WORD_LEN
+                keep = ~gated
+                keep[gated] = _bloom_test_strings(bloom_state, icand[mid[gated]])
+                mid = mid[keep]
+                if not mid.size:
                     continue
-                for alphabet, lang in ((M.RU_ALPHABET, "ru"), (M.EN_ALPHABET, "en")):
-                    sel = chunk[g_langs[chunk] == lang]
-                    if not sel.size:
-                        continue
-                    i1wi, i1ord, i1cand = M.insert_candidates(g_strs[sel], alphabet)
-                    i2wi, i2ord, i2cand = M.insert_candidates(i1cand, alphabet)
-                    iw = _weight(probe, i2cand)
-                    ih = iw > 0
-                    if ih.any():
-                        parent1 = i2wi[ih]        # index into i1cand
-                        gi = sel[i1wi[parent1]]   # gated-delete row
-                        hits.append((g_words[gi], g_ords[gi], 2, i1ord[parent1],
-                                     -iw[ih], i2ord[ih], i2cand[ih]))
-                        for wd in np.unique(g_words[gi]):
-                            done_words.add(wd)
+                i2wi, i2ord, i2cand = M.insert_candidates(icand[mid], alphabet)
+                iw = probe.lookup(i2cand)
+                ih = iw > 0
+                if ih.any():
+                    parent1 = mid[i2wi[ih]]  # index into icand
+                    gi = gi1[parent1]        # gated-delete row
+                    hits.append((g_words[gi], g_ords[gi], 2, iord[parent1],
+                                 -iw[ih], i2ord[ih], i2cand[ih]))
 
     # ---- final ranking across all tiers
     aw = np.concatenate([h[0] for h in hits])
@@ -605,8 +604,8 @@ def correct_queries(
     the plan's only exchange, of the raw query rows; a frame that wide
     already, or a streaming one, has none.  Every Arrow batch is corrected
     in slices of ``_CORRECT_SLICE`` queries.  The output does not depend on
-    the slice: every tier works per distinct word, and the level-2 early
-    exit keeps the smallest ``del_ord``.  256 bounds each worker's transient
+    the slice: every tier works per distinct word, and what it yields for a
+    word depends on that word alone.  256 bounds each worker's transient
     candidate arrays; it measured faster and smaller than 512 or 1024.
     """
     spark = queries_df.sparkSession
