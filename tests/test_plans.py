@@ -121,7 +121,7 @@ def test_sketch_partials_single_shuffle(spark, docs):
         # exactly one exchange: the partial→final merge groupBy, above the
         # partial builder; raw rows never shuffle
         assert plan.count("Exchange hashpartitioning") == 1, plan
-        assert plan.index("Exchange hashpartitioning") < plan.index("MapInPandas"), plan
+        assert plan.index("Exchange hashpartitioning") < plan.index("MapInArrow"), plan
 
 
 def test_minhash_pairs_shuffle_is_on_bands_only(spark, docs):

@@ -812,11 +812,12 @@ class TestSerdeRobustness:
 
 class TestSharedHashFastPath:
     """The multi-kind harness dedupes each batch once, hashes the distinct
-    values (``unique_hashes``) and feeds every hash-keyed kind (bloom / hll /
-    cms / theta) the same (hashes, counts) aggregate via
-    ``update_unique_hashes``.  That is only sound if it is BIT-IDENTICAL to
-    hashing every value first — pin it per kind, over Zipfian
-    (mostly-repeat), near-unique, and empty batches."""
+    values (``distinct_hashes``) and feeds every hash-keyed kind (bloom /
+    hll / cms / theta) the same (hashes, counts) aggregate via
+    ``update_unique_hashes``, and freq / sample the (values, hashes,
+    counts) via ``update_distinct``.  That is only sound if it is
+    BIT-IDENTICAL to updating value by value — pin it per kind, over
+    Zipfian (mostly-repeat), near-unique, null-holding and empty batches."""
 
     @staticmethod
     def _batches():
@@ -850,6 +851,89 @@ class TestSharedHashFastPath:
             codes, uh = pd.factorize(hash64(batch))
             fast_update(fast, np.asarray(uh, dtype=np.uint64), np.bincount(codes))
         assert spec.serialize(slow) == spec.serialize(fast)
+
+    @staticmethod
+    def _value_batches():
+        """Two homogeneous batch sequences: Zipf int32, and Zipf strings,
+        near-unique, a few, and strings with None/NaN; both hold an empty
+        batch.  With k=256 the Zipf batches trim the Misra-Gries counters,
+        and with k=1024 they fill the sample."""
+        rng = np.random.default_rng(43)
+        ints = [(rng.zipf(1.1, n) % 50_000).astype(np.int32) for n in (20_000, 300, 9_000)]
+        strs = TestSharedHashFastPath._batches()
+        holed = strs[0][:5000].copy()
+        holed[::97] = None
+        holed[::89] = np.nan
+        return [[*ints, np.array([], dtype=np.int32), ints[0][::3]], [*strs, holed]]
+
+    @staticmethod
+    def _per_value_freq(ref, batch):
+        """Misra-Gries batch update, one dict add per value, then one trim."""
+        counters, n, dec, k = ref
+        for v in batch.tolist():
+            if v is None or v != v:
+                continue
+            counters[v] = counters.get(v, 0) + 1
+            n += 1
+        if len(counters) > k:
+            m = sorted(counters.values(), reverse=True)[k]
+            counters = {it: c - m for it, c in counters.items() if c > m}
+            dec += m
+        return counters, n, dec, k
+
+    @staticmethod
+    def _per_value_sample(ref, batch, k):
+        """Bottom-k by hash, every value hashed; on equal hashes the
+        smaller value wins."""
+        from wordspell_spark.sketches.hashing import hash64
+
+        for hv, v in zip(hash64(batch).tolist(), batch.tolist()):
+            if v is None or v != v:
+                continue
+            if hv not in ref or v < ref[hv]:
+                ref[hv] = v
+        return dict(sorted(ref.items())[:k])
+
+    @pytest.mark.parametrize("kind,k", [("freq", 256), ("sample", 1024)])
+    def test_value_kinds_bit_identical_to_per_value_update(self, kind, k):
+        from wordspell_spark.sketches.hashing import distinct_hashes
+
+        spec = SketchSpec(kind, {"k": k})
+        for batches in self._value_batches():
+            fast, slow = spec.create(), spec.create()
+            ref = ({}, 0, 0, k) if kind == "freq" else {}
+            trims = 0
+            for batch in batches:
+                spec.module.update_distinct(fast, *distinct_hashes(batch))
+                spec.update(slow, batch)
+                if kind == "freq":
+                    dec = ref[2]
+                    ref = self._per_value_freq(ref, batch)
+                    trims += ref[2] > dec
+                    assert (fast.counters, fast.n, fast.dec) == ref[:3]
+                else:
+                    ref = self._per_value_sample(ref, batch, k)
+                    assert fast.hashes.tolist() == list(ref)
+                    assert fast.values == list(ref.values())
+                assert spec.serialize(slow) == spec.serialize(fast)
+            assert kind == "sample" or trims >= 2
+            assert kind == "freq" or fast.hashes.size == k
+
+    def test_sample_colliding_keys_keep_the_smaller_value(self):
+        """Two distinct values on one key (a 64-bit collision) just inside
+        the bottom k: the preselect must count DISTINCT keys to place its
+        cut, and the smaller value must win, exactly as ``_absorb`` does
+        with every candidate."""
+        keys = np.array([1, 2, 3, 4, 5, 5, *range(6, 20)], dtype=np.uint64)
+        values = np.arange(keys.size)[::-1].copy()  # key 5 holds 15 and 14
+        want = sample._absorb(sample.create(16), keys, values.tolist())
+        got = sample.update_distinct(sample.create(16), values, keys, np.ones(keys.size))
+        assert sample.serialize(got) == sample.serialize(want)
+        assert got.hashes.size == 16 and got.values[4] == 14
+        # the same candidates against a full state whose largest hash is 16
+        full = sample.update_distinct(sample.create(16), np.arange(100, 116), np.arange(1, 17, dtype=np.uint64) * 2)
+        want = sample._absorb(full.copy(), keys, values.tolist())
+        assert sample.serialize(sample.update_distinct(full, values, keys, None)) == sample.serialize(want)
 
     def test_unique_hashes_same_multiset_as_hash_then_count(self):
         """Dedupe-then-hash must yield exactly the (key, count) multiset of
@@ -891,7 +975,7 @@ class TestSharedHashFastPath:
             "hll": (SketchSpec("hll", {"p": 12}), "tok"),
             "cms": (SketchSpec("cms", {"width": 1024, "depth": 4}), "tok"),
             "theta": (SketchSpec("theta", {"k": 64}), "tok"),  # 97 distinct > k: estimating
-            "freq": (SketchSpec("freq", {"k": 32}), "tok"),  # value path (no hash fast path)
+            "freq": (SketchSpec("freq", {"k": 32}), "tok"),  # reads the shared dedupe's values
         }
         multi = {
             (r["source"], r["kind"]): bytes(r["sketch"])

@@ -323,7 +323,7 @@ Doubling the input halves its share — the figures above are the {rows:,}-row
 regime.
 
 Why this survives 1000 executors:
-- Stage A (mapInPandas partial sketches) is embarrassingly parallel over
+- Stage A (mapInArrow partial sketches) is embarrassingly parallel over
   input splits; each task emits |groups| x |kinds| KB-sized payloads.
 - The only shuffle moves those payloads — O(splits), independent of data
   volume; raw rows never cross the wire, so source skew (70% `web`)

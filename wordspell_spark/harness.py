@@ -5,10 +5,12 @@ generalization of the reference's partial→final additive accumulator merge
 (/root/reference/components/index/models.go:58-72) and its single shared
 Bloom build loop (/root/reference/builder.go:97-119).
 
-    Stage A  mapInPandas over input partitions: one partial sketch per
+    Stage A  mapInArrow over input partitions: one partial sketch per
              (group key, kind) per partition — the map-side combine.
-             Output is tiny: ≤ |groups| x |kinds| rows per partition, each
-             a byte payload.
+             Each Arrow batch is split by group key, each value column is
+             flattened and deduped once, and every kind reads that one
+             dedupe.  Output is tiny: ≤ |groups| x |kinds| rows per
+             partition, each a byte payload.
     Stage B  automatic, only when the partial frame has more than 64
              partitions: salted groupBy(keys, salt) merges of fan-in 64 —
              the middle level of a treeAggregate, and the skew-bounding
@@ -20,10 +22,11 @@ Why this shape at 100 TB: the shuffle after stage A moves only
 ``source`` (70% web in the fixture) cannot create a hot shuffle partition of
 raw data — skew is absorbed map-side, and stage B bounds the final merge
 fan-in however many partitions the input has.  No per-row Python anywhere:
-kernels consume whole Arrow batches as numpy arrays (BASELINE.json
-input_hint).  ``merge_partials`` (stages B and C) is the one grouped-map
-merge in the package: the checkpoint finalize, the streaming state merge
-and the deletion-Bloom build fold their partials through it too.
+kernels consume whole Arrow batches as numpy arrays, with no pandas
+conversion in between (BASELINE.json input_hint).  ``merge_partials``
+(stages B and C) is the one grouped-map merge in the package: the
+checkpoint finalize, the streaming state merge and the deletion-Bloom build
+fold their partials through it too.
 """
 
 from __future__ import annotations
@@ -32,8 +35,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -43,33 +49,42 @@ from pyspark.sql.types import (
 )
 
 from .sketches import SketchSpec, serde
-from .sketches.hashing import unique_hashes
+from .sketches.hashing import distinct_hashes
 
 _FANIN = 64  # partials one merge task folds per group; more add a tree level
 _SALT = "__salt"
 
 
-def _flatten_values(series: pd.Series) -> np.ndarray:
-    """Column values → flat numpy array; array columns are exploded in C.
+def _values(col: pa.Array) -> np.ndarray:
+    """One value column → the flat numpy array a sketch reads.
 
-    Detects array columns from the first NON-null element — a null in row 0
-    must not silently switch a list column onto the scalar path.
+    List columns are flattened and their null elements dropped; both keep
+    the element dtype, so an int column stays int.  Scalar columns drop
+    nulls, and float columns NaN as well.
     """
-    if series.empty:
-        return np.empty(0)
-    non_null = series.dropna()
-    if non_null.empty:
-        return np.empty(0)
-    first = non_null.iloc[0]
-    if isinstance(first, (np.ndarray, list)):
-        chunks = [np.asarray(v) for v in non_null if len(v)]
-        if not chunks:
-            return np.empty(0)
-        return np.concatenate(chunks)
-    vals = series.to_numpy()
-    if vals.dtype == object:
-        return vals[pd.notna(vals)]
-    return vals[~pd.isna(vals)]
+    if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+        return col.flatten().drop_null().to_numpy(zero_copy_only=False)
+    vals = col.drop_null().to_numpy(zero_copy_only=False)
+    return vals[~np.isnan(vals)] if vals.dtype.kind == "f" else vals
+
+
+def _groups(batch: pa.RecordBatch, group_cols: list[str]) -> Iterator[tuple[tuple, pa.RecordBatch]]:
+    """Split ``batch`` by its ``group_cols`` values → (key, rows) pairs in
+    first-appearance order; a null key is a group of its own.  Each
+    group's rows keep their batch order."""
+    if not group_cols:
+        yield (), batch
+        return
+    gid = np.zeros(batch.num_rows, dtype=np.int64)
+    for c in group_cols:
+        enc = pc.dictionary_encode(batch.column(c), null_encoding="encode")
+        gid = pd.factorize(gid * len(enc.dictionary) + enc.indices.to_numpy())[0]
+    sizes = np.bincount(gid)
+    if sizes.size > 1:
+        batch = batch.take(np.argsort(gid, kind="stable"))
+    for start, n in zip(np.cumsum(sizes) - sizes, sizes):
+        rows = batch.slice(start, n)
+        yield tuple(rows.column(c)[0].as_py() for c in group_cols), rows
 
 
 def num_partitions(df: DataFrame) -> int:
@@ -162,7 +177,7 @@ def build_sketches_multi(
     no ``group_cols`` means one global sketch per kind.
 
     Why: at 100 TB the scan IS the cost — five separate builds read the
-    input five times and pay five job/shuffle latencies.  One mapInPandas
+    input five times and pay five job/shuffle latencies.  One mapInArrow
     maintains all states per group and the single merge shuffle carries
     |partitions| x |groups| x |kinds| KB payloads.
     """
@@ -178,55 +193,61 @@ def build_sketches_multi(
             StructField("items", LongType(), False),
         ]
     )
+    arrow_schema = to_arrow_schema(out_schema)
     spec_items = sorted(specs.items())  # deterministic kind order
 
-    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial_build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # One partial sketch per group key per *partition* (not per batch):
         # states persist across the batch iterator = map-side combine.
         states: dict[tuple, dict] = {}
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            groups = pdf.groupby(group_cols, sort=False, dropna=False) if group_cols else [((), pdf)]
-            for key, sub in groups:
-                key = key if isinstance(key, tuple) else (key,)
+            for key, rows in _groups(batch, group_cols):
                 ent = states.get(key)
                 if ent is None:
                     ent = states[key] = {
                         name: [spec.create(), 0, 0] for name, (spec, _) in spec_items
                     }
-                flats = {vc: _flatten_values(sub[vc]) for vc in value_cols}
-                # shared-hash fast path: every hash-keyed kind (bloom / hll /
-                # cms / theta) derives all its state from the same
-                # h1 = hash64(v), so dedupe each value column ONCE per batch
-                # and hash only its distinct values (``unique_hashes``) — the
-                # kernels then scatter over the distinct set only.
-                # Bit-identical payloads (idempotent kinds ignore counts; cms
-                # adds them as weights); on Zipfian token batches this cuts
-                # the dominant hash + dedupe cost from once-per-kind to
-                # once-per-column.
-                hashed: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+                flats = {vc: _values(rows.column(vc)) for vc in value_cols}
+                # shared dedupe: every value-keyed kind derives all its state
+                # from the distinct values, their h1 = hash64(v) keys and
+                # their counts, so dedupe and hash each value column ONCE per
+                # (batch, group) (``distinct_hashes``) and let each kind read
+                # that one result: bloom / hll / cms / theta through
+                # ``update_unique_hashes``, freq / sample through
+                # ``update_distinct``.  Bit-identical payloads (idempotent
+                # kinds ignore counts; cms adds them as weights).
+                shared: dict[str, tuple] = {}
                 for name, (spec, vc) in spec_items:
                     st = ent[name]
-                    fast = getattr(spec.module, "update_unique_hashes", None)
-                    if fast is not None:
-                        if vc not in hashed:
-                            hashed[vc] = unique_hashes(flats[vc])
-                        fast(st[0], *hashed[vc])
-                    else:
+                    by_value = getattr(spec.module, "update_distinct", None)
+                    by_hash = getattr(spec.module, "update_unique_hashes", None)
+                    if by_value is None and by_hash is None:
                         spec.update(st[0], flats[vc])
-                    st[1] += len(sub)
+                    else:
+                        if vc not in shared:
+                            shared[vc] = distinct_hashes(flats[vc])
+                        uniq, keys, counts = shared[vc]
+                        if by_value is not None:
+                            by_value(st[0], uniq, keys, counts)
+                        else:
+                            by_hash(st[0], keys, counts)
+                    st[1] += rows.num_rows
                     st[2] += len(flats[vc])
         if not states:
             return
-        rows = [
+        out = [
             (*k, name, specs[name][0].serialize(st), nrows, nitems)
             for k, kinds in states.items()
             for name, (st, nrows, nitems) in kinds.items()
         ]
-        yield pd.DataFrame(rows, columns=[*group_cols, "kind", "sketch", "rows", "items"])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(zip(*out), arrow_schema)],
+            schema=arrow_schema,
+        )
 
-    partials = narrow.mapInPandas(partial_build, schema=out_schema)
+    partials = narrow.mapInArrow(partial_build, schema=out_schema)
     return merge_partials(partials, [*group_cols, "kind"])
 
 

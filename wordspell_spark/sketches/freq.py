@@ -17,9 +17,10 @@ count from every counter and drops the non-positive ones: at least k+1
 counters each lose the full subtracted amount, which is what caps ``dec``.
 
 Values may be int64-like or strings (token ids or tokens).  Updates are
-batch-vectorized: one ``np.unique(return_counts=True)`` per Arrow batch,
-then a dict merge over the DISTINCT items only (Zipfian batches shrink
-4-10x), never per-row Python.
+batch-vectorized over the DISTINCT values of a batch (``distinct_hashes``,
+shared with the other value-keyed kinds in the multi-kind build): the
+counter add and the trim run on numpy arrays, and only the <= k survivors
+become dict entries, never per-row Python.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ import numpy as np
 import pandas as pd
 
 from . import serde
-from .hashing import normalize_items as _normalize_keys
+from .hashing import distinct_hashes, normalize_items as _normalize_keys
 
 DEFAULT_K = 256
 
@@ -57,39 +58,47 @@ def create(k: int = DEFAULT_K) -> FreqState:
 
 
 def update(state: FreqState, values) -> FreqState:
-    vals = np.asarray(values)
-    if vals.size == 0:
+    return update_distinct(state, *distinct_hashes(values))
+
+
+def update_distinct(state: FreqState, uniq, keys, counts) -> FreqState:
+    """Update from ``distinct_hashes`` output (``keys`` is unused): add each
+    distinct value's count to the counters and trim.  The union with the
+    state's counters and the trim run on numpy arrays; the result is the
+    Misra-Gries state of a per-item dict add, since the trim depends only on
+    the multiset of merged counts.  Nulls are skipped."""
+    uniq, counts = np.asarray(uniq), np.asarray(counts, dtype=np.int64)
+    if uniq.dtype.kind not in "iu":
+        live = ~pd.isna(uniq)
+        uniq, counts = uniq[live], counts[live]
+    if uniq.size == 0:
         return state
-    vals = vals[_non_null_mask(vals)]
-    if vals.size == 0:
-        return state
-    # factorize (hash table) beats np.unique (comparison sort) ~7x on
-    # Zipfian string batches; the resulting counters are identical either
-    # way (trim is count-based, dict order never matters numerically)
-    codes, uniq = pd.factorize(vals)
-    cnts = np.bincount(codes)
-    return update_counts(state, _normalize_keys(np.asarray(uniq)), cnts)
-
-
-def _non_null_mask(vals: np.ndarray) -> np.ndarray:
-    if vals.dtype == object:
-        return np.array([v is not None and v == v for v in vals], dtype=bool)
-    if vals.dtype.kind == "f":
-        return ~np.isnan(vals)
-    return np.ones(vals.size, dtype=bool)
-
-
-def update_counts(state: FreqState, items: list, counts) -> FreqState:
-    """Pre-aggregated update: DISTINCT items with their batch counts."""
-    c = state.counters
-    total = 0
-    for it, cnt in zip(items, counts):
-        cnt = int(cnt)
-        total += cnt
-        c[it] = c.get(it, 0) + cnt
-    state.n += total
-    _trim(state)
+    items, c = _item_array(uniq), state.counters
+    try:
+        old = np.fromiter(c, dtype=items.dtype, count=len(c))
+    except (TypeError, ValueError, OverflowError):  # items of another type
+        items, old = items.astype(object), np.fromiter(c, dtype=object, count=len(c))
+    codes, union = pd.factorize(np.concatenate([old, items]))
+    totals = np.zeros(len(union), dtype=np.int64)
+    np.add.at(totals, codes, np.concatenate([np.fromiter(c.values(), np.int64, len(c)), counts]))
+    state.n += int(counts.sum())
+    if len(union) > state.k:  # the _trim rule, on arrays
+        m = int(np.partition(totals, -(state.k + 1))[-(state.k + 1)])
+        keep = totals > m
+        union, totals = union[keep], totals[keep] - m
+        state.dec += m
+    state.counters = dict(zip(_normalize_keys(np.asarray(union)), totals.tolist()))
     return state
+
+
+def _item_array(uniq: np.ndarray) -> np.ndarray:
+    """Distinct values as canonical items in an array: int64 for integers,
+    strings as they are, anything else through ``normalize_items``."""
+    if uniq.dtype.kind in "iu" and np.can_cast(uniq.dtype, np.int64):
+        return uniq.astype(np.int64, copy=False)
+    if uniq.dtype == object and pd.api.types.infer_dtype(uniq, skipna=False) == "string":
+        return uniq
+    return np.array(_normalize_keys(uniq), dtype=object)
 
 
 def _trim(state: FreqState) -> None:

@@ -56,34 +56,47 @@ def hash64(values) -> np.ndarray:
     return pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
 
 
-def unique_hashes(values) -> tuple[np.ndarray, np.ndarray]:
-    """Dedupe the raw values, then hash only the distinct ones.
+def distinct_hashes(values) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Dedupe the raw values once, then hash only the distinct ones.
 
-    Returns ``(keys, counts)``: the ``hash64`` key of each distinct value
-    and its multiplicity — the same (key, count) multiset as hashing every
-    value and counting the hashes, at the cost of hashing the distinct set
-    only (Zipfian batches are mostly repeats).  Numbers dedupe with
-    ``np.unique`` on what ``hash64`` hashes: floats on the raw float64 bit
-    pattern, so +0.0 / -0.0 and distinct NaN payloads stay apart.  Other
-    types dedupe with one ``pd.factorize`` pass; its nulls are hashed as
-    ``hash64`` hashes them.  Keys can repeat: two distinct values whose
-    64-bit hashes collide give the same key twice.
+    Returns ``(uniq, keys, counts)``, aligned: each distinct value, its
+    ``hash64`` key and its multiplicity.  The (key, count) pairs are the
+    same multiset as hashing every value and counting the hashes, at the
+    cost of hashing the distinct set only (Zipfian batches are mostly
+    repeats).  One call per value column serves every value-keyed kind:
+    bloom / hll / cms / theta read the keys and counts, freq the values and
+    counts, sample the values and keys.  Numbers dedupe with ``np.unique``
+    on what ``hash64`` hashes: floats on the raw float64 bit pattern, so
+    +0.0 / -0.0 and distinct NaN payloads stay apart.  Other types dedupe
+    with one ``pd.factorize`` pass; nulls come last, one entry per distinct
+    null key, with the key ``hash64`` gives them (the value kinds skip
+    them).  Keys can repeat: two distinct values whose 64-bit hashes
+    collide give the same key twice.
     """
     vals = np.asarray(values)
     if vals.dtype.kind == "f":
         bits = np.ascontiguousarray(vals, dtype=np.float64).view(_U64)
         uniq, counts = np.unique(bits, return_counts=True)
-        return hash64(uniq.view(np.float64)), counts
+        uniq = uniq.view(np.float64)
+        return uniq, hash64(uniq), counts
     if vals.dtype.kind in "iu":
         uniq, counts = np.unique(vals, return_counts=True)
-        return hash64(uniq), counts
+        return uniq, hash64(uniq), counts
     codes, uniq = pd.factorize(vals)
     keys, counts = hash64(uniq), np.bincount(codes[codes >= 0], minlength=len(uniq))
     null = codes < 0
     if null.any():
-        null_keys, null_counts = np.unique(hash64(vals[null]), return_counts=True)
+        nulls = vals[null]
+        null_keys, first, null_counts = np.unique(hash64(nulls), return_index=True, return_counts=True)
+        uniq = np.concatenate([np.asarray(uniq, dtype=object), nulls[first]])
         keys, counts = np.concatenate([keys, null_keys]), np.concatenate([counts, null_counts])
-    return keys, counts
+    return uniq, keys, counts
+
+
+def unique_hashes(values) -> tuple[np.ndarray, np.ndarray]:
+    """``distinct_hashes`` for the kinds that read hashes only:
+    ``(keys, counts)``."""
+    return distinct_hashes(values)[1:]
 
 
 def normalize_items(uniq: np.ndarray) -> list:

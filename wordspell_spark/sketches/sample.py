@@ -31,7 +31,7 @@ import numpy as np
 import pandas as pd
 
 from . import serde
-from .hashing import hash64, kmv_estimate, kmv_rse, normalize_items
+from .hashing import distinct_hashes, kmv_estimate, kmv_rse, normalize_items
 
 DEFAULT_K = 1024
 
@@ -66,25 +66,35 @@ def is_exact(state: SampleState) -> bool:
 
 
 def update(state: SampleState, values) -> SampleState:
-    """Batch update: dedupe the VALUES first with one pd.factorize pass
-    (C hash table; also drops None/NaN — they factorize to code -1), then
-    hash and normalize only the distinct survivors — both the expensive
-    ``hash64`` and all python-level work run over O(batch-distinct) items,
-    never O(rows) (BASELINE.json input_hint).  Equal-hash distinct values
-    (a 2^-64 collision) fall through to ``_absorb``'s min-value rule."""
-    vals = np.asarray(values)
-    if vals.size == 0:
-        return state
-    uniq_vals = np.asarray(pd.factorize(vals)[1])
-    if uniq_vals.size == 0:
-        return state
-    h = hash64(uniq_vals).astype(_U64, copy=False)
+    return update_distinct(state, *distinct_hashes(values))
+
+
+def update_distinct(state: SampleState, uniq, keys, counts=None) -> SampleState:
+    """Update from ``distinct_hashes`` output (``counts`` is unused): the
+    values come deduped and hashed, so no key is computed again here.
+    Nulls are skipped.  Before any python-level work, only the candidates
+    that can reach the bottom k are kept: keys <= the k-th smallest
+    DISTINCT candidate key (and <= the state's largest once it is full).
+    Every tie is kept, so equal-hash distinct values (a 2^-64 collision)
+    still reach ``_absorb``'s min-value rule."""
+    uniq, h = np.asarray(uniq), np.asarray(keys, dtype=_U64)
+    if uniq.dtype.kind not in "iu":
+        live = ~pd.isna(uniq)
+        uniq, h = uniq[live], h[live]
+    keep = np.ones(h.size, dtype=bool)
+    if h.size > state.k:
+        # the cut is the k-th smallest DISTINCT key: the k smallest keys
+        # give it directly unless one of them repeats (a 64-bit collision)
+        ranked = np.partition(h, state.k - 1)
+        if np.unique(ranked[: state.k]).size < state.k:
+            ranked = np.unique(h)
+        if ranked.size > state.k:
+            keep = h <= ranked[state.k - 1]
     if not is_exact(state):
-        keep = h <= state.hashes[-1]
-        h, uniq_vals = h[keep], uniq_vals[keep]
-        if h.size == 0:
-            return state
-    return _absorb(state, h, normalize_items(uniq_vals))
+        keep &= h <= state.hashes[-1]
+    if not keep.any():
+        return state
+    return _absorb(state, h[keep], normalize_items(uniq[keep]))
 
 
 def _absorb(state: SampleState, h: np.ndarray, items: list) -> SampleState:

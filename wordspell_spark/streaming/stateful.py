@@ -12,15 +12,41 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..harness import _flatten_values
 from ..sketches import SketchSpec
 
 OUT_SCHEMA = "group string, sketch binary, rows long, items long"
 STATE_SCHEMA = "sketch binary, rows long, items long"
+
+
+def _flatten_values(series: pd.Series) -> np.ndarray:
+    """Column values → flat numpy array; array columns are exploded in C.
+
+    Detects array columns from the first NON-null element — a null in row 0
+    must not silently switch a list column onto the scalar path.  Arrow →
+    pandas turns an int column holding a null into float64, so its values
+    hash as floats here; ``harness.build_sketches`` reads Arrow and keeps
+    the ints.
+    """
+    if series.empty:
+        return np.empty(0)
+    non_null = series.dropna()
+    if non_null.empty:
+        return np.empty(0)
+    first = non_null.iloc[0]
+    if isinstance(first, (np.ndarray, list)):
+        chunks = [np.asarray(v) for v in non_null if len(v)]
+        if not chunks:
+            return np.empty(0)
+        return np.concatenate(chunks)
+    vals = series.to_numpy()
+    if vals.dtype == object:
+        return vals[pd.notna(vals)]
+    return vals[~pd.isna(vals)]
 
 
 def sketch_update_fn(spec: SketchSpec, value_col: str):
