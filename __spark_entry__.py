@@ -33,7 +33,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: frequency-index build (scan→tokenize→count→threshold→union,
+    """Flagship: frequency-index build (scan→tokenize→count words and pairs→threshold,
     SURVEY.md §3.2) over the sf0.001 documents corpus."""
     from wordspell_spark.operators.index_build import build_frequency_index
 
@@ -351,19 +351,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---------------- wordspell parity: index build path ----------------
 
     def unigram_counts(spark, sf):
-        words = IB.tokenized_words(_t(spark, sf, "documents"), "text", ["doc_id"])
-        return IB.word_counts(words)
+        return IB.word_counts(_t(spark, sf, "documents"), "text")
 
     def bigram_counts(spark, sf):
-        words = IB.tokenized_words(_t(spark, sf, "documents"), "text", ["doc_id"])
-        return IB.bigram_counts(words, ["doc_id"])
+        return IB.bigram_counts(_t(spark, sf, "documents"), "text")
 
     def freq_index(spark, sf):
         return IB.build_frequency_index(_t(spark, sf, "documents"), "text", ["doc_id"])
 
     def top_token_per_lang(spark, sf):
-        words = IB.tokenized_words(_t(spark, sf, "documents"), "text", ["doc_id"])
-        counts = IB.word_counts(words)
+        counts = IB.word_counts(_t(spark, sf, "documents"), "text")
         w = Window.partitionBy("lang").orderBy(F.desc("freq"), F.asc("word"))
         return (
             counts.withColumn("rn", F.row_number().over(w))
@@ -397,7 +394,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _t(spark, sf, "documents")
         words = IB.tokenized_words(docs, "text", ["doc_id"])
         tms = (
-            IB.bigram_counts(words, ["doc_id"])
+            IB.bigram_counts(docs, "text")
             .filter(F.col("lang") == "en")
             .orderBy(F.desc("freq"), F.asc("word"))
             .limit(5)

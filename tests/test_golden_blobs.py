@@ -72,6 +72,23 @@ def test_unknown_kind_byte_is_a_format_error(kind, kind_id):
         deserialize_any(bytes(blob))
 
 
+@pytest.mark.parametrize("cut", ["+1", "+8", "-1", "-8", "no body"])
+@pytest.mark.parametrize("kind", sorted(SPECS))
+def test_body_length_is_checked_exactly(kind, cut):
+    """Trailing bytes and a short body are a corrupt payload: the reader
+    checks the exact body length instead of reading a prefix of it (or
+    failing inside numpy/struct with a bare error)."""
+    blob = _stored(kind)
+    if cut == "no body":
+        blob = blob[: len(blob) - len(serde.unpack_header_full(blob)[3])]
+    elif cut[0] == "+":
+        blob = blob + b"\x00" * int(cut[1:])
+    else:
+        blob = blob[: int(cut)]
+    with pytest.raises(serde.SketchFormatError):
+        deserialize_any(blob)
+
+
 @pytest.mark.parametrize("kind", ["bloom_sparse", "hll_sparse", "cms_sparse"])
 def test_sparse_fixtures_carry_the_sparse_form(kind):
     """The *_sparse blobs pin the sparse body, not a second dense one."""

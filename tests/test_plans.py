@@ -48,6 +48,20 @@ def test_weight_lookup_is_broadcast_join(spark, docs):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_frequency_index_is_one_counting_pass(spark, docs):
+    from wordspell_spark.operators.index_build import build_frequency_index
+
+    # one scan feeds one Arrow counting pass (words and pairs together,
+    # pairs formed inside the row); the only exchange is the (lang, word)
+    # sum — no window sort-shuffle of the token stream, no second scan
+    plan = _plan(build_frequency_index(docs, "text", ["doc_id"]))
+    assert "Window" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.index("Exchange") < plan.index("MapInArrow"), plan
+
+
 def test_top_customers_broadcasts_dimension(spark, testdata_dir):
     import __spark_entry__ as E
 

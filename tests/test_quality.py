@@ -73,7 +73,7 @@ class TestBigramCoherence:
         plan = Q.bigram_coherence(df)._jdf.queryExecution().executedPlan().toString()
         # the Arrow stage appears once per cached-branch rendering, but is
         # always read through the persisted relation → executes once
-        assert "MapInPandas" in plan and "InMemoryTableScan" in plan
+        assert "MapInArrow" in plan and "InMemoryTableScan" in plan
         assert "ArrowEvalPython" not in plan
         assert "HashAggregate" in plan  # map-side combined count tables
         assert "Window" not in plan

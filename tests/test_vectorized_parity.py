@@ -234,18 +234,28 @@ class TestCacheRelease:
         assert not getattr(pairs, "_owned_caches")
 
 
+def _arrow_words(texts: list) -> list:
+    import pyarrow as pa
+
+    from wordspell_spark.functions.text import arrow_normalize_words
+
+    return arrow_normalize_words(pa.array(texts, pa.string())).to_pylist()
+
+
 class TestNormalizeTwin:
-    """The normalize_words twin behind bigram_coherence's pair stream."""
+    """The Arrow normalize_words twin behind the frequency index's counting
+    pass and bigram_coherence's pair stream."""
 
     def test_fixture_docs(self, docs_df):
-        from wordspell_spark.functions.text import normalize_words, py_normalize_words
+        from wordspell_spark.functions.text import normalize_words
 
         got = {
             r["doc_id"]: r["w"]
             for r in docs_df.select("doc_id", normalize_words(F.col("text")).alias("w")).collect()
         }
-        for i, t in dict(DOCS).items():
-            assert got[i] == py_normalize_words(t), f"doc {i}"
+        ids, texts = zip(*DOCS)
+        for i, w in zip(ids, _arrow_words(list(texts))):
+            assert got[i] == w, f"doc {i}"
 
     @settings(max_examples=50, deadline=None)
     @given(
@@ -259,18 +269,38 @@ class TestNormalizeTwin:
     def test_hypothesis_strings(self, spark, s):
         # covers Cyrillic + Greek (final-sigma casing) + unicode whitespace +
         # the -/`/' edge filters
-        from wordspell_spark.functions.text import normalize_words, py_normalize_words
+        from wordspell_spark.functions.text import normalize_words
 
         df = spark.createDataFrame([(s,)], "text string")
         got = df.select(normalize_words(F.col("text")).alias("w")).first()["w"]
-        assert got == py_normalize_words(s)
+        assert got == _arrow_words([s])[0]
+
+    @pytest.mark.parametrize(
+        "text",
+        [
+            "\u0130stanbul a\u0130b \u0130\u0130",  # Java lowercases İ to i + U+0307
+            "\u212aelvin \u212a\u212a",  # Kelvin sign lowercases to ASCII k
+            "ab\x0bcd",  # vertical tab: Java \s, not RE2 \s
+            "ab\xa0cd nbsp\xa0",  # no-break space: outside both \s
+            "ab\x85cd",  # next line: outside both \s
+            "",
+            None,
+        ],
+    )
+    def test_edge_characters(self, spark, text):
+        from wordspell_spark.functions.text import normalize_words
+
+        df = spark.createDataFrame([(text,)], "text string")
+        got = df.select(normalize_words(F.col("text")).alias("w")).first()["w"]
+        assert got == _arrow_words([text])[0]
 
     def test_on_corpus(self, corpus_df):
-        from wordspell_spark.functions.text import normalize_words, py_normalize_words
+        from wordspell_spark.functions.text import normalize_words
 
         rows = corpus_df.select("doc_id", "text", normalize_words(F.col("text")).alias("w")).collect()
-        for r in rows:
-            assert r["w"] == py_normalize_words(r["text"]), f"doc {r['doc_id']}"
+        mine = _arrow_words([r["text"] for r in rows])
+        for r, w in zip(rows, mine):
+            assert r["w"] == w, f"doc {r['doc_id']}"
 
 
 class TestShingleTwin:
@@ -293,7 +323,16 @@ class TestOracleRows:
     the contract gate uses — the same query, the same SQL, the same compare."""
 
     @pytest.mark.parametrize(
-        "name", ["decontamination_report", "doc_bigram_coherence", "bpe_run_tokens"]
+        "name",
+        [
+            "decontamination_report",
+            "doc_bigram_coherence",
+            "bpe_run_tokens",
+            "unigram_counts",
+            "bigram_counts",
+            "freq_index",
+            "trademark_matches",
+        ],
     )
     def test_matches_duckdb_oracle(self, spark, testdata_dir, name):
         import duckdb

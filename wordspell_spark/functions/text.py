@@ -18,6 +18,9 @@ fingerprinting, n-gram language id) that a 100 TB pipeline needs.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -82,42 +85,48 @@ def normalize_words(col: Column) -> Column:
     return F.filter(toks, is_valid_word)
 
 
-# ------------------------------------------------- Python twin (hot path)
+# ------------------------------------------------- Arrow twin (hot path)
 #
 # normalize_words evaluates as INTERPRETED higher-order functions (filter
 # with a lambda never enters whole-stage codegen), which dominates every
-# operator that tokenizes the full corpus.  The twin below reproduces it
-# bit-for-bit in plain Python for Arrow-batched hot paths (the same parity
-# discipline as dedup._py_words, property-tested in
-# tests/test_vectorized_parity.py):
+# operator that tokenizes the full corpus.  ``arrow_normalize_words`` below
+# reproduces it bit-for-bit with pyarrow.compute kernels over a whole Arrow
+# batch, for the mapInArrow hot paths (index_build's counting pass,
+# quality's pair stream); tests/test_vectorized_parity.py pins the parity
+# on the fixtures, the corpus and hypothesis-generated strings:
 #
 # * Java regex \s is ASCII-only ([ \t\n\x0b\f\r]) — spelled explicitly so
-#   Python's Unicode \s (which adds \x1c-\x1f, \x85, \xa0, …) can't diverge.
-# * Spark lower() and Python str.lower() both apply Unicode default case
-#   mappings; the locale-sensitive divergences (final sigma, dotted I) map
-#   outside the [a-zа-яё\-`'] alphabet and are erased by the clean regex
-#   either way.
-# * F.length / startswith / endswith count code points, as Python does.
+#   RE2's \s (which lacks \x0b) can't diverge.
+# * Spark lower() applies Java's full lowercase mapping, utf8_lower the
+#   simple one.  They differ, inside this alphabet, only on U+0130 (dotted
+#   capital I): Java gives "i" + U+0307, which the clean regex splits into
+#   "i" and a space; the simple mapping gives a bare "i" that would join its
+#   neighbours.  U+0130 is therefore expanded before utf8_lower.  The other
+#   divergences (final sigma, titlecase digraphs) map outside the
+#   [a-zа-яё\-`'] alphabet and are erased by the clean regex either way.
+# * F.length / startswith / endswith count code points, as utf8_length does.
 
-import re as _re
-
-_CLEAN_INDEX_BAD_PY = _re.compile(r"[^a-zA-Zа-яА-ЯёЁ \t\n\x0b\f\r\-`']")
-_DASH_PY = _re.compile(r"[ \t\n\x0b\f\r]-[ \t\n\x0b\f\r]")
-_WS_PY = _re.compile(r"\s+", _re.ASCII)
+_WS_ARROW = "[ \t\n\x0b\f\r]"
+_CLEAN_INDEX_BAD_ARROW = "[^a-zA-Zа-яА-ЯёЁ \t\n\x0b\f\r\\-`']"
+_DASH_ARROW = f"{_WS_ARROW}-{_WS_ARROW}"
 
 
-def py_normalize_words(text: str | None) -> list[str]:
-    """Python twin of ``normalize_words`` — bit-identical token lists."""
-    if text is None:
-        return []
-    t = _DASH_PY.sub(" ", _CLEAN_INDEX_BAD_PY.sub(" ", text.lower()))
-    return [
-        w
-        for w in _WS_PY.split(t)
-        if len(w) >= 2
-        and not w.startswith(("-", "`", "'"))
-        and not w.endswith("-")
-    ]
+def arrow_normalize_words(texts: pa.Array) -> pa.ListArray:
+    """Arrow twin of ``normalize_words``: one token list per text, null for
+    a null text, bit-identical to the Catalyst expression."""
+    t = pc.utf8_lower(pc.replace_substring(texts, "\u0130", "i\u0307"))
+    t = pc.replace_substring_regex(t, _CLEAN_INDEX_BAD_ARROW, " ")
+    t = pc.replace_substring_regex(t, _DASH_ARROW, " ")
+    split = pc.split_pattern_regex(t, _WS_ARROW + "+")
+    toks = pc.list_flatten(split)
+    keep = pc.and_(
+        pc.greater_equal(pc.utf8_length(toks), 2),
+        pc.invert(pc.or_(pc.match_substring_regex(toks, "^[-`']"), pc.ends_with(toks, "-"))),
+    )
+    parents = pc.list_parent_indices(split).filter(keep).to_numpy()
+    offsets = np.zeros(len(texts) + 1, dtype=np.int32)
+    np.cumsum(np.bincount(parents, minlength=len(texts)), out=offsets[1:])
+    return pa.ListArray.from_arrays(offsets, toks.filter(keep), mask=pc.is_null(texts))
 
 
 _NUM_RE = r"^[0-9]+([.,][0-9]+)?$"

@@ -1,21 +1,37 @@
 """Frequency-index build operators — the offline pipeline (SURVEY.md §3.2).
 
 Spark-first re-expression of the reference's ``Builder.Build()``
-(/root/reference/builder.go:60-95, components/index/builder.go:58-108):
+(reference builder.go:60-95, components/index/builder.go:58-108):
 
-    scan → normalize/tokenize → unigram + bigram hash-agg → threshold
-    filter → union → freq-desc index
+    scan → normalize/tokenize → unigram + pair counts → hash-agg →
+    threshold filter → freq-desc index
 
-Every step is a declarative DataFrame op: Catalyst gives partial+final hash
-aggregation (the reference's hand-rolled accumulator merge,
-index/models.go:58-72), predicate pushdown for thresholds, and AQE-coalesced
-shuffles.  At 100 TB the only shuffles are the two groupBys on (lang, word) —
-pre-aggregated map-side, so skew in raw documents never reaches the wire.
+Like the reference's one loop that fills ``data{words, dwords}`` per
+document (index/models.go:32-36), ONE mapInArrow pass tokenizes each Arrow
+batch (``text.arrow_normalize_words``, the vectorized twin of
+``normalize_words``), forms same-language adjacent pairs inside each row,
+and emits per-batch partial (lang, word, freq) counts for words and pairs
+in one frame.  A single Catalyst ``groupBy(lang, word)`` sums them
+(partial+final hash aggregation = the reference's accumulator merge,
+index/models.go:58-72) and the threshold filter runs on the result.  A
+word never contains a space and a pair always does, so the two kinds of
+key share the one aggregate without colliding.  The only shuffle is that
+groupBy, pre-aggregated map-side, so skew in raw documents never reaches
+the wire.
+
+``tokenized_words`` (posexplode with positions) stays in Catalyst for its
+positional consumers (``weight_lookup``, ``longest_match``, the per-doc
+language majority).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as T
@@ -25,56 +41,70 @@ DEFAULT_THRESHOLDS = {"ru": 23, "en": 10}
 DEFAULT_PAIR_THRESHOLD = 50
 NUM_WEIGHT = 1000  # index/models.go:8, service.go:95-97
 
+_COUNT_SCHEMA = "lang string, word string, freq long"
+_LANGS = pa.array(["ru", "en"])
+
 
 def tokenized_words(df: DataFrame, text_col: str, doc_cols: list[str]) -> DataFrame:
     """posexplode of the normalized word array → (doc_cols..., pos, word, lang).
 
-    Position is kept so bigram formation can window over it (W1).
+    Position is kept for the positional consumers (``weight_lookup``,
+    ``trademark.longest_match``); counting goes through ``_gram_counts``.
     """
     words = df.select(*doc_cols, F.posexplode(T.normalize_words(F.col(text_col))).alias("pos", "word"))
     return words.withColumn("lang", T.lang_of_token(F.col("word")))
 
 
-def word_counts(words: DataFrame) -> DataFrame:
+def _batch_counts(texts: pa.Array, include_pairs: bool) -> pa.Table:
+    """(lang, word, freq) counts of one batch's ru/en words and, with
+    ``include_pairs``, its same-language adjacent pairs "a b" (A1/A2,
+    index/builder.go:224-246; langdetect ParseWordPair, component.go:90-129).
+
+    Pairs are adjacent in the row's filtered token list, so a token of
+    another language (mixed alphabet) breaks the chain.  ``num`` cannot
+    occur: the clean regex erases digits before tokenizing."""
+    words = T.arrow_normalize_words(texts)
+    toks = words.flatten()
+    # index into _LANGS (ru before en: the when-chain order of
+    # lang_of_token), -1 for neither
+    ru = pc.match_substring_regex(toks, T._RU_RE).to_numpy(zero_copy_only=False)
+    en = pc.match_substring_regex(toks, T._EN_RE).to_numpy(zero_copy_only=False)
+    code = np.where(ru, 0, np.where(en, 1, -1)).astype(np.int8)
+    keep = np.flatnonzero(code >= 0)
+    grams, codes = [toks.take(keep)], [code[keep]]
+    if include_pairs:
+        doc = pc.list_parent_indices(words).to_numpy()
+        i = np.flatnonzero((doc[1:] == doc[:-1]) & (code[1:] == code[:-1]) & (code[:-1] >= 0))
+        grams.append(pc.binary_join_element_wise(toks.take(i), toks.take(i + 1), " "))
+        codes.append(code[i])
+    table = pa.table({"code": np.concatenate(codes), "word": pa.concat_arrays(grams)})
+    counts = table.group_by(["code", "word"]).aggregate([([], "count_all")])
+    lang = _LANGS.take(counts["code"])
+    return pa.table({"lang": lang, "word": counts["word"], "freq": counts["count_all"]})
+
+
+def _gram_counts(df: DataFrame, text_col: str, include_pairs: bool) -> DataFrame:
+    """DataFrame[lang, word, freq] over ru/en words (and pairs): one
+    mapInArrow counting pass, then one map-side-combined groupBy sum."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield from _batch_counts(batch.column(0), include_pairs).to_batches()
+
+    counted = df.select(F.col(text_col)).mapInArrow(run, schema=_COUNT_SCHEMA)
+    return counted.groupBy("lang", "word").agg(F.sum("freq").alias("freq"))
+
+
+def word_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Unigram frequency agg (A1, index/builder.go:224-246)."""
-    return (
-        words.filter(F.col("lang").isin("ru", "en"))
-        .groupBy("lang", "word")
-        .agg(F.count("*").alias("freq"))
-    )
+    return _gram_counts(df, text_col, include_pairs=False)
 
 
-def bigram_counts(words: DataFrame, doc_cols: list[str]) -> DataFrame:
-    """Adjacent same-language pair counts (A2/W1/J4).
-
-    ``lead(word) over (partition by doc order by pos)`` forms the 2-wide
-    frame the reference iterates imperatively (index/builder.go:224-243);
-    only same-language adjacent pairs count (langdetect ParseWordPair,
-    component.go:90-129).
-    """
-    w = Window.partitionBy(*doc_cols).orderBy("pos")
-    paired = words.withColumn("next_word", F.lead("word").over(w)).withColumn(
-        "next_lang", F.lead("lang").over(w)
-    )
-    return (
-        paired.filter(
-            (F.col("next_word").isNotNull())
-            & (F.col("lang") == F.col("next_lang"))
-            & F.col("lang").isin("ru", "en")
-        )
-        .select("lang", F.concat_ws(" ", "word", "next_word").alias("word"))
-        .groupBy("lang", "word")
-        .agg(F.count("*").alias("freq"))
-    )
-
-
-def threshold_filter(freq_df: DataFrame, thresholds: dict[str, int]) -> DataFrame:
-    """HAVING freq >= per-lang threshold (P7, index/builder.go:71-93)."""
-    cond = None
-    for lang, t in thresholds.items():
-        c = (F.col("lang") == lang) & (F.col("freq") >= t)
-        cond = c if cond is None else cond | c
-    return freq_df.filter(cond)
+def bigram_counts(df: DataFrame, text_col: str) -> DataFrame:
+    """Adjacent same-language pair counts (A2/W1/J4): the pair rows of the
+    counter, one row per document (see ``build_frequency_index``)."""
+    return _gram_counts(df, text_col, include_pairs=True).filter(F.col("word").contains(" "))
 
 
 def build_frequency_index(
@@ -89,21 +119,22 @@ def build_frequency_index(
 
     Returns DataFrame[lang, word, freq] — the Spark equivalent of
     ru.index/en.index content (index/builder.go:191-217).
+
+    Precondition: each row is one whole document, ``doc_cols`` its key.
+    Pairs are formed inside a row, so a document split over several rows
+    loses the pairs across its row boundaries; the counting pass never
+    reads ``doc_cols``.
     """
     thresholds = thresholds or DEFAULT_THRESHOLDS
-    words = tokenized_words(df, text_col, doc_cols)
-    uni = threshold_filter(word_counts(words), thresholds)
-    if not include_pairs:
-        return uni
-    pairs = threshold_filter(
-        bigram_counts(words, doc_cols), {lang: pair_threshold for lang in thresholds}
-    )
-    # unionByName + key-wise sum = wordCollection.merge (index/models.go:58-72)
-    return (
-        uni.unionByName(pairs)
-        .groupBy("lang", "word")
-        .agg(F.sum("freq").alias("freq"))
-    )
+    counts = _gram_counts(df, text_col, include_pairs)
+    # word → per-lang threshold, pair → pair_threshold (P7,
+    # index/builder.go:71-93); a lang outside ``thresholds`` is dropped
+    is_pair = F.col("word").contains(" ")
+    cond = None
+    for lang, t in thresholds.items():
+        c = (F.col("lang") == lang) & (F.col("freq") >= F.when(is_pair, pair_threshold).otherwise(t))
+        cond = c if cond is None else cond | c
+    return counts.filter(cond)
 
 
 def weight_lookup(tokens_df: DataFrame, index_df: DataFrame, token_col: str = "word") -> DataFrame:

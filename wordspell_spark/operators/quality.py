@@ -16,8 +16,8 @@ natural text built from the corpus's own collocations scores high.  Rank
 order matches the log-likelihood filter for the decisions that matter
 (low-tail cutoffs), while staying exact.
 
-Scale shape: ONE tokenize-and-pair pass (a single Arrow-batched
-mapInPandas — no window shuffle), two map-side combined groupBys for the
+Scale shape: ONE tokenize-and-pair pass (a single vectorized
+mapInArrow — no window shuffle), two map-side combined groupBys for the
 corpus unigram/bigram tables, then two joins that re-attach the counts to
 the per-doc pair stream.  The n-gram tables are the small side at web
 scale (vocab² bounded, heavy-tailed) — AQE broadcasts them when they fit.
@@ -35,46 +35,47 @@ from pyspark.sql import functions as F
 def _paired_tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id_col, a, b) — one row per token, ``b`` = next token or NULL.
 
-    One mapInPandas runs the normalize-tokenize twin
-    (``text.py_normalize_words``, bit-identical to the Catalyst pipeline —
-    property-tested) and emits each doc's adjacent pairs directly.
-    Adjacency is row-local, so this needs NO shuffle: a window ``lead``
-    over the token stream would sort-shuffle it on doc_id, and at corpus
-    scale that shuffle would be the operator's largest while carrying zero
-    information the row didn't already have.
+    One mapInArrow runs the vectorized normalize-tokenize twin
+    (``text.arrow_normalize_words``, bit-identical to the Catalyst
+    pipeline — property-tested) over each batch and emits each doc's
+    adjacent pairs directly.  Adjacency is row-local, so this needs NO
+    shuffle: a window ``lead`` over the token stream would sort-shuffle it
+    on doc_id, and at corpus scale that shuffle would be the operator's
+    largest while carrying zero information the row didn't already have.
     """
     from typing import Iterator
 
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from ..functions.text import py_normalize_words
+    from ..functions.text import arrow_normalize_words
 
     inp = docs.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
     id_type = inp.schema["__id"].dataType.simpleString()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            a_col: list = []
-            b_col: list = []
-            for i, t in zip(pdf["__id"], pdf["__text"]):
-                w = py_normalize_words(t)
-                if not w:
-                    continue
-                ids.extend([i] * len(w))
-                a_col.extend(w)
-                b_col.extend(w[1:])
-                b_col.append(None)
-            yield pd.DataFrame({id_col: ids, "a": a_col, "b": b_col})
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            words = arrow_normalize_words(batch.column(1))
+            a = words.flatten()
+            doc = pc.list_parent_indices(words)
+            d = doc.to_numpy()
+            # b: the next token of the same doc, NULL after a doc's last one
+            last = np.ones(len(a), dtype=bool)
+            last[:-1] = d[1:] != d[:-1]
+            b = a.take(pa.array(np.arange(1, len(a) + 1), mask=last))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(doc), a, b], names=[id_col, "a", "b"]
+            )
 
-    return inp.mapInPandas(run, schema=f"{id_col} {id_type}, a string, b string")
+    return inp.mapInArrow(run, schema=f"{id_col} {id_type}, a string, b string")
 
 
 def bigram_coherence(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, n_pairs, coherence_sum) — corpus-trained bigram coherence.
 
     Tokenization is the engine's standard normalize pipeline
-    (``index_build.normalize_words`` semantics, via the Python twin in
+    (``text.normalize_words`` semantics, via the Arrow twin in
     ``_paired_tokens``); pairs are adjacent tokens within a doc regardless
     of language (the LM sees the document as the corpus wrote it).
     ``coherence_sum`` is the integer permille sum defined in the module

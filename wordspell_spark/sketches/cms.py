@@ -150,6 +150,8 @@ def deserialize(payload: bytes) -> CmsState:
         flat = np.zeros(depth * width, dtype=np.int64)
         flat[idx] = vals
         return CmsState(width, depth, flat.reshape(depth, width), _TOTAL.unpack(head)[0])
+    if len(body) != _TOTAL.size + 8 * depth * width:
+        raise serde.SketchFormatError("cms body size mismatch")
     (total,) = _TOTAL.unpack_from(body, 0)
     counts = np.frombuffer(body[8:], dtype="<i8").astype(np.int64).reshape(depth, width)
     return CmsState(width, depth, counts, total)

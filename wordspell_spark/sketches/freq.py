@@ -189,8 +189,8 @@ def deserialize(payload: bytes) -> FreqState:
     if n_entries > k:
         raise serde.SketchFormatError("freq body holds more than k entries")
     items, end = serde.unpack_items(body, _BODY_HEAD.size, n_entries, vtype, "freq")
-    counts = np.frombuffer(body[end : end + 8 * n_entries], dtype="<i8")
-    if counts.size != n_entries:
+    if len(body) != end + 8 * n_entries:
         raise serde.SketchFormatError("freq body size mismatch")
+    counts = np.frombuffer(body[end:], dtype="<i8")
     counters = dict(zip(items, counts.tolist()))
     return FreqState(k, int(n), int(dec), counters)

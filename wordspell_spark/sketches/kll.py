@@ -170,17 +170,19 @@ def serialize(state: KllState) -> bytes:
 def deserialize(payload: bytes) -> KllState:
     _, params, body = serde.unpack(payload, serde.KIND_KLL)
     (k,) = _PARAMS.unpack(params)
-    n, min_v, max_v, coin, nlevels = struct.unpack_from("<qddqI", body, 0)
     off = struct.calcsize("<qddqI")
+    if len(body) < off:
+        raise serde.SketchFormatError("kll body too short")
+    n, min_v, max_v, coin, nlevels = struct.unpack_from("<qddqI", body, 0)
     compactors = []
     for level in range(nlevels):
         if off + 4 > len(body):
             raise serde.SketchFormatError("kll body truncated (level header)")
         (sz,) = struct.unpack_from("<I", body, off)
         off += 4
-        items = np.frombuffer(body[off : off + 8 * sz], dtype="<f8").astype(np.float64)
-        if items.size != sz:
+        if off + 8 * sz > len(body):
             raise serde.SketchFormatError("kll body truncated (compactor items)")
+        items = np.frombuffer(body[off : off + 8 * sz], dtype="<f8").astype(np.float64)
         if np.isnan(items).any():  # update filters NaN; a stored NaN is bit-rot
             raise serde.SketchFormatError("kll compactor corrupt (NaN item)")
         compactors.append(items)

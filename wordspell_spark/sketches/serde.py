@@ -185,9 +185,9 @@ def pack_items(items: list, what: str) -> tuple[int, bytes]:
 def unpack_items(body: memoryview, off: int, n: int, vtype: int, what: str) -> tuple[list, int]:
     """Read ``n`` items of ``vtype`` at ``body[off:]``; return (items, end)."""
     if vtype == _ITEM_INT:
-        vals = np.frombuffer(body[off : off + 8 * n], dtype="<i8")
-        if vals.size != n:
+        if len(body) < off + 8 * n:
             raise SketchFormatError(f"{what} body size mismatch")
+        vals = np.frombuffer(body[off : off + 8 * n], dtype="<i8")
         return [int(v) for v in vals], off + 8 * n
     if vtype != _ITEM_STR:
         raise SketchFormatError(f"unknown {what} value type {vtype}")

@@ -160,6 +160,8 @@ def deserialize(payload: bytes) -> TDigestState:
     if not (np.isfinite(delta) and delta > 0):
         raise serde.SketchFormatError(f"tdigest delta out of range: {delta}")
     head = struct.calcsize("<dddI")
+    if len(body) < head:
+        raise serde.SketchFormatError("tdigest body too short")
     n, min_v, max_v, ncent = struct.unpack_from("<dddI", body, 0)
     if len(body) != head + 16 * ncent:
         raise serde.SketchFormatError(

@@ -171,9 +171,9 @@ def deserialize(payload: bytes) -> ThetaState:
     if len(body) < 8:
         raise serde.SketchFormatError("theta body too short")
     (n,) = struct.unpack_from("<Q", body, 0)
-    hashes = np.frombuffer(body[8:], dtype="<u8").astype(_U64)
-    if hashes.size != n:
+    if len(body) != 8 + 8 * n:
         raise serde.SketchFormatError("theta body size mismatch")
+    hashes = np.frombuffer(body[8:], dtype="<u8").astype(_U64)
     if hashes.size > k:
         raise serde.SketchFormatError("theta body holds more than k hashes")
     if hashes.size > 1 and not (hashes[1:] > hashes[:-1]).all():
