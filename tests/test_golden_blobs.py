@@ -89,6 +89,16 @@ def test_body_length_is_checked_exactly(kind, cut):
         deserialize_any(blob)
 
 
+@pytest.mark.parametrize("kind", ["freq", "sample"])
+def test_invalid_utf8_item_is_a_format_error(kind):
+    """A str item that is not UTF-8 is a corrupt payload, never a bare
+    UnicodeDecodeError."""
+    blob = bytearray(_stored(kind))
+    blob[blob.index(b"tok")] = 0xFF  # first byte of a stored item; never UTF-8
+    with pytest.raises(serde.SketchFormatError, match="not UTF-8"):
+        deserialize_any(bytes(blob))
+
+
 @pytest.mark.parametrize("kind", ["bloom_sparse", "hll_sparse", "cms_sparse"])
 def test_sparse_fixtures_carry_the_sparse_form(kind):
     """The *_sparse blobs pin the sparse body, not a second dense one."""

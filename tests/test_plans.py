@@ -138,6 +138,47 @@ def test_sketch_partials_single_shuffle(spark, docs):
         assert plan.index("Exchange hashpartitioning") < plan.index("MapInArrow"), plan
 
 
+def test_stateful_stream_shuffles_payloads_only(spark, tmp_path):
+    """The stateful stream's one exchange carries the builder's partial
+    payloads, not raw rows: over the 70%-web fixture, a raw-row shuffle
+    would send most of the input to the web group's one state task."""
+    import pyarrow.parquet as pq
+
+    from wordspell_spark.sketches import SketchSpec
+    from wordspell_spark.sources.fixtures import sequences_table
+    from wordspell_spark.streaming.stateful import stateful_sketch_stream
+
+    d = tmp_path / "in"
+    d.mkdir()
+    pq.write_table(sequences_table(500), str(d / "part-0.parquet"))
+    stream = spark.readStream.schema(
+        "doc_id string, tokens array<int>, n_tok int, source string"
+    ).parquet(str(d))
+    q = (
+        stateful_sketch_stream(stream, SketchSpec("hll", {"p": 10}), "source", "tokens")
+        .writeStream.format("memory")
+        .queryName("stateful_plan")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(False)
+    plan = plan[plan.index("== Physical Plan ==") :]
+    assert plan.count("Exchange") == 1, plan
+    assert "MapInArrow" in plan, plan
+    assert plan.index("Exchange") < plan.index("MapInArrow"), plan
+    # the exchanged rows: what the exchange's child emits and what the state
+    # operator reads — group key, payload and counters only
+    lines = plan.splitlines()
+    ex = next(i for i, line in enumerate(lines) if "Exchange" in line)
+    state_op = next(line for line in lines if "FlatMapGroupsInPandasWithState" in line)
+    state_op = state_op.split("state info")[0]  # drop the checkpoint path
+    for line in (lines[ex + 1], state_op):
+        assert "doc_id" not in line and "tokens" not in line, plan
+
+
 def test_minhash_pairs_shuffle_is_on_bands_only(spark, docs):
     from wordspell_spark.operators.dedup import minhash_lsh_pairs
 

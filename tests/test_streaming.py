@@ -203,6 +203,87 @@ def test_stateful_sketch_stream(spark, tmp_path):
     assert got == batch
 
 
+def _run_stateful(spark, tmp_path, tables, spec, name, **read_opts):
+    """Land ``tables`` as parquet files, run the stateful stream over them to
+    completion; return the query and every row it emitted."""
+    from wordspell_spark.streaming.stateful import stateful_sketch_stream
+
+    d = tmp_path / f"{name}_in"
+    d.mkdir()
+    for i, t in enumerate(tables):
+        pq.write_table(t, str(d / f"part-{i}.parquet"))
+    stream = spark.readStream.schema(SCHEMA).options(**read_opts).parquet(str(d))
+    q = (
+        stateful_sketch_stream(stream, spec, "source", "tokens")
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q, spark.sql(f"select * from {name}").collect()
+
+
+@pytest.mark.parametrize(
+    "kind,params",
+    [
+        ("hll", {"p": 12}),
+        ("theta", {"k": 256}),
+        ("bloom", {"n_estimate": 50_000}),
+        ("cms", {"eps": 0.01, "delta": 0.01}),
+    ],
+)
+def test_stateful_state_merges_to_batch_payload(spark, tmp_path, kind, params):
+    """Three files, one per micro-batch: the state store folds each batch's
+    partials into the previous state, and each group's last emitted payload
+    is byte-equal to the one-shot batch build, with the same rows/items."""
+    from wordspell_spark.harness import build_sketches
+    from wordspell_spark.sketches import SketchSpec
+
+    spec = SketchSpec(kind, params)
+    tbl = sequences_table(3000)
+    q, emitted = _run_stateful(
+        spark, tmp_path, [tbl.slice(i, 1000) for i in (0, 1000, 2000)], spec,
+        f"stateful_{kind}", maxFilesPerTrigger=1,
+    )
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+    last = {}
+    for r in emitted:  # rows grow with every update, so the largest is the last
+        if r["group"] not in last or r["rows"] > last[r["group"]]["rows"]:
+            last[r["group"]] = r
+    batch = build_sketches(spark.createDataFrame(tbl.to_pandas(), SCHEMA), spec, ["source"], "tokens")
+    want = {r["source"]: r for r in batch.collect()}
+    assert last.keys() == want.keys()
+    for g, r in want.items():
+        assert bytes(last[g]["sketch"]) == bytes(r["sketch"]), g
+        assert (last[g]["rows"], last[g]["items"]) == (r["rows"], r["items"]), g
+
+
+def test_stateful_null_in_int_column_keeps_int_hashes(spark, tmp_path):
+    """A null element in an array<int> column is dropped, and the other
+    values keep their int hashes: no Bloom false negatives, and ``items``
+    counts only the non-null elements."""
+    import pyarrow as pa
+
+    from wordspell_spark.sketches import SketchSpec, bloom
+
+    tbl = pa.table(
+        {
+            "doc_id": ["a", "b", "c"],
+            "tokens": pa.array([[1, 2], [3, None], [4]], pa.list_(pa.int32())),
+            "n_tok": pa.array([2, 2, 1], pa.int32()),
+            "source": ["web"] * 3,
+        }
+    )
+    spec = SketchSpec("bloom", {"n_estimate": 1000})
+    _, emitted = _run_stateful(spark, tmp_path, [tbl], spec, "stateful_null_int")
+    (r,) = emitted
+    assert bloom.contains(bloom.deserialize(bytes(r["sketch"])), [1, 2, 3, 4]).tolist() == [True] * 4
+    assert (r["rows"], r["items"]) == (3, 4)
+
+
 def test_io_sources_roundtrip(spark, tmp_path):
     """S8/S9/S10 sink-source plumbing (sources/io.py)."""
     from wordspell_spark.sources.io import (

@@ -242,6 +242,10 @@ def _arrow_words(texts: list) -> list:
     return arrow_normalize_words(pa.array(texts, pa.string())).to_pylist()
 
 
+# characters where Java's lowercase or \s and Arrow's differ, or nearly do
+_EDGE_CHARS = ["\u0130", "\u212a", "\x0b", "\xa0", "\x85"]
+
+
 class TestNormalizeTwin:
     """The Arrow normalize_words twin behind the frequency index's counting
     pass and bigram_coherence's pair stream."""
@@ -260,15 +264,17 @@ class TestNormalizeTwin:
     @settings(max_examples=50, deadline=None)
     @given(
         st.text(
-            alphabet=st.characters(
-                codec="utf-8", exclude_categories=("Cs",), max_codepoint=0x4FF
+            alphabet=st.one_of(
+                st.characters(codec="utf-8", exclude_categories=("Cs",), max_codepoint=0x4FF),
+                st.sampled_from(_EDGE_CHARS),
             ),
             max_size=60,
         )
     )
     def test_hypothesis_strings(self, spark, s):
         # covers Cyrillic + Greek (final-sigma casing) + unicode whitespace +
-        # the -/`/' edge filters
+        # the -/`/' edge filters; the edge characters are drawn often enough
+        # that dropping one of their mappings fails this test on its own
         from wordspell_spark.functions.text import normalize_words
 
         df = spark.createDataFrame([(s,)], "text string")

@@ -5,11 +5,12 @@ generalization of the reference's partial→final additive accumulator merge
 (/root/reference/components/index/models.go:58-72) and its single shared
 Bloom build loop (/root/reference/builder.go:97-119).
 
-    Stage A  mapInArrow over input partitions: one partial sketch per
-             (group key, kind) per partition — the map-side combine.
-             Each Arrow batch is split by group key, each value column is
-             flattened and deduped once, and every kind reads that one
-             dedupe.  Output is tiny: ≤ |groups| x |kinds| rows per
+    Stage A  ``partial_sketches``: mapInArrow over input partitions, one
+             partial sketch per (group key, kind) per partition — the
+             map-side combine.  Each Arrow batch is split by group key,
+             each value column is flattened and deduped once (``_values``
+             is the package's one value feed), and every kind reads that
+             one dedupe.  Output is tiny: ≤ |groups| x |kinds| rows per
              partition, each a byte payload.
     Stage B  automatic, only when the partial frame has more than 64
              partitions: salted groupBy(keys, salt) merges of fan-in 64 —
@@ -26,7 +27,9 @@ kernels consume whole Arrow batches as numpy arrays, with no pandas
 conversion in between (BASELINE.json input_hint).  ``merge_partials``
 (stages B and C) is the one grouped-map merge in the package: the
 checkpoint finalize, the streaming state merge and the deletion-Bloom build
-fold their partials through it too.
+fold their partials through it too.  The stateful stream
+(``streaming/stateful.py``) calls stage A directly and folds its partials
+in the state store instead of stages B and C.
 """
 
 from __future__ import annotations
@@ -182,6 +185,21 @@ def build_sketches_multi(
     |partitions| x |groups| x |kinds| KB payloads.
     """
     group_cols = list(group_cols or [])
+    return merge_partials(partial_sketches(df, specs, group_cols), [*group_cols, "kind"])
+
+
+def partial_sketches(
+    df: DataFrame,
+    specs: dict[str, tuple[SketchSpec, str]],
+    group_cols: list[str],
+) -> DataFrame:
+    """Stage A: one partial sketch per (group, kind) per input partition.
+
+    Same long-format schema as ``build_sketches_multi``, but unmerged: a
+    group seen by several partitions has one row per partition.  No
+    shuffle; each row's payload merges with its group's others through
+    ``SketchSpec.merge_payloads``.
+    """
     value_cols = sorted({vc for _, vc in specs.values()})
     narrow = df.select(*group_cols, *value_cols)
     out_schema = StructType(
@@ -247,8 +265,7 @@ def build_sketches_multi(
             schema=arrow_schema,
         )
 
-    partials = narrow.mapInArrow(partial_build, schema=out_schema)
-    return merge_partials(partials, [*group_cols, "kind"])
+    return narrow.mapInArrow(partial_build, schema=out_schema)
 
 
 def collect_sketches(result: DataFrame, spec: SketchSpec, group_cols: list[str] | None):

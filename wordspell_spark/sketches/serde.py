@@ -198,7 +198,10 @@ def unpack_items(body: memoryview, off: int, n: int, vtype: int, what: str) -> t
         raise SketchFormatError(f"{what} body size mismatch")
     blob = bytes(body[off:end])
     items, pos = [], 0
-    for ln in lens.tolist():
-        items.append(blob[pos : pos + ln].decode("utf-8"))
-        pos += ln
+    try:
+        for ln in lens.tolist():
+            items.append(blob[pos : pos + ln].decode("utf-8"))
+            pos += ln
+    except UnicodeDecodeError as e:
+        raise SketchFormatError(f"{what} item is not UTF-8") from e
     return items, end
