@@ -12,6 +12,7 @@ fixtures ONLY with an intentional serde.VERSION bump:
 from __future__ import annotations
 
 import os
+import struct
 import sys
 
 import numpy as np
@@ -22,6 +23,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 from make_golden_sketches import SPECS, build  # noqa: E402
 
 from wordspell_spark.sketches import (  # noqa: E402
+    SketchSpec,
     bloom,
     cms,
     deserialize_any,
@@ -97,6 +99,94 @@ def test_invalid_utf8_item_is_a_format_error(kind):
     blob[blob.index(b"tok")] = 0xFF  # first byte of a stored item; never UTF-8
     with pytest.raises(serde.SketchFormatError, match="not UTF-8"):
         deserialize_any(bytes(blob))
+
+
+def _mutants(blob: bytes, seed: int):
+    """xor 0x01 / 0xFF at up to 400 sampled positions (every header and
+    params byte included), appends of 1 and 8 bytes, and 60 truncations."""
+    rng = np.random.default_rng(seed)
+    pos = np.arange(len(blob))
+    if len(blob) > 400:
+        pos = np.union1d(np.arange(32), rng.choice(len(blob), 368, replace=False))
+    for p in pos.tolist():
+        for x in (0x01, 0xFF):
+            m = bytearray(blob)
+            m[p] ^= x
+            yield bytes(m)
+    yield blob + b"\x00"
+    yield blob + b"\x00" * 8
+    for cut in np.unique(np.linspace(0, len(blob) - 1, 60).astype(int)).tolist():
+        yield blob[:cut]
+
+
+@pytest.mark.parametrize("kind", sorted(SPECS))
+def test_golden_blob_fuzz_only_format_errors_and_canonical_states(kind):
+    """Every mutant of a golden blob either raises SketchFormatError (no
+    struct.error, bare ValueError, numpy error or RuntimeWarning) or is a
+    state its serializer writes back byte-identical: one encoding per
+    state, so a corrupted partial cannot merge in normalized form."""
+    for i, m in enumerate(_mutants(_stored(kind), seed=len(kind))):
+        try:
+            name, state = deserialize_any(m)
+        except serde.SketchFormatError:
+            continue
+        assert SketchSpec(name).serialize(state) == m, f"mutant {i} accepted in a non-canonical form"
+
+
+@pytest.mark.parametrize("delta", [-1, +1])
+@pytest.mark.parametrize("kind", sorted(SPECS))
+def test_params_block_size_is_checked_exactly(kind, delta):
+    """A params block one byte short or long is a format error, never a
+    struct.error from unpacking it."""
+    got, flags, params, body = serde.unpack_header_full(_stored(kind))
+    params = params[:-1] if delta < 0 else params + b"\x00"
+    with pytest.raises(serde.SketchFormatError, match="params block"):
+        deserialize_any(serde.pack_header(got, params, flags) + bytes(body))
+
+
+def _forms(kind: str, state) -> tuple[bytes, bytes]:
+    """(dense body, sparse body) of a bloom / hll / cms state, by hand."""
+    if kind == "bloom":
+        return np.packbits(state.bits, bitorder="little").tobytes(), serde.pack_sparse(np.flatnonzero(state.bits))
+    if kind == "hll":
+        nz = np.flatnonzero(state.registers)
+        words = (nz.astype(np.uint32) << np.uint32(6)) | state.registers[nz]
+        return state.registers.tobytes(), serde.pack_sparse(words)
+    flat, total = state.counts.reshape(-1), struct.pack("<q", state.total)
+    nz = np.flatnonzero(flat)
+    return total + flat.astype("<i8").tobytes(), total + serde.pack_sparse(nz, flat[nz])
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        SketchSpec("bloom", {"n_estimate": 200_000, "fpr": 0.01}),
+        SketchSpec("hll", {"p": 14}),
+        SketchSpec("cms", {"width": 4096, "depth": 4}),
+    ],
+    ids=lambda spec: spec.kind,
+)
+@pytest.mark.parametrize("n", [1, 50_000])
+def test_only_the_form_serialize_picks_is_read(spec, n):
+    """A nearly empty bloom / hll / cms serializes sparse and a full one
+    dense; the same state in the other form is a format error, not a
+    second encoding of it."""
+    state = spec.update(spec.create(), np.arange(n))
+    payload = spec.serialize(state)
+    kind, flags, params, _ = serde.unpack_header_full(payload)
+    dense, sparse = _forms(spec.kind, state)
+    assert flags == (serde.FLAG_SPARSE if n == 1 else 0)
+    assert payload.endswith(sparse if flags else dense)  # the hand-built forms are right
+    other = serde.pack_header(kind, params, flags ^ serde.FLAG_SPARSE) + (dense if flags else sparse)
+    with pytest.raises(serde.SketchFormatError, match="form serialize picks"):
+        spec.deserialize(other)
+
+
+def test_sparse_cms_zero_cell_is_a_format_error():
+    """serialize drops zero cells, so a stored zero is corruption."""
+    blob = _stored("cms_sparse")
+    with pytest.raises(serde.SketchFormatError, match="zero cell"):
+        deserialize_any(blob[:-8] + b"\x00" * 8)  # the last i64 value
 
 
 @pytest.mark.parametrize("kind", ["bloom_sparse", "hll_sparse", "cms_sparse"])

@@ -151,6 +151,28 @@ class TestQuantileBoundPreservation:
         got_mean = float((m.means * m.weights).sum() / m.weights.sum())
         assert got_mean == pytest.approx(float(vals.mean()), rel=1e-9)
 
+    @settings(**_SETTINGS)
+    @given(
+        st.lists(
+            st.lists(st.floats(-1e9, 1e9, allow_nan=False), max_size=400), min_size=1, max_size=3
+        ),
+        st.sampled_from([10.0, 20.0, 50.0, 100.0, 200.0, 1000.0]),
+    )
+    def test_tdigest_payload_centroids_are_a_compression_fixed_point(self, parts, delta):
+        """The reader rejects centroids that compress to something else, so
+        every serialized digest (built or merged) must be a fixed point of
+        ``_compress_arrays`` and re-serialize byte-identical."""
+        states = [tdigest.update(tdigest.create(delta=delta), np.asarray(p_, dtype=np.float64)) for p_ in parts]
+        merged = states[0]
+        for s_ in states[1:]:
+            merged = tdigest.merge(merged, s_)
+        for s_ in [*states, merged]:
+            payload = tdigest.serialize(s_)
+            back = tdigest.deserialize(payload)
+            means, weights = tdigest._compress_arrays(back.means, back.weights, delta)
+            assert np.array_equal(means, back.means) and np.array_equal(weights, back.weights)
+            assert tdigest.serialize(back) == payload
+
 
 class TestFreqBoundPreservation:
     """Misra–Gries merge is approximate by design (which ties drop depends

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from struct import error as struct_error
 
 from wordspell_spark.sketches import (
     SketchSpec,
@@ -203,7 +202,7 @@ class TestHll:
                 hll.deserialize(bad)
         # a flagged payload must not slip through a flag-naive reader
         with pytest.raises(serde.SketchFormatError):
-            serde.unpack(ps, serde.KIND_HLL)
+            serde.unpack(ps, serde.KIND_HLL, hll._PARAMS)
 
     def test_sparse_wire_rejects_crafted_corruption(self):
         """Duplicated indices and out-of-range ranks must raise, not
@@ -277,10 +276,10 @@ class TestSparseWireForms:
     def test_mutation_fuzz_never_crashes_or_allocates_big(self):
         """Deterministic byte-flip fuzz over every kind's valid payloads
         (dense and sparse forms): deserialize must either raise a
-        SketchFormatError/ValueError or return a state with sane geometry —
-        never crash the interpreter, hang, or attempt a giant allocation
-        (the caps added for the crafted-corruption findings make this a
-        testable contract)."""
+        SketchFormatError or return a state that re-serializes to the
+        mutated bytes — never crash the interpreter, hang, attempt a giant
+        allocation (the caps added for the crafted-corruption findings make
+        this a testable contract) or normalize a body into another one."""
         import itertools
 
         rng = np.random.default_rng(99)
@@ -306,12 +305,11 @@ class TestSparseWireForms:
                 buf[int(rng.integers(0, len(buf)))] = int(rng.integers(0, 256))
             try:
                 st = spec.deserialize(bytes(buf))
-            except (serde.SketchFormatError, ValueError, struct_error, OverflowError):
+            except serde.SketchFormatError:
                 continue
-            # accepted: geometry must be sane (bounded memory), and the
-            # state must re-serialize without crashing
-            blob = spec.serialize(st)
-            assert isinstance(blob, bytes)
+            # accepted: one encoding per state, so the state re-serializes
+            # to exactly the accepted bytes
+            assert spec.serialize(st) == bytes(buf)
 
     def test_corrupt_geometry_cannot_force_giant_allocation(self):
         """A ~30-byte payload lying about m / width*depth must raise before
@@ -329,6 +327,31 @@ class TestSparseWireForms:
         ) + struct.pack("<qI", 0, 0)
         with pytest.raises(serde.SketchFormatError):
             cms.deserialize(bad_cms)
+
+    def test_hll_precision_outside_create_bounds_is_rejected(self):
+        """An empty sparse hll body with p=60 would allocate 2^60 registers;
+        p is held to create()'s [4, 18] before anything is allocated."""
+        import struct
+
+        for p in (3, 19, 60):
+            bad = serde.pack_header(serde.KIND_HLL, struct.pack("<B", p), serde.FLAG_SPARSE) + struct.pack("<I", 0)
+            with pytest.raises(serde.SketchFormatError, match="p out of range"):
+                hll.deserialize(bad)
+
+    def test_bloom_bit_count_not_a_multiple_of_8(self):
+        """packbits pads the last byte, so a filter of m % 8 != 0 bits must
+        read back from ceil(m/8) bytes; an m that disagrees with the body
+        (here m+1 on a 1024-bit filter) is rejected, not accepted with a
+        bit array one short of m."""
+        st = bloom.update(bloom.create(m=1001, k=3), np.arange(400))
+        p = bloom.serialize(st)
+        rt = bloom.deserialize(p)
+        assert rt.bits.size == 1001 and (rt.bits == st.bits).all()
+        assert bloom.serialize(rt) == p
+        bad = bytearray(bloom.serialize(bloom.update(bloom.create(m=1024, k=3), np.arange(400))))
+        bad[12] ^= 1  # m (u64 right after the 12-byte header): 1024 -> 1025
+        with pytest.raises(serde.SketchFormatError):
+            bloom.deserialize(bytes(bad))
 
 
 # ---------------------------------------------------------------- cms

@@ -8,7 +8,13 @@ reference's Bloom component Add/Test/Reset/Save/Load surface at
     update(state, values: np.ndarray) -> state          # batch, vectorized
     merge(a, b) -> state                                # associative-by-bound
     serialize(state) -> bytes                           # versioned LE payload
-    deserialize(payload: bytes) -> state
+    deserialize(payload: bytes) -> state                # corrupt: SketchFormatError
+
+and, for the value-keyed kinds, the builder's entry point over the output
+of ``hashing.distinct_hashes`` (one dedupe and hash per value column):
+
+    update_unique_hashes(state, keys, counts) -> state  # bloom hll cms theta
+    update_distinct(state, uniq, keys, counts) -> state # freq sample
 
 plus kind-specific query functions (``contains``, ``estimate``, ``query``,
 ``quantile``).  ``SketchSpec`` captures (kind, params) so partial builders on
@@ -74,10 +80,6 @@ class SketchSpec:
         return self.serialize(state)
 
 
-def module_for(kind: str):
-    return _MODULES[kind]
-
-
 def deserialize_any(payload: bytes):
     """Dispatch on the payload header → (kind_name, state)."""
     name = serde.peek_kind(payload)
@@ -95,6 +97,5 @@ __all__ = [
     "freq",
     "sample",
     "serde",
-    "module_for",
     "deserialize_any",
 ]

@@ -146,6 +146,11 @@ def approx_fpr(state: BloomState) -> float:
     return float(fill_ratio(state) ** state.k)
 
 
+def _sparse_form(m: int, n_set: int) -> bool:
+    """Whether serialize writes ``m`` bits, ``n_set`` of them set, sparse."""
+    return m <= _MAX_SPARSE_M and 4 * n_set + 4 < m // 8
+
+
 def serialize(state: BloomState) -> bytes:
     """Dense packed bits, or the sparse set-bit indices whenever
     ``4*set_bits + 4 < m/8`` (and m fits u32 indexing).  Why: the filter
@@ -159,8 +164,7 @@ def serialize(state: BloomState) -> bytes:
     # path); the _MAX_SPARSE_M cap bounds what a corrupt sparse payload can
     # force deserialize to allocate — serialize applies the same cap so
     # every emitted payload stays round-trippable
-    n_set = int(np.count_nonzero(state.bits))
-    if state.m <= _MAX_SPARSE_M and 4 * n_set + 4 < state.m // 8:
+    if _sparse_form(state.m, int(np.count_nonzero(state.bits))):
         body = serde.pack_sparse(np.flatnonzero(state.bits))
         return serde.pack_header(serde.KIND_BLOOM, params, serde.FLAG_SPARSE) + body
     packed = np.packbits(state.bits, bitorder="little")  # LSB-first == old u64-word layout
@@ -168,21 +172,21 @@ def serialize(state: BloomState) -> bytes:
 
 
 def deserialize(payload: bytes) -> BloomState:
-    flags, params, body = serde.unpack(payload, serde.KIND_BLOOM, serde.FLAG_SPARSE)
-    m, k = _PARAMS.unpack(params)
+    flags, (m, k), body = serde.unpack(payload, serde.KIND_BLOOM, _PARAMS, serde.FLAG_SPARSE)
     if flags & serde.FLAG_SPARSE:
         if m > _MAX_SPARSE_M:
             # a 30-byte corrupt payload must not force a giant allocation;
             # legit filters above the cap always serialize dense, where the
             # body-size cross-check rejects a lying header for free
             raise serde.SketchFormatError(f"sparse bloom m={m} above cap {_MAX_SPARSE_M}")
-        _, words, _ = serde.unpack_sparse(body, "bloom")
-        idx = serde.sparse_indices(words, m, "bloom")
+        words, _ = serde.unpack_sparse(body)
         bits = np.zeros(m, dtype=np.bool_)
-        bits[idx] = True
-        return BloomState(m, k, bits)
-    raw = np.frombuffer(body, dtype=np.uint8)
-    if raw.size != m // 8:
-        raise serde.SketchFormatError("bloom body size mismatch")
-    bits = np.unpackbits(raw, bitorder="little").view(np.bool_)
+        bits[serde.sparse_indices(words, m, "bloom")] = True
+    else:
+        bits = np.unpackbits(body.array(np.uint8, -(-m // 8)), bitorder="little").view(np.bool_)
+        if bits[m:].any():  # packbits pads an m % 8 != 0 filter with zero bits
+            raise serde.SketchFormatError("bloom padding bits set")
+        bits = bits[:m]
+    body.end()
+    serde.check_form(flags, _sparse_form(m, int(np.count_nonzero(bits))), "bloom")
     return BloomState(m, k, bits)

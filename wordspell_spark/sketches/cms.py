@@ -117,41 +117,43 @@ def error_bound(state: CmsState) -> float:
     return (math.e / state.width) * state.total
 
 
+def _sparse_form(cells: int, n_set: int) -> bool:
+    """Whether serialize writes ``cells`` counters, ``n_set`` nonzero, sparse."""
+    return cells <= _MAX_SPARSE_CELLS and 12 * n_set + 12 < 8 * cells
+
+
 def serialize(state: CmsState) -> bytes:
     """Dense cells, or the sparse nonzero cells whenever ``12*nonzero + 12
     < 8*cells``.  A (partition, group) partial that saw d distinct keys
     touches at most depth*d of the depth*width cells, so nearly-empty
     partials shrink ~width/d-fold on the shuffle."""
     params = _PARAMS.pack(state.width, state.depth)
+    total = _TOTAL.pack(state.total)
     flat = state.counts.reshape(-1)
-    cells = flat.size
     # cheap gate first; the cap mirrors bloom's: corrupt sparse payloads
     # cannot force a giant allocation, and serialize applies the same cap
     # so every emitted payload round-trips
-    n_set = int(np.count_nonzero(flat))
-    if cells <= _MAX_SPARSE_CELLS and 12 * n_set + 12 < 8 * cells:
+    if _sparse_form(flat.size, int(np.count_nonzero(flat))):
         nz = np.flatnonzero(flat)
-        body = serde.pack_sparse(nz, flat[nz], prefix=_TOTAL.pack(state.total))
-        return serde.pack_header(serde.KIND_CMS, params, serde.FLAG_SPARSE) + body
-    body = _TOTAL.pack(state.total) + state.counts.astype("<i8").tobytes()
-    return serde.pack_header(serde.KIND_CMS, params) + body
+        return serde.pack_header(serde.KIND_CMS, params, serde.FLAG_SPARSE) + total + serde.pack_sparse(nz, flat[nz])
+    return serde.pack_header(serde.KIND_CMS, params) + total + state.counts.astype("<i8").tobytes()
 
 
 def deserialize(payload: bytes) -> CmsState:
-    flags, params, body = serde.unpack(payload, serde.KIND_CMS, serde.FLAG_SPARSE)
-    width, depth = _PARAMS.unpack(params)
+    flags, (width, depth), body = serde.unpack(payload, serde.KIND_CMS, _PARAMS, serde.FLAG_SPARSE)
+    cells = depth * width
+    (total,) = body.read(_TOTAL)
     if flags & serde.FLAG_SPARSE:
-        if depth * width > _MAX_SPARSE_CELLS:
-            raise serde.SketchFormatError(
-                f"sparse cms cells={depth * width} above cap {_MAX_SPARSE_CELLS}"
-            )
-        head, words, vals = serde.unpack_sparse(body, "cms", prefix=_TOTAL.size, values=True)
-        idx = serde.sparse_indices(words, depth * width, "cms")
-        flat = np.zeros(depth * width, dtype=np.int64)
+        if cells > _MAX_SPARSE_CELLS:
+            raise serde.SketchFormatError(f"sparse cms cells={cells} above cap {_MAX_SPARSE_CELLS}")
+        words, vals = serde.unpack_sparse(body, values=True)
+        idx = serde.sparse_indices(words, cells, "cms")
+        if (vals == 0).any():  # serialize drops zero cells
+            raise serde.SketchFormatError("sparse cms holds a zero cell")
+        flat = np.zeros(cells, dtype=np.int64)
         flat[idx] = vals
-        return CmsState(width, depth, flat.reshape(depth, width), _TOTAL.unpack(head)[0])
-    if len(body) != _TOTAL.size + 8 * depth * width:
-        raise serde.SketchFormatError("cms body size mismatch")
-    (total,) = _TOTAL.unpack_from(body, 0)
-    counts = np.frombuffer(body[8:], dtype="<i8").astype(np.int64).reshape(depth, width)
-    return CmsState(width, depth, counts, total)
+    else:
+        flat = body.array("<i8", cells).astype(np.int64)
+    body.end()
+    serde.check_form(flags, _sparse_form(cells, int(np.count_nonzero(flat))), "cms")
+    return CmsState(width, depth, flat.reshape(depth, width), total)

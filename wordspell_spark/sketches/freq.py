@@ -181,16 +181,15 @@ def serialize(state: FreqState) -> bytes:
 
 
 def deserialize(payload: bytes) -> FreqState:
-    _, params, body = serde.unpack(payload, serde.KIND_FREQ)
-    (k,) = _PARAMS.unpack(params)
-    if len(body) < _BODY_HEAD.size:
-        raise serde.SketchFormatError("freq body too short")
-    n, dec, n_entries, vtype = _BODY_HEAD.unpack_from(body, 0)
+    _, (k,), body = serde.unpack(payload, serde.KIND_FREQ, _PARAMS)
+    n, dec, n_entries, vtype = body.read(_BODY_HEAD)
     if n_entries > k:
         raise serde.SketchFormatError("freq body holds more than k entries")
-    items, end = serde.unpack_items(body, _BODY_HEAD.size, n_entries, vtype, "freq")
-    if len(body) != end + 8 * n_entries:
-        raise serde.SketchFormatError("freq body size mismatch")
-    counts = np.frombuffer(body[end:], dtype="<i8")
-    counters = dict(zip(items, counts.tolist()))
-    return FreqState(k, int(n), int(dec), counters)
+    items = serde.unpack_items(body, n_entries, vtype)
+    counts = body.array("<i8", n_entries)
+    body.end()
+    # serialize writes positive counters, items ascending by str(item)
+    keys = [str(it) for it in items]
+    if any(a >= b for a, b in zip(keys, keys[1:])) or (counts <= 0).any():
+        raise serde.SketchFormatError("freq items not strictly ascending or a counter <= 0")
+    return FreqState(k, n, dec, dict(zip(items, counts.tolist())))

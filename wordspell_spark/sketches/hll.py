@@ -115,6 +115,11 @@ def rse(state: HllState) -> float:
     return 1.04 / (state.m ** 0.5)
 
 
+def _sparse_form(m: int, n_set: int) -> bool:
+    """Whether serialize writes ``m`` registers, ``n_set`` nonzero, sparse."""
+    return 4 * n_set + 4 < m
+
+
 def serialize(state: HllState) -> bytes:
     """Dense registers, or the sparse nonzero registers as ``idx << 6 |
     rank`` words (rank <= 64-p+1 <= 61 fits 6 bits; p <= 18 keeps idx in
@@ -124,9 +129,7 @@ def serialize(state: HllState) -> bytes:
     full 2^p dense bytes for a few set registers — sparse cuts that
     ~30-200x."""
     regs = state.registers
-    m = regs.size
-    n_set = int(np.count_nonzero(regs))  # cheap gate: no index materialization
-    if 4 * n_set + 4 < m:
+    if _sparse_form(regs.size, int(np.count_nonzero(regs))):  # cheap gate: no index materialization
         nz = np.flatnonzero(regs)
         packed = (nz.astype(np.uint32) << np.uint32(6)) | regs[nz].astype(np.uint32)
         body = serde.pack_sparse(packed)
@@ -135,18 +138,19 @@ def serialize(state: HllState) -> bytes:
 
 
 def deserialize(payload: bytes) -> HllState:
-    flags, params, body = serde.unpack(payload, serde.KIND_HLL, serde.FLAG_SPARSE)
-    (p,) = _PARAMS.unpack(params)
+    flags, (p,), body = serde.unpack(payload, serde.KIND_HLL, _PARAMS, serde.FLAG_SPARSE)
+    if not 4 <= p <= 18:  # same bounds as create(); an empty sparse body
+        raise serde.SketchFormatError(f"hll p out of range: {p}")  # would allocate 2^p
     if flags & serde.FLAG_SPARSE:
-        _, packed, _ = serde.unpack_sparse(body, "hll")
+        packed, _ = serde.unpack_sparse(body)
         idx = serde.sparse_indices(packed >> np.uint32(6), 1 << p, "hll")
         ranks = (packed & np.uint32(0x3F)).astype(np.uint8)
         if (ranks == 0).any() or (ranks > 64 - p + 1).any():
             raise serde.SketchFormatError("sparse hll rank out of range")
         regs = np.zeros(1 << p, dtype=np.uint8)
         regs[idx] = ranks
-        return HllState(p, regs)
-    regs = np.frombuffer(body, dtype=np.uint8).copy()
-    if regs.size != 1 << p:
-        raise serde.SketchFormatError("hll body size mismatch")
+    else:
+        regs = body.array(np.uint8, 1 << p).copy()
+    body.end()
+    serde.check_form(flags, _sparse_form(regs.size, int(np.count_nonzero(regs))), "hll")
     return HllState(p, regs)

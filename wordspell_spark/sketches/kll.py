@@ -29,6 +29,8 @@ from .hashing import splitmix64
 DEFAULT_K = 200
 _C = 2.0 / 3.0
 _PARAMS = struct.Struct("<I")
+_HEAD = struct.Struct("<qddqI")  # n, min, max, coin, levels
+_COUNT = struct.Struct("<I")  # items in one level
 
 
 @dataclass
@@ -158,37 +160,23 @@ def error_bound(state: KllState) -> float:
 
 
 def serialize(state: KllState) -> bytes:
-    params = _PARAMS.pack(state.k)
-    head = struct.pack("<qddqI", state.n, state.min_v, state.max_v, state.coin, len(state.compactors))
-    parts = [head]
+    parts = [_HEAD.pack(state.n, state.min_v, state.max_v, state.coin, len(state.compactors))]
     for items in state.compactors:
-        parts.append(struct.pack("<I", items.size))
-        parts.append(items.astype("<f8").tobytes())
-    return serde.pack_header(serde.KIND_KLL, params) + b"".join(parts)
+        parts += [_COUNT.pack(items.size), items.astype("<f8").tobytes()]
+    return serde.pack_header(serde.KIND_KLL, _PARAMS.pack(state.k)) + b"".join(parts)
 
 
 def deserialize(payload: bytes) -> KllState:
-    _, params, body = serde.unpack(payload, serde.KIND_KLL)
-    (k,) = _PARAMS.unpack(params)
-    off = struct.calcsize("<qddqI")
-    if len(body) < off:
-        raise serde.SketchFormatError("kll body too short")
-    n, min_v, max_v, coin, nlevels = struct.unpack_from("<qddqI", body, 0)
+    _, (k,), body = serde.unpack(payload, serde.KIND_KLL, _PARAMS)
+    n, min_v, max_v, coin, nlevels = body.read(_HEAD)
     compactors = []
-    for level in range(nlevels):
-        if off + 4 > len(body):
-            raise serde.SketchFormatError("kll body truncated (level header)")
-        (sz,) = struct.unpack_from("<I", body, off)
-        off += 4
-        if off + 8 * sz > len(body):
-            raise serde.SketchFormatError("kll body truncated (compactor items)")
-        items = np.frombuffer(body[off : off + 8 * sz], dtype="<f8").astype(np.float64)
+    for _level in range(nlevels):
+        (size,) = body.read(_COUNT)
+        items = body.array("<f8", size).astype(np.float64)
         if np.isnan(items).any():  # update filters NaN; a stored NaN is bit-rot
             raise serde.SketchFormatError("kll compactor corrupt (NaN item)")
         compactors.append(items)
-        off += 8 * sz
-    if off != len(body):
-        raise serde.SketchFormatError("kll body has trailing bytes")
+    body.end()
     if n < 0 or np.isnan(min_v) or np.isnan(max_v):
         raise serde.SketchFormatError("kll summary stats corrupt")
     return KllState(k, compactors, n, min_v, max_v, coin)

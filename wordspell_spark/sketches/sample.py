@@ -158,22 +158,15 @@ def serialize(state: SampleState) -> bytes:
 
 
 def deserialize(payload: bytes) -> SampleState:
-    _, params, body = serde.unpack(payload, serde.KIND_SAMPLE)
-    (k,) = _PARAMS.unpack(params)
+    _, (k,), body = serde.unpack(payload, serde.KIND_SAMPLE, _PARAMS)
     if not 16 <= k <= (1 << 20):  # same bounds as create(); corrupt k would
         raise serde.SketchFormatError(f"sample k out of range: {k}")  # crash later
-    if len(body) < _BODY_HEAD.size:
-        raise serde.SketchFormatError("sample body too short")
-    n, vtype = _BODY_HEAD.unpack_from(body, 0)
+    n, vtype = body.read(_BODY_HEAD)
     if n > k:
         raise serde.SketchFormatError("sample body holds more than k entries")
-    off = _BODY_HEAD.size
-    hashes = np.frombuffer(body[off : off + 8 * n], dtype="<u8").astype(_U64)
-    if hashes.size != n:
-        raise serde.SketchFormatError("sample body size mismatch")
+    hashes = body.array("<u8", n).astype(_U64)
     if n > 1 and not (hashes[1:] > hashes[:-1]).all():
         raise serde.SketchFormatError("sample hashes not strictly ascending")
-    values, end = serde.unpack_items(body, off + 8 * n, n, vtype, "sample")
-    if end != len(body):
-        raise serde.SketchFormatError("sample body size mismatch")
+    values = serde.unpack_items(body, n, vtype)
+    body.end()
     return SampleState(k, hashes, values)

@@ -44,6 +44,14 @@ Item block (``pack_items``; freq and sample, vtype in the kernel's head):
     vtype 0 (int): count i64 items
     vtype 1 (str): count u32 UTF-8 byte lengths, then the concatenated bytes
 
+Reader rule: ``unpack`` requires the params block to be exactly the kind's
+params size, and every body byte is read through one bounds-checked ``Body``
+whose ``end`` rejects trailing bytes, so a corrupt payload raises
+``SketchFormatError`` and nothing else.  One encoding per state: a reader
+rejects every body its serializer never writes (the other dense/sparse form,
+unsorted freq items, uncompressed t-digest centroids), so an accepted payload
+re-serializes byte-identical.
+
 ``merge`` MUST reject payloads whose (version, kind, params) differ — the
 analogue of the reference fixing filter geometry up front via ``Reset(size)``
 (components/bloomfilter/component.go:60-68).
@@ -112,19 +120,52 @@ def unpack_header_full(
     return kind, flags, params, buf[off + plen :]
 
 
+class Body:
+    """Bounds-checked cursor over a payload body: every read checks that
+    its bytes are there before slicing them, and ``end`` requires that every
+    byte was read, so a short or padded body is a ``SketchFormatError``."""
+
+    def __init__(self, buf: memoryview, what: str):
+        self.buf, self.off, self.what = buf, 0, what
+
+    def read(self, fmt: struct.Struct) -> tuple:
+        return fmt.unpack(self.array(np.uint8, fmt.size))
+
+    def array(self, dtype, n: int) -> np.ndarray:
+        """The next ``n`` items of ``dtype`` as a read-only array."""
+        dt = np.dtype(dtype)
+        end = self.off + dt.itemsize * n
+        if end > len(self.buf):
+            raise SketchFormatError(f"{self.what} body truncated: needs {end} bytes, has {len(self.buf)}")
+        arr, self.off = np.frombuffer(self.buf[self.off : end], dtype=dt), end
+        return arr
+
+    def end(self) -> None:
+        if self.off != len(self.buf):
+            raise SketchFormatError(f"{self.what} body has {len(self.buf) - self.off} trailing bytes")
+
+
 def unpack(
-    payload: bytes | bytearray | memoryview, kind: int, flags_ok: int = 0
-) -> tuple[int, bytes, memoryview]:
-    """Return (flags, params, body) of a ``kind`` payload.  Any other kind,
-    or a flag bit outside ``flags_ok``, raises: a reader that predates a
-    flag must not misparse the body it marks."""
-    got, flags, params, body = unpack_header_full(payload)
+    payload: bytes | bytearray | memoryview, kind: int, params: struct.Struct, flags_ok: int = 0
+) -> tuple[int, tuple, Body]:
+    """Return (flags, params tuple, body cursor) of a ``kind`` payload.  Any
+    other kind, a params block of other than ``params.size`` bytes, or a flag
+    bit outside ``flags_ok`` (a reader must not misparse a body it marks) raises."""
+    got, flags, block, body = unpack_header_full(payload)
     name = KIND_NAMES[kind]
     if got != kind:
         raise SketchFormatError(f"not a {name} payload (kind={got})")
     if flags & ~flags_ok:
         raise SketchFormatError(f"unknown {name} flags 0x{flags:04x}")
-    return flags, params, body
+    if len(block) != params.size:
+        raise SketchFormatError(f"{name} params block is {len(block)} bytes, not {params.size}")
+    return flags, params.unpack(block), Body(body, name)
+
+
+def check_form(flags: int, sparse: bool, what: str) -> None:
+    """One encoding per state: ``sparse`` is the form serialize picks."""
+    if bool(flags & FLAG_SPARSE) != sparse:
+        raise SketchFormatError(f"{what} payload not in the form serialize picks for its state")
 
 
 def peek_kind(payload: bytes) -> str:
@@ -135,31 +176,19 @@ def peek_kind(payload: bytes) -> str:
     return KIND_NAMES[kind]
 
 
-def pack_sparse(words: np.ndarray, values: np.ndarray | None = None, prefix: bytes = b"") -> bytes:
-    """Sparse body: ``prefix``, u32 count, the u32 ``words``, then the i64
-    ``values`` (one per word) if given."""
-    body = prefix + _COUNT.pack(words.size) + np.ascontiguousarray(words, dtype="<u4").tobytes()
+def pack_sparse(words: np.ndarray, values: np.ndarray | None = None) -> bytes:
+    """Sparse body after the kernel's prefix: u32 count, the u32 ``words``,
+    then the i64 ``values`` (one per word) if given."""
+    body = _COUNT.pack(words.size) + np.ascontiguousarray(words, dtype="<u4").tobytes()
     if values is not None:
         body += np.ascontiguousarray(values, dtype="<i8").tobytes()
     return body
 
 
-def unpack_sparse(
-    body: memoryview, what: str, prefix: int = 0, values: bool = False
-) -> tuple[memoryview, np.ndarray, np.ndarray | None]:
-    """Split a sparse body into (prefix bytes, u32 words, i64 values or None),
-    checking that the count matches the body size."""
-    head = prefix + _COUNT.size
-    stride = 12 if values else 4
-    if len(body) < head or (len(body) - head) % stride:
-        raise SketchFormatError(f"sparse {what} body size mismatch")
-    (n,) = _COUNT.unpack_from(body, prefix)
-    end = head + 4 * n if values else len(body)
-    words = np.frombuffer(body[head:end], dtype="<u4")
-    vals = np.frombuffer(body[end:], dtype="<i8") if values else None
-    if words.size != n or (values and vals.size != n):
-        raise SketchFormatError(f"sparse {what} body size mismatch")
-    return body[:prefix], words, vals
+def unpack_sparse(body: Body, values: bool = False) -> tuple[np.ndarray, np.ndarray | None]:
+    """Read what ``pack_sparse`` wrote: (u32 words, i64 values or None)."""
+    (n,) = body.read(_COUNT)
+    return body.array("<u4", n), body.array("<i8", n) if values else None
 
 
 def sparse_indices(idx: np.ndarray, size: int, what: str) -> np.ndarray:
@@ -182,26 +211,19 @@ def pack_items(items: list, what: str) -> tuple[int, bytes]:
     return vtype, np.array([len(b) for b in blobs], dtype="<u4").tobytes() + b"".join(blobs)
 
 
-def unpack_items(body: memoryview, off: int, n: int, vtype: int, what: str) -> tuple[list, int]:
-    """Read ``n`` items of ``vtype`` at ``body[off:]``; return (items, end)."""
+def unpack_items(body: Body, n: int, vtype: int) -> list:
+    """Read ``n`` items of ``vtype`` from ``body``."""
     if vtype == _ITEM_INT:
-        if len(body) < off + 8 * n:
-            raise SketchFormatError(f"{what} body size mismatch")
-        vals = np.frombuffer(body[off : off + 8 * n], dtype="<i8")
-        return [int(v) for v in vals], off + 8 * n
+        return body.array("<i8", n).tolist()
     if vtype != _ITEM_STR:
-        raise SketchFormatError(f"unknown {what} value type {vtype}")
-    lens = np.frombuffer(body[off : off + 4 * n], dtype="<u4")
-    off += 4 * n
-    end = off + int(lens.sum())
-    if lens.size != n or len(body) < end:
-        raise SketchFormatError(f"{what} body size mismatch")
-    blob = bytes(body[off:end])
+        raise SketchFormatError(f"unknown {body.what} value type {vtype}")
+    lens = body.array("<u4", n)
+    blob = body.array(np.uint8, int(lens.sum())).tobytes()
     items, pos = [], 0
     try:
         for ln in lens.tolist():
             items.append(blob[pos : pos + ln].decode("utf-8"))
             pos += ln
     except UnicodeDecodeError as e:
-        raise SketchFormatError(f"{what} item is not UTF-8") from e
-    return items, end
+        raise SketchFormatError(f"{body.what} item is not UTF-8") from e
+    return items

@@ -24,6 +24,7 @@ from . import serde
 
 DEFAULT_DELTA = 200.0
 _PARAMS = struct.Struct("<d")
+_HEAD = struct.Struct("<dddI")  # n, min, max, centroids
 _BUFFER_FACTOR = 16  # compress when buffered points exceed δ * factor
 
 
@@ -144,37 +145,27 @@ def serialize(state: TDigestState) -> bytes:
     st = state.copy()
     _flush(st)
     st.means, st.weights = _compress_arrays(st.means, st.weights, st.delta)
-    params = _PARAMS.pack(st.delta)
-    head = struct.pack("<dddI", st.n, st.min_v, st.max_v, st.means.size)
-    return (
-        serde.pack_header(serde.KIND_TDIGEST, params)
-        + head
-        + st.means.astype("<f8").tobytes()
-        + st.weights.astype("<f8").tobytes()
-    )
+    head = _HEAD.pack(st.n, st.min_v, st.max_v, st.means.size)
+    centroids = np.concatenate([st.means, st.weights]).astype("<f8").tobytes()
+    return serde.pack_header(serde.KIND_TDIGEST, _PARAMS.pack(st.delta)) + head + centroids
 
 
 def deserialize(payload: bytes) -> TDigestState:
-    _, params, body = serde.unpack(payload, serde.KIND_TDIGEST)
-    (delta,) = _PARAMS.unpack(params)
+    _, (delta,), body = serde.unpack(payload, serde.KIND_TDIGEST, _PARAMS)
     if not (np.isfinite(delta) and delta > 0):
         raise serde.SketchFormatError(f"tdigest delta out of range: {delta}")
-    head = struct.calcsize("<dddI")
-    if len(body) < head:
-        raise serde.SketchFormatError("tdigest body too short")
-    n, min_v, max_v, ncent = struct.unpack_from("<dddI", body, 0)
-    if len(body) != head + 16 * ncent:
-        raise serde.SketchFormatError(
-            f"tdigest body size mismatch: {len(body)} != {head + 16 * ncent}"
-        )
-    off = head
-    means = np.frombuffer(body[off : off + 8 * ncent], dtype="<f8").astype(np.float64)
-    off += 8 * ncent
-    weights = np.frombuffer(body[off : off + 8 * ncent], dtype="<f8").astype(np.float64)
-    # a legit state never holds NaN (update filters it) or non-positive
-    # weights — reject bit-rot instead of letting NaN poison later merges
-    if np.isnan(means).any() or np.isnan(weights).any() or (weights <= 0).any():
-        raise serde.SketchFormatError("tdigest centroids corrupt (NaN or weight <= 0)")
+    n, min_v, max_v, ncent = body.read(_HEAD)
+    means, weights = body.array("<f8", 2 * ncent).astype(np.float64).reshape(2, ncent)
+    body.end()
+    # a legit state never holds NaN (update filters it), weights <= 0 or a
+    # weight sum past float range — NaN would poison every later merge
+    if np.isnan(means).any() or (weights <= 0).any() or not np.isfinite(weights.sum()):
+        raise serde.SketchFormatError("tdigest centroids corrupt (NaN, weight <= 0 or weight sum not finite)")
     if not (n >= 0) or np.isnan(min_v) or np.isnan(max_v):
         raise serde.SketchFormatError("tdigest summary stats corrupt")
+    # serialize writes compressed centroids, and compressing them again
+    # changes nothing; any other centroid list is not a serialized state
+    m2, w2 = _compress_arrays(means, weights, delta)
+    if not (np.array_equal(m2, means) and np.array_equal(w2, weights)):
+        raise serde.SketchFormatError("tdigest centroids are not in compressed form")
     return TDigestState(delta, means, weights, [], n, min_v, max_v)

@@ -39,6 +39,7 @@ DEFAULT_K = 4096  # RSE = 1/sqrt(k-2) ~ 1.56%
 _U64 = np.uint64
 _FULL_SCALE = 2.0**64
 _PARAMS = struct.Struct("<I")
+_COUNT = struct.Struct("<Q")  # retained hashes
 
 
 @dataclass
@@ -158,24 +159,19 @@ def jaccard_estimate(a: ThetaState, b: ThetaState) -> float:
 
 
 def serialize(state: ThetaState) -> bytes:
-    head = struct.pack("<Q", state.hashes.size)
-    body = np.ascontiguousarray(state.hashes, dtype="<u8").tobytes()
-    return serde.pack_header(serde.KIND_THETA, _PARAMS.pack(state.k)) + head + body
+    body = _COUNT.pack(state.hashes.size) + np.ascontiguousarray(state.hashes, dtype="<u8").tobytes()
+    return serde.pack_header(serde.KIND_THETA, _PARAMS.pack(state.k)) + body
 
 
 def deserialize(payload: bytes) -> ThetaState:
-    _, params, body = serde.unpack(payload, serde.KIND_THETA)
-    (k,) = _PARAMS.unpack(params)
+    _, (k,), body = serde.unpack(payload, serde.KIND_THETA, _PARAMS)
     if not 16 <= k <= (1 << 22):  # same bounds as create(); corrupt k would
         raise serde.SketchFormatError(f"theta k out of range: {k}")  # crash later
-    if len(body) < 8:
-        raise serde.SketchFormatError("theta body too short")
-    (n,) = struct.unpack_from("<Q", body, 0)
-    if len(body) != 8 + 8 * n:
-        raise serde.SketchFormatError("theta body size mismatch")
-    hashes = np.frombuffer(body[8:], dtype="<u8").astype(_U64)
-    if hashes.size > k:
+    (n,) = body.read(_COUNT)
+    if n > k:
         raise serde.SketchFormatError("theta body holds more than k hashes")
+    hashes = body.array("<u8", n).astype(_U64)
+    body.end()
     if hashes.size > 1 and not (hashes[1:] > hashes[:-1]).all():
         raise serde.SketchFormatError("theta hashes not strictly ascending")
     return ThetaState(k, hashes)
