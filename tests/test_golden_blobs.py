@@ -257,3 +257,19 @@ def test_int_item_fixtures():
     sm = SPECS["sample_int"][0].deserialize(_stored("sample_int"))
     assert sample.sample(sm)[:3] == [0, 636, 933]
     assert sample.estimate(sm) == pytest.approx(559.904, abs=1e-3)
+
+
+@pytest.mark.parametrize("kind", ["sample", "sample_int"])
+def test_sample_value_must_hash_to_its_key(kind):
+    """One flipped bit in a stored value ("tok760" -> "tok761", 0 -> 1)
+    leaves a well-formed body whose value no longer hashes to its key: a
+    corrupt payload, not a state that merges silently and re-serializes
+    byte-identical."""
+    blob = bytearray(_stored(kind))
+    first = sample.deserialize(bytes(blob)).values[0]
+    if isinstance(first, str):
+        blob[blob.index(first.encode()) + len(first) - 1] ^= 1
+    else:
+        blob[len(blob) - 8 * sample.deserialize(bytes(blob)).hashes.size] ^= 1
+    with pytest.raises(serde.SketchFormatError, match="does not hash to its key"):
+        sample.deserialize(bytes(blob))

@@ -701,6 +701,7 @@ class TestSample:
         for vals in (
             np.array([f"w{i}" for i in range(300)], dtype=object),
             np.arange(300),
+            np.arange(300).astype(object),
         ):
             st = sample.update(sample.create(k=64), vals)
             rt = sample.deserialize(sample.serialize(st))
@@ -709,6 +710,15 @@ class TestSample:
     def test_geometry_mismatch_rejected(self):
         with pytest.raises(serde.SketchFormatError):
             sample.merge(sample.create(k=64), sample.create(k=128))
+
+    def test_int_items_keyed_as_int64_whatever_array_holds_them(self):
+        """An int item gets its int64 key from an object array too, so the
+        same ints from both array kinds make one state (the reader checks
+        each value against that key)."""
+        vals = np.arange(0, 3000, 7)
+        one = sample.update(sample.create(k=64), vals)
+        obj = sample.update(sample.create(k=64), vals.astype(object))
+        assert sample.serialize(obj) == sample.serialize(one)
 
     def test_nulls_skipped(self):
         st = sample.update(

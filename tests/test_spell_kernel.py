@@ -4,13 +4,19 @@ transliterated mini-index (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from wordspell_spark.functions import mutate as M
 from wordspell_spark.operators.spell import (
     IndexProbe,
     _greedy_pair_merge,
+    correct_query_batch,
     correct_token_batch,
     lang_majority,
 )
@@ -69,6 +75,84 @@ def run(probe, dbloom, queries: list[str]) -> list[str]:
         if k:
             res[q] = (res[q] + " " + tok).strip()
     return res
+
+
+class TestIndexProbe:
+    def test_repeated_word_is_rejected(self):
+        # a word has one weight; the table would otherwise keep either
+        words = np.array(["spark", "filter", "spark"], dtype=object)
+        with pytest.raises(ValueError, match="'spark' repeats"):
+            IndexProbe.from_arrays(words, np.array([1, 2, 3], dtype=np.int64))
+
+    def test_lookup_is_exact(self, probe):
+        got = probe.lookup(np.array(["телефон", "телефо", "", "игрушки для", "Телефон"], dtype=object))
+        assert got.tolist() == [8000, 0, 0, 2000, 0]
+        empty = IndexProbe.from_arrays(np.array([], dtype=object), np.array([], dtype=np.int64))
+        assert empty.lookup(np.array(["a"], dtype=object)).tolist() == [0]
+        assert [len(x) for x in empty.insert_hits(np.array(["a"], dtype=object), M.EN_ALPHABET)] == [0] * 4
+
+
+# doubled letters come often from a small pool; digits, ё (outside the en
+# alphabet), latin z (outside the ru one) and a space are never inserted
+_RUNES = "ab-`'аяё0z "
+_word = st.one_of(st.text(_RUNES, min_size=1, max_size=6), st.text(_RUNES, min_size=23, max_size=25))
+
+
+@st.composite
+def _index_and_strings(draw):
+    words = draw(st.lists(_word, min_size=1, max_size=25, unique=True))
+    freqs = draw(st.lists(st.integers(0, 3), min_size=len(words), max_size=len(words)))
+    # the index words one deletion away, plus unrelated strings; ≤ MAX_WORD_LEN runes
+    strs = [w[:p] + w[p + 1 :] for w in words for p in draw(st.sets(st.integers(0, len(w) - 1), max_size=2))]
+    strs += draw(st.lists(_word, max_size=10))
+    return words, freqs, [x for x in strs if len(x) <= M.MAX_WORD_LEN]
+
+
+@settings(max_examples=60, deadline=None)
+@given(_index_and_strings())
+def test_one_deletion_map_equals_insert_enumeration(case):
+    """``insert_hits`` (read from the one-deletion map) returns, as a
+    multiset of (string row, ins_ord, word), what enumerating every
+    one-insert and looking it up returns, repeats included."""
+    words, freqs, strs = case
+    probe = IndexProbe.from_arrays(np.array(words, dtype=object), np.array(freqs, dtype=np.int64))
+    strs = np.array(strs, dtype=object)
+    for alphabet in (M.EN_ALPHABET, M.RU_ALPHABET):
+        iwi, iord, icand = M.insert_candidates(strs, alphabet) if strs.size else ([], [], [])
+        w = probe.lookup(np.asarray(icand, dtype=object))
+        expect = Counter((int(i), int(o), c) for i, o, c, x in zip(iwi, iord, icand, w) if x > 0)
+        row, ins_ord, word, freq = probe.insert_hits(strs, alphabet)
+        assert Counter(zip(row.tolist(), ins_ord.tolist(), word.tolist())) == expect
+        assert (freq == probe.lookup(word)).all() and (freq > 0).all()
+
+
+def _deletes_reference(w: str) -> list[tuple[int, str]]:
+    """Deletes() one word at a time: (del_ord, string) for the word, its
+    1-deletions by position, then each 1-deletion's own 1-deletions."""
+    if not 2 <= len(w) <= M.MAX_WORD_LEN:
+        return []
+    one = [w[:p] + w[p + 1 :] for p in range(len(w))]
+    out = [(0, w)] + [(1 + p, d) for p, d in enumerate(one)]
+    if len(w) >= 3:
+        base = 1 + M.MAX_WORD_LEN
+        out += [(base + p * M.MAX_WORD_LEN + q2, d[:q2] + d[q2 + 1 :]) for p, d in enumerate(one) for q2 in range(len(d))]
+    return out
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.one_of(st.text(_RUNES, max_size=6), st.text(_RUNES, min_size=22, max_size=26)), max_size=8))
+def test_delete_candidates_match_the_per_word_reference(words):
+    wi, dord, cand = M.delete_candidates(np.array(words, dtype=object))
+    expect = [(i, o, d) for i, w in enumerate(words) for o, d in _deletes_reference(w)]
+    assert sorted(zip(wi.tolist(), dord.tolist(), cand.tolist())) == sorted(expect)
+    assert (np.diff(dord) >= 0).all()
+
+
+def test_map_returns_every_position_of_a_doubled_rune():
+    probe = IndexProbe.from_arrays(np.array(["aab", "ab"], dtype=object), np.array([3, 5], dtype=np.int64))
+    row, ins_ord, word, freq = probe.insert_hits(np.array(["ab", "b"], dtype=object), M.EN_ALPHABET)
+    a = len(M.EN_ALPHABET)
+    assert sorted(zip(row.tolist(), ins_ord.tolist(), word.tolist())) == [(0, 0, "aab"), (0, a, "aab"), (1, 0, "ab")]
 
 
 class TestLangMajority:
@@ -203,6 +287,24 @@ class TestInsertTierGates:
             changed += gated[0][0] != t
         assert changed > toks.size // 2  # the tokens do reach the insert tiers
 
+    def test_level1_expands_only_pending_deletes(self, probe, dbloom, monkeypatch):
+        # a token one rune short of an index word hits at level 1 through
+        # its own (first-ranked) delete, so no delete stays pending and no
+        # one-insert is enumerated; tokens that need level 2 still are
+        calls = []
+        enumerate_inserts = M.insert_candidates
+        monkeypatch.setattr(M, "insert_candidates", lambda s, a: calls.append(len(s)) or enumerate_inserts(s, a))
+        one_short = expanded = 0
+        for w in (w for w in INDEX if " " not in w):
+            for t in _edit_tokens(w, 6, 2):
+                calls.clear()
+                out, _ = correct_token_batch(np.array([t], dtype=object), np.zeros(1, dtype=np.int64), probe, dbloom)
+                if len(t) > 1 and len(t) + 1 == len(w) and out[0] == w:
+                    assert calls == [], t
+                    one_short += 1
+                expanded += bool(calls)
+        assert one_short > 30 and expanded > 0
+
     def test_intermediate_of_24_runes_is_not_gated(self, probe):
         # a 25-rune index word has no deletion neighborhood in the Bloom
         # (deletion_hashes skips words over MAX_WORD_LEN), so the 24-rune
@@ -241,3 +343,22 @@ def test_own_alphabet_inserts_never_make_num_or_unknown():
         sub = ins1[rng.choice(ins1.size, 20 * len(words), replace=False)]
         _, _, ins2 = M.insert_candidates(sub, alphabet)
         assert not np.isin(lang_majority(ins2), ["num", "unknown"]).any()
+
+
+def test_reassembly_edge_queries(probe, dbloom):
+    """Query strings are rebuilt from their kept tokens; an empty or blank
+    query gives "", whatever sits around it in the batch."""
+    cases = {
+        "": "",
+        "дихло фос": "дихлофос",  # pair merge consumes the second token
+        "   ": "",
+        "пленка 4 д": "пленка 4D",  # '@' combo rendered
+        "для для-детей": "для-детей",  # dupremove, left rule
+        "\t": "",
+        "Телефон телефон": "телефон",  # dupremove after correction
+        "для-детей детей": "для-детей",  # dupremove, right rule
+        "@x": "x",
+    }
+    got = correct_query_batch(pd.Series(list(cases), dtype=object), probe, dbloom, [])
+    assert dict(zip(cases, got)) == cases
+    assert correct_query_batch(pd.Series([], dtype=object), probe, dbloom, []).tolist() == []

@@ -12,9 +12,10 @@ Semantics reproduced exactly:
 * ``InsertSpace``: positions 1..len-1 (component.go:98-109).
 
 Vectorization: words are encoded once as numpy ``U24`` (UTF-32) and viewed as
-an (n, 24) uint32 codepoint matrix; deletions/insertions are column slices and
-the results are viewed back as strings (numpy NUL-terminates on view), so
-candidate generation is loops over ≤24 positions — never over rows
+an (n, 24) uint32 codepoint matrix; deletions/insertions are column slices (the
+query-side deletes one column gather) and the results are viewed back as
+strings (numpy NUL-terminates on view), so candidate generation is loops over
+≤24 positions — never over rows
 (input_hint: no per-row Python).  The corpus-scale Bloom build path skips
 strings entirely and hashes candidate rows directly
 (hashing.row_hash_u32_matrix).
@@ -90,55 +91,76 @@ def deletion_hashes(mat: np.ndarray, lens: np.ndarray, include_self: bool = True
     return np.concatenate(out)
 
 
+def _deletion_ops(width: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The ≤2-deletions of a ``width``-rune row in Deletes() order, as
+    (need, del_ord, cols): op i applies to rows of ≥ ``need[i]`` runes and
+    reads source columns ``cols[i]`` (``width`` = a NUL pad column)."""
+    keep = [list(range(width))]
+    need, ords = [2], [0]
+    # 1-deletions: ord = 1 + p
+    for p in range(width):
+        keep.append([c for c in range(width) if c != p])
+        need.append(max(2, p + 1))
+        ords.append(1 + p)
+    # 2-deletions: ord = 1 + width + (p * width + q2) where q2 is the
+    # position deleted in the second pass (order within deleteRune of the
+    # 1-del), q its original index
+    for p in range(width):
+        for q2 in range(width - 1):
+            q = q2 if q2 < p else q2 + 1
+            keep.append([c for c in range(width) if c not in (p, q)])
+            need.append(max(3, max(p, q) + 1))
+            ords.append(1 + width + p * width + q2)
+    cols = np.array([k + [width] * (width - len(k)) for k in keep], dtype=np.int32)
+    return np.array(need), np.array(ords, dtype=np.int64), cols
+
+
+_DELETE_OPS = _deletion_ops(MAX_WORD_LEN)
+
+
 def delete_candidates(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Query-side Deletes(): strings with generation order.
 
     Returns (word_idx, del_ord, candidate) flat arrays.  del_ord reproduces
     the reference's sequential order: 0 = the word itself, then 1-deletions
     by position, then 2-deletions in (first-del, second-del) order — O3
-    first-hit-wins ranking keys off this.
+    first-hit-wins ranking keys off this.  Rows come ordered by del_ord,
+    then word; all of them are cut from the codepoint matrix by one gather.
     """
     mat, lens = encode_words(words)
+    need, ords, cols = _DELETE_OPS
+    op, row = np.nonzero(lens[None, :] >= need[:, None])
+    padded = np.concatenate([mat, np.zeros((len(mat), 1), dtype=np.uint32)], axis=1)
+    return row, ords[op], decode_rows(padded[row[:, None], cols[op]])
+
+
+def one_deletions(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Every 1-deletion of every word of ≤ ``MAX_WORD_LEN + 1`` runes.
+
+    Returns (word_idx, pos, rune, key) flat arrays, one row per rune of each
+    such word (Σ len(w) rows): ``key`` is the word without its rune at
+    ``pos``, ``rune`` that rune's codepoint.  Read backwards, a row says the
+    word is ``key`` with ``rune`` inserted at ``pos`` — the index side of
+    ``insert_candidates``.
+    """
+    mat, lens = encode_words(words, MAX_WORD_LEN + 1)
     width = mat.shape[1]
-    idx_out, ord_out, cand_out = [], [], []
-
-    def emit(mask, order, m):
-        rows = np.flatnonzero(mask)
-        idx_out.append(rows)
-        ord_out.append(np.full(rows.size, order, dtype=np.int64))
-        cand_out.append(decode_rows(m))
-
-    eligible = (lens >= 2)
-    if not eligible.any():
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.empty(0, dtype=object))
-    # self (ord 0)
-    emit(eligible, 0, mat[eligible])
-    # 1-deletions: ord = 1 + p
+    idx_out, pos_out, rune_out, key_out = [], [], [], []
     for p in range(width):
-        mask = eligible & (lens > p)
-        if not mask.any():
+        rows = np.flatnonzero(lens > p)
+        if not rows.size:
             continue
-        emit(mask, 1 + p, _delete_col(mat[mask], p)[:, :width])
-    # 2-deletions: ord = 1 + 24 + (p * width + q2) where q2 is the position
-    # deleted in the second pass (order within deleteRune of the 1-del)
-    base = 1 + width
-    for p in range(width):
-        for q2 in range(width - 1):
-            q = q2 if q2 < p else q2 + 1  # original index of second deletion
-            mask = eligible & (lens >= 3) & (lens > max(p, q))
-            if not mask.any():
-                continue
-            m1 = _delete_col(mat[mask], p)
-            m2 = _delete_col(m1, q2)[:, :width]
-            emit(mask, base + p * width + q2, m2)
-    return (
-        np.concatenate(idx_out),
-        np.concatenate(ord_out),
-        np.concatenate(cand_out),
-    )
+        idx_out.append(rows)
+        pos_out.append(np.full(rows.size, p, dtype=np.int64))
+        rune_out.append(mat[rows, p])
+        key_out.append(decode_rows(_delete_col(mat[rows], p)))
+    if not idx_out:
+        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
+                np.empty(0, dtype=np.uint32), np.empty(0, dtype=object))
+    return np.concatenate(idx_out), np.concatenate(pos_out), np.concatenate(rune_out), np.concatenate(key_out)
 
 
-def _alphabet_codes(alphabet: str) -> np.ndarray:
+def alphabet_codes(alphabet: str) -> np.ndarray:
     return np.array([ord(c) for c in alphabet], dtype=np.uint32)
 
 
@@ -151,7 +173,7 @@ def insert_candidates(words: np.ndarray, alphabet: str) -> tuple[np.ndarray, np.
     arr = np.asarray(words, dtype=object)
     mat, lens = encode_words(arr, MAX_WORD_LEN + 2)
     width = mat.shape[1]
-    codes = _alphabet_codes(alphabet)
+    codes = alphabet_codes(alphabet)
     a = codes.size
     idx_out, ord_out, cand_out = [], [], []
     for i in range(width):

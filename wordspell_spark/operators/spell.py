@@ -10,8 +10,9 @@ The wordspell-parity path (SURVEY.md §3.1/§3.2 steps 5-6):
   index vocabulary (hash-only, never materializes candidate strings), then a
   bounded-fan-in tree merge (treeAggregate shape).  Parity:
   /root/reference/builder.go:97-119.
-* ``IndexProbe`` — the executor-side word→weight lookup: sorted-hash arrays
-  probed with np.searchsorted, broadcast once.  The Spark serving analogue of
+* ``IndexProbe`` — the executor-side word→weight lookup: an exact string
+  hash table (``pd.Index.get_indexer``) plus the index's one-deletion map,
+  built once on the driver and broadcast.  The Spark serving analogue of
   the reference's in-RAM index map (index/service.go:84-110) — a broadcast
   hash join executed vectorized inside the correction UDF.
 * ``correct_queries`` — the full online pipeline (service.go:102-129) as ONE
@@ -23,16 +24,18 @@ The wordspell-parity path (SURVEY.md §3.1/§3.2 steps 5-6):
   Anti-masking preserves the reference's first-hit-wins tier order (X2/O3).
 
 Scale: the serving path never shuffles the index or the Bloom filter —
-queries stream through executors with two small broadcasts (index arrays
+queries stream through executors with two small broadcasts (index probe
 + Bloom payload), exactly how a 1000-executor cluster should serve a
-100 TB-derived index.  Correction costs ~0.4 ms of CPU per query, so the
-work, not the input's byte size, sets the task count: a query frame with
-fewer partitions than the task slots (any file under one 128 MB split)
-gets ONE round-robin exchange of its raw query rows (tens of bytes each)
-up to ``defaultParallelism`` partitions; a frame already that wide, or a
-streaming one, keeps the exchange-free plan.  Each Arrow batch is then
-corrected in slices of 256 queries, which bounds a worker's transient
-candidate arrays whatever the session's ``maxRecordsPerBatch``.
+100 TB-derived index.  Correction costs ~0.1 ms of CPU per query
+(``correct_query_batch`` in 256-query slices, one thread, perfbench
+``spell_correct`` inputs), so the work, not the input's byte size, sets
+the task count: a query frame with fewer partitions than the task slots
+(any file under one 128 MB split) gets ONE round-robin exchange of its
+raw query rows (tens of bytes each) up to ``defaultParallelism``
+partitions; a frame already that wide, or a streaming one, keeps the
+exchange-free plan.  Each Arrow batch is then corrected in slices of 256
+queries, which bounds a worker's transient candidate arrays whatever the
+session's ``maxRecordsPerBatch``.
 """
 
 from __future__ import annotations
@@ -42,6 +45,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType
@@ -50,7 +55,7 @@ from ..functions import mutate as M
 from ..functions import processors as PROC
 from ..harness import merge_partials, num_partitions
 from ..sketches import bloom
-from ..sketches.hashing import hash64, row_hash_u32_matrix
+from ..sketches.hashing import row_hash_u32_matrix
 from .trademark import protect_spans_batch
 
 NUM_WEIGHT = 1000  # index/models.go:8
@@ -122,20 +127,36 @@ def build_deletion_bloom(
 
 @dataclass
 class IndexProbe:
-    """Sorted-hash word→freq lookup, vectorized via searchsorted.
+    """Exact word→freq table plus the index's one-deletion map.
 
-    64-bit hashes; collision risk ~n²/2⁶⁴ is negligible for post-threshold
-    index sizes (reference serves the same index from a Go map in ≤300 MB).
+    ``table`` is a pandas string hash index, so a lookup compares strings,
+    not hashes (the reference serves the same index from a Go map in
+    ≤300 MB).  The map groups ``M.one_deletions`` of the words by key:
+    entries ``del_start[i]:del_start[i + 1]`` belong to ``del_keys[i]``.
     """
 
-    hashes: np.ndarray  # sorted uint64
-    freqs: np.ndarray  # int64 aligned with hashes
+    words: np.ndarray  # object str, unique
+    freqs: np.ndarray  # int64 aligned with words
+    table: pd.Index
+    del_keys: pd.Index  # distinct 1-deletions
+    del_start: np.ndarray  # int64, len(del_keys) + 1
+    del_word: np.ndarray  # word row per entry
+    del_pos: np.ndarray  # deleted position per entry
+    del_rune: np.ndarray  # deleted rune's codepoint per entry
 
     @classmethod
     def from_arrays(cls, words: np.ndarray, freqs: np.ndarray) -> "IndexProbe":
-        h = hash64(np.asarray(words, dtype=object))
-        order = np.argsort(h)
-        return cls(h[order], np.asarray(freqs, dtype=np.int64)[order])
+        """Raises ValueError on a repeated word: a word has one weight."""
+        words = np.asarray(words, dtype=object)
+        table = pd.Index(words)
+        if not table.is_unique:
+            raise ValueError(f"index word {table[table.duplicated()][0]!r} repeats")
+        wi, pos, rune, key = M.one_deletions(words)
+        codes, keys = pd.factorize(key)
+        order = np.argsort(codes, kind="stable")
+        start = np.concatenate([[0], np.cumsum(np.bincount(codes, minlength=len(keys)))])
+        return cls(words, np.asarray(freqs, dtype=np.int64), table, pd.Index(keys),
+                   start, wi[order], pos[order], rune[order])
 
     @classmethod
     def from_index_df(cls, index_df: DataFrame, word_col: str = "word", freq_col: str = "freq") -> "IndexProbe":
@@ -144,15 +165,32 @@ class IndexProbe:
 
     def lookup(self, words: np.ndarray) -> np.ndarray:
         """Weights for a batch of strings; 0 for misses (J1 semantics)."""
-        if len(words) == 0:
-            return np.empty(0, dtype=np.int64)
-        h = hash64(np.asarray(words, dtype=object))
-        pos = np.searchsorted(self.hashes, h)
-        pos = pos.clip(max=self.hashes.size - 1) if self.hashes.size else np.zeros(len(h), dtype=np.int64)
-        if self.hashes.size == 0:
-            return np.zeros(len(words), dtype=np.int64)
-        hit = self.hashes[pos] == h
-        return np.where(hit, self.freqs[pos], 0)
+        pos = self.table.get_indexer(np.asarray(words, dtype=object))
+        out = np.zeros(pos.size, dtype=np.int64)
+        out[pos >= 0] = self.freqs[pos[pos >= 0]]
+        return out
+
+    def insert_hits(self, strs: np.ndarray, alphabet: str):
+        """Index words of positive weight that are a string of ``strs`` with
+        one ``alphabet`` rune inserted, read from the one-deletion map.
+
+        Returns (str_idx, ins_ord, word, freq): as a multiset, the rows of
+        ``M.insert_candidates(strs, alphabet)`` whose ``lookup`` is > 0, for
+        strings of ≤ ``MAX_WORD_LEN`` runes.
+        """
+        kid = self.del_keys.get_indexer(np.asarray(strs, dtype=object))
+        lo = np.where(kid >= 0, self.del_start[kid], 0)
+        cnt = np.where(kid >= 0, self.del_start[kid + 1], 0) - lo
+        row = np.repeat(np.arange(kid.size), cnt)
+        ent = np.arange(row.size) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+        codes = M.alphabet_codes(alphabet)
+        by_code = np.argsort(codes)
+        at = np.searchsorted(codes[by_code], self.del_rune[ent]).clip(max=codes.size - 1)
+        aidx = by_code[at]
+        wi = self.del_word[ent]
+        ok = (codes[aidx] == self.del_rune[ent]) & (self.freqs[wi] > 0)
+        ins_ord = self.del_pos[ent] * codes.size + aidx
+        return row[ok], ins_ord[ok], self.words[wi[ok]], self.freqs[wi[ok]]
 
 
 # --------------------------------------------------------------- correction
@@ -258,6 +296,9 @@ def _best_per_group(group_ids: np.ndarray, *keys: np.ndarray) -> np.ndarray:
     sg = group_ids[order]
     first = np.concatenate([[True], sg[1:] != sg[:-1]])
     return order[first]
+
+
+_ALPHABETS = ((M.RU_ALPHABET, "ru"), (M.EN_ALPHABET, "en"))
 
 
 def _bloom_test_strings(state, words: np.ndarray) -> np.ndarray:
@@ -382,6 +423,16 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
     inserting a rune of an en/ru delete's own alphabet never makes a string
     ``lang_majority`` calls num or unknown, so ``_weight``'s overrides
     cannot fire on them.
+
+    Level-1 hits are not enumerated.  ``w`` is ``d`` with rune ``c``
+    inserted at ``p`` exactly when deleting ``p`` from ``w`` gives ``d`` and
+    ``w[p] == c``, so ``probe.insert_hits`` reads them from the index's
+    one-deletion map, with the same ``ins_ord = p·|alphabet| + index of c``
+    and the same repeats (``"aab"`` is ``"ab"`` plus ``a`` at 0 and at 1).
+    The map holds Σ len(w) entries over the words of ≤ ``MAX_WORD_LEN + 1``
+    runes: linear in the index, unlike the 2-deletion dictionary the Bloom
+    stands in for.  Only the deletes still pending for level 2 are expanded
+    into one-inserts.
     """
     dwi, dord, dcand = M.delete_candidates(words)
     if len(dcand) == 0:
@@ -410,23 +461,16 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
         if g.size:
             g_words, g_ords, g_strs = dwi[g], dord[g], dcand[g]
             g_langs = lang_majority(g_strs)
-            # ---- level-1 inserts (kept per language: level 2 expands them)
+            # ---- level-1 inserts: index words one insert away from a delete
             l1_hit_del = np.zeros(g.size, dtype=bool)
-            level1 = []
-            for alphabet, lang in ((M.RU_ALPHABET, "ru"), (M.EN_ALPHABET, "en")):
+            for alphabet, lang in _ALPHABETS:
                 sel = np.flatnonzero(g_langs == lang)
                 if not sel.size:
                     continue
-                iwi, iord, icand = M.insert_candidates(g_strs[sel], alphabet)
-                level1.append((alphabet, sel[iwi], iord, icand))
-                iw = probe.lookup(icand)
-                ih = iw > 0
-                if ih.any():
-                    gi = sel[iwi[ih]]
-                    l1_hit_del[gi] = True
-                    hits.append((g_words[gi], g_ords[gi],
-                                 1, np.zeros(ih.sum(), dtype=np.int64),
-                                 -iw[ih], iord[ih], icand[ih]))
+                iwi, iord, icand, iw = probe.insert_hits(g_strs[sel], alphabet)
+                gi = sel[iwi]
+                l1_hit_del[gi] = True
+                hits.append((g_words[gi], g_ords[gi], 1, np.zeros(gi.size, dtype=np.int64), -iw, iord, icand))
             # ---- level-2 inserts, only where they can still win
             best_so_far = np.full(len(words), INF, dtype=np.int64)
             for h in hits:
@@ -434,15 +478,18 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
                     b = _best_per_group(h[0], h[1])
                     np.minimum.at(best_so_far, h[0][b], h[1][b])
             pend = ~l1_hit_del & (g_ords < best_so_far[g_words])
-            g_lens = np.fromiter(map(len, g_strs), dtype=np.int64, count=g.size)
-            for alphabet, gi1, iord, icand in level1:
+            for alphabet, lang in _ALPHABETS:
+                sel = np.flatnonzero(pend & (g_langs == lang))
+                if not sel.size:
+                    continue
+                iwi, iord, icand = M.insert_candidates(g_strs[sel], alphabet)
+                gi1 = sel[iwi]
                 # second bloom gate: a one-insert of ≤ MAX_WORD_LEN-1 runes
                 # leads to an index word only if it is that word's 1-deletion
-                mid = np.flatnonzero(pend[gi1])
-                gated = g_lens[gi1[mid]] + 1 < M.MAX_WORD_LEN
+                gated = np.fromiter(map(len, g_strs[gi1]), dtype=np.int64, count=gi1.size) + 1 < M.MAX_WORD_LEN
                 keep = ~gated
-                keep[gated] = _bloom_test_strings(bloom_state, icand[mid[gated]])
-                mid = mid[keep]
+                keep[gated] = _bloom_test_strings(bloom_state, icand[gated])
+                mid = np.flatnonzero(keep)
                 if not mid.size:
                     continue
                 i2wi, i2ord, i2cand = M.insert_candidates(icand[mid], alphabet)
@@ -569,13 +616,9 @@ def correct_query_batch(
     # (service.go:108 parses/renders combos, :124 post-processes)
     out = render_digest_tokens(out)
     keep &= dupremove_batch(np.where(keep, out, ""), qid)
-    res = (
-        pd.Series(out[keep])
-        .groupby(qid[keep])
-        .agg(" ".join)
-        .reindex(range(len(q)), fill_value="")
-    )
-    return res.to_numpy()
+    offsets = np.concatenate([[0], np.cumsum(np.bincount(qid[keep], minlength=len(q)))])
+    lists = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(out[keep], pa.string()))
+    return pc.binary_join(lists, " ").to_numpy(zero_copy_only=False)
 
 
 # --------------------------------------------------------------- serving op
@@ -600,7 +643,7 @@ def correct_queries(
 
     Sized by work, not bytes: a batch ``queries_df`` with fewer partitions
     than ``defaultParallelism`` (a split holds up to 128 MB of queries, at
-    ~0.4 ms of CPU each) is first spread round-robin over the task slots —
+    ~0.1 ms of CPU each) is first spread round-robin over the task slots —
     the plan's only exchange, of the raw query rows; a frame that wide
     already, or a streaming one, has none.  Every Arrow batch is corrected
     in slices of ``_CORRECT_SLICE`` queries.  The output does not depend on
@@ -610,7 +653,7 @@ def correct_queries(
     """
     spark = queries_df.sparkSession
     probe = IndexProbe.from_index_df(index_df)
-    bc_probe = spark.sparkContext.broadcast((probe.hashes, probe.freqs))
+    bc_probe = spark.sparkContext.broadcast(probe)
     bc_bloom = spark.sparkContext.broadcast(bloom_payload)
     bc_tm = spark.sparkContext.broadcast(trademarks or [])
 
@@ -619,7 +662,7 @@ def correct_queries(
     pass_cols = [f.name for f in queries_df.schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        probe = IndexProbe(*bc_probe.value)
+        probe = bc_probe.value
         bloom_state = bloom.deserialize(bc_bloom.value)
         tm = bc_tm.value
         slices = (b.iloc[i : i + _CORRECT_SLICE] for b in batches for i in range(0, len(b), _CORRECT_SLICE))

@@ -31,7 +31,7 @@ import numpy as np
 import pandas as pd
 
 from . import serde
-from .hashing import distinct_hashes, kmv_estimate, kmv_rse, normalize_items
+from .hashing import distinct_hashes, hash64, kmv_estimate, kmv_rse, normalize_items
 
 DEFAULT_K = 1024
 
@@ -71,16 +71,20 @@ def update(state: SampleState, values) -> SampleState:
 
 def update_distinct(state: SampleState, uniq, keys, counts=None) -> SampleState:
     """Update from ``distinct_hashes`` output (``counts`` is unused): the
-    values come deduped and hashed, so no key is computed again here.
-    Nulls are skipped.  Before any python-level work, only the candidates
-    that can reach the bottom k are kept: keys <= the k-th smallest
-    DISTINCT candidate key (and <= the state's largest once it is full).
-    Every tie is kept, so equal-hash distinct values (a 2^-64 collision)
-    still reach ``_absorb``'s min-value rule."""
+    values come deduped and hashed, so no key is computed again here,
+    except for ints held in an object array (``hash64`` keys those by their
+    text), which get the int64 key the reader checks.  Nulls are skipped.
+    Before any python-level work, only the candidates that can reach the
+    bottom k are kept: keys <= the k-th smallest DISTINCT candidate key
+    (and <= the state's largest once it is full).  Every tie is kept, so
+    equal-hash distinct values (a 2^-64 collision) still reach
+    ``_absorb``'s min-value rule."""
     uniq, h = np.asarray(uniq), np.asarray(keys, dtype=_U64)
     if uniq.dtype.kind not in "iu":
         live = ~pd.isna(uniq)
         uniq, h = uniq[live], h[live]
+        if uniq.size and isinstance(uniq[0], (int, np.integer)):
+            h = hash64(uniq.astype(np.int64))
     keep = np.ones(h.size, dtype=bool)
     if h.size > state.k:
         # the cut is the k-th smallest DISTINCT key: the k smallest keys
@@ -169,4 +173,9 @@ def deserialize(payload: bytes) -> SampleState:
         raise serde.SketchFormatError("sample hashes not strictly ascending")
     values = serde.unpack_items(body, n, vtype)
     body.end()
+    # each value must hash to its key, as distinct_hashes hashed it: ints as
+    # int64, strs as python objects
+    typed = np.array(values, dtype=np.int64 if values and isinstance(values[0], int) else object)
+    if n and (hash64(typed) != hashes).any():
+        raise serde.SketchFormatError("sample value does not hash to its key")
     return SampleState(k, hashes, values)
