@@ -1033,3 +1033,24 @@ class TestSharedHashFastPath:
                         assert st.dec <= st.n // (st.k + 1) + 1
                 else:
                     assert multi[(src, kind)] == payload, (kind, src)
+
+
+def test_hash64_keys_an_int_alike_whatever_array_holds_it():
+    """An int in an object array gets the key of the same int in an int
+    array, so feeding one kind the same ints through both array types
+    counts them once; strs and nulls beside them keep their object keys."""
+    from wordspell_spark.sketches.hashing import hash64
+
+    ints = np.arange(1000)
+    assert (hash64(ints.astype(object)) == hash64(ints)).all()
+    mixed = np.array([3, "a", None, np.int32(7), float("nan"), -2], dtype=object)
+    assert hash64(mixed)[[0, 3, 5]].tolist() == hash64(np.array([3, 7, -2])).tolist()
+    assert hash64(mixed)[[1, 2, 4]].tolist() == hash64(np.array(["a", None, float("nan")], dtype=object)).tolist()
+    th, hl = theta.create(k=4096), hll.create(p=12)
+    for batch in (ints, ints.astype(object)):
+        theta.update(th, batch)
+        hll.update(hl, batch)
+    assert theta.estimate(th) == 1000
+    assert hll.serialize(hl) == hll.serialize(hll.update(hll.create(p=12), ints))
+    bf = bloom.update(bloom.create(n_estimate=1000, fpr=0.01), ints)
+    assert bloom.contains(bf, ints.astype(object)).all()

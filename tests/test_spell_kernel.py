@@ -95,17 +95,17 @@ class TestIndexProbe:
 # doubled letters come often from a small pool; digits, ё (outside the en
 # alphabet), latin z (outside the ru one) and a space are never inserted
 _RUNES = "ab-`'аяё0z "
-_word = st.one_of(st.text(_RUNES, min_size=1, max_size=6), st.text(_RUNES, min_size=23, max_size=25))
+_word = st.one_of(st.text(_RUNES, min_size=1, max_size=6), st.text(_RUNES, min_size=23, max_size=26))
 
 
 @st.composite
 def _index_and_strings(draw):
     words = draw(st.lists(_word, min_size=1, max_size=25, unique=True))
     freqs = draw(st.lists(st.integers(0, 3), min_size=len(words), max_size=len(words)))
-    # the index words one deletion away, plus unrelated strings; ≤ MAX_WORD_LEN runes
+    # the index words one deletion away, plus unrelated strings; ≤ MAX_WORD_LEN + 1 runes
     strs = [w[:p] + w[p + 1 :] for w in words for p in draw(st.sets(st.integers(0, len(w) - 1), max_size=2))]
     strs += draw(st.lists(_word, max_size=10))
-    return words, freqs, [x for x in strs if len(x) <= M.MAX_WORD_LEN]
+    return words, freqs, [x for x in strs if len(x) <= M.MAX_WORD_LEN + 1]
 
 
 @settings(max_examples=60, deadline=None)
@@ -146,6 +146,47 @@ def test_delete_candidates_match_the_per_word_reference(words):
     expect = [(i, o, d) for i, w in enumerate(words) for o, d in _deletes_reference(w)]
     assert sorted(zip(wi.tolist(), dord.tolist(), cand.tolist())) == sorted(expect)
     assert (np.diff(dord) >= 0).all()
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.one_of(st.text(_RUNES, max_size=6), st.text(_RUNES, min_size=20, max_size=26)), max_size=6))
+def test_bloom_keys_are_the_keys_the_gate_tests(words):
+    """The Bloom build and the query gate hash one deletion neighborhood:
+    per word, the ``deletion_hashes`` keys are the string keys of its
+    ``delete_candidates``, and ``delete_hashes`` gives each delete row the
+    key of its string."""
+    arr = np.array(words, dtype=object)
+    wi, dord, cand = M.delete_candidates(arr)
+    string_keys = row_hash_u32_matrix(*M.encode_words(cand))
+    assert M.delete_hashes(*M.encode_words(arr), wi, dord).tolist() == string_keys.tolist()
+    for i, w in enumerate(words):
+        built = M.deletion_hashes(*M.encode_words(np.array([w], dtype=object)))
+        assert set(built.tolist()) == set(string_keys[wi == i].tolist()), w
+
+
+def _inserts_reference(w: str, alphabet: str) -> list[tuple[int, str]]:
+    """InsertRune() one word at a time: (ins_ord, string)."""
+    return [(p * len(alphabet) + k, w[:p] + c + w[p:]) for p in range(len(w) + 1) for k, c in enumerate(alphabet)]
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.one_of(st.text(_RUNES, max_size=6), st.text(_RUNES, min_size=22, max_size=26)), max_size=8))
+def test_insert_and_split_candidates_match_the_per_word_references(words):
+    arr = np.array(words, dtype=object)
+    for alphabet in (M.EN_ALPHABET, M.RU_ALPHABET):
+        got = Counter(zip(*(x.tolist() for x in M.insert_candidates(arr, alphabet))))
+        assert got == Counter((i, o, c) for i, w in enumerate(words) for o, c in _inserts_reference(w, alphabet))
+    got = Counter(zip(*(x.tolist() for x in M.split_candidates(arr))))
+    assert got == Counter((i, p, w[:p] + " " + w[p:]) for i, w in enumerate(words) for p in range(1, len(w)))
+
+
+def test_exact_candidate_counts():
+    twelve = np.array(["abcdefghijkl"], dtype=object)
+    assert len(M.delete_candidates(twelve)[0]) == 1 + 12 + 12 * 11  # 145, duplicates kept
+    assert M.deletion_hashes(*M.encode_words(twelve)).size == 1 + 12 + 12 * 11 // 2  # 79, the set
+    assert len(M.split_candidates(twelve)[0]) == 11
+    assert len(M.insert_candidates(np.array(["abcdefghijklmnopqr"], dtype=object), M.EN_ALPHABET)[0]) == 19 * 29 == 551
+    assert M.delete_candidates(np.array(["ab"], dtype=object))[2].tolist() == ["ab", "b", "a"]
 
 
 def test_map_returns_every_position_of_a_doubled_rune():
@@ -265,15 +306,17 @@ def _edit_tokens(word: str, n_del2: int, n_ins: int) -> np.ndarray:
 
 
 class TestInsertTierGates:
-    """The two Bloom gates of the insert tiers (on deletes, then on one-insert
-    intermediates) only skip work that cannot produce a hit."""
+    """The Bloom gate of the insert tiers (on deletes) only skips work that
+    cannot produce a hit, and the one-deletion map that stands in for insert
+    enumeration at both levels reaches every index word up to
+    ``MAX_WORD_LEN + 2`` runes."""
 
     def test_gates_lose_nothing_against_a_saturated_bloom(self, probe, dbloom):
-        # an all-ones filter with dbloom's geometry passes every delete and
-        # every intermediate: the ungated run.  Ungated, a 2-deletion or
-        # 1-insertion token expands up to ~10^6 two-inserts (0.05-0.75 s
-        # apiece; all ~2,200 of them take minutes), so those are sampled,
-        # and tokens go one at a time to bound the ungated candidate arrays.
+        # an all-ones filter with dbloom's geometry passes every delete: the
+        # ungated run, which reads the map with every one-insert of every
+        # delete (tens of thousands per token).  2-deletion and 1-insertion
+        # tokens are sampled, and tokens go one at a time to bound the
+        # ungated candidate arrays.
         saturated = bloom.BloomState(dbloom.m, dbloom.k, np.ones(dbloom.m, dtype=bool))
         toks = np.concatenate([_edit_tokens(w, 6, 2) for w in INDEX if " " not in w])
         assert toks.size > 100
@@ -308,10 +351,27 @@ class TestInsertTierGates:
     def test_intermediate_of_24_runes_is_not_gated(self, probe):
         # a 25-rune index word has no deletion neighborhood in the Bloom
         # (deletion_hashes skips words over MAX_WORD_LEN), so the 24-rune
-        # one-insert leading to it must be expanded without a Bloom test
+        # one-insert leading to it is read from the one-deletion map, with
+        # no Bloom test
         long_word = "abcdefghijklmnopqrstuvwxy"
         query = long_word[:5] + long_word[7:]
         assert (len(long_word), len(query)) == (M.MAX_WORD_LEN + 1, M.MAX_WORD_LEN - 1)
+        words = list(INDEX) + [long_word]
+        freqs = [INDEX.get(w, 50) for w in words]
+        long_probe = IndexProbe.from_arrays(np.array(words, dtype=object), np.array(freqs, dtype=np.int64))
+        st = deletion_bloom(words)
+        # the query's own hash stands in for a Bloom false positive on the delete
+        bloom.update_hashes(st, row_hash_u32_matrix(*M.encode_words(np.array([query], dtype=object))))
+        assert run(long_probe, st, [query]) == [long_word]
+
+
+    def test_two_inserts_reach_a_26_rune_word(self, probe):
+        # a 24-rune query is a 26-rune index word minus two runes: level 2
+        # reads the map with the query's 25-rune one-inserts, so the map must
+        # hold the 1-deletions of words of MAX_WORD_LEN + 2 runes
+        long_word = "abcdefghijklmnopqrstuvwxyz"
+        query = long_word[:5] + long_word[7:]
+        assert (len(long_word), len(query)) == (M.MAX_WORD_LEN + 2, M.MAX_WORD_LEN)
         words = list(INDEX) + [long_word]
         freqs = [INDEX.get(w, 50) for w in words]
         long_probe = IndexProbe.from_arrays(np.array(words, dtype=object), np.array(freqs, dtype=np.int64))

@@ -11,23 +11,25 @@ Semantics reproduced exactly:
   ru=33+hyphen (34), en=26+hyphen+backtick+quote (29) (component.go:23-28).
 * ``InsertSpace``: positions 1..len-1 (component.go:98-109).
 
-Vectorization: words are encoded once as numpy ``U24`` (UTF-32) and viewed as
-an (n, 24) uint32 codepoint matrix; deletions/insertions are column slices (the
-query-side deletes one column gather) and the results are viewed back as
-strings (numpy NUL-terminates on view), so candidate generation is loops over
-≤24 positions — never over rows
-(input_hint: no per-row Python).  The corpus-scale Bloom build path skips
-strings entirely and hashes candidate rows directly
-(hashing.row_hash_u32_matrix).
+Every mutation is an op table over a codepoint matrix: words are encoded
+once as numpy ``U{width}`` (UTF-32) and viewed as an (n, width) uint32
+matrix with a NUL column appended; an op lists the source columns of one
+output row, so the candidates of all words come from one gather, viewed
+back as strings (numpy NUL-terminates on view) — no per-row Python.
+``_DELETE_OPS`` is the one definition of a deletion: ``delete_candidates``
+gathers its ops, and ``delete_hashes`` hashes them column by column, for
+the Bloom build (``deletion_hashes``) and the query's gate alike, so the
+Bloom holds exactly the keys the gate tests.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ..sketches.hashing import row_hash_u32_matrix
+from ..sketches.hashing import fnv_columns
 
 MAX_WORD_LEN = 24  # component.go:32 cap: bounds fan-out to ≤577 deletes
+_WIDE = MAX_WORD_LEN + 2  # the two-inserts of a 24-rune delete
 
 RU_ALPHABET = "абвгдеёжзийклмнопрстуфхцчшщъыьэюя-"  # component.go:25
 EN_ALPHABET = "abcdefghijklmnopqrstuvwxyz-`'"  # component.go:26
@@ -53,42 +55,16 @@ def decode_rows(mat: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(mat).view(f"U{width}").reshape(n).astype(object)
 
 
-def _delete_col(mat: np.ndarray, p: int) -> np.ndarray:
-    """Remove column p, pad a trailing NUL column (keeps width constant)."""
-    n = mat.shape[0]
-    return np.concatenate([mat[:, :p], mat[:, p + 1 :], np.zeros((n, 1), dtype=np.uint32)], axis=1)
+def _pad(mat: np.ndarray) -> np.ndarray:
+    """``mat`` with one NUL column appended: the source of every cell an op
+    leaves empty."""
+    return np.concatenate([mat, np.zeros((len(mat), 1), dtype=np.uint32)], axis=1)
 
 
-def deletion_hashes(mat: np.ndarray, lens: np.ndarray, include_self: bool = True) -> np.ndarray:
-    """64-bit hashes of the SET of ≤2-rune deletions of each row, flattened.
-
-    Corpus-scale Bloom-build path (A4, /root/reference/builder.go:97-119):
-    only hashes, no strings.  Rows with len==1 / len==0 (too long) produce
-    nothing; len==2 produces [w, c0, c1] per the reference special case.
-    Duplicate candidates are harmless for Bloom insertion.
-    """
-    out = []
-    width = mat.shape[1]
-    eligible = (lens >= 2) & (lens <= width)
-    if include_self:
-        out.append(row_hash_u32_matrix(mat[eligible], lens[eligible]))
-    # 1-deletions: delete original position p (valid when p < len)
-    for p in range(width):
-        mask = eligible & (lens > p)
-        if not mask.any():
-            continue
-        out.append(row_hash_u32_matrix(_delete_col(mat[mask], p)[:, :width], lens[mask] - 1))
-    # 2-deletions: delete original positions p < q; only rows with len >= 3
-    for p in range(width):
-        for q in range(p + 1, width):
-            mask = eligible & (lens >= 3) & (lens > q)
-            if not mask.any():
-                continue
-            m2 = _delete_col(_delete_col(mat[mask], q), p)[:, :width]
-            out.append(row_hash_u32_matrix(m2, lens[mask] - 2))
-    if not out:
-        return np.empty(0, dtype=np.uint64)
-    return np.concatenate(out)
+def _gather(mat: np.ndarray, row: np.ndarray, cols: np.ndarray) -> np.ndarray:
+    """Output row i reads row ``row[i]`` of ``_pad(mat)`` through its
+    source columns ``cols[i]``: one gather from the flat matrix."""
+    return _pad(mat).ravel()[(row * (mat.shape[1] + 1))[:, None] + cols]
 
 
 def _deletion_ops(width: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -116,6 +92,24 @@ def _deletion_ops(width: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 _DELETE_OPS = _deletion_ops(MAX_WORD_LEN)
+# runes an op deletes (its NUL pad columns), and the first op of each column
+# set: the row itself, its 1-deletions, its 2-deletions with p < q
+_DELETED = (_DELETE_OPS[2] == MAX_WORD_LEN).sum(axis=1)
+_DISTINCT_OPS = np.sort(np.unique(_DELETE_OPS[2], axis=0, return_index=True)[1])
+
+
+def deletion_hashes(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """64-bit keys of the SET of ≤2-rune deletions of each row, flattened.
+
+    Corpus-scale Bloom-build path (A4, the reference's builder.go:97-119):
+    the distinct ops of ``_DELETE_OPS`` through ``delete_hashes``, no
+    strings.  Rows with len==1 / len==0 (too long) produce nothing; len==2
+    produces [w, c0, c1] per the reference special case.  Duplicate keys
+    (the 1-deletions of a doubled rune) are harmless for Bloom insertion.
+    """
+    need, ords, _ = _DELETE_OPS
+    op, row = np.nonzero(lens[None, :] >= need[_DISTINCT_OPS, None])
+    return delete_hashes(mat, lens, row, ords[_DISTINCT_OPS[op]])
 
 
 def delete_candidates(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -130,30 +124,40 @@ def delete_candidates(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.nda
     mat, lens = encode_words(words)
     need, ords, cols = _DELETE_OPS
     op, row = np.nonzero(lens[None, :] >= need[:, None])
-    padded = np.concatenate([mat, np.zeros((len(mat), 1), dtype=np.uint32)], axis=1)
-    return row, ords[op], decode_rows(padded[row[:, None], cols[op]])
+    return row, ords[op], decode_rows(_gather(mat, row, cols[op]))
+
+
+def delete_hashes(mat: np.ndarray, lens: np.ndarray, row: np.ndarray, del_ord: np.ndarray) -> np.ndarray:
+    """``row_hash_u32_matrix`` keys of the deletes (``row``, ``del_ord``)
+    of ``encode_words`` output — the rows of ``delete_candidates`` — read
+    column by column from the padded matrix, without building the deletes:
+    the Bloom build's keys and the ones the query's gate tests."""
+    _, ords, cols = _DELETE_OPS
+    op = np.searchsorted(ords, del_ord)
+    flat, at = _pad(mat).ravel(), row * (MAX_WORD_LEN + 1)
+    return fnv_columns(lambda j: flat[at + cols[op, j]], MAX_WORD_LEN, lens[row] - _DELETED[op])
 
 
 def one_deletions(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Every 1-deletion of every word of ≤ ``MAX_WORD_LEN + 1`` runes.
+    """Every 1-deletion of every word of ≤ ``MAX_WORD_LEN + 2`` runes.
 
     Returns (word_idx, pos, rune, key) flat arrays, one row per rune of each
     such word (Σ len(w) rows): ``key`` is the word without its rune at
     ``pos``, ``rune`` that rune's codepoint.  Read backwards, a row says the
     word is ``key`` with ``rune`` inserted at ``pos`` — the index side of
-    ``insert_candidates``.
+    ``insert_candidates``, for keys up to the 25-rune one-inserts of a
+    24-rune delete.  A loop over positions: one gather measured slower here.
     """
-    mat, lens = encode_words(words, MAX_WORD_LEN + 1)
-    width = mat.shape[1]
+    mat, lens = encode_words(words, _WIDE)
     idx_out, pos_out, rune_out, key_out = [], [], [], []
-    for p in range(width):
+    for p in range(_WIDE):
         rows = np.flatnonzero(lens > p)
         if not rows.size:
             continue
         idx_out.append(rows)
         pos_out.append(np.full(rows.size, p, dtype=np.int64))
         rune_out.append(mat[rows, p])
-        key_out.append(decode_rows(_delete_col(mat[rows], p)))
+        key_out.append(decode_rows(np.delete(mat[rows], p, axis=1)))
     if not idx_out:
         return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
                 np.empty(0, dtype=np.uint32), np.empty(0, dtype=object))
@@ -164,35 +168,32 @@ def alphabet_codes(alphabet: str) -> np.ndarray:
     return np.array([ord(c) for c in alphabet], dtype=np.uint32)
 
 
+# _INSERT_OPS[i]: source columns of a ``_WIDE``-column row with one cell
+# inserted at position i; the new cell reads the NUL pad column and is then
+# overwritten with the inserted rune
+_INSERT_OPS = np.array([np.insert(np.arange(_WIDE), i, _WIDE) for i in range(_WIDE + 1)], dtype=np.int32)
+
+
+def _insertions(words: np.ndarray, runes: np.ndarray, lo: int, hi: int):
+    """Each of ``runes`` inserted at positions ``lo..len - hi`` of each word
+    of ≤ ``_WIDE`` runes, in (position, word, rune) order.  Returns (word_idx, position * |runes| + rune index,
+    candidate): one gather per (position, word), broadcast over the runes."""
+    mat, lens = encode_words(np.asarray(words, dtype=object), _WIDE)
+    at = np.arange(_WIDE + 1)[:, None]
+    pos, row = np.nonzero((at >= lo) & (at <= lens[None, :] - hi))
+    a = runes.size
+    cand = np.repeat(_gather(mat, row, _INSERT_OPS[pos])[:, None, :], a, axis=1)
+    cand[np.arange(row.size), :, pos] = runes
+    return np.repeat(row, a), (pos[:, None] * a + np.arange(a)).ravel(), decode_rows(cand.reshape(-1, _WIDE + 1))
+
+
 def insert_candidates(words: np.ndarray, alphabet: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """1-rune insertions at every position (G2).
 
     Returns (word_idx, ins_ord, candidate); ins_ord = position * |alphabet| +
     alphabet_index (reference loop order, component.go:68-96).
     """
-    arr = np.asarray(words, dtype=object)
-    mat, lens = encode_words(arr, MAX_WORD_LEN + 2)
-    width = mat.shape[1]
-    codes = alphabet_codes(alphabet)
-    a = codes.size
-    idx_out, ord_out, cand_out = [], [], []
-    for i in range(width):
-        mask = lens >= i  # insert position valid at 0..len
-        if not mask.any():
-            continue
-        sub = mat[mask]
-        n = sub.shape[0]
-        # build (n*a, width) candidates: prefix, char, suffix
-        expanded = np.repeat(sub, a, axis=0)
-        cand = np.concatenate(
-            [expanded[:, :i], np.tile(codes, n)[:, None], expanded[:, i : width - 1]], axis=1
-        )
-        rows = np.repeat(np.flatnonzero(mask), a)
-        orders = i * a + np.tile(np.arange(a, dtype=np.int64), n)
-        idx_out.append(rows)
-        ord_out.append(orders)
-        cand_out.append(decode_rows(cand))
-    return np.concatenate(idx_out), np.concatenate(ord_out), np.concatenate(cand_out)
+    return _insertions(words, alphabet_codes(alphabet), 0, 0)
 
 
 def split_candidates(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -200,23 +201,4 @@ def split_candidates(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndar
 
     Returns (word_idx, split_pos, candidate) — candidate is "left right".
     """
-    arr = np.asarray(words, dtype=object)
-    mat, lens = encode_words(arr, MAX_WORD_LEN + 2)
-    width = mat.shape[1]
-    space = np.uint32(ord(" "))
-    idx_out, pos_out, cand_out = [], [], []
-    for i in range(1, width - 1):
-        mask = lens > i
-        if not mask.any():
-            continue
-        sub = mat[mask]
-        n = sub.shape[0]
-        cand = np.concatenate(
-            [sub[:, :i], np.full((n, 1), space, dtype=np.uint32), sub[:, i : width - 1]], axis=1
-        )
-        idx_out.append(np.flatnonzero(mask))
-        pos_out.append(np.full(n, i, dtype=np.int64))
-        cand_out.append(decode_rows(cand))
-    if not idx_out:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), np.empty(0, dtype=object))
-    return np.concatenate(idx_out), np.concatenate(pos_out), np.concatenate(cand_out)
+    return _insertions(words, alphabet_codes(" "), 1, 1)

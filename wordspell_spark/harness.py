@@ -62,13 +62,25 @@ def _values(col: pa.Array) -> np.ndarray:
     """One value column → the flat numpy array a sketch reads.
 
     List columns are flattened and their null elements dropped; both keep
-    the element dtype, so an int column stays int.  Scalar columns drop
-    nulls, and float columns NaN as well.
+    the element dtype, so an int column stays int.  Scalar columns go
+    through ``_scalars``.
     """
     if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
         return col.flatten().drop_null().to_numpy(zero_copy_only=False)
+    return _scalars(col)[1]
+
+
+def _scalars(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """A scalar column's rows a sketch reads, as (row mask, values): nulls
+    are dropped, and in a float column NaN as well; the values keep the
+    column's dtype."""
+    keep = np.array(col.is_valid(), dtype=bool)
     vals = col.drop_null().to_numpy(zero_copy_only=False)
-    return vals[~np.isnan(vals)] if vals.dtype.kind == "f" else vals
+    if vals.dtype.kind == "f":
+        real = ~np.isnan(vals)
+        keep[keep] = real
+        vals = vals[real]
+    return keep, vals
 
 
 def _groups(batch: pa.RecordBatch, group_cols: list[str]) -> Iterator[tuple[tuple, pa.RecordBatch]]:
@@ -291,13 +303,16 @@ _POINT_QUERIES = {"bloom": ("contains", "boolean"), "cms": ("query", "long"), "f
 
 
 def make_point_query_udf(spark: SparkSession, payload: bytes):
-    """Broadcast a bloom, cms or freq payload; return a vectorized pandas
+    """Broadcast a bloom, cms or freq payload; return a vectorized Arrow
     UDF that answers point queries against it.
 
     bloom gives boolean membership (``contains``; parity: the query-time
     ``Test`` gate in the reference's service.go:224).  cms and freq give a
     long estimated count (``query``): CMS never undercounts, Misra–Gries
-    never overcounts, so querying both brackets the true frequency.
+    never overcounts, so querying both brackets the true frequency.  The
+    column is read as Arrow and its rows reach the kernel as the builder
+    reads them (``_scalars``), so an int column stays int whatever nulls
+    its batch holds; a null (or NaN) row answers null.
     """
     kind = serde.peek_kind(payload)
     if kind not in _POINT_QUERIES:
@@ -307,8 +322,12 @@ def make_point_query_udf(spark: SparkSession, payload: bytes):
     deserialize, query = module.deserialize, getattr(module, fn)
     bc = spark.sparkContext.broadcast(payload)
 
-    @F.pandas_udf(return_type)
-    def point_query(values: pd.Series) -> pd.Series:
-        return pd.Series(query(deserialize(bc.value), values.to_numpy()))
+    @F.arrow_udf(return_type)
+    def point_query(values: pa.Array) -> pa.Array:
+        keep, keys = _scalars(values)
+        hits = query(deserialize(bc.value), keys)
+        out = np.zeros(len(values), dtype=hits.dtype)
+        out[keep] = hits
+        return pa.array(out, mask=~keep)
 
     return point_query

@@ -18,9 +18,10 @@ The wordspell-parity path (SURVEY.md §3.1/§3.2 steps 5-6):
 * ``correct_queries`` — the full online pipeline (service.go:102-129) as ONE
   mapInPandas: clean → tokenize → pair merge → split tier → exact tier →
   deletes tier → Bloom gate → insert tiers → reassemble.  All tiers are
-  batch-vectorized; the Bloom gates the insert explosion at two points
-  before it happens (X1): a delete is expanded only if it passes, and a
-  one-insert is expanded into two-inserts only if it passes too.
+  batch-vectorized; one Bloom gate stops the insert explosion before it
+  happens (X1): a delete is expanded only if it passes, and the index words
+  one or two inserts away are then read from the one-deletion map, never
+  enumerated.
   Anti-masking preserves the reference's first-hit-wins tier order (X2/O3).
 
 Scale: the serving path never shuffles the index or the Bloom filter —
@@ -55,7 +56,6 @@ from ..functions import mutate as M
 from ..functions import processors as PROC
 from ..harness import merge_partials, num_partitions
 from ..sketches import bloom
-from ..sketches.hashing import row_hash_u32_matrix
 from .trademark import protect_spans_batch
 
 NUM_WEIGHT = 1000  # index/models.go:8
@@ -176,7 +176,7 @@ class IndexProbe:
 
         Returns (str_idx, ins_ord, word, freq): as a multiset, the rows of
         ``M.insert_candidates(strs, alphabet)`` whose ``lookup`` is > 0, for
-        strings of ≤ ``MAX_WORD_LEN`` runes.
+        strings of ≤ ``MAX_WORD_LEN + 1`` runes.
         """
         kid = self.del_keys.get_indexer(np.asarray(strs, dtype=object))
         lo = np.where(kid >= 0, self.del_start[kid], 0)
@@ -301,11 +301,6 @@ def _best_per_group(group_ids: np.ndarray, *keys: np.ndarray) -> np.ndarray:
 _ALPHABETS = ((M.RU_ALPHABET, "ru"), (M.EN_ALPHABET, "en"))
 
 
-def _bloom_test_strings(state, words: np.ndarray) -> np.ndarray:
-    mat, lens = M.encode_words(np.asarray(words, dtype=object))
-    return bloom.contains_hashes(state, row_hash_u32_matrix(mat, lens))
-
-
 def correct_token_batch(
     orig: np.ndarray,
     qid: np.ndarray,
@@ -414,25 +409,24 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
     Returns (word_row_indices, corrected_values).
 
     Gate premise: the Bloom holds every ≤2-deletion of every index word of
-    2..``MAX_WORD_LEN`` runes.  A delete one or two inserts away from such a
-    word is one of its deletions, so only deletes that pass are expanded.
-    Likewise a one-insert that is one insert away from such a word is its
-    1-deletion: one-inserts of ≤ ``MAX_WORD_LEN - 1`` runes are expanded only
-    if they pass.  Longer ones lead to words the Bloom never saw and stay
-    ungated.  Insert candidates are weighed by ``probe.lookup`` alone:
-    inserting a rune of an en/ru delete's own alphabet never makes a string
-    ``lang_majority`` calls num or unknown, so ``_weight``'s overrides
-    cannot fire on them.
+    2..``MAX_WORD_LEN`` runes, keyed as ``M.delete_hashes`` keys a delete.
+    A delete one or two inserts away from such a word is one of its
+    deletions, so only deletes that pass are expanded.  Insert candidates
+    are weighed by ``probe.lookup`` alone: inserting a rune of an en/ru
+    delete's own alphabet never makes a string ``lang_majority`` calls num
+    or unknown, so ``_weight``'s overrides cannot fire on them.
 
-    Level-1 hits are not enumerated.  ``w`` is ``d`` with rune ``c``
+    Insert hits are not enumerated.  ``w`` is ``d`` with rune ``c``
     inserted at ``p`` exactly when deleting ``p`` from ``w`` gives ``d`` and
     ``w[p] == c``, so ``probe.insert_hits`` reads them from the index's
     one-deletion map, with the same ``ins_ord = p·|alphabet| + index of c``
     and the same repeats (``"aab"`` is ``"ab"`` plus ``a`` at 0 and at 1).
-    The map holds Σ len(w) entries over the words of ≤ ``MAX_WORD_LEN + 1``
-    runes: linear in the index, unlike the 2-deletion dictionary the Bloom
-    stands in for.  Only the deletes still pending for level 2 are expanded
-    into one-inserts.
+    Level 1 reads the map with the passing deletes, level 2 with the
+    one-inserts of the deletes still pending: a two-insert is an index word
+    exactly when that word minus one rune is the one-insert.  The map holds
+    Σ len(w) entries over the words of ≤ ``MAX_WORD_LEN + 2`` runes (a
+    24-rune delete's two-inserts): linear in the index, unlike the
+    2-deletion dictionary the Bloom stands in for.
     """
     dwi, dord, dcand = M.delete_candidates(words)
     if len(dcand) == 0:
@@ -456,7 +450,8 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
     need = (dw == 0) & (dord < win0[dwi])
     if need.any():
         gmask = np.zeros(len(dcand), dtype=bool)
-        gmask[need] = _bloom_test_strings(bloom_state, dcand[need])
+        keys = M.delete_hashes(*M.encode_words(words), dwi[need], dord[need])
+        gmask[need] = bloom.contains_hashes(bloom_state, keys)
         g = np.flatnonzero(gmask)
         if g.size:
             g_words, g_ords, g_strs = dwi[g], dord[g], dcand[g]
@@ -471,7 +466,8 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
                 gi = sel[iwi]
                 l1_hit_del[gi] = True
                 hits.append((g_words[gi], g_ords[gi], 1, np.zeros(gi.size, dtype=np.int64), -iw, iord, icand))
-            # ---- level-2 inserts, only where they can still win
+            # ---- level-2 inserts, only where they can still win: index
+            # words one insert away from a one-insert of a pending delete
             best_so_far = np.full(len(words), INF, dtype=np.int64)
             for h in hits:
                 if len(h[0]):
@@ -483,23 +479,9 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
                 if not sel.size:
                     continue
                 iwi, iord, icand = M.insert_candidates(g_strs[sel], alphabet)
-                gi1 = sel[iwi]
-                # second bloom gate: a one-insert of ≤ MAX_WORD_LEN-1 runes
-                # leads to an index word only if it is that word's 1-deletion
-                gated = np.fromiter(map(len, g_strs[gi1]), dtype=np.int64, count=gi1.size) + 1 < M.MAX_WORD_LEN
-                keep = ~gated
-                keep[gated] = _bloom_test_strings(bloom_state, icand[gated])
-                mid = np.flatnonzero(keep)
-                if not mid.size:
-                    continue
-                i2wi, i2ord, i2cand = M.insert_candidates(icand[mid], alphabet)
-                iw = probe.lookup(i2cand)
-                ih = iw > 0
-                if ih.any():
-                    parent1 = mid[i2wi[ih]]  # index into icand
-                    gi = gi1[parent1]        # gated-delete row
-                    hits.append((g_words[gi], g_ords[gi], 2, iord[parent1],
-                                 -iw[ih], i2ord[ih], i2cand[ih]))
+                i1, i2ord, i2cand, iw = probe.insert_hits(icand, alphabet)
+                gi = sel[iwi[i1]]
+                hits.append((g_words[gi], g_ords[gi], 2, iord[i1], -iw, i2ord, i2cand))
 
     # ---- final ranking across all tiers
     aw = np.concatenate([h[0] for h in hits])

@@ -144,8 +144,8 @@ def query(state: FreqState, items) -> np.ndarray:
     """Estimated count per item (0 for untracked; true count <= est + dec).
 
     Query-side is LENIENT: nulls and non-int/str values return 0 instead
-    of raising (a ``make_point_query_udf`` column may be nullable),
-    matching the cms point query's tolerate-anything behavior."""
+    of raising, matching the cms point query's tolerate-anything
+    behavior."""
     arr = np.asarray(items)
     if arr.dtype.kind in "US":
         arr = arr.astype(object)

@@ -47,13 +47,18 @@ def _as_hashable_array(values) -> np.ndarray:
 
 
 def hash64(values) -> np.ndarray:
-    """Primary 64-bit hash of an array of str/bytes/int/float values."""
+    """Primary 64-bit hash of an array of str/bytes/int/float values.  An
+    int held in an object array gets the key it has in an int array."""
     arr = _as_hashable_array(values)
     if arr.size == 0:
         return np.empty(0, dtype=_U64)
-    if arr.dtype == object:
-        return pd.util.hash_array(arr, hash_key=_HASH_KEY_1, categorize=False)
-    return pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
+    if arr.dtype != object:
+        return pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
+    out = pd.util.hash_array(arr, hash_key=_HASH_KEY_1, categorize=False)
+    if "integer" in pd.api.types.infer_dtype(arr, skipna=True):
+        ints = np.fromiter((isinstance(v, (int, np.integer)) and not isinstance(v, bool) for v in arr), bool, arr.size)
+        out[ints] = hash64(np.fromiter((int(v) & 0xFFFF_FFFF_FFFF_FFFF for v in arr[ints]), _U64, ints.sum()))
+    return out
 
 
 def distinct_hashes(values) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -158,29 +163,30 @@ def double_hash(values) -> tuple[np.ndarray, np.ndarray]:
     return h1, h2
 
 
+def fnv_columns(column, width: int, valid_len: np.ndarray) -> np.ndarray:
+    """FNV-1a-style 64-bit hash of rows given column by column: ``column(j)``
+    is cell j of every row (j < ``width``), and row i hashes its length,
+    then its first ``valid_len[i]`` cells, so padding never affects the
+    hash and prefixes hash differently from padded equals."""
+    fnv_prime = _U64(0x100000001B3)
+    h = (np.full(valid_len.size, _U64(0xCBF29CE484222325)) ^ valid_len.astype(_U64)) * fnv_prime
+    for j in range(min(width, int(valid_len.max(initial=0)))):
+        h = np.where(valid_len > j, (h ^ column(j)) * fnv_prime, h)
+    return splitmix64(h)
+
+
 def row_hash_u32_matrix(mat: np.ndarray, valid_len: np.ndarray | None = None) -> np.ndarray:
-    """FNV-1a-style 64-bit hash of each ROW of a (n, L) uint32 matrix.
+    """``fnv_columns`` hash of each ROW of a (n, L) uint32 matrix.
 
     Used for hashing variable-length codepoint / token-id sequences (e.g. the
     SymSpell deletion neighborhood, reference
     components/wordmutate/component.go:30-66) without materializing Python
     strings.  Loops over L columns (small, ≤ max word length 24 — reference
     cap at component.go:32), fully vectorized over the n rows.
-
-    ``valid_len[i]`` = number of meaningful leading cells in row i; cells past
-    it are ignored so that padding never affects the hash.  The length itself
-    is mixed in first so prefixes hash differently from padded equals.
+    ``valid_len[i]`` = number of meaningful leading cells in row i (all L
+    by default).
     """
     n, width = mat.shape
-    fnv_offset = _U64(0xCBF29CE484222325)
-    fnv_prime = _U64(0x100000001B3)
     if valid_len is None:
         valid_len = np.full(n, width, dtype=np.int64)
-    h = np.full(n, fnv_offset, dtype=_U64)
-    h = (h ^ valid_len.astype(_U64)) * fnv_prime
-    cols = mat.astype(_U64, copy=False)
-    for j in range(width):
-        active = valid_len > j
-        hj = (h ^ cols[:, j]) * fnv_prime
-        h = np.where(active, hj, h)
-    return splitmix64(h)
+    return fnv_columns(lambda j: mat[:, j], width, valid_len)

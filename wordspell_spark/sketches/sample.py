@@ -71,9 +71,8 @@ def update(state: SampleState, values) -> SampleState:
 
 def update_distinct(state: SampleState, uniq, keys, counts=None) -> SampleState:
     """Update from ``distinct_hashes`` output (``counts`` is unused): the
-    values come deduped and hashed, so no key is computed again here,
-    except for ints held in an object array (``hash64`` keys those by their
-    text), which get the int64 key the reader checks.  Nulls are skipped.
+    values come deduped and hashed, so no key is computed here.  Nulls are
+    skipped.
     Before any python-level work, only the candidates that can reach the
     bottom k are kept: keys <= the k-th smallest DISTINCT candidate key
     (and <= the state's largest once it is full).  Every tie is kept, so
@@ -83,8 +82,6 @@ def update_distinct(state: SampleState, uniq, keys, counts=None) -> SampleState:
     if uniq.dtype.kind not in "iu":
         live = ~pd.isna(uniq)
         uniq, h = uniq[live], h[live]
-        if uniq.size and isinstance(uniq[0], (int, np.integer)):
-            h = hash64(uniq.astype(np.int64))
     keep = np.ones(h.size, dtype=bool)
     if h.size > state.k:
         # the cut is the k-th smallest DISTINCT key: the k smallest keys
@@ -173,9 +170,7 @@ def deserialize(payload: bytes) -> SampleState:
         raise serde.SketchFormatError("sample hashes not strictly ascending")
     values = serde.unpack_items(body, n, vtype)
     body.end()
-    # each value must hash to its key, as distinct_hashes hashed it: ints as
-    # int64, strs as python objects
-    typed = np.array(values, dtype=np.int64 if values and isinstance(values[0], int) else object)
-    if n and (hash64(typed) != hashes).any():
+    # each value must hash to its key, as distinct_hashes hashed it
+    if n and (hash64(np.array(values, dtype=object)) != hashes).any():
         raise serde.SketchFormatError("sample value does not hash to its key")
     return SampleState(k, hashes, values)
