@@ -189,6 +189,22 @@ def test_exact_candidate_counts():
     assert M.delete_candidates(np.array(["ab"], dtype=object))[2].tolist() == ["ab", "b", "a"]
 
 
+def test_words_too_long_to_encode_get_no_candidates():
+    arr = np.array(["a" * 30, "ab"], dtype=object)
+    for wi, _, cand in (M.insert_candidates(arr, M.EN_ALPHABET), M.split_candidates(arr), M.delete_candidates(arr)):
+        assert set(wi.tolist()) == {1} and all(len(c) <= 3 for c in cand)
+
+
+def test_deletion_hashes_in_blocks_keep_the_op_major_order():
+    rng = np.random.default_rng(7)
+    words = np.array(["".join(rng.choice(list("abcdef"), n)) for n in rng.integers(0, 30, 3 * M._BLOCK_WORDS + 5)], dtype=object)
+    mat, lens = M.encode_words(words)
+    need, ords, _ = M._DELETE_OPS
+    op, row = np.nonzero(lens[None, :] >= need[M._DISTINCT_OPS, None])
+    whole = M.delete_hashes(mat, lens, row, ords[M._DISTINCT_OPS[op]])
+    assert M.deletion_hashes(mat, lens).tolist() == whole.tolist()
+
+
 def test_map_returns_every_position_of_a_doubled_rune():
     probe = IndexProbe.from_arrays(np.array(["aab", "ab"], dtype=object), np.array([3, 5], dtype=np.int64))
     row, ins_ord, word, freq = probe.insert_hits(np.array(["ab", "b"], dtype=object), M.EN_ALPHABET)

@@ -96,6 +96,8 @@ _DELETE_OPS = _deletion_ops(MAX_WORD_LEN)
 # set: the row itself, its 1-deletions, its 2-deletions with p < q
 _DELETED = (_DELETE_OPS[2] == MAX_WORD_LEN).sum(axis=1)
 _DISTINCT_OPS = np.sort(np.unique(_DELETE_OPS[2], axis=0, return_index=True)[1])
+# words per block of ``deletion_hashes``: bounds its per-(word, op) arrays
+_BLOCK_WORDS = 256
 
 
 def deletion_hashes(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -103,13 +105,27 @@ def deletion_hashes(mat: np.ndarray, lens: np.ndarray) -> np.ndarray:
 
     Corpus-scale Bloom-build path (A4, the reference's builder.go:97-119):
     the distinct ops of ``_DELETE_OPS`` through ``delete_hashes``, no
-    strings.  Rows with len==1 / len==0 (too long) produce nothing; len==2
-    produces [w, c0, c1] per the reference special case.  Duplicate keys
-    (the 1-deletions of a doubled rune) are harmless for Bloom insertion.
+    strings, ``_BLOCK_WORDS`` words at a time.  Rows with len==1 / len==0
+    (too long) produce nothing; len==2 produces [w, c0, c1] per the
+    reference special case.  Duplicate keys (the 1-deletions of a doubled
+    rune) are harmless for Bloom insertion.
     """
-    need, ords, _ = _DELETE_OPS
-    op, row = np.nonzero(lens[None, :] >= need[_DISTINCT_OPS, None])
-    return delete_hashes(mat, lens, row, ords[_DISTINCT_OPS[op]])
+    need, ords = _DELETE_OPS[0][_DISTINCT_OPS], _DELETE_OPS[1][_DISTINCT_OPS]
+    # keys come op-major (op, then row), as from one pass over all words:
+    # op o fills per_op[o] slots, and each block writes its cnt[o] keys of
+    # op o at the next free one, start[o]
+    per_op = np.cumsum(np.bincount(lens, minlength=MAX_WORD_LEN + 1)[::-1])[::-1][need]
+    start = np.cumsum(per_op) - per_op
+    out = np.empty(per_op.sum(), dtype=np.uint64)
+    for s in range(0, lens.size, _BLOCK_WORDS):
+        block = slice(s, s + _BLOCK_WORDS)
+        fits = lens[None, block] >= need[:, None]
+        op, row = np.nonzero(fits)
+        cnt = fits.sum(axis=1)
+        at = np.arange(op.size) + np.repeat(start - (np.cumsum(cnt) - cnt), cnt)
+        out[at] = delete_hashes(mat[block], lens[block], row, ords[op])
+        start += cnt
+    return out
 
 
 def delete_candidates(words: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -176,9 +192,14 @@ _INSERT_OPS = np.array([np.insert(np.arange(_WIDE), i, _WIDE) for i in range(_WI
 
 def _insertions(words: np.ndarray, runes: np.ndarray, lo: int, hi: int):
     """Each of ``runes`` inserted at positions ``lo..len - hi`` of each word
-    of ≤ ``_WIDE`` runes, in (position, word, rune) order.  Returns (word_idx, position * |runes| + rune index,
-    candidate): one gather per (position, word), broadcast over the runes."""
-    mat, lens = encode_words(np.asarray(words, dtype=object), _WIDE)
+    of ≤ ``_WIDE`` runes, in (position, word, rune) order; longer words get
+    none.  Returns (word_idx, position * |runes| + rune index, candidate):
+    one gather per (position, word), broadcast over the runes."""
+    arr = np.asarray(words, dtype=object)
+    mat, lens = encode_words(arr, _WIDE)
+    # encode_words gives a too-long word length 0, which would still take an
+    # insertion at position 0; length -1 admits no position
+    lens[np.fromiter(map(len, arr), np.int64, arr.size) > _WIDE] = -1
     at = np.arange(_WIDE + 1)[:, None]
     pos, row = np.nonzero((at >= lo) & (at <= lens[None, :] - hi))
     a = runes.size
@@ -191,7 +212,9 @@ def insert_candidates(words: np.ndarray, alphabet: str) -> tuple[np.ndarray, np.
     """1-rune insertions at every position (G2).
 
     Returns (word_idx, ins_ord, candidate); ins_ord = position * |alphabet| +
-    alphabet_index (reference loop order, component.go:68-96).
+    alphabet_index (reference loop order, component.go:68-96).  A word of
+    more than ``_WIDE`` (26) runes gets no candidates, as in
+    ``split_candidates`` and ``delete_candidates``.
     """
     return _insertions(words, alphabet_codes(alphabet), 0, 0)
 
