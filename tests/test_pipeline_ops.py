@@ -1016,6 +1016,26 @@ class TestCheckpointResume:
         }
         assert resumed == oneshot
 
+    def test_other_bucket_count_raises(self, spark, sequences_small, tmp_path):
+        # a bucket id names a hash range only under the job's own count: a
+        # finalize under fewer buckets returned a partial table as complete,
+        # a resume under more double-counted rows
+        from wordspell_spark.operators.checkpoint import finalize, run_checkpointed_build
+        from wordspell_spark.sketches import SketchSpec
+
+        spec = SketchSpec("hll", {"p": 12})
+        ckpt = str(tmp_path / "ckpt_n")
+        df = sequences_small.limit(2000)
+        args = (df, spec, ["source"], "tokens", "doc_id", ckpt, "jn")
+        assert run_checkpointed_build(*args, n_buckets=8, max_buckets_this_run=3) == 3
+        with pytest.raises(ValueError, match=r"bucketed \[8\] ways, not 3"):
+            finalize(spark, spec, ["source"], ckpt, "jn", n_buckets=3)
+        with pytest.raises(ValueError, match=r"bucketed \[8\] ways, not 16"):
+            run_checkpointed_build(*args, n_buckets=16)
+        assert run_checkpointed_build(*args, n_buckets=8) == 5
+        out = finalize(spark, spec, ["source"], ckpt, "jn", n_buckets=8)
+        assert out.groupBy().agg(F.sum("rows")).first()[0] == df.count()
+
     def test_rerun_is_noop(self, spark, sequences_small, tmp_path):
         from wordspell_spark.operators.checkpoint import run_checkpointed_build
         from wordspell_spark.sketches import SketchSpec

@@ -369,10 +369,12 @@ class TestCms:
         assert frac_over <= 1e-3 + 0.01, f"{frac_over:.4f} of keys exceed eps*N bound"
 
     def test_weighted_update_matches_repeat(self):
+        from wordspell_spark.sketches.hashing import hash64
+
         st1 = cms.create(width=1000, depth=4)
         cms.update(st1, np.array([7, 7, 7, 9]))
         st2 = cms.create(width=1000, depth=4)
-        cms.update(st2, np.array([7, 9]), weights=np.array([3, 1]))
+        cms.update_unique_hashes(st2, hash64(np.array([7, 9])), np.array([3, 1]))
         assert (st1.counts == st2.counts).all() and st1.total == st2.total
 
     def test_merge_linear_and_associative(self):

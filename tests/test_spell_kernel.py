@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 
 from wordspell_spark.functions import mutate as M
 from wordspell_spark.operators.spell import (
+    NUM_WEIGHT,
     IndexProbe,
     _greedy_pair_merge,
     correct_query_batch,
@@ -395,6 +396,72 @@ class TestInsertTierGates:
         # the query's own hash stands in for a Bloom false positive on the delete
         bloom.update_hashes(st, row_hash_u32_matrix(*M.encode_words(np.array([query], dtype=object))))
         assert run(long_probe, st, [query]) == [long_word]
+
+
+def _walk_reference(word: str, weight, by_deletion) -> str | None:
+    """correctWord one word at a time, first hit wins: split (heaviest,
+    ties to the lower position), exact, then per delete in Deletes() order
+    the delete, else its heaviest own-alphabet one-insert, else for each
+    one-insert in order that string's heaviest one-insert.  ``by_deletion``
+    maps a string to the (position, rune, index word) that insert into it.
+    No Bloom: a delete an index word is ≤ 2 inserts away from is one of
+    that word's deletions, so the gate never changes an answer."""
+
+    def best_insert(s: str, alphabet: str) -> str | None:
+        hits = [(-weight(x), p * len(alphabet) + alphabet.index(c), x)
+                for p, c, x in by_deletion.get(s, ()) if c in alphabet and weight(x) > 0]
+        return min(hits)[2] if hits else None
+
+    splits = [(-weight(s), p, s) for p in range(1, len(word)) if weight(s := word[:p] + " " + word[p:]) > 0]
+    if splits:
+        return min(splits)[2]
+    if weight(word) > 0:
+        return word
+    for _, d in _deletes_reference(word):
+        if weight(d) > 0:
+            return d
+        lang = lang_majority(np.array([d], dtype=object))[0]
+        alphabet = {"en": M.EN_ALPHABET, "ru": M.RU_ALPHABET}.get(lang)
+        if alphabet is None:
+            continue
+        for s in [d] + [s for _, s in _inserts_reference(d, alphabet)]:
+            if (hit := best_insert(s, alphabet)) is not None:
+                return hit
+    return None
+
+
+def test_kernel_matches_a_sequential_walk_of_correct_word():
+    """The vectorized rank key picks what the reference's sequential loop
+    picks.  The index is INDEX plus dense short en/ru words of weight 1-3,
+    so the deletes and inserts of one token often tie or compete, and
+    bigram keys that are two splits of one fused string, some of which is
+    an index word too.  The tokens are the fused strings, edits of INDEX's
+    words and random short strings (digits included), as one batch."""
+    rng = np.random.default_rng(11)
+    words = [sorted({"".join(rng.choice(list(pool), int(rng.integers(2, 6)))) for _ in range(150)})
+             for pool in ("abcde-", "абвгд")]
+    pairs = [rng.choice(ws, 2) for ws in words for _ in range(25)]
+    fused = [a + b for a, b in pairs]
+    keys = [f"{a} {b}" for a, b in pairs] + [f"{a}{b[0]} {b[1:]}" for a, b in pairs if len(b) > 1] + fused[::3]
+    index = {w: int(rng.integers(1, 4)) for w in words[0] + words[1] + keys} | INDEX
+    probe = IndexProbe.from_arrays(np.array(list(index), dtype=object), np.array(list(index.values()), dtype=np.int64))
+
+    def weight(s: str) -> int:
+        lang = lang_majority(np.array([s], dtype=object))[0]
+        return {"unknown": 0, "num": NUM_WEIGHT}.get(lang, index.get(s, 0))
+
+    by_deletion = {}
+    for w in index:
+        for p, c in enumerate(w):
+            by_deletion.setdefault(w[:p] + w[p + 1 :], []).append((p, c, w))
+    pools = ["abcdef-", "абвгде", "ab1.2"]
+    rand = ["".join(rng.choice(list(pools[i % 3]), int(rng.integers(1, 8)))) for i in range(300)]
+    edits = [_edit_tokens(w, 12, 4) for w in INDEX if " " not in w]
+    toks = np.unique(np.concatenate([*edits, rand, fused])).astype(object)
+    out, _ = correct_token_batch(toks, np.arange(toks.size), probe, deletion_bloom(index))
+    expect = [_walk_reference(t, weight, by_deletion) or t for t in toks]
+    assert [(t, o) for t, o, e in zip(toks, out, expect) if o != e] == []
+    assert (out != toks).sum() > toks.size // 2
 
 
 def test_own_alphabet_inserts_never_make_num_or_unknown():

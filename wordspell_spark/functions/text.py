@@ -30,16 +30,18 @@ _CLEAN_TEXT_BAD = r"[^0-9a-zA-Zа-яА-ЯёЁ\s\-.,+=`'*%]"
 # Parity with CleanIndexRE (domain/common.go:21): stricter corpus alphabet —
 # note digits are NOT allowed on the index side.
 _CLEAN_INDEX_BAD = r"[^a-zA-Zа-яА-ЯёЁ\s\-`']"
+# a hyphen standing alone between spaces
+_LONE_HYPHEN = r"\s-\s"
 
 
 def clean_text(col: Column) -> Column:
     c = F.regexp_replace(col, _CLEAN_TEXT_BAD, " ")
-    return F.regexp_replace(c, r"\s-\s", " ")
+    return F.regexp_replace(c, _LONE_HYPHEN, " ")
 
 
 def clean_index_text(col: Column) -> Column:
     c = F.regexp_replace(col, _CLEAN_INDEX_BAD, " ")
-    return F.regexp_replace(c, r"\s-\s", " ")
+    return F.regexp_replace(c, _LONE_HYPHEN, " ")
 
 
 def strip_html(col: Column) -> Column:

@@ -11,7 +11,7 @@ Layout (one Parquet/Iceberg table per job):
 
     checkpoint/<job_id>/partials/run=<run_id>/   bucket LONG, <group_cols...>,
                                                  sketch BINARY, rows LONG, items LONG
-    checkpoint/<job_id>/manifest/                bucket LONG, run STRING
+    checkpoint/<job_id>/manifest/                bucket LONG, run STRING, n_buckets LONG
 
 * ``bucket`` is a deterministic hash of the row key (NOT Spark's physical
   partition id — physical ids change with cluster size; the hash bucket is
@@ -26,6 +26,10 @@ Layout (one Parquet/Iceberg table per job):
   no manifest row references; the rebuild writes a fresh run, and finalize
   reads only manifest-referenced (bucket, run) pairs — so double-appended
   partials can never double-count the additive sketches.
+* The manifest records the job's bucket count from its first run on.  A
+  bucket id names a hash range only for that count, so a run or finalize
+  under any other count raises instead of mixing ranges (which would drop
+  or double-count rows).
 * Resume = rebuild the buckets absent from the manifest; with
   partition-pruned sources (Iceberg partition on the same key) the rescan
   reads only the missing files.
@@ -45,6 +49,7 @@ from ..harness import build_sketches, merge_partials
 from ..sketches import SketchSpec
 
 BUCKET_COL = "bucket"
+N_BUCKETS_COL = "n_buckets"
 
 
 def _bucket_of(key_col: str, n_buckets: int):
@@ -75,11 +80,23 @@ def _read_manifest(spark: SparkSession, checkpoint_dir: str, job_id: str) -> Dat
     return spark.read.parquet(path)
 
 
-def completed_buckets(spark: SparkSession, checkpoint_dir: str, job_id: str) -> set[int]:
+def _manifest_rows(spark: SparkSession, checkpoint_dir: str, job_id: str) -> list:
     mani = _read_manifest(spark, checkpoint_dir, job_id)
-    if mani is None:
-        return set()
-    return {r[BUCKET_COL] for r in mani.select(BUCKET_COL).distinct().collect()}
+    return [] if mani is None else mani.select(BUCKET_COL, N_BUCKETS_COL).distinct().collect()
+
+
+def completed_buckets(spark: SparkSession, checkpoint_dir: str, job_id: str) -> set[int]:
+    return {r[BUCKET_COL] for r in _manifest_rows(spark, checkpoint_dir, job_id)}
+
+
+def _completed(spark: SparkSession, checkpoint_dir: str, job_id: str, n_buckets: int) -> set[int]:
+    """``completed_buckets``; raises ValueError if the job's manifest
+    records another bucket count than ``n_buckets``."""
+    rows = _manifest_rows(spark, checkpoint_dir, job_id)
+    other = {r[N_BUCKETS_COL] for r in rows} - {n_buckets}
+    if other:
+        raise ValueError(f"job {job_id} is bucketed {sorted(other)} ways, not {n_buckets}")
+    return {r[BUCKET_COL] for r in rows}
 
 
 def run_checkpointed_build(
@@ -98,9 +115,11 @@ def run_checkpointed_build(
     ``max_buckets_this_run`` lets tests (and ops) simulate a job killed
     mid-flight: only the first k missing buckets are built; a later call
     resumes the rest.  Returns the number of buckets built in this run.
+    Raises ValueError if an earlier run of the job used another
+    ``n_buckets``.
     """
     spark = df.sparkSession
-    done = completed_buckets(spark, checkpoint_dir, job_id)
+    done = _completed(spark, checkpoint_dir, job_id, n_buckets)
     todo = sorted(set(range(n_buckets)) - done)
     if max_buckets_this_run is not None:
         todo = todo[:max_buckets_this_run]
@@ -118,7 +137,7 @@ def run_checkpointed_build(
     # manifest AFTER partials: every bucket this run scanned is now complete,
     # including the ones that produced no rows
     manifest = spark.createDataFrame(
-        [(int(b), run_id) for b in todo], f"{BUCKET_COL} long, run string"
+        [(int(b), run_id, n_buckets) for b in todo], f"{BUCKET_COL} long, run string, {N_BUCKETS_COL} long"
     )
     manifest.coalesce(1).write.mode("append").parquet(_manifest_path(checkpoint_dir, job_id))
     return len(todo)
@@ -151,10 +170,12 @@ def finalize(
     Raises if any bucket is missing from the manifest (the job isn't
     finished) — finalize is the atomic-swap moment; partial results must
     never look complete.  Completeness is judged on the manifest, so empty
-    buckets finalize like any other.  ``merge_partials`` reads each
-    group's kernel from its payloads, so ``spec`` only names the kind built.
+    buckets finalize like any other; a ``n_buckets`` other than the one
+    the job was built with raises ValueError.  ``merge_partials`` reads
+    each group's kernel from its payloads, so ``spec`` only names the kind
+    built.
     """
-    have = completed_buckets(spark, checkpoint_dir, job_id)
+    have = _completed(spark, checkpoint_dir, job_id, n_buckets)
     missing = set(range(n_buckets)) - have
     if missing:
         raise RuntimeError(f"job {job_id}: {len(missing)} buckets missing, e.g. {sorted(missing)[:5]}")

@@ -16,13 +16,14 @@ The wordspell-parity path (SURVEY.md §3.1/§3.2 steps 5-6):
   the reference's in-RAM index map (index/service.go:84-110) — a broadcast
   hash join executed vectorized inside the correction UDF.
 * ``correct_queries`` — the full online pipeline (service.go:102-129) as ONE
-  mapInPandas: clean → tokenize → pair merge → split tier → exact tier →
-  deletes tier → Bloom gate → insert tiers → reassemble.  All tiers are
-  batch-vectorized; one Bloom gate stops the insert explosion before it
-  happens (X1): a delete is expanded only if it passes, and the index words
-  one or two inserts away are then read from the one-deletion map, never
-  enumerated.
-  Anti-masking preserves the reference's first-hit-wins tier order (X2/O3).
+  mapInPandas: clean → tokenize → pair merge → single-word correction →
+  render → dupremove → reassemble.  Single-word correction
+  (``_correct_words``) puts every split, exact, delete and insert hit of a
+  word in one candidate table and ranks it once, by a key that encodes the
+  reference's first-hit-wins walk (X2/O3).  A delete is expanded only while
+  it ranks before its word's best hit so far and passes the one Bloom gate
+  (X1); the index words one or two inserts away are then read from the
+  one-deletion map, never enumerated.
 
 Scale: the serving path never shuffles the index or the Bloom filter —
 queries stream through executors with two small broadcasts (index probe
@@ -54,12 +55,13 @@ from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..functions import mutate as M
 from ..functions import processors as PROC
+from ..functions import text as T
 from ..harness import merge_partials, num_partitions
 from ..sketches import bloom
+from .index_build import NUM_WEIGHT
 from .trademark import protect_spans_batch
 
-NUM_WEIGHT = 1000  # index/models.go:8
-DEFAULT_FPR = 0.005  # bloomfilter/component.go:16
+DEFAULT_FPR = bloom.DEFAULT_FPR
 
 # --------------------------------------------------------------- bloom build
 
@@ -294,7 +296,8 @@ def _best_per_group(group_ids: np.ndarray, *keys: np.ndarray) -> np.ndarray:
     group — vectorized argmin replacement for the reference's scan loops."""
     order = np.lexsort(tuple(reversed(keys)) + (group_ids,))
     sg = group_ids[order]
-    first = np.concatenate([[True], sg[1:] != sg[:-1]])
+    first = np.ones(sg.size, dtype=bool)
+    first[1:] = sg[1:] != sg[:-1]
     return order[first]
 
 
@@ -362,51 +365,25 @@ def correct_token_batch(
 
 
 def _correct_words(words: np.ndarray, probe: IndexProbe, bloom_state) -> tuple[np.ndarray, np.ndarray]:
-    """Single-word correction tiers over DISTINCT lowercase words.
+    """correctWord (service.go:189-241) over DISTINCT lowercase words, as one
+    candidate table ranked once.  Returns (values, resolved).
 
-    Tier order per word is the reference's: split (splittedWord,
-    service.go:114,189-208) → exact (service.go:213-215) → deletes +
-    bloom-gated inserts (service.go:217-241).  Returns (values, resolved).
-    """
-    n = len(words)
-    out = np.asarray(words, dtype=object).copy()
-    resolved = np.zeros(n, dtype=bool)
-    langs = lang_majority(words)
+    Rank key.  Every hit is a row (word, tier, del_ord, stage, ins1_ord,
+    -weight, gen, cand) and each word takes its least row: the set-oriented
+    form of the reference's sequential first-hit-wins walk (X2/O3).
 
-    # ---- split tier
-    wi, spos, cands = M.split_candidates(out)
-    if len(cands):
-        w = _weight(probe, cands)
-        hit = w > 0
-        if hit.any():
-            best = _best_per_group(wi[hit], -w[hit], spos[hit])
-            rows = wi[hit][best]
-            out[rows] = cands[hit][best]
-            resolved[rows] = True
+    * tier 0, split (splittedWord, service.go:114,189-208): the heaviest
+      split, ties to the lower split position (gen);
+    * tier 1, exact (service.go:213-215);
+    * tier 2, deletes in Deletes() order (del_ord, service.go:217-241):
+      stage 0 the delete itself, stage 1 its heaviest one-insert, stage 2
+      for each of its one-inserts in order (ins1_ord) that string's
+      heaviest one-insert; insert ties go to the lower insert order (gen).
 
-    # ---- exact tier
-    act = np.flatnonzero(~resolved)
-    if act.size:
-        hit = _weight(probe, out[act], langs[act]) > 0
-        resolved[act[hit]] = True  # out already holds the word
-
-    # ---- deletes tier + bloom-gated insert tiers
-    act = np.flatnonzero(~resolved)
-    if act.size:
-        rows, vals = _delete_insert_tiers(out[act], probe, bloom_state)
-        out[act[rows]] = vals
-        resolved[act[rows]] = True
-
-    return out, resolved
-
-
-def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
-    """Tiers b-d of correctWord for unresolved words.
-
-    Faithful ranking: per word, candidates compete on
-    (del_ord, stage, ins1_ord, -weight, gen_ord) — the set-oriented
-    encoding of the reference's sequential first-hit-wins loop (X2/O3).
-    Returns (word_row_indices, corrected_values).
+    Deletes are made only for words no split or exact hit corrects.  A
+    delete is expanded only while it is pending, ranked before its word's
+    best hit so far: no row it yields could win otherwise.  The rule runs
+    before the Bloom gate and again before level 2.
 
     Gate premise: the Bloom holds every ≤2-deletion of every index word of
     2..``MAX_WORD_LEN`` runes, keyed as ``M.delete_hashes`` keys a delete.
@@ -428,73 +405,47 @@ def _delete_insert_tiers(words: np.ndarray, probe: IndexProbe, bloom_state):
     24-rune delete's two-inserts): linear in the index, unlike the
     2-deletion dictionary the Bloom stands in for.
     """
-    dwi, dord, dcand = M.delete_candidates(words)
-    if len(dcand) == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=object)
-    INF = np.int64(1 << 60)
+    n = len(words)
+    swi, spos, scand = M.split_candidates(words)
+    sw, ew = _weight(probe, scand), _weight(probe, words)
+    # columns as in the rank key; a tier's constant columns stay scalars
+    rows = [(swi[sw > 0], 0, 0, 0, 0, -sw[sw > 0], spos[sw > 0], scand[sw > 0]),
+            (np.flatnonzero(ew > 0), 1, 0, 0, 0, 0, 0, words[ew > 0])]
+    todo = ew == 0
+    todo[rows[0][0]] = False
+    act = np.flatnonzero(todo)
+    dwi, dord, dcand = M.delete_candidates(words[act])
+    dwi, dlang = act[dwi], lang_majority(dcand)
+    dw = _weight(probe, dcand, dlang)
+    rows.append((dwi[dw > 0], 2, dord[dw > 0], 0, 0, -dw[dw > 0], 0, dcand[dw > 0]))
 
-    # stage 0: the deletion itself is an index word
-    dw = _weight(probe, dcand)
-    hits = [  # columns: word, del_ord, stage, ins1_ord, neg_weight, gen, cand
-        (dwi[dw > 0], dord[dw > 0], 0, np.zeros((dw > 0).sum(), dtype=np.int64),
-         np.zeros((dw > 0).sum(), dtype=np.int64), np.zeros((dw > 0).sum(), dtype=np.int64),
-         dcand[dw > 0])
-    ]
-    win0 = np.full(len(words), INF, dtype=np.int64)
-    if (dw > 0).any():
-        b = _best_per_group(dwi[dw > 0], dord[dw > 0])
-        win0[dwi[dw > 0][b]] = dord[dw > 0][b]
+    def pending() -> np.ndarray:
+        # a word with deletes has only tier-2 rows, so del_ord alone ranks them
+        best = np.full(n, np.iinfo(np.int64).max)
+        for r in rows:
+            np.minimum.at(best, r[0], r[2])
+        return dord < best[dwi]
 
-    # bloom gate (X1): only deletes that could be an index-word deletion,
-    # and only those ranked before the word's stage-0 winner
-    need = (dw == 0) & (dord < win0[dwi])
-    if need.any():
-        gmask = np.zeros(len(dcand), dtype=bool)
-        keys = M.delete_hashes(*M.encode_words(words), dwi[need], dord[need])
-        gmask[need] = bloom.contains_hashes(bloom_state, keys)
-        g = np.flatnonzero(gmask)
-        if g.size:
-            g_words, g_ords, g_strs = dwi[g], dord[g], dcand[g]
-            g_langs = lang_majority(g_strs)
-            # ---- level-1 inserts: index words one insert away from a delete
-            l1_hit_del = np.zeros(g.size, dtype=bool)
-            for alphabet, lang in _ALPHABETS:
-                sel = np.flatnonzero(g_langs == lang)
-                if not sel.size:
-                    continue
-                iwi, iord, icand, iw = probe.insert_hits(g_strs[sel], alphabet)
-                gi = sel[iwi]
-                l1_hit_del[gi] = True
-                hits.append((g_words[gi], g_ords[gi], 1, np.zeros(gi.size, dtype=np.int64), -iw, iord, icand))
-            # ---- level-2 inserts, only where they can still win: index
-            # words one insert away from a one-insert of a pending delete
-            best_so_far = np.full(len(words), INF, dtype=np.int64)
-            for h in hits:
-                if len(h[0]):
-                    b = _best_per_group(h[0], h[1])
-                    np.minimum.at(best_so_far, h[0][b], h[1][b])
-            pend = ~l1_hit_del & (g_ords < best_so_far[g_words])
-            for alphabet, lang in _ALPHABETS:
-                sel = np.flatnonzero(pend & (g_langs == lang))
-                if not sel.size:
-                    continue
-                iwi, iord, icand = M.insert_candidates(g_strs[sel], alphabet)
-                i1, i2ord, i2cand, iw = probe.insert_hits(icand, alphabet)
-                gi = sel[iwi[i1]]
-                hits.append((g_words[gi], g_ords[gi], 2, iord[i1], -iw, i2ord, i2cand))
+    live = pending()
+    live[live] = bloom.contains_hashes(bloom_state, M.delete_hashes(*M.encode_words(words), dwi[live], dord[live]))
+    for level in (1, 2):
+        live &= pending()  # unchanged at level 1
+        for alphabet, lang in _ALPHABETS:
+            sel = np.flatnonzero(live & (dlang == lang))
+            if not sel.size:
+                continue
+            src, ins1, strs = np.arange(sel.size), np.zeros(sel.size, dtype=np.int64), dcand[sel]
+            if level == 2:
+                src, ins1, strs = M.insert_candidates(strs, alphabet)
+            hit, gen, cand, w = probe.insert_hits(strs, alphabet)
+            d = sel[src[hit]]
+            rows.append((dwi[d], 2, dord[d], level, ins1[hit], -w, gen, cand))
 
-    # ---- final ranking across all tiers
-    aw = np.concatenate([h[0] for h in hits])
-    if aw.size == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=object)
-    a_ord = np.concatenate([h[1] for h in hits])
-    a_stage = np.concatenate([np.full(len(h[0]), h[2], dtype=np.int64) for h in hits])
-    a_i1 = np.concatenate([h[3] for h in hits])
-    a_negw = np.concatenate([h[4] for h in hits])
-    a_gen = np.concatenate([h[5] for h in hits])
-    a_cand = np.concatenate([h[6] for h in hits])
-    best = _best_per_group(aw, a_ord, a_stage, a_i1, a_negw, a_gen)
-    return aw[best], a_cand[best]
+    word, *keys, cand = (np.concatenate([np.broadcast_to(r[j], r[0].shape) for r in rows]) for j in range(8))
+    best = _best_per_group(word, *keys)
+    out, resolved = np.asarray(words, dtype=object).copy(), np.zeros(n, dtype=bool)
+    out[word[best]], resolved[word[best]] = cand[best], True
+    return out, resolved
 
 
 # ------------------------------------------------------- post/pre processors
@@ -574,8 +525,8 @@ def preprocess_query_strings(q: pd.Series) -> pd.Series:
     strings are tens of bytes and the reference performs the identical
     per-request regex work."""
     out = q.astype(str)
-    out = out.str.replace(r"[^0-9a-zA-Zа-яА-ЯёЁ\s\-.,+=`'*%]", " ", regex=True)
-    out = out.str.replace(r"\s-\s", " ", regex=True)
+    out = out.str.replace(T._CLEAN_TEXT_BAD, " ", regex=True)
+    out = out.str.replace(T._LONE_HYPHEN, " ", regex=True)
     return out.map(lambda s: " ".join(PROC.process_words(s.split())))
 
 

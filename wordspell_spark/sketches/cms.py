@@ -21,7 +21,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import double_hash, hash64, splitmix64, unique_hashes
+from .hashing import double_hash, splitmix64, unique_hashes
 
 _U64 = np.uint64
 _PARAMS = struct.Struct("<II")  # width, depth
@@ -62,11 +62,8 @@ def _row_idx(h1: np.ndarray, h2: np.ndarray, d: int, width: int) -> np.ndarray:
     return ((h1 + _U64(d) * h2) % _U64(width)).astype(np.int64)
 
 
-def update(state: CmsState, values, weights=None) -> CmsState:
-    """Add a batch of values with optional integer weights (default 1)."""
-    if weights is None:
-        return update_unique_hashes(state, *unique_hashes(values))
-    return update_unique_hashes(state, hash64(values), weights)
+def update(state: CmsState, values) -> CmsState:
+    return update_unique_hashes(state, *unique_hashes(values))
 
 
 def update_unique_hashes(state: CmsState, uh: np.ndarray, counts: np.ndarray) -> CmsState:
@@ -79,9 +76,8 @@ def update_unique_hashes(state: CmsState, uh: np.ndarray, counts: np.ndarray) ->
     from (h1, h2 = splitmix64(h1)|1), and the weighted bincount adds exactly
     the per-key occurrence totals one-by-one counting would.  The bincounts
     run over the distinct set only — on Zipfian token batches that is 4-15x
-    fewer index rows per depth.  ``update`` with weights passes every
-    value's key here with its weight as the count; bincount's float64 sums
-    stay exact because the counts are integral and far below 2^53."""
+    fewer index rows per depth.  bincount's float64 sums stay exact
+    because the counts are integral and far below 2^53."""
     n = uh.size
     if n == 0:
         return state
