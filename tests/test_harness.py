@@ -315,6 +315,39 @@ def test_null_in_int_column_keeps_int_hashes(spark, ddl, rows, clean):
     assert got["hll"]["items"] == 4 and got["hll"]["rows"] == len(rows)
 
 
+@pytest.mark.parametrize("keys", [["source"], ["g"], ["source", "g"]], ids=["string", "long", "both"])
+def test_null_group_keys_merge_to_one_row(spark, keys):
+    """A null group key reaches the final merge from several partitions and
+    folds to one row per kind, equal to a build over that group alone."""
+    from wordspell_spark.harness import build_sketches_multi
+
+    specs = {
+        "hll": (SketchSpec("hll", {"p": 10}), "tokens"),
+        "cms": (SketchSpec("cms", {"eps": 0.01, "delta": 0.05}), "tokens"),
+        "theta": (SketchSpec("theta", {"k": 64}), "tokens"),
+    }
+    rows = [
+        (None if i % 3 == 0 else ["web", "wiki"][i % 2], None if i % 4 == 1 else i % 2, [i % 50, (7 * i) % 90])
+        for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "source string, g long, tokens array<int>").repartition(4)
+
+    def build(frame):
+        out = build_sketches_multi(frame, specs, keys).collect()
+        return [(tuple(r[k] for k in keys), r["kind"], bytes(r["sketch"]), r["rows"], r["items"]) for r in out]
+
+    got = build(df)
+    null_keys = {k for k, *_ in got if None in k}
+    assert null_keys
+    for key in null_keys:
+        alone = df
+        for c, v in zip(keys, key):
+            alone = alone.filter(F.col(c).eqNullSafe(v))
+        mine = sorted(r for r in got if r[0] == key)
+        assert [r[1] for r in mine] == sorted(specs)
+        assert mine == sorted(build(alone.coalesce(1)))
+
+
 # sha256 of every (source, kind) payload of the 8-kind build below: a change
 # to stage A's map-side combine (grouping, flattening, the shared dedupe,
 # Misra-Gries trims) that moves a byte fails the test

@@ -136,6 +136,8 @@ def test_sketch_partials_single_shuffle(spark, docs):
         # partial builder; raw rows never shuffle
         assert plan.count("Exchange hashpartitioning") == 1, plan
         assert plan.index("Exchange hashpartitioning") < plan.index("MapInArrow"), plan
+        # the merge is an Arrow grouped map too: no pandas stage on the path
+        assert "InPandas" not in plan and "FlatMapGroupsInArrow" in plan, plan
 
 
 def test_stateful_stream_shuffles_payloads_only(spark, tmp_path):

@@ -282,12 +282,12 @@ class TestCorrect:
         assert run(probe, dbloom, ["игрушкидля детей"]) == ["игрушки для детей"]
 
     def test_en_correction(self, probe, dbloom):
-        assert run(probe, dbloom, ["spakr"]) == ["spark"] or run(probe, dbloom, ["spakr"]) == ["spakr"]
+        assert run(probe, dbloom, ["spakr"]) == ["spark"]
         # sparkk: one delete → exact
         assert run(probe, dbloom, ["sparkk"]) == ["spark"]
 
     def test_multi_token_query(self, probe, dbloom):
-        assert run(probe, dbloom, ["чехол длля телефона"]) == ["чехол для телефон"] or True
+        assert run(probe, dbloom, ["чехол длля телефона"]) == ["чехол для телефон"]
         # at minimum the middle token must correct to "для"
         got = run(probe, dbloom, ["чехол длля iphone"])[0].split()
         assert got[0] == "чехол" and got[1] == "для"

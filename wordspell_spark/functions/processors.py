@@ -171,7 +171,3 @@ def render_combo(token: str) -> str:
     """DigestReady rendering (domain/digest.go:14-19): drop the first '@',
     '#' becomes a space."""
     return token.replace(COMBO_PREFIX, "", 1).replace(COMBO_SEPARATOR, " ")
-
-
-def is_combo(token: str) -> bool:
-    return token.startswith(COMBO_PREFIX)

@@ -22,14 +22,19 @@ Why this shape at 100 TB: the shuffle after stage A moves only
 |partitions| × |groups| payloads (KBs each), never raw rows, so a skewed
 ``source`` (70% web in the fixture) cannot create a hot shuffle partition of
 raw data — skew is absorbed map-side, and stage B bounds the final merge
-fan-in however many partitions the input has.  No per-row Python anywhere:
-kernels consume whole Arrow batches as numpy arrays, with no pandas
-conversion in between (BASELINE.json input_hint).  ``merge_partials``
-(stages B and C) is the one grouped-map merge in the package: the
-checkpoint finalize, the streaming state merge and the deletion-Bloom build
-fold their partials through it too.  The stateful stream
-(``streaming/stateful.py``) calls stage A directly and folds its partials
-in the state store instead of stages B and C.
+fan-in however many partitions the input has.  No per-row Python anywhere,
+and one batch format: stage A is a mapInArrow and every merge level an
+applyInArrow, so kernels consume whole Arrow batches as numpy arrays with
+no pandas conversion in between (BASELINE.json input_hint).
+``merge_partials`` (stages B and C) is the one grouped-map merge in the
+package: the checkpoint finalize, the incremental and windowed state
+merges and the deletion-Bloom build (itself a mapInArrow partial) fold
+their partials through it too.  Two sketch-side stages stay on pandas by
+design: ``spell.correct_queries``, whose query pre-processing relies on
+Python ``re`` semantics that Arrow's RE2 does not share, and the stateful
+stream (``streaming/stateful.py``), because ``applyInPandasWithState`` has
+no Arrow twin; it calls stage A directly and folds its partials in the
+state store instead of stages B and C.
 """
 
 from __future__ import annotations
@@ -123,23 +128,25 @@ def num_partitions(df: DataFrame) -> int:
 
 def _fold(partials: DataFrame, keys: list[str]) -> DataFrame:
     """One groupBy(keys) merge level; the output schema is the input's."""
-    cols = partials.columns
+    # rows are built against the declared schema, not the group's: a worker
+    # may hand a timestamp column over in another zone spelling (Etc/UTC
+    # for UTC), which Spark rejects as a result type mismatch
+    schema = to_arrow_schema(partials.schema)
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        payloads = list(pdf["sketch"])
-        kind = serde.peek_kind(payloads[0])
-        head = pdf.iloc[[0]][keys].reset_index(drop=True)
-        head["sketch"] = [SketchSpec(kind).merge_payloads(payloads)]
-        for c in cols:
-            if c not in head:
-                head[c] = [pdf[c].sum() if c in ("rows", "items") else pdf[c].max()]
-        return head[cols]
+    def merge_group(group: pa.Table) -> pa.Table:
+        payloads = group.column("sketch").to_pylist()
+        row = {k: group.column(k)[0].as_py() for k in keys}
+        row["sketch"] = SketchSpec(serde.peek_kind(payloads[0])).merge_payloads(payloads)
+        for name in schema.names:
+            if name not in row:
+                row[name] = (pc.sum if name in ("rows", "items") else pc.max)(group.column(name)).as_py()
+        return pa.Table.from_pylist([row], schema=schema)
 
     # an explicit exchange even over one partition, where groupBy needs none:
     # chained into the partial builder's task, the merge would hold a second
     # Python worker; in its own stage it reuses the builder's
     shuffled = partials.repartition(*keys) if keys else partials.repartition(1)
-    return shuffled.groupBy(*keys).applyInPandas(merge_group, schema=partials.schema)
+    return shuffled.groupBy(*keys).applyInArrow(merge_group, schema=partials.schema)
 
 
 def merge_partials(partials: DataFrame, keys: list[str]) -> DataFrame:

@@ -163,15 +163,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int, int] | None:
         return None
 
 
-def normalize_samples(s: np.ndarray, bits: int) -> np.ndarray:
-    """Map integer PCM to float64 full-scale [-1, 1): exact divisions by a
-    power of two, so small-integer fixtures keep exact float values (the
-    oracle queries recover the original integers bit-exactly)."""
-    if bits == 8:
-        return (s.astype(np.float64) - 128.0) / 128.0
-    return s.astype(np.float64) / float(1 << (bits - 1))
-
-
 # ---------------------------------------------------------------------------
 # Header-real parsers for compressed containers (no sample decode)
 # ---------------------------------------------------------------------------

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..harness import build_sketches, merge_partials
 from ..sketches import SketchSpec
+from ..sources.io import hadoop_fs
 
 BUCKET_COL = "bucket"
 N_BUCKETS_COL = "n_buckets"
@@ -64,18 +65,10 @@ def _manifest_path(checkpoint_dir: str, job_id: str) -> str:
     return os.path.join(checkpoint_dir, job_id, "manifest")
 
 
-def _hadoop_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check via the Hadoop FileSystem API — works for any
-    supported scheme, and (unlike catching the read exception) cannot
-    mistake a transient IO failure for 'fresh start'."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def _read_manifest(spark: SparkSession, checkpoint_dir: str, job_id: str) -> DataFrame | None:
     path = _manifest_path(checkpoint_dir, job_id)
-    if not _hadoop_exists(spark, path):
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath):
         return None
     return spark.read.parquet(path)
 

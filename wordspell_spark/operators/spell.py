@@ -85,7 +85,7 @@ def build_deletion_bloom(
 ) -> bytes:
     """Distributed A4: one Bloom over all ≤2-deletions of the vocabulary.
 
-    Stage A (mapInPandas): per-partition partial filter filled from
+    Stage A (mapInArrow): per-partition partial filter filled from
     vectorized deletion hashes — no strings, no per-row Python.
     Stage B: ``merge_partials`` ORs the partial filters into one payload,
     through bounded-fan-in tree levels when there are many partitions.
@@ -96,31 +96,31 @@ def build_deletion_bloom(
 
     schema = StructType([StructField("sketch", BinaryType(), False)])
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         state = bloom.create(m=m, k=k)
         seen = False
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             seen = True
-            words = pdf[word_col].to_numpy()
+            words = batch.column(0).to_numpy(zero_copy_only=False)
             mat, lens = M.encode_words(words)
             bloom.update_hashes(state, M.deletion_hashes(mat, lens))
         if seen:
-            yield pd.DataFrame({"sketch": [bloom.serialize(state)]})
+            yield pa.RecordBatch.from_pydict({"sketch": [bloom.serialize(state)]})
 
     # partition by WORK GRAIN, not by the index's partition count: each task
     # fills ~1M deletion hashes (~a second of numpy), so a small thresholded
-    # index collapses to one task instead of 32 near-empty mapInPandas
-    # invocations each allocating a full m-bit filter (measured 12 CPU-s ->
-    # ~4 at sf0.1), while a 10M-word index still fans out to thousands of
-    # tasks.  coalesce keeps this shuffle-free.
+    # index collapses to one task instead of 32 near-empty Python tasks,
+    # each allocating a full m-bit filter (measured 12 CPU-s -> ~4 at
+    # sf0.1), while a 10M-word index still fans out to thousands of tasks.
+    # coalesce keeps this shuffle-free.
     words = index_df.select(word_col)
     cur = num_partitions(words)
     n_parts = int(min(cur, max(1, n_estimate // 1_000_000)))
     if n_parts < cur:
         words = words.coalesce(n_parts)
-    rows = merge_partials(words.mapInPandas(partial, schema=schema), []).collect()
+    rows = merge_partials(words.mapInArrow(partial, schema=schema), []).collect()
     return bytes(rows[0]["sketch"]) if rows else bloom.serialize(bloom.create(m=m, k=k))
 
 

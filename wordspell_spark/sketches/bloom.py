@@ -137,15 +137,6 @@ def merge(a: BloomState, b: BloomState) -> BloomState:
     return BloomState(a.m, a.k, a.bits | b.bits)
 
 
-def fill_ratio(state: BloomState) -> float:
-    return float(state.bits.sum()) / state.m
-
-
-def approx_fpr(state: BloomState) -> float:
-    """Current effective false-positive probability given fill ratio."""
-    return float(fill_ratio(state) ** state.k)
-
-
 def _sparse_form(m: int, n_set: int) -> bool:
     """Whether serialize writes ``m`` bits, ``n_set`` of them set, sparse."""
     return m <= _MAX_SPARSE_M and 4 * n_set + 4 < m // 8

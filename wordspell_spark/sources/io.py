@@ -91,6 +91,16 @@ def jdbc_partition_predicates(
     return out
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` through the Hadoop FileSystem API, for
+    any supported scheme (file://, hdfs://, s3a://…): durable state checks
+    must not assume a local filesystem, and an existence check made here
+    (unlike catching a read exception) cannot mistake a transient IO
+    failure for a fresh start."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def save_sketch_table(sketches: DataFrame, path: str) -> None:
     """S8 sink: persist (group..., kind?, sketch BINARY, rows, items).
 

@@ -38,17 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..harness import build_sketches, merge_partials
 from ..sketches import SketchSpec
+from ..sources.io import hadoop_fs
 
 _EPOCH_RE = re.compile(r"epoch=(\d+)$")
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any Hadoop-supported scheme (file://, hdfs://,
-    s3a://…) — state handling must not assume a local filesystem."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
 
 
 def _epochs_dir(state_path: str) -> str:
@@ -63,7 +55,7 @@ def completed_epochs(spark: SparkSession, state_path: str) -> list[int]:
     """Successful epoch ids, ascending.  Missing dir ⇒ [] (first epoch);
     any other IO error propagates — it must NOT be mistaken for a fresh
     start."""
-    fs, root = _hadoop_fs(spark, _epochs_dir(state_path))
+    fs, root = hadoop_fs(spark, _epochs_dir(state_path))
     if not fs.exists(root):
         return []
     out = []
@@ -89,7 +81,7 @@ def _run_marker(state_path: str) -> str:
 
 def _read_small(spark: SparkSession, path: str, limit: int) -> str | None:
     """The first ``limit`` bytes of a small file as text; None if absent."""
-    fs, p = _hadoop_fs(spark, path)
+    fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -105,7 +97,7 @@ def _read_run_marker(spark: SparkSession, state_path: str) -> str | None:
 
 
 def _write_run_marker(spark: SparkSession, state_path: str, run_id: str) -> None:
-    fs, p = _hadoop_fs(spark, _run_marker(state_path))
+    fs, p = hadoop_fs(spark, _run_marker(state_path))
     out = fs.create(p, True)
     try:
         out.write(bytearray(run_id.encode("utf-8")))
@@ -190,9 +182,9 @@ def merge_into_state(
 
     # GC: drop everything but the newest keep_epochs successful states
     done = completed_epochs(spark, state_path)
-    fs, _ = _hadoop_fs(spark, _epochs_dir(state_path))
+    fs, _ = hadoop_fs(spark, _epochs_dir(state_path))
     for eid in done[:-keep_epochs] if keep_epochs > 0 else done[:-1]:
-        _, p = _hadoop_fs(spark, _epoch_dir(state_path, eid))
+        _, p = hadoop_fs(spark, _epoch_dir(state_path, eid))
         fs.delete(p, True)
     return True
 
