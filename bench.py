@@ -112,9 +112,7 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
         "q_bloom_build": 1.1 * _g,
         "q_correct_queries": 1.95 * _g,
         "q_minhash_lsh_dedup": 1.7 * _g,
-        "q_minhash_lsh_dedup_fast": 1.3 * _g,
         "q_simhash_dedup": 2.9 * _g,
-        "q_simhash_dedup_fast": 2.05 * _g,
         "q_exact_dedup": 0.75 * _g,
         # these two are fixed-overhead-bound below sf0.1 (measured:
         # sf0.01 local[8] costs MORE than sf0.1 local[32]) — never shrink
@@ -238,10 +236,9 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
     _wdocs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200).repartition(8).cache()
     _wdocs.count()
     for _builder in (D.minhash_lsh_pairs, D.simhash_pairs):
-        for _mode in ("md5", "fast"):  # each hash mode is its own closure
-            _wdf = _builder(_wdocs, hash_mode=_mode)
-            _wdf.count()
-            D.release_caches(_wdf)
+        _wdf = _builder(_wdocs)
+        _wdf.count()
+        D.release_caches(_wdf)
     _wch = D.contamination_hits(_wdocs, _wdocs.limit(10), n=5)
     _wch.count()
     D.release_caches(_wch)
@@ -352,107 +349,6 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
 
     run("q_minhash_lsh_dedup", lambda: fresh_count(D.minhash_lsh_pairs))
     run("q_simhash_dedup", lambda: fresh_count(D.simhash_pairs))
-    # production hash path: hash_mode="fast" vectorizes the per-distinct-
-    # string md5 loop (the dominant CPU cost of the md5 parity mode — at
-    # 100x scale nobody should run md5; these entries prove the production
-    # path's headroom, not just its pytest parity).  Parity vs the md5 mode
-    # is checked UNTIMED right after the timed runs.  Exact pair-set
-    # equality is NOT an invariant across hash families:
-    #   - minhash: LSH candidacy is probabilistic in the family, so
-    #     borderline-similarity pairs can legitimately collide under one
-    #     family and not the other → assert near-total overlap (≥ 0.9).
-    #   - simhash: the fingerprint ITSELF is family-defined, and on this
-    #     vocabulary-correlated synthetic corpus the Hamming≤3 ball is
-    #     dominated by sub-threshold hash coincidences (measured: median
-    #     inter-doc Hamming 8-10 vs ~16 for independent bits), which are
-    #     pure family noise — so even TRUE near-dups legitimately straddle
-    #     the threshold (measured at sf0.01: 4 diverged pairs with 3-gram
-    #     Jaccard 0.95-0.98, each Hamming ≤3 under one family and exactly 4
-    #     under the other).  The kernel-correctness invariant is therefore:
-    #     every diverged true near-dup (Jaccard ≥ 0.5) must still be NEAR
-    #     under the family that missed it (Hamming ≤ 2×max_hamming, vs ~16
-    #     expected if a kernel were broken); asserted in-plan, overlap and
-    #     worst distances disclosed.
-    run("q_minhash_lsh_dedup_fast", lambda: fresh_count(lambda d: D.minhash_lsh_pairs(d, hash_mode="fast")))
-    run("q_simhash_dedup_fast", lambda: fresh_count(lambda d: D.simhash_pairs(d, hash_mode="fast")))
-
-    def parity_check(builder, verify_diff_not_neardup: bool) -> str:
-        pa = builder(docs).select("id_a", "id_b").withColumn("in_md5", F.lit(1))
-        pb = builder(docs, hash_mode="fast").select("id_a", "id_b").withColumn("in_fast", F.lit(1))
-        j = pa.join(pb, ["id_a", "id_b"], "full_outer").cache()
-        n_md5, n_fast, n_both = j.agg(
-            F.count("in_md5"), F.count("in_fast"), F.count(F.when(F.col("in_md5").isNotNull() & F.col("in_fast").isNotNull(), 1))
-        ).first()
-        n_union = n_md5 + n_fast - n_both
-        jac = n_both / max(n_union, 1)
-        note = f"overlap={jac:.4f} md5={n_md5} fast={n_fast}"
-        if verify_diff_not_neardup:
-            sh = docs.select(
-                F.col("doc_id"), D.shingles_of(F.col("text"), 3).alias("sh")
-            )
-            diff = j.filter(F.col("in_md5").isNull() | F.col("in_fast").isNull())
-            near = (
-                diff.join(sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-                .join(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-                .withColumn(
-                    "true_jac",
-                    F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                    / F.size(F.array_union("sh_a", "sh_b")).cast("double"),
-                )
-                .filter(F.col("true_jac") >= 0.5)
-                .select("id_a", "id_b", "true_jac")
-            )
-            # attach both families' fingerprints; the family that MISSED the
-            # pair must still place it within 2x the Hamming budget
-            for mode in ("md5", "fast"):
-                fp = D.simhash32_df(docs, hash_mode=mode)
-                near = (
-                    near.join(fp.select(F.col("id").alias("id_a"), F.col("sh").alias("fa")), "id_a")
-                    .join(fp.select(F.col("id").alias("id_b"), F.col("sh").alias("fb")), "id_b")
-                    .withColumn(f"ham_{mode}", F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))))
-                    .drop("fa", "fb")
-                )
-            stats = near.agg(
-                F.count(F.lit(1)),
-                F.percentile_approx(F.greatest("ham_md5", "ham_fast"), 0.5),
-                F.max(F.greatest("ham_md5", "ham_fast")),
-                F.max("true_jac"),
-            ).first()
-            n_near, med_ham, worst_ham, worst_jac = stats
-            note += (
-                f" diverged_true_neardups={n_near}"
-                f" missing_family_hamming_median={med_ham}_max={worst_ham}"
-                f" worst_true_jaccard={None if worst_jac is None else round(worst_jac, 4)}"
-            )
-            # the MEDIAN separates threshold-boundary straddle (~4-5, just
-            # past the budget) from a broken kernel (~16, the independent-bit
-            # expectation); the max alone is heavy-tailed — correlated
-            # low-margin bits legitimately flip together on vocabulary-
-            # concentrated near-dup pairs (observed max 11 at 50k docs)
-            if med_ham is not None and med_ham > 2 * 3:
-                raise AssertionError(
-                    f"hash_mode divergence is not a threshold-boundary effect: {note}"
-                )
-        elif jac < 0.9:
-            raise AssertionError(f"hash_mode parity broken: {note}")
-        j.unpersist(blocking=True)
-        D.release_caches(pa)
-        D.release_caches(pb)
-        return note
-
-    extra["hash_mode_pair_parity"] = (
-        f"minhash: {parity_check(D.minhash_lsh_pairs, False)}; "
-        f"simhash: {parity_check(D.simhash_pairs, True)}"
-    )
-
-    def _busy(name):
-        try:
-            return float(cpu_ctx[name].split("busy=")[1].split("s")[0])
-        except (KeyError, IndexError, ValueError):  # pragma: no cover
-            return float("nan")
-
-    extra["simhash_md5_vs_fast_busy_cpu"] = f"{_busy('q_simhash_dedup')}s vs {_busy('q_simhash_dedup_fast')}s"
-    extra["minhash_md5_vs_fast_busy_cpu"] = f"{_busy('q_minhash_lsh_dedup')}s vs {_busy('q_minhash_lsh_dedup_fast')}s"
     run("q_exact_dedup", lambda: D.exact_dedup(docs).count())
 
     # -- decontamination + corpus bigram coherence

@@ -189,6 +189,23 @@ def test_sparse_cms_zero_cell_is_a_format_error():
         deserialize_any(blob[:-8] + b"\x00" * 8)  # the last i64 value
 
 
+def test_sparse_geometry_above_the_cap_is_a_format_error():
+    """A few dozen sparse bytes cannot name a state larger than 128 MB:
+    a geometry one step past the cap is rejected before any allocation."""
+    one = serde.pack_sparse(np.array([0], dtype=np.uint32), np.array([1]))
+    big_cms = serde.pack_header(
+        serde.KIND_CMS, cms._PARAMS.pack(cms._MAX_SPARSE_CELLS + 1, 1), serde.FLAG_SPARSE
+    ) + cms._TOTAL.pack(1) + one
+    big_bloom = serde.pack_header(
+        serde.KIND_BLOOM, bloom._PARAMS.pack(bloom._MAX_SPARSE_M + 64, 3), serde.FLAG_SPARSE
+    ) + serde.pack_sparse(np.array([0], dtype=np.uint32))
+    assert (cms._MAX_SPARSE_CELLS, bloom._MAX_SPARSE_M) == (1 << 24, 1 << 27)
+    for blob in (big_cms, big_bloom):
+        assert len(blob) < 64
+        with pytest.raises(serde.SketchFormatError, match="above cap"):
+            deserialize_any(blob)
+
+
 @pytest.mark.parametrize("kind", ["bloom_sparse", "hll_sparse", "cms_sparse"])
 def test_sparse_fixtures_carry_the_sparse_form(kind):
     """The *_sparse blobs pin the sparse body, not a second dense one."""

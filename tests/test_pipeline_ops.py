@@ -112,57 +112,6 @@ class TestSimHash:
         assert got == want
 
 
-class TestHashModeParity:
-    """hash_mode='fast' (production SipHash family) finds the same pair sets
-    as the oracle-reproducible md5 family at the same banding — LSH only
-    needs a uniform hash family (round-2 verdict item 9).  The contract
-    queries stay on md5."""
-
-    @pytest.fixture(scope="class")
-    def clustered_docs(self, spark):
-        """Docs with unambiguous dup structure: 4 clusters of 3 near-identical
-        docs (last word differs → 1 of 28 shingles differs, Jaccard ≈ 0.93,
-        band-hit probability ≈ 1 - 2e-6) over disjoint vocabularies, so any
-        uniform hash family finds exactly the 12 in-cluster pairs
-        (borderline-Jaccard pairs, where families may legitimately disagree
-        on banding luck, are absent by construction)."""
-        rows = []
-        for c in range(4):
-            words = [f"w{c}_{i}" for i in range(30)]
-            for j in range(3):
-                v = list(words)
-                v[-1] = f"alt{c}_{j}"
-                rows.append((c * 3 + j, " ".join(v)))
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    def test_minhash_pair_sets_identical(self, clustered_docs):
-        from wordspell_spark.operators.dedup import minhash_lsh_pairs, release_caches
-
-        want = {(c * 3 + a, c * 3 + b) for c in range(4) for a, b in [(0, 1), (0, 2), (1, 2)]}
-        sets = {}
-        for mode in ("md5", "fast"):
-            df = minhash_lsh_pairs(clustered_docs, hash_mode=mode)
-            sets[mode] = {(r["id_a"], r["id_b"]) for r in df.collect()}
-            release_caches(df)
-        assert sets["md5"] == sets["fast"] == want
-
-    def test_simhash_pair_sets_identical(self, docs_df):
-        from wordspell_spark.operators.dedup import release_caches, simhash_pairs
-
-        sets = {}
-        for mode in ("md5", "fast"):
-            df = simhash_pairs(docs_df, max_hamming=3, hash_mode=mode)
-            sets[mode] = {(r["id_a"], r["id_b"]) for r in df.collect()}
-            release_caches(df)
-        assert sets["md5"] == sets["fast"] and sets["md5"]
-
-    def test_bad_mode_rejected(self, docs_df):
-        from wordspell_spark.operators.dedup import minhash_lsh_pairs
-
-        with pytest.raises(ValueError, match="hash_mode"):
-            minhash_lsh_pairs(docs_df, hash_mode="xxhash")
-
-
 @pytest.fixture(scope="module")
 def emb_df(spark):
     rng = np.random.default_rng(7)
@@ -220,6 +169,28 @@ class TestSimilarity:
             tuple(r) for r in lsh_topk(emb_df, q, k=5, max_broadcast_queries=0).collect()
         )
         assert a == b
+
+    def test_lsh_topk_without_broadcast_is_lazy(self, spark, emb_df):
+        """``max_broadcast_queries=0`` plans the banded join without sizing
+        the query side: the call submits no Spark job.  The default call's
+        ``take`` does, so the tracker would see one."""
+        from wordspell_spark.operators.similarity import lsh_topk
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        q = emb_df.filter(F.col("vec_id") % 50 == 0).withColumnRenamed("vec_id", "query_id")
+        try:
+            sc.setJobGroup("lsh-topk-lazy", "lsh_topk(max_broadcast_queries=0)")
+            before = tracker.getJobIdsForGroup("lsh-topk-lazy")
+            lsh_topk(emb_df, q, k=5, max_broadcast_queries=0)
+            after = tracker.getJobIdsForGroup("lsh-topk-lazy")
+            sc.setJobGroup("lsh-topk-sized", "lsh_topk()")
+            lsh_topk(emb_df, q, k=5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert before == after == []
+        assert len(tracker.getJobIdsForGroup("lsh-topk-sized")) >= 1
 
     def test_lsh_topk_strategies_identical_degenerate_vectors(self, spark):
         """Zero-norm (0/0 cosine -> NULL through the Arrow conversion) and

@@ -103,8 +103,7 @@ PAPERSIZES_CASES = [
     (["формат", "b5"], ["формат", "@B5"]),
     (["А3", "папка"], ["@A3", "папка"]),
     # no digit lookahead in the reference: 'a 45' matches 'a 4' and the '5'
-    # fuses into the combo token (the Column-level canon_paper_size adds the
-    # lookahead as a deliberate improvement; this kernel stays faithful)
+    # fuses into the combo token
     (["a", "45", "items"], ["@A45", "items"]),
     (["a7"], ["a7"]),  # size range is [0-6]
 ]

@@ -10,6 +10,8 @@ the tokenizer) on hypothesis-generated strings.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -110,7 +112,6 @@ class TestMinhashParity:
     def test_band_hashes_match_expression_banding(self, corpus_df):
         from wordspell_spark.operators.dedup import (
             DEFAULT_BAND_ROWS,
-            _md5_60,
             minhash_band_hashes_df,
             minhash_signatures_df,
         )
@@ -121,10 +122,36 @@ class TestMinhashParity:
             got[(r["id"], r["band_idx"])] = r["band_hash"]
         for i, sig in sigs.items():
             for b in range(len(sig) // DEFAULT_BAND_ROWS):
-                want = _md5_60(
-                    ",".join(str(v) for v in sig[b * DEFAULT_BAND_ROWS : (b + 1) * DEFAULT_BAND_ROWS])
+                band = ",".join(
+                    str(v) for v in sig[b * DEFAULT_BAND_ROWS : (b + 1) * DEFAULT_BAND_ROWS]
                 )
+                want = int(hashlib.md5(band.encode("utf-8")).hexdigest()[:15], 16)
                 assert got[(i, b)] == want
+
+
+class TestMd5Family:
+    """``_hash60_batch`` is the one Python form of h64; these pin it to the
+    hexdigest definition the DuckDB oracles mirror, computed inline."""
+
+    @staticmethod
+    def _hex60(s: str) -> int:
+        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+    def test_batch_equals_hexdigest_form(self):
+        from wordspell_spark.operators.dedup import _hash60_batch
+
+        strs = ["", "a", "the quick brown fox", "кириллица тоже", "emoji 😀 𝔘𝔫𝔦", "0,-1,42,7"]
+        got = _hash60_batch(strs)
+        assert got.dtype == np.int64
+        assert got.tolist() == [self._hex60(s) for s in strs]
+        assert _hash60_batch([]).tolist() == []
+
+    def test_seed_masks_equal_hexdigest_constants(self):
+        from wordspell_spark.operators.dedup import _seed_masks
+
+        want = [self._hex60(f"minhash-seed-{s}") for s in range(16)]
+        assert _seed_masks(16) == want
+        assert all(type(m) is int for m in _seed_masks(16))
 
 
 class TestSimhashParity:

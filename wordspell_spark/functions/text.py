@@ -10,10 +10,12 @@ the reference's scalar string processors (SURVEY.md §2.2, §2.7):
 * tokenize        — strings.Fields split (service.go:103, builder.go:264)
 * word_filter     — builder.go:286-299 (runeLen<2, hyphen/quote edges)
 * lang_of_token   — langdetect/component.go:21-88
-* dim/paper/unit regex canonicalizers — processors/{dimsuffix,papersizes,units}
 
-plus training-data text analysis ops (quality scoring, token counting,
-fingerprinting, n-gram language id) that a 100 TB pipeline needs.
+plus training-data text analysis ops (quality scoring, subword-count
+estimate) that a 100 TB pipeline needs.  The reference's query
+processors (dimension suffixes, paper sizes, units) live in
+``processors.py``; document fingerprints and SimHash in
+``operators/dedup.py``.
 """
 
 from __future__ import annotations
@@ -153,41 +155,12 @@ def lang_of_token(tok: Column) -> Column:
     )
 
 
-# ------------------------------------------------------- regex canonicalizers
-
-
-def canon_dim_suffix(col: Column) -> Column:
-    """'4 д'/'3d' → '4Д'-style canonical dimension suffix
-    (processors/dimsuffix/processor.go:16-34; run twice for adjacency)."""
-    pat = r"([2-5])\s?[dDдД]"
-    c = F.regexp_replace(col, pat, r"$1D")
-    return F.regexp_replace(c, pat, r"$1D")
-
-
-def canon_paper_size(col: Column) -> Column:
-    """'a 5'/'а5' → 'A5' (processors/papersizes/processor.go:16-48),
-    Cyrillic А/В mapped to Latin A/B."""
-    c = F.regexp_replace(col, r"[aAаА]\s?([0-6])(?![0-9])", r"A$1")
-    return F.regexp_replace(c, r"[bBВв]\s?([0-6])(?![0-9])", r"B$1")
-
-
-def canon_dimensions(col: Column) -> Column:
-    """'333 x 44x 55' → '333*44*55' (processors/dimensions/processor.go:18-43)."""
-    c = F.regexp_replace(col, r"(\d)\s?[xXхХ*/]\s?(?=\d)", r"$1*")
-    return c
-
-
 # ------------------------------------------------------- analysis (pipeline ops)
 
 _STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "for", "on",
     "with", "as", "at", "by", "from", "that", "this", "be", "are", "was",
 ]
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace token count — cheap size estimate for budget planning."""
-    return F.size(tokenize(text))
 
 
 def bpe_ish_token_count(text: Column) -> Column:
@@ -215,36 +188,3 @@ def quality_score(text: Column) -> Column:
     wlen_score = F.when((mean_wlen >= 3) & (mean_wlen <= 12), F.lit(1.0)).otherwise(F.lit(0.3))
     raw = alpha_ratio * 0.4 + stop_score * 0.3 + wlen_score * 0.2 + (1 - F.least(punct_ratio * 5, F.lit(1.0))) * 0.1
     return F.round(raw, 4)
-
-
-def fingerprint(text: Column) -> Column:
-    """64-bit document fingerprint: xxhash64 of the sorted normalized word
-    multiset — whitespace/casing/punctuation-insensitive exact-dup key."""
-    words = F.array_sort(normalize_words(text))
-    return F.xxhash64(F.concat_ws(" ", words))
-
-
-def simhash(text: Column, bits: int = 64) -> Column:
-    """SimHash over normalized words, pure Catalyst: per-word xxhash64, sum
-    ±1 per bit position, sign → bit.  near-dup fingerprint for Hamming
-    bucketing."""
-    words = normalize_words(text)
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-    bit_cols = []
-    for b in range(bits):
-        contrib = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(F.lit(-1)),
-        )
-        # shiftleft stays JVM-side: a python literal 1<<63 overflows int64
-        bit_cols.append(
-            F.when(contrib > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out

@@ -10,12 +10,9 @@ Design rules for 100 TB:
 * Every candidate-pair generator is *bucketed* (LSH bands, simhash bands,
   same-source blocking) so the only shuffles are groupBys on small bucket
   keys — never an all-pairs crossJoin on the full corpus.
-* Hashes default to the md5-derived family (`h64`) so results are
-  deterministic across engines — the DuckDB oracles in __spark_entry__.py
-  reproduce them bit-for-bit; the correctness gate stays on md5.  The
-  signature operators additionally take ``hash_mode="fast"`` — a vectorized
-  SipHash family for production deployments that need no cross-engine
-  oracle (``_hash60_batch``; pair-set parity tested).
+* Hashes come from one md5-derived family (`h64`, batched in Python as
+  ``_hash60_batch``) so results are deterministic across engines — the
+  DuckDB oracles in __spark_entry__.py reproduce them bit-for-bit.
 * Signature computation (minhash, simhash) runs as Arrow-batched Python —
   a single mapInPandas per relation doing tokenize→shingle→md5→fold with
   numpy, bit-identical to the Catalyst expression twins kept below
@@ -97,53 +94,25 @@ def _py_words(text: str) -> list[str]:
     return [w for w in _WS_RE.split(t) if w]
 
 
-def _md5_60(s: str) -> int:
-    """Python twin of h64: first 15 hex chars of md5 as a 60-bit int."""
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+def _hash60_batch(strings) -> np.ndarray:
+    """Python twin of h64 over a batch: the 60-bit positive int64 of each
+    string's md5, as int(hexdigest()[:15], 16) gives it.
 
-
-_FAST_HASH_KEY = "wordspellfast--0"  # exactly 16 bytes, pandas hash_array contract
-
-
-def _hash60_batch(strings, fast: bool) -> np.ndarray:
-    """60-bit positive int64 hashes of a string batch.
-
-    ``fast=False`` (default everywhere): the md5-derived family the DuckDB
-    oracles reproduce bit-for-bit — the correctness-gate mode.
-    ``fast=True``: the production family (``hash_mode="fast"``) — one
-    vectorized SipHash pass over the whole batch instead of a per-string
-    md5 loop.  MinHash/SimHash only need a uniform 64-bit family, so the
-    detected pair sets agree (parity-tested on the fixtures); what is lost
-    is only cross-engine reproducibility of the raw hash values.  (Swapping
-    ``F.xxhash64`` into ``h64`` does the same for the Catalyst-side
-    expression twins.)
+    The 16-byte digests are joined into one buffer and read as big-endian
+    u64 words; every second word is a digest's first 8 bytes, and >> 4
+    keeps its first 15 hex digits — no per-string hex parsing.
     """
-    if fast:
-        arr = np.asarray(list(strings), dtype=object)
-        if arr.size == 0:
-            return np.empty(0, dtype=np.int64)
-        return (pd.util.hash_array(arr, hash_key=_FAST_HASH_KEY) >> np.uint64(4)).astype(
-            np.int64
-        )
-    return np.fromiter((_md5_60(s) for s in strings), dtype=np.int64, count=len(strings))
+    buf = b"".join(hashlib.md5(s.encode("utf-8")).digest() for s in strings)
+    return (np.frombuffer(buf, dtype=">u8")[::2] >> np.uint64(4)).astype(np.int64)
 
 
-def _check_hash_mode(hash_mode: str) -> bool:
-    """Validate a hash_mode flag; returns the ``fast`` boolean."""
-    if hash_mode not in ("md5", "fast"):
-        raise ValueError(f"hash_mode must be 'md5' or 'fast', got {hash_mode!r}")
-    return hash_mode == "fast"
-
-
-def _batch_minhash_sigs(pdf: pd.DataFrame, masks: np.ndarray, n: int, fast: bool):
+def _batch_minhash_sigs(pdf: pd.DataFrame, masks: np.ndarray, n: int):
     """(ids, sig_matrix) for one Arrow batch of (__id, __text) rows.
 
     Every distinct shingle in the BATCH is hashed exactly once: cross-doc
     ``pd.factorize`` dedup (near-dup-rich corpora share most shingles)
     feeding ONE ``_hash60_batch`` call — per-doc hash calls were the
-    dominant kernel cost, both as md5-loop interpreter round trips and as
-    ``pd.util.hash_array`` per-call overhead (~0.1 ms/call, 15x the work
-    itself on 8-string batches).  The per-doc min over (h ^ mask) then runs
+    dominant kernel cost.  The per-doc min over (h ^ mask) then runs
     as segmented ``np.minimum.reduceat`` over doc-slice boundaries, chunked
     so the (shingles x num_perm) xor matrix stays ~64 MB.
 
@@ -163,7 +132,7 @@ def _batch_minhash_sigs(pdf: pd.DataFrame, masks: np.ndarray, n: int, fast: bool
         return ids, np.empty((0, num_perm), dtype=np.int64)
     all_sh = [s for sh in sh_lists for s in sh]
     codes, uniq = pd.factorize(np.asarray(all_sh, dtype=object))
-    flat_h = _hash60_batch(list(uniq), fast)[codes]
+    flat_h = _hash60_batch(uniq)[codes]
     lens = np.fromiter((len(sh) for sh in sh_lists), dtype=np.int64, count=len(ids))
     cum = np.concatenate([[0], np.cumsum(lens)])
     sigs = np.empty((len(ids), num_perm), dtype=np.int64)
@@ -291,12 +260,7 @@ DEFAULT_BAND_ROWS = 4
 def _seed_masks(num_perm: int) -> list[int]:
     """Per-permutation xor masks, h64 of the seed index — computed driver-side
     so both Spark and the DuckDB oracle embed the same constants."""
-    import hashlib
-
-    return [
-        int(hashlib.md5(f"minhash-seed-{s}".encode()).hexdigest()[:15], 16)
-        for s in range(num_perm)
-    ]
+    return _hash60_batch([f"minhash-seed-{s}" for s in range(num_perm)]).tolist()
 
 
 def minhash_signature(text: Column, num_perm: int = DEFAULT_NUM_PERM, n: int = 3) -> Column:
@@ -328,7 +292,6 @@ def minhash_signatures_df(
     id_col: str = "doc_id",
     num_perm: int = DEFAULT_NUM_PERM,
     n: int = 3,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """(id, sig) — the hot-path MinHash signature, one Arrow-batched UDF.
 
@@ -338,11 +301,8 @@ def minhash_signatures_df(
     in either runtime.  Values are bit-identical to ``minhash_signature``
     (property-tested).  Docs with no shingles (< n words) are dropped, as
     the expression form's size(sh) > 0 filter did.
-    ``hash_mode``: "md5" (default; DuckDB-oracle-reproducible) or "fast"
-    (production SipHash family, see ``_hash60_batch``).
     """
     masks = np.array(_seed_masks(num_perm), dtype=np.int64)
-    fast = _check_hash_mode(hash_mode)
 
     # mapInPandas, not pandas_udf + filter: a filter on a UDF output column
     # gets its own ArrowEvalPython node (Catalyst extracts the UDF for the
@@ -354,7 +314,7 @@ def minhash_signatures_df(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # min over (h ^ mask) per seed; < 2^60 never touches the sign bit
-            ids, sigs = _batch_minhash_sigs(pdf, masks, n, fast)
+            ids, sigs = _batch_minhash_sigs(pdf, masks, n)
             yield pd.DataFrame(
                 {"id": ids, "sig": pd.Series([r.tolist() for r in sigs], dtype=object)}
             )
@@ -371,7 +331,6 @@ def minhash_band_hashes_df(
     num_perm: int = DEFAULT_NUM_PERM,
     band_rows: int = DEFAULT_BAND_ROWS,
     n: int = 3,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """(id, band_idx, band_hash) — banded LSH keys, computed inside ONE UDF.
 
@@ -384,7 +343,6 @@ def minhash_band_hashes_df(
     assert num_perm % band_rows == 0
     n_bands = num_perm // band_rows
     masks = np.array(_seed_masks(num_perm), dtype=np.int64)
-    fast = _check_hash_mode(hash_mode)
 
     # one mapInPandas emits the exploded (id, band_idx, band_hash) rows
     # directly — no post-UDF filter (which would clone the Python stage, see
@@ -393,7 +351,7 @@ def minhash_band_hashes_df(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, sigs = _batch_minhash_sigs(pdf, masks, n, fast)
+            ids, sigs = _batch_minhash_sigs(pdf, masks, n)
             # band strings for the WHOLE batch feed one hash call — the
             # per-doc 8-string calls were pure per-call overhead (see
             # _batch_minhash_sigs)
@@ -406,7 +364,7 @@ def minhash_band_hashes_df(
                 {
                     "id": [i for i in ids for _ in range(n_bands)],
                     "band_idx": np.tile(np.arange(n_bands, dtype=np.int32), len(ids)),
-                    "band_hash": _hash60_batch(strs, fast),
+                    "band_hash": _hash60_batch(strs),
                 }
             )
 
@@ -422,7 +380,6 @@ def minhash_lsh_pairs(
     num_perm: int = DEFAULT_NUM_PERM,
     band_rows: int = DEFAULT_BAND_ROWS,
     n: int = 3,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash LSH.
 
@@ -439,7 +396,7 @@ def minhash_lsh_pairs(
     to free executor storage (long-lived sessions would otherwise accumulate
     cached blocks until LRU pressure).
     """
-    banded = minhash_band_hashes_df(docs, text_col, id_col, num_perm, band_rows, n, hash_mode)
+    banded = minhash_band_hashes_df(docs, text_col, id_col, num_perm, band_rows, n)
     # persist: both sides of the self-join share this subplan; without it the
     # signature UDF runs twice (MLlib's approxSimilarityJoin caches the same
     # way).  Rows are (id, band, hash) — tiny relative to the corpus.
@@ -485,14 +442,12 @@ def simhash32_df(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """(id, sh) — same values as ``simhash32``, computed in one Arrow-batched
     UDF: Python tokenize + md5 (parity notes at ``_py_words``), then a numpy
     bit-vote fold, instead of an interpreted HOF word pipeline feeding 32
     interpreted aggregate passes.  Docs with no words hash to 0, matching
     the expression form's empty-array aggregate."""
-    fast = _check_hash_mode(hash_mode)
 
     @F.pandas_udf("long")
     def sh_udf(texts: pd.Series) -> pd.Series:
@@ -507,7 +462,7 @@ def simhash32_df(
         all_words = [w for r in words_rows for w in r]
         if all_words:
             codes, uniq = pd.factorize(np.asarray(all_words, dtype=object))
-            flat_h = _hash60_batch(list(uniq), fast)[codes]
+            flat_h = _hash60_batch(uniq)[codes]
         else:
             flat_h = np.empty(0, dtype=np.int64)
         hs_rows, pos = [], 0
@@ -591,7 +546,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     n_bands: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ max_hamming.
 
@@ -603,7 +557,7 @@ def simhash_pairs(
     # persist: the (id, simhash) relation feeds both sides of the band join;
     # the plan itself (in-join bit_count filter, no re-attach) lives in
     # banded_hamming_pairs, shared with pHash image dedup
-    base = simhash32_df(docs, text_col, id_col, hash_mode).persist()
+    base = simhash32_df(docs, text_col, id_col).persist()
     pairs = banded_hamming_pairs(base, SIMHASH_BITS, max_hamming, n_bands, fp_col="sh")
     _register_owned_cache(pairs, base)
     return pairs

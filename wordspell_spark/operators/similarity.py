@@ -246,12 +246,12 @@ def lsh_topk(
     n_bands: int = 8,
     dim: int = 64,
     max_broadcast_queries: int = 2048,
-    strategy: str = "auto",
 ) -> DataFrame:
     """ANN top-k: candidates share ≥1 LSH band with the query, then exact
     cosine re-rank.
 
-    Two physical strategies behind one logical contract (identical results):
+    Two physical plans behind one logical contract (identical results),
+    chosen by the size of the query side:
 
     - **broadcast kernel** (query side ≤ ``max_broadcast_queries`` rows —
       the common serving shape): signatures, band match, cumsum-exact
@@ -260,35 +260,28 @@ def lsh_topk(
       per-query merge window.  Two stages total, a single corpus scan at
       any scale — this replaced a ~7-stage explode/join/distinct plan
       whose fixed stage overhead dominated (15 s for 65 ms of compute).
-    - **banded join** (large query sides): per-band explode + join on
+    - **banded join** (larger query sides): per-band explode + join on
       (band_idx, band_bits) with IDs-only candidates — corpus-side work
       proportional to bucket collisions, not |corpus| × |queries|.
 
     Bands of n_planes/n_bands planes each trade recall (more bands → more
     candidates) against cost.  The 16/8 default measured recall 0.96-0.98
     vs brute force at k=5 on the 64-dim fixtures (8/4 gave 0.70-0.84).
-    Cosines accumulate left-to-right (cumsum trick) in both strategies, so
+    Cosines accumulate left-to-right (cumsum trick) in both plans, so
     values are bit-identical to the brute-force / DuckDB oracle.
 
-    **Eager evaluation caveat** (``strategy="auto"``, the default): sizing
+    **Eager evaluation caveat**: with ``max_broadcast_queries > 0``, sizing
     the query side runs a Spark job (``take(max_broadcast_queries + 1)``)
     at *call* time and — when the broadcast kernel is chosen — snapshots
     the query rows on the driver as of that moment.  Callers constructing
     plans ahead of execution, or over expensive / nondeterministic query
-    lineage, should pass ``strategy="banded"`` to keep the call purely
-    lazy (no job, no snapshot), or ``strategy="broadcast"`` to skip the
-    sizing probe and collect the query side unconditionally.
+    lineage, should pass ``max_broadcast_queries=0``: the call then stays
+    purely lazy (no job, no snapshot) and always plans the banded join.
     """
     assert n_planes % n_bands == 0
-    assert strategy in ("auto", "broadcast", "banded")
-    if strategy != "banded":
-        limit = max_broadcast_queries + 1 if strategy == "auto" else None
-        head = (
-            queries.select(query_id_col, vec_col).take(limit)
-            if limit is not None
-            else queries.select(query_id_col, vec_col).collect()
-        )
-        if strategy == "broadcast" or len(head) <= max_broadcast_queries:
+    if max_broadcast_queries > 0:
+        head = queries.select(query_id_col, vec_col).take(max_broadcast_queries + 1)
+        if len(head) <= max_broadcast_queries:
             return _lsh_topk_broadcast(
                 vectors,
                 head,
@@ -358,7 +351,7 @@ def _lsh_topk_broadcast(
                 c_len = np.asarray([-2 if v is None else len(v) for v in rows])
                 # band-match matrix: pair (q, c) is a candidate iff the two
                 # signatures agree on >= 1 band — the same predicate as the
-                # (band_idx, band_bits) equi-join in the banded strategy
+                # (band_idx, band_bits) equi-join in the banded plan
                 M = np.zeros((nq, nc), dtype=bool)
                 for b in range(n_bands):
                     cb = (sigs >> (b * w_bits)) & mask
@@ -397,7 +390,7 @@ def _lsh_topk_broadcast(
                         # non-finite selection scores (zero-norm vectors:
                         # 0/0 -> NaN here, NULL after the Arrow object-series
                         # conversion) must survive the prune — the banded
-                        # strategy emits those pairs as NULL-sim rows, so
+                        # plan emits those pairs as NULL-sim rows, so
                         # dropping them here would be a membership divergence
                         cand = cand[(vals >= kth - 3e-6) | ~np.isfinite(vals)]
                     if len(cand):
@@ -419,7 +412,7 @@ def _lsh_topk_broadcast(
                     # NULL sims sort last with ties broken by neighbor_id ASC
                     # in the global window; keep each chunk's k SMALLEST
                     # neighbor ids (not the first k in corpus-scan order) so
-                    # the merge sees exactly the rows the banded strategy —
+                    # the merge sees exactly the rows the banded plan —
                     # which keeps all NULL candidates — would rank first.
                     nc_idx = np.nonzero(null_pairs[q])[0]
                     nullc = nc_idx[np.argsort(nbr[nc_idx], kind="stable")][:k]

@@ -162,8 +162,8 @@ class IndexProbe:
 
     @classmethod
     def from_index_df(cls, index_df: DataFrame, word_col: str = "word", freq_col: str = "freq") -> "IndexProbe":
-        pdf = index_df.select(word_col, freq_col).toPandas()
-        return cls.from_arrays(pdf[word_col].to_numpy(), pdf[freq_col].to_numpy())
+        tbl = index_df.select(word_col, freq_col).toArrow()
+        return cls.from_arrays(tbl.column(word_col).to_numpy(), tbl.column(freq_col).to_numpy())
 
     def lookup(self, words: np.ndarray) -> np.ndarray:
         """Weights for a batch of strings; 0 for misses (J1 semantics)."""

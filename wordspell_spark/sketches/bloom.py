@@ -36,7 +36,7 @@ DEFAULT_FPR = 0.005  # reference default, component.go:16
 
 _U64 = np.uint64
 _PARAMS = struct.Struct("<QI")  # m_bits, k
-_MAX_SPARSE_M = 1 << 31  # sparse wire form only below this m (see serialize)
+_MAX_SPARSE_M = 1 << 27  # sparse wire form up to here: 128 MB of bits (see serialize)
 
 
 def optimal_m_k(n: int, p: float) -> tuple[int, int]:

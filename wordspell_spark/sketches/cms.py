@@ -26,7 +26,7 @@ from .hashing import double_hash, splitmix64, unique_hashes
 _U64 = np.uint64
 _PARAMS = struct.Struct("<II")  # width, depth
 _TOTAL = struct.Struct("<q")  # total added weight, first in either body
-_MAX_SPARSE_CELLS = 1 << 28  # sparse wire form only below this (see serialize)
+_MAX_SPARSE_CELLS = 1 << 24  # sparse wire form up to here: 128 MB of cells (see serialize)
 
 DEFAULT_EPS = 1e-4
 DEFAULT_DELTA = 1e-3
